@@ -3,11 +3,15 @@
 * :func:`cosine_topk_bruteforce` — exact top-k by cosine, entirely JVM-side
   (``zip_with``/``aggregate`` dot products + window top-k).  The baseline
   and the oracle-checkable path.
-* :func:`cosine_topk_lsh` — the scale path: random-hyperplane LSH (sign of
-  projections → bucket key), candidates only join within a bucket (with
-  multi-probe via several independent tables), then exact re-rank.  At 10^12
-  rows the brute-force cross join is impossible; hyperplane LSH keeps the
-  join selective while the final exact re-rank keeps precision.
+* :func:`cosine_topk_ivf` — the scale top-k path: inverted lists by
+  nearest centroid, each probe searches its ``n_probe`` nearest cells with
+  an exact re-rank.
+* :func:`embedding_dup_pairs_lsh` — near-dup pairs: random-hyperplane LSH
+  (sign of projections → bucket key, several independent tables), pairs
+  generated per bucket by ``lsh.bucket_pairs``, then an exact cosine
+  re-rank.  At 10^12 rows the brute-force cross join is impossible;
+  hyperplane LSH keeps the join selective while the re-rank keeps
+  precision.
 """
 
 from __future__ import annotations
@@ -19,14 +23,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from batch_jaro_winkler_spark.functions.vectors import cosine, dot, l2_norm
+from batch_jaro_winkler_spark.operators.config import DedupConfig
+from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
 from batch_jaro_winkler_spark.operators.partitioning import widen_scan
 
 __all__ = [
     "cosine_topk_bruteforce",
     "cosine_topk_ivf",
-    "cosine_topk_lsh",
     "embedding_dup_pairs_lsh",
-    "hyperplane_buckets",
     "bucket_key_arrays",
     "ivf_assign",
 ]
@@ -57,43 +61,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def hyperplane_buckets(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Append (table_id, bucket) keys: sign-pattern of ``n_planes`` random
-    projections per table.  Vectorized matmul per Arrow batch."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim)).astype(np.float32)
-    cols = df.columns
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:  # np.stack raises on an empty Arrow batch
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy())  # (n, dim)
-            out = []
-            for t in range(n_tables):
-                signs = (mat @ planes[t].T) > 0  # (n, n_planes)
-                bucket = (signs.astype(np.uint64) * weights).sum(axis=1)
-                out.append(
-                    pdf.assign(
-                        table_id=np.int32(t), **{out_col: bucket.view(np.int64)}
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", table_id int, {out_col} long"
-    return df.mapInPandas(bucketize, schema=schema)
-
-
 def bucket_key_arrays(
     df: DataFrame,
     id_col: str,
@@ -104,13 +71,13 @@ def bucket_key_arrays(
     seed: int = 42,
     out_col: str = "buckets",
 ) -> DataFrame:
-    """→ (id_col, out_col array<long> of length ``n_tables``): the same
-    per-table hyperplane bucket keys as :func:`hyperplane_buckets` (same
-    planes RNG, same per-table ``mat @ planes[t].T`` sign computation —
-    bit-identical keys), but WITHOUT the n_tables× row expansion: each
-    vector crosses the Arrow boundary once and never leaves Python, so the
-    n_tables memberships cost one small array column instead of n_tables
-    copies of the embedding (guide §2.3: shuffle keys, not payloads)."""
+    """→ (id_col, out_col array<long> of length ``n_tables``): per table,
+    the sign pattern of ``n_planes`` random projections (planes drawn from
+    ``seed``) as a bucket key.  One vectorized matmul per Arrow batch and
+    no n_tables× row expansion: each vector crosses the Arrow boundary
+    once and never leaves Python, so the n_tables memberships cost one
+    small array column instead of n_tables copies of the embedding (guide
+    §2.3: shuffle keys, not payloads)."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_tables, n_planes, dim)).astype(np.float32)
     weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
@@ -128,7 +95,7 @@ def bucket_key_arrays(
                 )
             yield pd.DataFrame({id_col: pdf[id_col], out_col: list(cols)})
 
-    # preserve the caller's id type (hyperplane_buckets was type-agnostic)
+    # preserve the caller's id type
     id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, vec_col).mapInPandas(
         keys, schema=f"{id_col} {id_type}, {out_col} array<long>"
@@ -159,8 +126,11 @@ def embedding_dup_pairs_lsh(
     join quadratically at the next (one count job pays for it).  More
     planes trade recall at LOW thresholds for bounded join work; in the
     true near-dup regime (cos ≥ 0.9) recall stays high (see the pytest
-    gate).  ``bucket_cap`` drops runaway buckets (duplicate-constant
-    embeddings) instead of letting one key quadratically dominate.
+    gate).  Pairs come from ``lsh.bucket_pairs``: buckets of at most
+    ``bucket_cap`` members emit all pairs, larger ones (duplicate-constant
+    embeddings) are salted by an id hash and chained, so a runaway bucket
+    costs linear work and still yields a connected pair set instead of
+    being dropped.
 
     Plan shape (optimization round 7, guide §2.3/§8 "shuffle keys, not
     payloads"): bucket memberships are (id, table, bucket) rows from ONE
@@ -182,21 +152,20 @@ def embedding_dup_pairs_lsh(
     # of recomputing the Python stage per consumer (4 scans before)
     m = (
         bucket_key_arrays(src, vec_id, vec, dim, n_planes, n_tables, seed)
-        .select(vec_id, F.posexplode("buckets").alias("table_id", "bucket"))
+        .select(
+            F.col(vec_id).alias("doc_id"),
+            F.posexplode("buckets").alias("table_id", "bucket"),
+        )
         .localCheckpoint(eager=False)
     )
-    sizes = (
-        m.groupBy("table_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .where((F.col("bsz") > 1) & (F.col("bsz") <= bucket_cap))
-    )
-    keyed = m.join(sizes, ["table_id", "bucket"], "left_semi")
-    left = keyed.select("table_id", "bucket", F.col(vec_id).alias("a"))
-    right = keyed.select("table_id", "bucket", F.col(vec_id).alias("b"))
     cand = (
-        left.join(right, ["table_id", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
+        bucket_pairs(
+            m,
+            ["table_id", "bucket"],
+            bucket_cap,
+            DedupConfig.neighbor_window,
+            F.xxhash64(F.col("doc_id")),
+        )
         .dropDuplicates(["a", "b"])  # dedupe ACROSS tables: 16-byte rows
     )
     va = corpus.select(
@@ -288,8 +257,9 @@ def cosine_topk_ivf(
     if probes.limit(max_probes + 1).count() > max_probes:
         raise ValueError(
             f"cosine_topk_ivf probe set exceeds max_probes={max_probes}; "
-            "the probe side is broadcast — for probe sets this large, "
-            "bucket both sides (cosine_topk_lsh) instead"
+            "the probe side is broadcast to every corpus partition — split "
+            "the probes into batches of at most max_probes, or raise "
+            "max_probes if the probe vectors fit in executor memory"
         )
     cb = ivf_assign(widen_scan(corpus.select(vec_id, vec)), vec, cents, n_probe=1)
     pb = ivf_assign(probes.select(probe_id, probe_vec), probe_vec, cents, n_probe=n_probe)
@@ -312,39 +282,3 @@ def cosine_topk_ivf(
         .select(probe_id, vec_id, "cos", "rank")
     )
 
-
-def cosine_topk_lsh(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int,
-    probe_id: str = "probe_id",
-    probe_vec: str = "probe_vec",
-    vec_id: str = "vec_id",
-    vec: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate per-probe top-k: candidates share a hyperplane bucket in
-    at least one table; exact cosine re-rank on the candidate set only."""
-    pb = hyperplane_buckets(
-        probes.select(probe_id, probe_vec), probe_vec, dim, n_planes, n_tables, seed
-    )
-    cb = hyperplane_buckets(
-        corpus.select(vec_id, vec), vec, dim, n_planes, n_tables, seed
-    )
-    cand = (
-        cb.join(F.broadcast(pb), ["table_id", "bucket"])
-        .select(probe_id, vec_id, probe_vec, vec)
-        .dropDuplicates([probe_id, vec_id])
-    )
-    scored = cand.select(
-        F.col(probe_id), F.col(vec_id), cosine(F.col(probe_vec), F.col(vec)).alias("cos")
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), F.asc(vec_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id, vec_id, "cos", "rank")
-    )

@@ -15,8 +15,9 @@ Schleimer/Wilkerson/Aiken SIGMOD'03 — PAPERS.md):
   1/fp_mod, position-robust and content-deterministic (both copies of a
   substring select the same grams); a >=200-char verbatim overlap is
   missed with probability (1-1/fp_mod)^151 ≈ 0.8%;
-* shuffle only (fingerprint, doc_id, pos): groupBy fingerprint → candidate
-  pairs (same capped two-path policy as LSH);
+* shuffle only (fingerprint, doc_id, pos): fingerprint buckets → candidate
+  pairs through ``lsh.bucket_pairs`` (same capped two-path policy as LSH,
+  hot fingerprints salted and chained);
 * verify: broadcast-join bounded text slices around the seed offsets,
   vectorized first-mismatch extension in pandas, keep pairs reaching
   ``min_substring_chars``.
@@ -33,10 +34,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
+from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
 
 __all__ = ["fingerprints", "fingerprint_pairs", "substring_edges"]
 
@@ -95,6 +97,8 @@ def fingerprints(
                 pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
             out_id, out_fp, out_pos = [], [], []
             for doc_id, norm in zip(pdf["doc_id"], pdf["norm"]):
+                if not isinstance(norm, str):  # null text: no fingerprints
+                    continue
                 codes = np.frombuffer(norm.encode("utf-32-le"), dtype="<u4")
                 h = _rolling_hashes(codes, k)
                 if len(h) == 0:
@@ -126,58 +130,20 @@ def fingerprints(
 
 def fingerprint_pairs(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
     """fingerprints → candidate (a, b, pos_a, pos_b): docs sharing a
-    fingerprint.  Same two-path policy as LSH pair-gen: normal
-    fingerprints pair via a JVM self-equi-join; hot fingerprints
-    (boilerplate shared by thousands of docs) chain neighbors linearly
-    through a grouped-map touching only those few groups."""
-    cap = cfg.allpairs_cap
-    # fps rows are (fp, doc)-unique by construction, so a fingerprint's
-    # member count is a count over a window keyed the same way the rows
-    # already shuffle (optimization round 7, guide §2.4 — the same
-    # one-exchange rewrite as exact_dup_groups): the previous
-    # aggregate+join paid a second pass over the fps relation, and the
-    # map-side partial agg bought nothing because (fp, doc)-unique rows
-    # barely collapse within a partition.  Singleton fingerprints (the
-    # overwhelming majority) are dropped by the filter right after the
-    # one exchange.
-    w = Window.partitionBy("fp")
-    sized = (
-        fps.withColumn("n_members", F.count(F.lit(1)).over(w))
-        .where(F.col("n_members") >= 2)
-        .localCheckpoint(eager=False)
+    fingerprint, through :func:`~.lsh.bucket_pairs` (the LSH skew policy:
+    hot fingerprints — boilerplate shared by thousands of docs — are
+    salted by a doc-id hash and chained), keeping one seed offset pair per
+    (a, b), the earliest."""
+    # lazy checkpoint: bucket_pairs reads its input twice (size aggregate
+    # and join), which would otherwise run the fingerprint pass twice
+    pairs = bucket_pairs(
+        fps.localCheckpoint(eager=False),
+        ["fp"],
+        cfg.allpairs_cap,
+        cfg.neighbor_window,
+        F.xxhash64(F.col("doc_id")),
+        payload=("pos",),
     )
-
-    small = sized.where(F.col("n_members") <= cap)
-    left = small.select(
-        "fp", F.col("doc_id").alias("a"), F.col("pos").alias("pos_a")
-    )
-    right = small.select(
-        "fp", F.col("doc_id").alias("b"), F.col("pos").alias("pos_b")
-    )
-    small_pairs = left.join(right, "fp").where(F.col("a") < F.col("b")).select(
-        "a", "b", "pos_a", "pos_b"
-    )
-
-    hot = sized.where(F.col("n_members") > cap)
-
-    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        pos = pdf["pos"].to_numpy(np.int32)
-        if len(ids) < 2:
-            return pd.DataFrame(
-                {"a": [], "b": [], "pos_a": [], "pos_b": []}
-            ).astype({"a": np.int64, "b": np.int64, "pos_a": np.int32, "pos_b": np.int32})
-        return pd.DataFrame(
-            {"a": ids[:-1], "b": ids[1:], "pos_a": pos[:-1], "pos_b": pos[1:]}
-        )
-
-    hot_pairs = hot.groupBy("fp").applyInPandas(
-        gen, schema="a long, b long, pos_a int, pos_b int"
-    )
-
-    pairs = small_pairs.union(hot_pairs)
-    # keep one seed offset pair per (a,b) — the earliest
     return pairs.groupBy("a", "b").agg(
         F.min(F.struct("pos_a", "pos_b")).alias("seed")
     ).select("a", "b", F.col("seed.pos_a"), F.col("seed.pos_b"))

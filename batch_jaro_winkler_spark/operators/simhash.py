@@ -9,6 +9,12 @@ except within identical-block buckets (which the exact verify then prunes).
 
 This is the classic Manku/Jain/Sarma WWW'07 design (PAPERS.md) expressed as
 posexplode + self-equi-join + bit_count filter.
+
+Unlike the other pair generators this one does not go through
+``lsh.bucket_pairs``: its output is the exact "hamming <= d" relation
+(checked against brute force), and chaining a hot block bucket would drop
+true pairs.  Identical-block mega-buckets therefore still join
+quadratically; bounding them needs a different design.
 """
 
 from __future__ import annotations

@@ -324,11 +324,13 @@ class DedupPipeline:
         new_docs = new_docs.select(
             F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
         )
-        # drop docs already folded in (rerun-after-crash / double submit)
-        new_docs = new_docs.join(old_sigs.select("doc_id"), "doc_id", "left_anti")
+        # widen BEFORE the anti-join: widen_scan's partition-count probe on
+        # a plan with an exchange would run that exchange's stages
         from batch_jaro_winkler_spark.operators.partitioning import widen_scan
 
         new_docs = widen_scan(new_docs)
+        # drop docs already folded in (rerun-after-crash / double submit)
+        new_docs = new_docs.join(old_sigs.select("doc_id"), "doc_id", "left_anti")
 
         # increment-specific stage names: a second increment must not reuse
         # the previous increment's checkpoints (config hash alone cannot
@@ -352,6 +354,17 @@ class DedupPipeline:
         )
         norm_new = new_sigs.select("doc_id", "norm")
 
+        def touching_new(pairs: DataFrame) -> DataFrame:
+            """pairs with at least one side among the new docs."""
+            # a USING semi-join moves the key column to the FRONT, so a
+            # positional union of the two branches would swap (a, b) —
+            # union BY NAME, always
+            on_a, on_b = (
+                pairs.join(new_sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
+                for c in "ab"
+            )
+            return on_a.unionByName(on_b).distinct()
+
         def _pairs():
             new_buckets = band_buckets(new_sigs)
             # only old buckets whose (band, hash) a new doc touches matter
@@ -362,14 +375,7 @@ class DedupPipeline:
             )
             pairs = candidate_pairs(new_buckets.union(old_buckets), cfg)
             # drop old-old pairs resurfacing through shared buckets
-            new_ids = new_sigs.select(F.col("doc_id").alias("a"))
-            new_ids_b = new_sigs.select(F.col("doc_id").alias("b"))
-            # a USING semi-join moves the key column to the FRONT, so a
-            # positional union of the two branches would swap (a, b) —
-            # union BY NAME, always
-            is_new_a = pairs.join(new_ids, "a", "left_semi")
-            is_new_b = pairs.join(new_ids_b, "b", "left_semi")
-            return is_new_a.unionByName(is_new_b).distinct()
+            return touching_new(pairs)
 
         pairs = self._stage(f"cand_pairs_{inc}", _pairs)
 
@@ -412,23 +418,12 @@ class DedupPipeline:
                 .select("doc_id", "norm")
                 .unionByName(norm_new)
             )
-            new_id_a = norm_new.select(F.col("doc_id").alias("a"))
-            new_id_b = norm_new.select(F.col("doc_id").alias("b"))
-
-            def only_new(pairs):
-                # unionByName: the USING semi-join reorders key columns
-                return (
-                    pairs.join(new_id_a, "a", "left_semi")
-                    .unionByName(pairs.join(new_id_b, "b", "left_semi"))
-                    .distinct()
-                )
-
             sub_new = self._stage(
                 f"sub_edges_{inc}",
                 lambda: substring_edges(
                     all_norm, cfg, "doc_id", "norm", pre_normalized=True,
                     fps=touched_old.unionByName(new_fps),
-                    pair_filter=only_new,
+                    pair_filter=touching_new,
                 ).select("a", "b"),
             )
             inc_edges = inc_edges.union(sub_new.select("a", "b"))

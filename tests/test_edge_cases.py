@@ -1,7 +1,8 @@
 """Edge-case hardening: degenerate corpora through every pipeline stage
-(empty, single doc, all-empty texts, unicode-only, all-identical), plus a
-medium-scale (20k-doc) recall gate — the 600-doc gate can hide
-configuration regressions that only show at realistic bucket sizes."""
+(empty, single doc, all-empty texts, null, unicode-only, astral-plane,
+all-identical), plus a medium-scale (20k-doc) recall gate — the 600-doc
+gate can hide configuration regressions that only show at realistic
+bucket sizes."""
 
 from __future__ import annotations
 
@@ -51,6 +52,32 @@ def test_unicode_only_docs(spark, tmp_path_factory):
     out = {r["doc_id"]: r["cluster_id"] for r in _run(spark, tmp_path_factory, rows).collect()}
     assert out[1] == out[2] == 1  # CJK near-dups cluster
     assert len(out) == 4
+
+
+def test_null_empty_and_astral_texts(spark, tmp_path_factory):
+    """Null texts go through every stage, the substring stage included,
+    and come out as singletons next to empty and astral-plane texts."""
+    shared = " ".join(f"token{i * 7919 % 1000}" for i in range(40))  # 352 chars
+    rows = [
+        (1, None),
+        (2, shared + "tail one"),
+        (3, ""),
+        (4, "𝒜𝓈𝓉𝓇𝒶𝓁 𝕥𝕖𝕩𝕥 😀🎉 " * 10),
+        (5, None),
+        (6, "prefix words " + shared),
+        (7, "😀" * 300),
+        (8, None),
+    ]
+    out = [
+        (r["doc_id"], r["cluster_id"])
+        for r in _run(spark, tmp_path_factory, rows).collect()
+    ]
+    assert sorted(d for d, _ in out) == list(range(1, 9))  # one row per doc
+    clusters = dict(out)
+    for null_doc in (1, 5, 8):
+        assert clusters[null_doc] == null_doc
+        assert list(clusters.values()).count(null_doc) == 1
+    assert clusters[2] == clusters[6] == 2  # shared verbatim substring
 
 
 @pytest.mark.slow

@@ -1,5 +1,5 @@
 """Operator-level tests: reference API surface, exact dedup, SimHash pairs,
-ANN (brute vs LSH), multimodal plumbing, streaming faces, catalog
+ANN, multimodal plumbing, streaming faces, catalog
 atomicity/resume semantics."""
 
 from __future__ import annotations
@@ -144,40 +144,6 @@ def test_simhash_pairs_exact_vs_bruteforce(spark):
                 if d <= 3:
                     exp[(i, j)] = d
     assert got == exp
-
-
-# --- ANN: LSH recall vs brute force ---
-
-
-def test_ann_lsh_vs_bruteforce(spark):
-    from batch_jaro_winkler_spark.operators.ann import (
-        cosine_topk_bruteforce,
-        cosine_topk_lsh,
-    )
-
-    # clustered corpus: LSH recall is only meaningful when true near
-    # neighbors exist (random gaussians are mutually near-orthogonal)
-    rng = np.random.default_rng(11)
-    dim, n_clusters, per = 32, 40, 10
-    centers = rng.standard_normal((n_clusters, dim)).astype(np.float32)
-    corpus = (
-        centers.repeat(per, axis=0)
-        + 0.15 * rng.standard_normal((n_clusters * per, dim)).astype(np.float32)
-    )
-    rows = [(i, corpus[i].tolist()) for i in range(len(corpus))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    probes = spark.createDataFrame(
-        [(i * per, corpus[i * per].tolist()) for i in range(5)],
-        "probe_id long, probe_vec array<float>",
-    )
-    brute = cosine_topk_bruteforce(probes, emb, k=8)
-    lsh = cosine_topk_lsh(probes, emb, k=8, dim=dim, n_planes=10, n_tables=6)
-    b = {(r["probe_id"], r["vec_id"]) for r in brute.collect()}
-    l = {(r["probe_id"], r["vec_id"]) for r in lsh.collect()}
-    recall = len(b & l) / len(b)
-    assert recall >= 0.8, recall  # clustered neighbors share buckets
-    # the probe itself (cosine 1.0) must always survive LSH bucketing
-    assert all((p * per, p * per) in l for p in range(5))
 
 
 # --- multimodal plumbing ---
@@ -508,33 +474,86 @@ def test_catalog_atomic_and_lineage(spark, tmp_path):
     assert not cat.exists("broken")
 
 
-# --- LSH hot-bucket salted chaining keeps connectivity ---
+# --- hot buckets: salted chaining keeps connectivity in every pair-gen path ---
+
+_MEGA, _SMALL = 200, 3
 
 
-def test_lsh_hot_bucket_salted_connectivity(spark):
+def _hot_lsh(spark):
     from batch_jaro_winkler_spark.operators.lsh import candidate_pairs
-    from batch_jaro_winkler_spark.operators.connected_components import (
-        connected_components,
-    )
 
     cfg = DedupConfig(allpairs_cap=8, neighbor_window=2)
     # one mega bucket of 200 docs (same band hash) + a small 3-doc bucket
     rng = np.random.default_rng(5)
-    rows = [(int(i), int(rng.integers(-2**62, 2**62)), 0, 777) for i in range(200)]
-    rows += [(int(1000 + i), int(rng.integers(-2**62, 2**62)), 1, 888) for i in range(3)]
+    rows = [(i, int(rng.integers(-2**62, 2**62)), 0, 777) for i in range(_MEGA)]
+    rows += [(1000 + i, int(rng.integers(-2**62, 2**62)), 1, 888) for i in range(_SMALL)]
     buckets = spark.createDataFrame(
         rows, "doc_id long, sort_key long, band_id int, band_hash long"
     )
-    pairs = candidate_pairs(buckets, cfg)
-    n_pairs = pairs.count()
+    return candidate_pairs(buckets, cfg), cfg.neighbor_window
+
+
+def _hot_fingerprint(spark):
+    from batch_jaro_winkler_spark.operators.fingerprint_dedup import fingerprint_pairs
+
+    cfg = DedupConfig(allpairs_cap=8, neighbor_window=2)
+    # doc i holds the shared fingerprint at offset pos(i) = 3*i + 1
+    rows = [(i, 777, 3 * i + 1) for i in range(_MEGA)]
+    rows += [(1000 + i, 888, 3 * (1000 + i) + 1) for i in range(_SMALL)]
+    fps = spark.createDataFrame(rows, "doc_id long, fp long, pos int")
+    pairs = fingerprint_pairs(fps, cfg)
+    # the seed offsets travel with their own side through the salted path
+    bad = pairs.where(
+        (F.col("pos_a") != 3 * F.col("a") + 1) | (F.col("pos_b") != 3 * F.col("b") + 1)
+    )
+    assert bad.count() == 0
+    return pairs, cfg.neighbor_window
+
+
+def _hot_embedding(spark):
+    from batch_jaro_winkler_spark.operators.ann import embedding_dup_pairs_lsh
+
+    # one hyperplane, one table: vectors near the plane normal share one
+    # bucket, vectors near its negation the other
+    dim = 16
+    normal = np.random.default_rng(42).standard_normal((1, 1, dim)).astype(np.float32)[0, 0]
+    noise = 0.01 * np.random.default_rng(5).standard_normal((_MEGA + _SMALL, dim))
+    vecs = np.vstack([np.tile(normal, (_MEGA, 1)), np.tile(-normal, (_SMALL, 1))]) + noise
+    ids = list(range(_MEGA)) + [1000 + i for i in range(_SMALL)]
+    emb = spark.createDataFrame(
+        [(i, v.astype(np.float32).tolist()) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    pairs = embedding_dup_pairs_lsh(
+        emb, threshold=-1.0, dim=dim, n_planes=1, n_tables=1, bucket_cap=8
+    )
+    return pairs, DedupConfig.neighbor_window
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_hot_lsh, _hot_fingerprint, _hot_embedding],
+    ids=["candidate_pairs", "fingerprint_pairs", "embedding_dup_pairs_lsh"],
+)
+def test_hot_bucket_salted_connectivity(spark, build):
+    from batch_jaro_winkler_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    pairs, window = build(spark)
+    got = {(r["a"], r["b"]) for r in pairs.select("a", "b").collect()}
     # linear, not quadratic: <= members * window + salt boundaries + small bucket
-    assert n_pairs <= 200 * 2 + 16 + 3, n_pairs
+    assert len(got) <= _MEGA * window + 2**4 + 3, len(got)
+    small = {(1000 + i, 1000 + j) for i in range(_SMALL) for j in range(i + 1, _SMALL)}
+    assert small <= got  # the small bucket still gets all its pairs
     clusters = connected_components(pairs.select("a", "b"))
     roots = {
         r["cluster_id"]
         for r in clusters.where(F.col("doc_id") < 1000).collect()
     }
     assert roots == {0}, roots  # the mega bucket stays one component
+    mega_nodes = clusters.where(F.col("doc_id") < 1000).count()
+    assert mega_nodes == _MEGA
 
 
 # --- per-partition suffix-array substring detection ---

@@ -83,3 +83,78 @@ def test_jw_verify_shuffle_free_python_side(spark, sf01_dir):
     m = plan_markers(verify_pairs(pairs, docs, DedupConfig()))
     assert m["MapInPandas"] >= 1
     assert m["BatchEvalPython"] == 0
+
+
+# --- widen_scan: the partition-count probe must stay a plan-only call ---
+
+
+def _spy_widen_scan(monkeypatch, spark):
+    """Route every widen_scan call through a spy that runs the real guard
+    under its own job group and records how many Spark jobs it started."""
+    from batch_jaro_winkler_spark.operators import ann, partitioning
+
+    real = partitioning.widen_scan
+    sc = spark.sparkContext
+    calls: list[int] = []
+
+    def spy(df):
+        group = f"widen_scan_probe_{len(calls)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = real(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        calls.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return out
+
+    monkeypatch.setattr(partitioning, "widen_scan", spy)
+    monkeypatch.setattr(ann, "widen_scan", spy)
+    return calls
+
+
+def test_widen_scan_probe_starts_no_job(spark, sf01_dir, tmp_path, monkeypatch):
+    """Every package call site of widen_scan: the df.rdd partition-count
+    probe must not materialize anything (under AQE it would run the
+    upstream stages of a plan with an exchange)."""
+    from batch_jaro_winkler_spark.operators.ann import (
+        cosine_topk_ivf,
+        embedding_dup_pairs_lsh,
+    )
+    from batch_jaro_winkler_spark.operators.config import DedupConfig
+    from batch_jaro_winkler_spark.pipeline import DedupPipeline
+
+    calls = _spy_widen_scan(monkeypatch, spark)
+    texts = [f"document number {i} about topic {i % 3} " * 4 for i in range(12)]
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").coalesce(
+        1
+    ).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    pipe = DedupPipeline(spark, DedupConfig(), str(tmp_path / "ck"))
+    pipe.run(docs.where(docs.doc_id < 8)).count()
+    assert len(calls) == 1
+    pipe.run_incremental(docs).count()  # the incremental call site
+    assert len(calls) == 2
+
+    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
+    embedding_dup_pairs_lsh(emb, threshold=0.9, dim=64, n_planes=8)
+    probes = emb.where(emb.vec_id < 3).selectExpr(
+        "vec_id AS probe_id", "embedding AS probe_vec"
+    )
+    cosine_topk_ivf(probes, emb, k=3, n_centroids=4, n_probe=2)
+    entry_mod._wide(spark, emb)
+    assert len(calls) == 5
+    assert calls == [0] * 5, calls
+
+
+def test_widen_scan_is_noop_on_multi_split_source(spark, tmp_path, monkeypatch):
+    from batch_jaro_winkler_spark.operators import partitioning
+
+    calls = _spy_widen_scan(monkeypatch, spark)
+    width = spark.sparkContext.defaultParallelism
+    spark.range(0, 64 * width).repartition(2 * width).write.parquet(
+        str(tmp_path / "wide")
+    )
+    df = spark.read.parquet(str(tmp_path / "wide"))
+    assert partitioning.widen_scan(df) is df
+    assert calls == [0]
