@@ -447,11 +447,6 @@ def _ensure_m3(model: CandidateModel) -> None:
 # the per-char emit path is already cheap and the argsort isn't repaid
 _BUCKET_MIN_RECORDS = 32_768
 
-# detail-mode bucketed emission for REPEATED input chars (A/B toggle so
-# interleaved same-process benchmarks can isolate it; see _scan)
-_REP_DETAIL_BUCKETS = True
-
-
 def _ensure_buckets(model: CandidateModel) -> None:
     """Lazily build the (char, pos, cand)-packed bucket index over the
     single-occurrence table.
@@ -909,7 +904,7 @@ def _scan(
         # A few dozen binary-searched slices replace emit_single's full
         # char-segment passes (the prior detail cost for common repeated
         # chars like 'e': several passes over ~10^5 records each).
-        if detail and max_len and _REP_DETAIL_BUCKETS:
+        if detail and max_len:
             rep = np.flatnonzero(~n1)
             if len(rep):
                 for ci in rep:

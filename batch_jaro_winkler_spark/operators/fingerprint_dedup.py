@@ -186,8 +186,6 @@ def substring_edges(
             F.col(text_col).alias("norm"),
         )
     else:
-        from collections.abc import Iterator as _It
-
         raw = docs.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("norm"),

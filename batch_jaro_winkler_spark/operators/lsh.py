@@ -15,9 +15,10 @@ Scale design (SURVEY.md §7 step 5, R8):
   bucket of a million near-identical pages must NOT emit 10^12 pairs.
   Buckets up to the cap emit all pairs; larger buckets are split by a salt
   into contiguous ranges of an independent hash order, and each member is
-  chained to its next ``window`` neighbors — linear in bucket size while
-  keeping the bucket connected, which is all connected-components needs
-  for correct clusters.
+  chained to its next ``window`` neighbors by a JVM ``lead`` window —
+  linear in bucket size while keeping the bucket connected, which is all
+  connected-components needs for correct clusters.  Pair generation runs
+  no Python at all.
 * pair dedup across bands is a ``groupBy(a, b)`` (map-side partial agg),
   which also yields ``n_bands`` (band-agreement count, a cheap similarity
   prior usable as a pre-verify filter).
@@ -29,8 +30,6 @@ data model row 1).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from batch_jaro_winkler_spark.operators.config import DedupConfig
@@ -73,10 +72,10 @@ def bucket_pairs(
       JVM self-equi-join on the bucket key — whole-stage codegen, no
       Python; output is quadratic per bucket but bounded by the cap;
     * hot buckets (> cap; power-law tail) are salted by the high bits of
-      ``order`` (a 64-bit hash, uniform) and go through a grouped-map per
-      (bucket, salt) that sorts members by ``order`` and chains each to
-      its next ``window`` neighbors, plus one boundary link between
-      adjacent salts — linear in bucket size, bucket stays connected.
+      ``order`` (a 64-bit hash, uniform); a window per (bucket, salt)
+      sorted by ``order`` chains each member to its next ``window``
+      neighbors (``lead``), plus one boundary link between adjacent
+      salts — linear in bucket size, bucket stays connected, all JVM.
     """
     keys = list(keys)
     rows = members.select(*keys, "doc_id", order.alias("sort_key"), *payload)
@@ -122,50 +121,45 @@ def bucket_pairs(
         F.shiftrightunsigned(F.col("sort_key"), 64 - _SALT_BITS).cast("int"),
     )
 
-    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # unsigned sort order, consistent with the unsigned salt ranges
-        srt = np.lexsort(
-            (
-                pdf["doc_id"].to_numpy(np.int64),
-                pdf["sort_key"].to_numpy(np.int64).view(np.uint64),
-            )
-        )
-        cols = {c: pdf[c].to_numpy()[srt] for c in chained}
-        steps = range(1, window + 1)
-        head = {c: np.concatenate([v[:-w] for w in steps]) for c, v in cols.items()}
-        tail = {c: np.concatenate([v[w:] for w in steps]) for c, v in cols.items()}
-        swap = head["doc_id"] > tail["doc_id"]
-        keep = head["doc_id"] != tail["doc_id"]
-        out = {}
-        for c in chained:
-            out[name(c, "a")] = np.where(swap, tail[c], head[c])[keep]
-            out[name(c, "b")] = np.where(swap, head[c], tail[c])[keep]
-        return pd.DataFrame(out)[out_cols]
-
-    hot_pairs = hot.groupBy(*keys, "salt").applyInPandas(
-        gen, schema=small_pairs.schema.simpleString()
-    )
+    # chain links: each member to its next ``window`` members of the same
+    # (bucket, salt) in (sort_key, doc_id, *payload) order — the order of
+    # the ``ends`` min/max structs below.  Within one salt the top
+    # _SALT_BITS of sort_key are equal, so the signed order is the
+    # unsigned one the salt ranges follow.  The lead array is built in one
+    # select and exploded in the next: Spark allows no window function
+    # inside a generator.
+    node = F.struct("sort_key", *chained)
+    w_member = Window.partitionBy(*keys, "salt").orderBy("sort_key", *chained)
+    chain = hot.select(
+        node.alias("u"),
+        F.array(
+            *[F.lead(node, i).over(w_member) for i in range(1, window + 1)]
+        ).alias("vs"),
+    ).select("u", F.explode("vs").alias("v"))
 
     # boundary links: adjacent salt subgroups of the same bucket are
     # adjacent sort ranges — link last(s) with first(s+1) (tiny relation:
     # one row per (bucket, salt))
     ends = hot.groupBy(*keys, "salt").agg(
-        F.min(F.struct("sort_key", *chained)).alias("first"),
-        F.max(F.struct("sort_key", *chained)).alias("last"),
+        F.min(node).alias("first"),
+        F.max(node).alias("last"),
     )
     w_salt = Window.partitionBy(*keys).orderBy("salt")
-    links = ends.withColumn("next_first", F.lead("first").over(w_salt)).where(
-        F.col("next_first").isNotNull()
-        & (F.col("last.doc_id") != F.col("next_first.doc_id"))
+    boundary = ends.select(
+        F.col("last").alias("u"), F.lead("first").over(w_salt).alias("v")
     )
-    last_is_a = F.col("last.doc_id") < F.col("next_first.doc_id")
-    a_end = F.when(last_is_a, F.col("last")).otherwise(F.col("next_first"))
-    b_end = F.when(last_is_a, F.col("next_first")).otherwise(F.col("last"))
-    boundary = links.select(a_end.alias("a_end"), b_end.alias("b_end")).select(
+
+    links = chain.union(boundary).where(
+        F.col("v").isNotNull() & (F.col("u.doc_id") != F.col("v.doc_id"))
+    )
+    u_is_a = F.col("u.doc_id") < F.col("v.doc_id")
+    a_end = F.when(u_is_a, F.col("u")).otherwise(F.col("v"))
+    b_end = F.when(u_is_a, F.col("v")).otherwise(F.col("u"))
+    hot_pairs = links.select(a_end.alias("a_end"), b_end.alias("b_end")).select(
         *[F.col(f"{s}_end.{c}").alias(name(c, s)) for c in chained for s in "ab"]
     )
 
-    return small_pairs.union(hot_pairs).union(boundary)
+    return small_pairs.union(hot_pairs)
 
 
 def candidate_pairs(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:

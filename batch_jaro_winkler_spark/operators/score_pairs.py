@@ -4,11 +4,10 @@ Two operators:
 
 * :func:`verify_pairs` — score candidate pairs (a, b) from LSH against the
   reference-semantics kernel and keep edges with ``score >= min_score``.
-  The scale shape: two sort-merge equi-joins to attach texts (Catalyst
-  handles join strategy; AQE handles skew), then a grouped-map keyed on the
-  left doc so every group scores *one* input against a shared candidate
-  batch — exactly the reference's batch query model (one compiled model,
-  many candidates, SURVEY.md §3 entry point 2).
+  The scale shape: two equi-joins attach the texts (Catalyst picks the
+  join strategy; AQE handles skew), then one ``mapInPandas`` pass with no
+  shuffle of its own scores each distinct text pair of a coalesced batch
+  once, through the lockstep pairwise kernel ``score_pair_batch``.
 * :func:`score_topk` — rank a small probe set against a large candidate
   corpus: candidates are iterated per Arrow batch with ONE compiled model
   per batch scoring all probes (model reuse amortized across the batch,
@@ -16,10 +15,10 @@ Two operators:
   per batch, final top-k via a window — Spark's TakeOrderedAndProject
   replaces the reference's top-k retry ladder (SURVEY.md O15/R4).
 
-A cheap Catalyst-side length-band prefilter (the DataFrame corollary of the
-reference's required-matches pruning, SURVEY.md R1) drops pairs whose
-length ratio already bounds the score below min_score, before any Python
-runs.
+In pure-Jaro mode (``jw_weight=None``) a cheap Catalyst-side length-band
+prefilter (the DataFrame corollary of the reference's required-matches
+pruning, SURVEY.md R1) drops pairs whose length ratio already bounds the
+score below min_score, before any Python runs.
 """
 
 from __future__ import annotations
@@ -34,6 +33,30 @@ from batch_jaro_winkler_spark.kernel import build_model, score, score_pair_batch
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
 __all__ = ["verify_pairs", "score_topk"]
+
+
+def _coalesced(
+    batches: Iterator[pd.DataFrame], rows: int = 100_000
+) -> Iterator[pd.DataFrame]:
+    """Concatenate a partition's Arrow batches into frames of at least
+    ``rows`` rows (the last one may be shorter), so per-frame work — the
+    distinct-pair memo, one compiled candidate model — sees the partition
+    at once.  Bounded so per-task memory stays ~tens of MB at 256-char
+    texts."""
+    pending: list[pd.DataFrame] = []
+    n_pending = 0
+    for pdf in batches:
+        pending.append(pdf)
+        n_pending += len(pdf)
+        if n_pending >= rows:
+            yield pending[0] if len(pending) == 1 else pd.concat(
+                pending, ignore_index=True
+            )
+            pending, n_pending = [], 0
+    if pending:
+        yield pending[0] if len(pending) == 1 else pd.concat(
+            pending, ignore_index=True
+        )
 
 
 def verify_pairs(
@@ -67,19 +90,9 @@ def verify_pairs(
     weight = cfg.jw_weight
     threshold = cfg.jw_threshold
 
-    # No shuffle: pairs are grouped locally by the left text, one compiled
-    # kernel model per local group.  Pairs are independent, so any physical
-    # distribution is correct — grouping only amortizes the model.
-    # groups below this size use the scalar pair scorer — the vectorized
-    # kernel's per-char numpy ops only pay off with enough candidates
-    batch_cutover = 8
-    # Optimization round 7 (guide §4.5 analog): coalesce the partition's
-    # Arrow batches before scoring, so (1) a text_a whose pairs straddle
-    # batch boundaries is grouped ONCE, and (2) the distinct-text-pair
-    # memo below sees the whole partition.  Bounded so per-task memory
-    # stays ~tens of MB at 256-char texts.
-    coalesce_rows = 100_000
-
+    # No shuffle: pairs are independent, so any physical distribution is
+    # correct.  Batches are coalesced so the distinct-text-pair memo below
+    # sees the whole partition.
     def _score_pdf(pdf: pd.DataFrame) -> pd.DataFrame | None:
         # a dedup corpus scores many IDENTICAL (text_a, text_b) pairs
         # (exact-duplicate groups explode into cliques): the score is a
@@ -101,38 +114,17 @@ def verify_pairs(
         codes, _ = pd.factorize(
             ca.astype(np.int64) * (int(cb.max()) + 1) + cb, sort=False
         )
-        n_distinct = int(codes.max()) + 1 if len(codes) else 0
-        first = np.zeros(n_distinct, dtype=np.int64)
+        first = np.zeros(int(codes.max()) + 1, dtype=np.int64)
         first[codes[::-1]] = np.arange(len(codes) - 1, -1, -1, dtype=np.int64)
-        distinct = pdf.iloc[first].reset_index(drop=True)
-        # kernel-side min_score pruning stays on: non-survivors keep the
-        # below-threshold sentinel and are filtered with their clones
-        ds = np.full(n_distinct, -1.0, dtype=np.float32)
-        # groups below the cutover go through the vectorized PAIRWISE
-        # kernel in ONE call (optimization round 7): no per-group pandas
-        # iteration, no per-pair interpreter loop.  Groups at/above the
-        # cutover amortize a compiled model + kernel-side min_score
-        # pruning instead.
-        gsz = distinct.groupby("text_a", sort=False)["text_b"].transform("size")
-        small = (gsz < batch_cutover).to_numpy()
-        if small.any():
-            spos = np.flatnonzero(small)
-            ds[spos] = score_pair_batch(
-                distinct["text_a"].iloc[spos].tolist(),
-                distinct["text_b"].iloc[spos].tolist(),
-                weight=weight,
-                threshold=threshold,
-            )
-        if not small.all():
-            for inp, grp in distinct[~small].groupby("text_a", sort=False):
-                gpos = grp.index.to_numpy(np.int64)  # positions in `distinct`
-                model = build_model(grp["text_b"].tolist())
-                idx, sc = score(
-                    model, inp, min_score=min_score, weight=weight, threshold=threshold
-                )
-                if len(idx):
-                    ds[gpos[np.asarray(idx, dtype=np.int64)]] = sc
-        full = ds[codes]
+        distinct = pdf.iloc[first]
+        # every distinct text pair through the lockstep PAIRWISE kernel in
+        # ONE call: no per-group model, no per-pair interpreter loop
+        full = score_pair_batch(
+            distinct["text_a"].tolist(),
+            distinct["text_b"].tolist(),
+            weight=weight,
+            threshold=threshold,
+        )[codes]
         keep = full >= np.float32(min_score)
         if not keep.any():
             return None
@@ -146,24 +138,8 @@ def verify_pairs(
         )
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: list[pd.DataFrame] = []
-        n_pending = 0
-        for pdf in batches:
-            pending.append(pdf)
-            n_pending += len(pdf)
-            if n_pending >= coalesce_rows:
-                out = _score_pdf(
-                    pending[0] if len(pending) == 1 else
-                    pd.concat(pending, ignore_index=True)
-                )
-                if out is not None:
-                    yield out
-                pending, n_pending = [], 0
-        if pending:
-            out = _score_pdf(
-                pending[0] if len(pending) == 1 else
-                pd.concat(pending, ignore_index=True)
-            )
+        for pdf in _coalesced(batches):
+            out = _score_pdf(pdf)
             if out is not None:
                 yield out
 
@@ -233,14 +209,8 @@ def score_topk(
     # compile-once-query-many wants LARGE candidate batches: coalesce the
     # partition's Arrow batches before building the shared model, so each
     # partition compiles ~one model regardless of arrow batch sizing
-    coalesce_rows = 100_000
-
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: list[pd.DataFrame] = []
-        n_pending = 0
-
-        def flush():
-            pdf = pending[0] if len(pending) == 1 else pd.concat(pending)
+        for pdf in _coalesced(batches):
             ctext = pdf[cand_text]
             if cand_transform is not None:
                 ctext = cand_transform(ctext)
@@ -259,18 +229,9 @@ def score_topk(
                 out_p.extend([pid] * len(idx))
                 out_c.extend(pdf[cand_id].iloc[np.asarray(idx, dtype=np.int64)])
                 out_s.extend(sc.astype(np.float64))
-            return pd.DataFrame(
+            yield pd.DataFrame(
                 {"probe_id": out_p, "cand_id": out_c, "score": out_s}
             )
-
-        for pdf in batches:
-            pending.append(pdf)
-            n_pending += len(pdf)
-            if n_pending >= coalesce_rows:
-                yield flush()
-                pending, n_pending = [], 0
-        if pending:
-            yield flush()
 
     partial = candidates.select(cand_id, cand_text).mapInPandas(
         per_batch, schema="probe_id long, cand_id long, score double"

@@ -75,15 +75,15 @@ class DedupPipeline:
             tuple[str, threading.Thread, dict[str, BaseException]]
         ] = []
 
-    def _stage(self, name: str, compute, overlap_write: bool = True) -> DataFrame:
+    def _stage(self, name: str, compute) -> DataFrame:
         """Run (or resume) one checkpointed stage.
 
-        With ``overlap_write`` the stage materializes via an eager
-        localCheckpoint (one job, lineage cut — functionally the same
-        table boundary the parquet read-back gave) and the durable
-        parquet+manifest write happens on a BACKGROUND thread while the
-        next stage computes: the write→read barrier leaves the critical
-        path.  Resume semantics are unchanged — the manifest is still
+        The stage materializes via an eager localCheckpoint (one job,
+        lineage cut — functionally the same table boundary the parquet
+        read-back gave) and the durable parquet+manifest write happens on
+        a BACKGROUND thread while the next stage computes: the write→read
+        barrier leaves the critical path.  A stage whose manifest matches
+        the config hash is read back instead (resume); the manifest is
         written last, and :meth:`_flush` joins every writer before the
         pipeline declares the run complete.  Downstream consumes the
         in-memory blocks instead of re-decoding parquet."""
@@ -94,13 +94,6 @@ class DedupPipeline:
             rows = self.catalog.manifest(name)["rows"]
             self.metrics.append(
                 StageResult(name, rows, True, round(time.time() - t0, 3))
-            )
-            return df
-        if not overlap_write:
-            df, _ = self.catalog.load_or_compute(name, h, compute)
-            rows = self.catalog.manifest(name)["rows"]
-            self.metrics.append(
-                StageResult(name, rows, False, round(time.time() - t0, 3))
             )
             return df
         df = compute().localCheckpoint(eager=True)

@@ -9,12 +9,9 @@ parquet + a JSON manifest:
   stage version and wall time (per-partition lineage + metrics);
 * writes are atomic-by-rename: data lands in a temp dir, the manifest is
   written last — a checkpoint without a manifest is invisible, so a killed
-  job never exposes partial state;
-* :func:`load_or_compute` skips recomputation iff a manifest exists with a
-  matching config hash (kill the job after stage k, rerun, stages 1..k are
-  read back — the resume test in tests/test_pipeline_recall.py).
+  job never exposes partial state.
 
-On a real deployment the same five functions map 1:1 onto Iceberg
+On a real deployment the same functions map 1:1 onto Iceberg
 ``writeTo(...).createOrReplace()`` + snapshot metadata; the pipeline code
 is identical under either backend.
 """
@@ -183,18 +180,3 @@ class Catalog:
         if os.path.exists(self._parts_path(name)):
             os.remove(self._parts_path(name))
         return self.read(name)
-
-    def load_or_compute(
-        self,
-        name: str,
-        config_hash: str,
-        compute,
-        stage_version: int = 1,
-        extra_meta: dict | None = None,
-    ) -> tuple[DataFrame, bool]:
-        """→ (df, was_cached).  ``compute`` is a 0-arg callable returning the
-        stage DataFrame; only invoked on a config-hash miss."""
-        if self.exists(name, config_hash):
-            return self.read(name), True
-        df = self.write(name, compute(), config_hash, stage_version, extra_meta)
-        return df, False

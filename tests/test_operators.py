@@ -454,18 +454,6 @@ def test_catalog_atomic_and_lineage(spark, tmp_path):
     assert m["rows"] == 10 and m["config_hash"] == "abc" and m["stage"] == "test"
     assert cat.exists("t1", "abc") and not cat.exists("t1", "other")
 
-    # load_or_compute: hit on matching hash, recompute on mismatch
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return spark.range(5).withColumnRenamed("id", "v")
-
-    _, cached = cat.load_or_compute("t1", "abc", compute)
-    assert cached and not calls
-    df2, cached = cat.load_or_compute("t1", "newhash", compute)
-    assert not cached and calls and df2.count() == 5
-
     # a checkpoint without a manifest is invisible (atomicity contract)
     import os
     import shutil
@@ -479,6 +467,46 @@ def test_catalog_atomic_and_lineage(spark, tmp_path):
 _MEGA, _SMALL = 200, 3
 
 
+def _chain_reference(members, cap: int, window: int) -> set:
+    """The exact pair set ``lsh.bucket_pairs`` emits, in pure Python.
+
+    ``members`` are (bucket key, doc_id, signed 64-bit order) rows.
+    Buckets of 2..cap members pair fully.  Larger buckets split into salts
+    by the top 4 bits of the unsigned order; inside a salt, members sorted
+    by (unsigned order, doc_id) link to their next ``window`` members, and
+    the last member of each salt links to the first of the next salt."""
+    import itertools
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for key, doc, order in members:
+        buckets[key].append((order % 2**64, doc))
+    pairs = set()
+
+    def link(u, v):
+        if u != v:
+            pairs.add((min(u, v), max(u, v)))
+
+    for ms in buckets.values():
+        if len(ms) <= cap:
+            for (_, u), (_, v) in itertools.combinations(ms, 2):
+                link(u, v)
+            continue
+        salts = defaultdict(list)
+        for order, doc in sorted(ms):
+            salts[order >> 60].append(doc)
+        prev_last = None
+        for s in sorted(salts):
+            run = salts[s]
+            for i, u in enumerate(run):
+                for v in run[i + 1 : i + 1 + window]:
+                    link(u, v)
+            if prev_last is not None:
+                link(prev_last, run[0])
+            prev_last = run[-1]
+    return pairs
+
+
 def _hot_lsh(spark):
     from batch_jaro_winkler_spark.operators.lsh import candidate_pairs
 
@@ -490,7 +518,8 @@ def _hot_lsh(spark):
     buckets = spark.createDataFrame(
         rows, "doc_id long, sort_key long, band_id int, band_hash long"
     )
-    return candidate_pairs(buckets, cfg), cfg.neighbor_window
+    members = [((bid, bh), doc, sk) for doc, sk, bid, bh in rows]
+    return candidate_pairs(buckets, cfg), cfg, members
 
 
 def _hot_fingerprint(spark):
@@ -507,11 +536,15 @@ def _hot_fingerprint(spark):
         (F.col("pos_a") != 3 * F.col("a") + 1) | (F.col("pos_b") != 3 * F.col("b") + 1)
     )
     assert bad.count() == 0
-    return pairs, cfg.neighbor_window
+    members = fps.select("fp", "doc_id", F.xxhash64("doc_id")).collect()
+    return pairs, cfg, [tuple(r) for r in members]
 
 
 def _hot_embedding(spark):
-    from batch_jaro_winkler_spark.operators.ann import embedding_dup_pairs_lsh
+    from batch_jaro_winkler_spark.operators.ann import (
+        bucket_key_arrays,
+        embedding_dup_pairs_lsh,
+    )
 
     # one hyperplane, one table: vectors near the plane normal share one
     # bucket, vectors near its negation the other
@@ -527,7 +560,12 @@ def _hot_embedding(spark):
     pairs = embedding_dup_pairs_lsh(
         emb, threshold=-1.0, dim=dim, n_planes=1, n_tables=1, bucket_cap=8
     )
-    return pairs, DedupConfig.neighbor_window
+    members = (
+        bucket_key_arrays(emb, "vec_id", "embedding", dim, n_planes=1, n_tables=1)
+        .select(F.col("buckets")[0], "vec_id", F.xxhash64("vec_id"))
+        .collect()
+    )
+    return pairs, DedupConfig(allpairs_cap=8), [tuple(r) for r in members]
 
 
 @pytest.mark.parametrize(
@@ -540,8 +578,11 @@ def test_hot_bucket_salted_connectivity(spark, build):
         connected_components,
     )
 
-    pairs, window = build(spark)
+    pairs, cfg, members = build(spark)
+    window = cfg.neighbor_window
     got = {(r["a"], r["b"]) for r in pairs.select("a", "b").collect()}
+    # the exact chained pair set, against a pure-Python reference
+    assert got == _chain_reference(members, cfg.allpairs_cap, window)
     # linear, not quadratic: <= members * window + salt boundaries + small bucket
     assert len(got) <= _MEGA * window + 2**4 + 3, len(got)
     small = {(1000 + i, 1000 + j) for i in range(_SMALL) for j in range(i + 1, _SMALL)}

@@ -322,10 +322,10 @@ def test_background_writer_failure_propagates(spark, tmp_path_factory):
     pipe2 = DedupPipeline(spark, cfg, str(tmp_path_factory.mktemp("wfail2")))
     orig_stage = pipe2._stage
 
-    def exploding_stage(name, compute, overlap_write=True):
+    def exploding_stage(name, compute):
         if name == "jw_edges":
             raise ValueError("stage exploded")
-        return orig_stage(name, compute, overlap_write)
+        return orig_stage(name, compute)
 
     pipe2._stage = exploding_stage
     with pytest.raises(ValueError, match="stage exploded"):

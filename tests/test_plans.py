@@ -85,6 +85,44 @@ def test_jw_verify_shuffle_free_python_side(spark, sf01_dir):
     assert m["BatchEvalPython"] == 0
 
 
+# member tables shaped like each bucket_pairs caller's input: LSH band
+# buckets (ordered by sort_key), fingerprints with a payload column and
+# hyperplane buckets (both ordered by an id hash); 12 members in one bucket
+_BUCKET_MEMBERS = {
+    "lsh": (
+        "band_id int, band_hash long, doc_id long, sort_key long",
+        lambda i: (0, 7, i, i << 59), ["band_id", "band_hash"], "sort_key", (),
+    ),
+    "fingerprint": (
+        "fp long, doc_id long, pos int", lambda i: (7, i, 3 * i), ["fp"], None, ("pos",),
+    ),
+    "embedding": (
+        "table_id int, bucket long, doc_id long",
+        lambda i: (0, 7, i), ["table_id", "bucket"], None, (),
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_BUCKET_MEMBERS))
+def test_bucket_pairs_runs_no_python(spark, shape):
+    """Pair generation is all JVM, hot-bucket chaining included: no grouped
+    map, map or scalar Arrow UDF in the bucket_pairs plan."""
+    from pyspark.sql import functions as F
+
+    from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
+
+    schema, row, keys, order, payload = _BUCKET_MEMBERS[shape]
+    members = spark.createDataFrame([row(i) for i in range(12)], schema)
+    order_col = F.col(order) if order else F.xxhash64(F.col("doc_id"))
+    # cap 4 < 12 members: the bucket takes the hot path
+    pairs = bucket_pairs(members, keys, 4, 2, order_col, payload=payload)
+    m = plan_markers(pairs)
+    assert m["FlatMapGroupsInPandas"] == 0
+    assert m["MapInPandas"] == 0
+    assert m["ArrowEvalPython"] == 0
+    assert pairs.count() >= 12 - 1  # the bucket stays connected
+
+
 # --- widen_scan: the partition-count probe must stay a plan-only call ---
 
 

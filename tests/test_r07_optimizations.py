@@ -187,6 +187,54 @@ def test_verify_pairs_memoizes_identical_text_pairs(spark):
     assert all(k[0] != 20 or k[1] <= 40 for k in got)
 
 
+def test_verify_pairs_large_group_scores_match_scalar(spark):
+    """One left text with 14 distinct candidates (exact copy, near-dups at
+    rising edit counts, unrelated texts): every emitted score equals the
+    scalar ``score_pair`` at float32, and exactly the pairs at or above
+    ``jw_min_score`` are emitted."""
+    from batch_jaro_winkler_spark.operators.config import DedupConfig
+    from batch_jaro_winkler_spark.operators.score_pairs import verify_pairs
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rng = np.random.default_rng(11)
+    cands = [base]
+    for n_edits in range(1, 10):
+        chars = list(base)
+        for p in rng.choice(len(chars), size=3 * n_edits, replace=False):
+            chars[p] = chr(97 + int(rng.integers(0, 26)))
+        cands.append("".join(chars))
+    cands += [
+        "an entirely different document body here",
+        "zyxwvutsrqponmlkjihgfedcba",
+        "lorem ipsum dolor sit amet consectetur adipiscing",
+        "",
+    ]
+    assert len(set(cands)) == len(cands) >= 12
+    docs = spark.createDataFrame(
+        [(0, base)] + [(i + 1, c) for i, c in enumerate(cands)],
+        "doc_id long, jw_text string",
+    )
+    pairs = spark.createDataFrame(
+        [(0, i + 1) for i in range(len(cands))], "a long, b long"
+    )
+    cfg = DedupConfig()
+    got = {
+        (r["a"], r["b"]): r["score"]
+        for r in verify_pairs(pairs, docs, cfg, "doc_id", "jw_text").collect()
+    }
+    expect = {
+        (0, i + 1): score_pair(
+            base, c, weight=cfg.jw_weight, threshold=cfg.jw_threshold
+        )
+        for i, c in enumerate(cands)
+    }
+    kept = {k for k, v in expect.items() if v >= np.float32(cfg.jw_min_score)}
+    assert 1 < len(kept) < len(cands)  # both sides of the threshold occur
+    assert set(got) == kept
+    for k, v in got.items():
+        assert np.float32(v) == np.float32(expect[k]), (k, v, expect[k])
+
+
 def test_verify_pairs_null_text_dropped_without_corruption(spark):
     """A NaN memo key would factorize to -1 and clobber the LAST distinct
     slot: pairs touching a null-text doc must be dropped, and every other
