@@ -22,7 +22,6 @@ __all__ = [
     "tokens_sql",
     "word_shingles",
     "word_shingles_sql",
-    "token_count",
     "quality_metrics",
     "lang_guess",
     "lang_guess_sql",
@@ -99,10 +98,6 @@ def word_shingles_sql(tokens_expr: str, k: int) -> str:
         f"i -> array_to_string(list_slice({tokens_expr}, i, i + {k - 1}), ' ')) "
         f"ELSE []::VARCHAR[] END"
     )
-
-
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
 
 
 # small per-language stopword marker sets for the n-gram/stopword heuristic

@@ -1267,48 +1267,6 @@ def _collect_counts(
     return m, touched
 
 
-def _transpositions_for(
-    model: CandidateModel, in_codes: list, input_len: int, cand_ids: np.ndarray
-) -> np.ndarray:
-    """Exact transposition counts for a SMALL survivor set via the scalar
-    greedy walk (same semantics as the scan; parity enforced by the
-    behavior/property suites which cross-check against score_pair)."""
-    out = np.zeros(len(cand_ids), dtype=np.int64)
-    codes, offsets = model.codes, model.offsets
-    for k, cid in enumerate(cand_ids):
-        c0, c1 = int(offsets[cid]), int(offsets[cid + 1])
-        cand = codes[c0:c1].tolist()
-        lc = c1 - c0
-        r = max(lc, input_len) // 2
-        r = 0 if r <= 1 else r - 1
-        occ: dict[int, list[int]] = {}
-        for j, c in enumerate(cand):
-            occ.setdefault(c, []).append(j)
-        cur: dict[int, int] = {}
-        a_chars: list[int] = []
-        b_matches: list[tuple[int, int]] = []
-        for i, c in enumerate(in_codes):
-            lst = occ.get(c)
-            if lst is None:
-                continue
-            kk = cur.get(c, 0)
-            nn = len(lst)
-            lo = i - r
-            while kk < nn and lst[kk] < lo:
-                kk += 1
-            if kk < nn and lst[kk] <= i + r:
-                a_chars.append(c)
-                b_matches.append((lst[kk], c))
-                kk += 1
-            cur[c] = kk
-        if len(a_chars) > 1:
-            b_matches.sort()
-            out[k] = (
-                sum(ca != cb for ca, (_, cb) in zip(a_chars, b_matches)) // 2
-            )
-    return out
-
-
 def _transpositions_batch(
     model: CandidateModel,
     in_codes_all: np.ndarray,
@@ -1316,13 +1274,14 @@ def _transpositions_batch(
     cand_ids: np.ndarray,
 ) -> np.ndarray:
     """Vectorized exact transpositions for an ARBITRARY candidate subset:
-    the scalar greedy walk of :func:`_transpositions_for`, run as
-    ``input_len`` lock-step vector iterations over the concatenated code
-    slices of the batch (the same cursor semantics — an occurrence below
-    the rising window floor can never match later, so "first unconsumed
-    occurrence >= i - r" IS the resume-cursor match).  ~10-30x the scalar
-    walk on the contender batches the n_best ladder visits; equality with
-    the scalar walk is pinned by the behavior/property suites."""
+    the reference's scalar greedy match walk (the one :func:`score_pair`
+    runs), run as ``input_len`` lock-step vector iterations over the
+    concatenated code slices of the batch (the same cursor semantics — an
+    occurrence below the rising window floor can never match later, so
+    "first unconsumed occurrence >= i - r" IS the resume-cursor match).
+    ~10-30x a per-candidate scalar walk on the contender batches the
+    n_best ladder visits; equality with :func:`score_pair` is pinned by
+    the behavior/property suites."""
     B = len(cand_ids)
     out = np.zeros(B, dtype=np.int64)
     if not B or not input_len:

@@ -23,9 +23,6 @@ class DedupConfig:
     jw_weight: float | None = 0.1    # None = pure Jaro
     jw_threshold: float = 0.7
     max_jw_len: int = 256            # chars of normalized text scored per doc
-    # SimHash stage
-    simhash_bits: int = 64
-    simhash_max_hamming: int = 3
     # substring/fingerprint stage
     # mod-sampling fingerprint selection (content-defined, like CDC/rsync):
     # a position is a fingerprint iff hash % fp_mod == 0 → density 1/fp_mod.

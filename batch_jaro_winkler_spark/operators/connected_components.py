@@ -16,7 +16,7 @@ time dominates (SURVEY.md §7 hard parts).  Convergence is detected by an
 edge-checksum fixpoint (count + xxhash sum), one cheap aggregate per round.
 
 Output: (doc_id, cluster_id) where cluster_id = min(doc_id) of the
-component — including singleton docs if ``all_nodes`` is given.
+component, for every doc of ``all_nodes`` (singletons included).
 """
 
 from __future__ import annotations
@@ -112,10 +112,11 @@ def _local_union_find(hi, lo):
 def connected_components(
     edges: DataFrame,
     cfg: DedupConfig | None = None,
-    all_nodes: DataFrame | None = None,
+    *,
+    all_nodes: DataFrame,
     local_threshold: int = 8_000_000,
 ) -> DataFrame:
-    """edges[a, b] → (doc_id, cluster_id).
+    """edges[a, b] → (doc_id, cluster_id) for every doc of ``all_nodes``.
 
     Hybrid execution: the distributed star rounds exist for edge sets that
     cannot fit one machine; when the (deduplicated) edge list is below
@@ -123,20 +124,18 @@ def connected_components(
     union-find in one job — the standard endgame for iterative graph
     algorithms, avoiding 10+ scheduling rounds on a tiny remainder.
 
-    ``all_nodes`` (optional, one ``doc_id`` column) adds singleton docs with
-    cluster_id = doc_id, so the output is a total cluster assignment.  When
-    given, ``all_nodes`` must cover every edge endpoint (the pipeline's
-    docs table always does) — the local endgame then emits the assignment
-    as ONE narrow map over ``all_nodes`` with the union-find result as a
-    broadcast variable, instead of shipping a driver DataFrame out and
-    hash-building it back for an anti-join.
+    ``all_nodes`` (one ``doc_id`` column) must cover every edge endpoint
+    (the pipeline's docs table always does); docs without an edge get
+    cluster_id = doc_id, so the output is a total cluster assignment.  The
+    local endgame emits it as ONE narrow map over ``all_nodes`` with the
+    union-find result as a broadcast variable, instead of shipping a
+    driver DataFrame out and hash-building it back for an anti-join.
     """
     max_iters = (cfg or DedupConfig()).cc_max_iters
     # lazy checkpoint + count: the count action materializes the
     # checkpoint blocks, so the threshold gate costs ONE job, not two
     cur = _canon(edges).localCheckpoint(eager=False)
     n_edges = cur.count()
-    spark = cur.sparkSession
     if n_edges <= local_threshold:
         # Arrow fetch, both directions: toPandas() lands the edge list as
         # two int64 numpy columns (~128 MB at the 8M-edge threshold —
@@ -152,39 +151,28 @@ def connected_components(
             )
         else:
             nodes = roots = np.empty(0, dtype=np.int64)
-        if all_nodes is not None:
-            # nodes is sorted (np.unique): membership + root lookup are
-            # vectorized binary searches inside a narrow map — the write
-            # stays as wide as all_nodes' partitioning, no driver
-            # round-trip, no broadcast-hash build of a million-key table
-            b = spark.sparkContext.broadcast((nodes, roots))
+        # nodes is sorted (np.unique): membership + root lookup are
+        # vectorized binary searches inside a narrow map — the write
+        # stays as wide as all_nodes' partitioning, no driver
+        # round-trip, no broadcast-hash build of a million-key table
+        b = cur.sparkSession.sparkContext.broadcast((nodes, roots))
 
-            def assign_map(batches):
-                nd, rt = b.value
-                for pdf in batches:
-                    ids = pdf["doc_id"].to_numpy(np.int64)
-                    if len(nd):
-                        j = np.searchsorted(nd, ids)
-                        j = np.minimum(j, len(nd) - 1)
-                        hit = nd[j] == ids
-                        cl = np.where(hit, rt[j], ids)
-                    else:
-                        cl = ids
-                    yield pd.DataFrame({"doc_id": ids, "cluster_id": cl})
+        def assign_map(batches):
+            nd, rt = b.value
+            for pdf in batches:
+                ids = pdf["doc_id"].to_numpy(np.int64)
+                if len(nd):
+                    j = np.searchsorted(nd, ids)
+                    j = np.minimum(j, len(nd) - 1)
+                    hit = nd[j] == ids
+                    cl = np.where(hit, rt[j], ids)
+                else:
+                    cl = ids
+                yield pd.DataFrame({"doc_id": ids, "cluster_id": cl})
 
-            return all_nodes.select(
-                F.col(all_nodes.columns[0]).cast("long").alias("doc_id")
-            ).mapInPandas(assign_map, "doc_id long, cluster_id long")
-        if len(nodes):
-            pdf = pd.DataFrame({"doc_id": nodes, "cluster_id": roots})
-        else:
-            pdf = pd.DataFrame(
-                [(int(-1), int(-1))], columns=["doc_id", "cluster_id"]
-            ).astype("int64")
-        assign = spark.createDataFrame(pdf)
-        if not len(nodes):
-            assign = assign.where(F.lit(False))
-        return assign
+        return all_nodes.select(
+            F.col(all_nodes.columns[0]).cast("long").alias("doc_id")
+        ).mapInPandas(assign_map, "doc_id long, cluster_id long")
     prev_sig = _checksum(cur)
     for _ in range(max_iters):
         cur = _canon(_small_star(_canon(_large_star(cur)))).localCheckpoint(eager=True)
@@ -199,11 +187,9 @@ def connected_components(
         "cluster_id", F.col("doc_id")
     )
     assign = members.union(roots)
-    if all_nodes is not None:
-        singletons = (
-            all_nodes.select(F.col(all_nodes.columns[0]).alias("doc_id"))
-            .join(assign.select("doc_id"), "doc_id", "left_anti")
-            .withColumn("cluster_id", F.col("doc_id"))
-        )
-        assign = assign.union(singletons)
-    return assign
+    singletons = (
+        all_nodes.select(F.col(all_nodes.columns[0]).alias("doc_id"))
+        .join(assign.select("doc_id"), "doc_id", "left_anti")
+        .withColumn("cluster_id", F.col("doc_id"))
+    )
+    return assign.union(singletons)

@@ -17,9 +17,11 @@ Schleimer/Wilkerson/Aiken SIGMOD'03 — PAPERS.md):
   missed with probability (1-1/fp_mod)^151 ≈ 0.8%;
 * shuffle only (fingerprint, doc_id, pos): fingerprint buckets → candidate
   pairs through ``lsh.bucket_pairs`` (same capped two-path policy as LSH,
-  hot fingerprints salted and chained);
+  hot fingerprints salted and chained), one seed per pair and offset
+  diagonal;
 * verify: broadcast-join bounded text slices around the seed offsets,
-  vectorized first-mismatch extension in pandas, keep pairs reaching
+  first-mismatch extension over seed-aligned code-point matrices in
+  pandas, keep the pairs whose longest match reaches
   ``min_substring_chars``.
 
 This replaces a distributed suffix array: equivalent detection power for
@@ -129,11 +131,13 @@ def fingerprints(
 
 
 def fingerprint_pairs(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """fingerprints → candidate (a, b, pos_a, pos_b): docs sharing a
+    """fingerprints → candidate seeds (a, b, pos_a, pos_b): docs sharing a
     fingerprint, through :func:`~.lsh.bucket_pairs` (the LSH skew policy:
     hot fingerprints — boilerplate shared by thousands of docs — are
-    salted by a doc-id hash and chained), keeping one seed offset pair per
-    (a, b), the earliest."""
+    salted by a doc-id hash and chained), keeping one seed per (a, b,
+    pos_a - pos_b) diagonal, the earliest.  One seed per pair would miss a
+    long shared passage whenever a short shared line (a newsletter
+    footer) comes first on another diagonal."""
     # lazy checkpoint: bucket_pairs reads its input twice (size aggregate
     # and join), which would otherwise run the fingerprint pass twice
     pairs = bucket_pairs(
@@ -144,9 +148,10 @@ def fingerprint_pairs(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
         F.xxhash64(F.col("doc_id")),
         payload=("pos",),
     )
-    return pairs.groupBy("a", "b").agg(
-        F.min(F.struct("pos_a", "pos_b")).alias("seed")
-    ).select("a", "b", F.col("seed.pos_a"), F.col("seed.pos_b"))
+    diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
+    return pairs.groupBy("a", "b", diag).agg(F.min("pos_a").alias("pos_a")).select(
+        "a", "b", "pos_a", (F.col("pos_a") - F.col("diag")).alias("pos_b")
+    )
 
 
 def substring_edges(
@@ -160,7 +165,8 @@ def substring_edges(
 ) -> DataFrame:
     """End-to-end substring stage → verified edges (a, b, match_len) where a
     verbatim common substring of >= cfg.min_substring_chars normalized chars
-    exists around a shared fingerprint.
+    exists around a shared fingerprint; one row per pair, the longest
+    match over its seed diagonals.
 
     ``fps`` — optionally reuse a precomputed/persisted fingerprint table
     (columns fp, doc_id, pos) instead of recomputing; ``pair_filter`` —
@@ -230,97 +236,57 @@ def substring_edges(
         )
     )
 
-    def _extend(sa: np.ndarray, sb: np.ndarray, pa: int, pb: int) -> int:
-        """Length of the common substring around the aligned seed at
-        (pa, pb) — vectorized first-mismatch search on code-point arrays."""
-        back = min(pa, pb)
-        if back:
-            neq = sa[pa - back : pa][::-1] != sb[pb - back : pb][::-1]
-            lo = int(np.argmax(neq)) if neq.any() else back
-        else:
-            lo = 0
-        fwd = min(len(sa) - pa, len(sb) - pb)
-        if fwd:
-            neq = sa[pa : pa + fwd] != sb[pb : pb + fwd]
-            hi = int(np.argmax(neq)) if neq.any() else fwd
-        else:
-            hi = 0
-        return lo + hi
-
-    W = 2 * cap + k
+    def aligned(slices, locs, pad: str, width: int) -> np.ndarray:
+        """(n, width) code-point matrix of the slices, each left-padded so
+        its seed sits at column ``cap`` and right-padded to ``width``."""
+        text = "".join(
+            (pad * (cap - int(loc)) + s).ljust(width, pad)
+            for s, loc in zip(slices, locs)
+        )
+        return np.frombuffer(text.encode("utf-32-le"), dtype="<u4").reshape(
+            len(locs), width
+        )
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            if not len(pdf):
+                continue
             loc_a = pdf["loc_a"].to_numpy(np.int64)
             loc_b = pdf["loc_b"].to_numpy(np.int64)
-            out_a: list = []
-            out_b: list = []
-            out_len: list = []
-            # common case (seed not clipped by a document start): both
-            # seeds sit at column `cap`, so the whole batch verifies as two
-            # padded (n, W) code-point matrices — right-padding slice_a
-            # with \x00 and slice_b with \x01 makes true-end-of-slice a
-            # guaranteed mismatch, which is exactly the _extend boundary
-            common = (loc_a == cap) & (loc_b == cap)
-            ci = np.flatnonzero(common)
-            if len(ci):
-                sa = pdf["slice_a"].to_numpy()[ci]
-                sb = pdf["slice_b"].to_numpy()[ci]
-                A = np.frombuffer(
-                    "".join(s.ljust(W, "\x00") for s in sa).encode("utf-32-le"),
-                    dtype="<u4",
-                ).reshape(len(ci), W)
-                B = np.frombuffer(
-                    "".join(s.ljust(W, "\x01") for s in sb).encode("utf-32-le"),
-                    dtype="<u4",
-                ).reshape(len(ci), W)
-                eq = A == B
-                seed_ok = eq[:, cap : cap + k].all(axis=1)
-                left = eq[:, cap - 1 :: -1]
-                lo = np.argmin(left, axis=1)
-                lo = np.where(left.all(axis=1), cap, lo)
-                right = eq[:, cap:]
-                hi = np.argmin(right, axis=1)
-                hi = np.where(right.all(axis=1), W - cap, hi)
-                total = lo + hi
-                keep = (total >= min_len) & seed_ok
-                if keep.any():
-                    sel = ci[keep]
-                    out_a.append(pdf["a"].to_numpy(np.int64)[sel])
-                    out_b.append(pdf["b"].to_numpy(np.int64)[sel])
-                    out_len.append(total[keep].astype(np.int32))
-            # rare edge rows (seed within `cap` chars of a doc start):
-            # exact scalar extension
-            ei = np.flatnonzero(~common)
-            if len(ei):
-                e_a, e_b, e_len = [], [], []
-                sub = pdf.iloc[ei]
-                for r in sub.itertuples(index=False):
-                    sa1 = np.frombuffer(r.slice_a.encode("utf-32-le"), dtype="<u4")
-                    sb1 = np.frombuffer(r.slice_b.encode("utf-32-le"), dtype="<u4")
-                    pa, pb = int(r.loc_a), int(r.loc_b)
-                    total1 = _extend(sa1, sb1, pa, pb)
-                    if total1 >= min_len and np.array_equal(
-                        sa1[pa : pa + k], sb1[pb : pb + k]
-                    ):
-                        e_a.append(r.a)
-                        e_b.append(r.b)
-                        e_len.append(total1)
-                if e_a:
-                    out_a.append(np.asarray(e_a, dtype=np.int64))
-                    out_b.append(np.asarray(e_b, dtype=np.int64))
-                    out_len.append(np.asarray(e_len, dtype=np.int32))
-            if out_a:
+            # every row verifies in two aligned (n, width) matrices: a seed
+            # within `cap` chars of a document start has a shorter left
+            # context, padded out.  Side a pads with \x00 and side b with
+            # \x01 — normalized text holds neither, so a pad always
+            # mismatches and each extension stops where the shorter
+            # context ends.  Width: the longest context right of a seed,
+            # and at least the seed gram, so a hand-built seed past a doc
+            # end never passes on a partial gram
+            width = cap + max(
+                k,
+                int((pdf["slice_a"].str.len().to_numpy() - loc_a).max()),
+                int((pdf["slice_b"].str.len().to_numpy() - loc_b).max()),
+            )
+            eq = aligned(pdf["slice_a"], loc_a, "\x00", width) == aligned(
+                pdf["slice_b"], loc_b, "\x01", width
+            )
+            seed_ok = eq[:, cap : cap + k].all(axis=1)
+            left = eq[:, cap - 1 :: -1]
+            lo = np.where(left.all(axis=1), cap, np.argmin(left, axis=1))
+            right = eq[:, cap:]
+            hi = np.where(right.all(axis=1), width - cap, np.argmin(right, axis=1))
+            total = lo + hi
+            keep = np.flatnonzero((total >= min_len) & seed_ok)
+            if len(keep):
                 yield pd.DataFrame(
                     {
-                        "a": np.concatenate(out_a),
-                        "b": np.concatenate(out_b),
-                        "match_len": np.concatenate(out_len),
+                        "a": pdf["a"].to_numpy(np.int64)[keep],
+                        "b": pdf["b"].to_numpy(np.int64)[keep],
+                        "match_len": total[keep].astype(np.int32),
                     }
                 )
-            else:
-                yield pd.DataFrame(
-                    {"a": [], "b": [], "match_len": []}
-                ).astype({"a": np.int64, "b": np.int64, "match_len": np.int32})
 
-    return joined.mapInPandas(verify, schema="a long, b long, match_len int")
+    return (
+        joined.mapInPandas(verify, schema="a long, b long, match_len int")
+        .groupBy("a", "b")
+        .agg(F.max("match_len").alias("match_len"))
+    )

@@ -19,10 +19,8 @@ def widen_scan(df: DataFrame) -> DataFrame:
     Caveat: the partition-count probe goes through ``df.rdd``, which under
     AQE materializes upstream shuffle stages for complex plans — callers
     pass scan-stage frames (raw reads / simple projections), where the
-    probe is free.  Streaming frames pass through untouched.
+    probe is free.
     """
-    if df.isStreaming:
-        return df
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < parallelism:
         return df.repartition(parallelism)

@@ -14,11 +14,6 @@ Two operators:
   mirroring the reference's compile-once-query-many design), partial top-k
   per batch, final top-k via a window — Spark's TakeOrderedAndProject
   replaces the reference's top-k retry ladder (SURVEY.md O15/R4).
-
-In pure-Jaro mode (``jw_weight=None``) a cheap Catalyst-side length-band
-prefilter (the DataFrame corollary of the reference's required-matches
-pruning, SURVEY.md R1) drops pairs whose length ratio already bounds the
-score below min_score, before any Python runs.
 """
 
 from __future__ import annotations
@@ -75,17 +70,6 @@ def verify_pairs(
         F.col(id_col).alias("b"), F.col(text_col).alias("text_b")
     )
     joined = pairs.join(ta, "a").join(tb, "b")
-
-    # Catalyst-side length-band prune (R1 corollary): in pure-jaro mode the
-    # score is bounded by (lo/la + lo/lb + 1)/3
-    if cfg.jw_weight is None:
-        la = F.length("text_a").cast("double")
-        lb = F.length("text_b").cast("double")
-        lo = F.least(la, lb)
-        joined = joined.where(
-            (la == 0) | (lb == 0) | ((lo / la + lo / lb + 1.0) / 3.0 >= cfg.jw_min_score)
-        )
-
     min_score = cfg.jw_min_score
     weight = cfg.jw_weight
     threshold = cfg.jw_threshold
@@ -156,15 +140,12 @@ def score_topk(
     min_score: float | None = None,
     weight: float | None = 0.1,
     threshold: float | None = 0.7,
-    probe_id: str = "probe_id",
-    probe_text: str = "probe_text",
-    cand_id: str = "cand_id",
-    cand_text: str = "cand_text",
     dtype=np.float32,
     max_probes: int = 100_000,
     cand_transform=None,
 ) -> DataFrame:
-    """Per-probe top-k over a candidate corpus.
+    """probes[probe_id, probe_text] x candidates[cand_id, cand_text] →
+    per-probe top-k (probe_id, cand_id, score).
 
     The probe set (small) is broadcast-joined onto every candidate
     partition; each Arrow batch compiles ONE candidate model and scores all
@@ -198,7 +179,7 @@ def score_topk(
     # one job: the guard reads at most max_probes+1 rows of the same
     # collect the happy path needs anyway (no separate count over the
     # probe lineage)
-    rows = probes.select(probe_id, probe_text).limit(max_probes + 1).collect()
+    rows = probes.select("probe_id", "probe_text").limit(max_probes + 1).collect()
     if len(rows) > max_probes:
         raise ValueError(
             f"score_topk probe set exceeds max_probes={max_probes}; "
@@ -211,7 +192,7 @@ def score_topk(
     # partition compiles ~one model regardless of arrow batch sizing
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in _coalesced(batches):
-            ctext = pdf[cand_text]
+            ctext = pdf["cand_text"]
             if cand_transform is not None:
                 ctext = cand_transform(ctext)
             model = build_model(ctext.tolist())
@@ -227,13 +208,13 @@ def score_topk(
                     dtype=dtype,
                 )
                 out_p.extend([pid] * len(idx))
-                out_c.extend(pdf[cand_id].iloc[np.asarray(idx, dtype=np.int64)])
+                out_c.extend(pdf["cand_id"].iloc[np.asarray(idx, dtype=np.int64)])
                 out_s.extend(sc.astype(np.float64))
             yield pd.DataFrame(
                 {"probe_id": out_p, "cand_id": out_c, "score": out_s}
             )
 
-    partial = candidates.select(cand_id, cand_text).mapInPandas(
+    partial = candidates.select("cand_id", "cand_text").mapInPandas(
         per_batch, schema="probe_id long, cand_id long, score double"
     )
     if k is None:

@@ -116,32 +116,28 @@ def compute_signatures(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    include_minhash: bool = False,
-    pre_normalized: bool = False,
     include_norm: bool = False,
 ) -> DataFrame:
     """docs[id_col, text_col] → [doc_id, n_tokens, sort_key, band_hashes,
-    simhash, jw_text] with no shuffle (narrow map only).
+    simhash] (plus ``norm`` when ``include_norm``) with no shuffle (narrow
+    map only).
 
     ``sort_key`` is minhash[0] — the only signature value downstream stages
     need row-wise (hot-bucket neighbor ordering); the full 128-perm array is
-    folded into ``band_hashes`` here and not materialized unless
-    ``include_minhash`` (checkpointing 128 longs per doc is pure I/O waste
-    at 10^12 rows).
+    folded into ``band_hashes`` here and never materialized (checkpointing
+    128 longs per doc is pure I/O waste at 10^12 rows).
 
-    ``include_norm`` emits the full normalized text as ``norm`` and drops
-    ``jw_text`` (its prefix — derivable with one substring, so storing
-    both in a checkpoint would double the text bytes written).  This lets
-    the pipeline fuse normalization into this stage instead of paying a
-    separate normalize checkpoint's write→read barrier."""
+    ``include_norm`` emits the full normalized text as ``norm``; the
+    pipeline derives the Jaro-Winkler prefix from it with one substring.
+    This lets the pipeline fuse normalization into this stage instead of
+    paying a separate normalize checkpoint's write→read barrier."""
     num_perm, bands, rows = cfg.num_perm, cfg.bands, cfg.rows_per_band
     k = cfg.shingle_k
     seed = cfg.seed
-    max_jw = cfg.max_jw_len
 
     # ship ONE string per row across Arrow — serializing token arrays (tens
     # of millions of small strings) costs more than the hash math itself;
-    # tokenization and (when needed) normalization happen in pandas
+    # tokenization and normalization happen in pandas
     prepped = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("norm"),
@@ -155,11 +151,10 @@ def compute_signatures(
         bit_idx = np.arange(64, dtype=np.uint64)
         for pdf in batches:
             n = len(pdf)
-            if not pre_normalized:
-                pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
+            pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
             tok_lists = [s.split(" ") if s else [] for s in pdf["norm"]]
             sh, row_off = _batch_shingle_hashes(tok_lists, k)
-            out_min = np.full((n, num_perm), -1, dtype=np.int64)
+            out_sort = np.full(n, -1, dtype=np.int64)
             out_band = np.full((n, bands), -1, dtype=np.int64)
             out_sim = np.zeros(n, dtype=np.uint64)
             nonempty = np.flatnonzero(row_off[1:] > row_off[:-1])
@@ -197,7 +192,7 @@ def compute_signatures(
                     # MinHash: multiply-shift table + segmented min
                     table = h[:, None] * a_params[None, :] + b_params[None, :]
                     sig = np.minimum.reduceat(table, bounds, axis=0)
-                    out_min[rows_c] = sig.view(np.int64)
+                    out_sort[rows_c] = sig[:, 0].view(np.int64)
                     # band hashes: FNV fold across each band's rows
                     acc = np.full((len(rows_c), bands), _FNV_OFFSET, dtype=np.uint64)
                     sig3 = sig.reshape(len(rows_c), bands, rows)
@@ -221,20 +216,15 @@ def compute_signatures(
                 "n_tokens": np.fromiter(
                     (len(t) for t in tok_lists), dtype=np.int32, count=n
                 ),
-                "sort_key": out_min[:, 0].copy(),
+                "sort_key": out_sort,
                 "band_hashes": list(out_band),
                 "simhash": out_sim.view(np.int64),
             }
             if include_norm:
                 cols["norm"] = pdf["norm"]
-            else:
-                cols["jw_text"] = pdf["norm"].str.slice(0, max_jw)
-            if include_minhash:
-                cols["minhash"] = list(out_min)
             yield pd.DataFrame(cols)
 
     schema = "doc_id long, n_tokens int, sort_key long, band_hashes array<long>, simhash long"
-    schema += ", norm string" if include_norm else ", jw_text string"
-    if include_minhash:
-        schema += ", minhash array<long>"
+    if include_norm:
+        schema += ", norm string"
     return prepped.mapInPandas(compute, schema=schema)

@@ -163,7 +163,6 @@ def suffix_array_edges(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pre_normalized: bool = False,
     co_partition: bool = False,
     num_partitions: int | None = None,
     chain_only: bool = True,
@@ -185,7 +184,6 @@ def suffix_array_edges(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("norm")
     )
 
-    normalized = pre_normalized
     if co_partition:
         from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
             _rolling_hashes,
@@ -195,8 +193,7 @@ def suffix_array_edges(
 
         def keyed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                if not pre_normalized:
-                    pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
+                pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
                 ckeys = np.empty(len(pdf), dtype=np.int64)
                 for i, t in enumerate(pdf["norm"]):
                     codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4")
@@ -210,13 +207,12 @@ def suffix_array_edges(
             .repartition(n_parts, "ckey")
             .drop("ckey")
         )
-        normalized = True
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_ids: list = []
         all_texts: list = []
         for pdf in batches:
-            if not normalized:
+            if not co_partition:  # else the keyed pass normalized already
                 pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
             all_ids.extend(pdf["doc_id"])
             all_texts.extend(pdf["norm"])

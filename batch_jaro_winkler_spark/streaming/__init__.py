@@ -1,11 +1,3 @@
-from batch_jaro_winkler_spark.streaming.incremental import (
-    incremental_signatures,
-    session_window_stats,
-    streaming_session_counts,
-)
+from batch_jaro_winkler_spark.streaming.incremental import session_window_stats
 
-__all__ = [
-    "incremental_signatures",
-    "session_window_stats",
-    "streaming_session_counts",
-]
+__all__ = ["session_window_stats"]

@@ -1,61 +1,27 @@
-"""Structured-Streaming faces of the engine's operators.
+"""Session-window aggregation over the stream-shaped events table.
 
-The north_rule pipeline is batch (strictly batch reference; resumable
-checkpoints), but the signature stage is a stateless narrow map and the
-events table is stream-shaped, so both get streaming counterparts for the
-ingest-as-it-lands deployment mode:
-
-* :func:`incremental_signatures` — ``readStream`` over a documents
-  directory → the SAME ``compute_signatures`` transformation (stateless
-  mapInPandas is streaming-safe) → sink.  New near-dup detection then runs
-  as periodic batch over the growing signature table (signatures are
-  incremental; LSH banding + CC are recomputed per trigger, the standard
-  lambda shape for dedup).
-* :func:`session_window_stats` — session-window event aggregation, one
-  code path for batch AND streaming (pass ``watermark`` to get the
-  late-data-tolerant streaming variant).  Boundary semantics: Spark's
-  ``session_window`` is end-exclusive, so a gap of exactly ``gap_minutes``
-  starts a NEW session — the batch ``events_sessions`` driver query uses
-  the same ``gap >= threshold`` rule, so the two are exact twins.
+:func:`session_window_stats` runs Spark's ``session_window`` (the
+Structured-Streaming operator) on batch frames, backing the
+``events_session_window`` query in ``__spark_entry__``.  Boundary
+semantics: Spark's ``session_window`` is end-exclusive, so a gap of
+exactly ``gap_minutes`` starts a NEW session — the ``events_sessions``
+query uses the same ``gap >= threshold`` rule, so the two are exact twins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from batch_jaro_winkler_spark.operators.config import DedupConfig
-from batch_jaro_winkler_spark.operators.signatures import compute_signatures
+from pyspark.sql import DataFrame, functions as F
 
 
-def incremental_signatures(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str = "doc_id long, text string",
-    cfg: DedupConfig | None = None,
-) -> DataFrame:
-    """Streaming DataFrame of signatures for parquet files landing in
-    ``input_dir``.  Start with ``.writeStream.format('parquet')`` (real
-    deployment) or ``format('memory')`` + ``processAllAvailable()``
-    (tests)."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    return compute_signatures(stream, cfg or DedupConfig(), "doc_id", "text")
-
-
-def session_window_stats(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str | None = None,
-) -> DataFrame:
+def session_window_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-user session-window aggregation over (ts, user_id, value[,
-    event_id]) — usable on batch frames (the ``events_session_window``
-    driver query) and, with ``watermark`` set, on streams.
+    event_id]).
 
     ``value`` is summed in exact integer ten-thousandths so the result is
     partition-order independent (the repo's integer-cents rule).  When an
     ``event_id`` column exists, ``first_event`` = min(event_id) identifies
     each session without emitting raw timestamps.
     """
-    ev = events.withWatermark("ts", watermark) if watermark else events
     val_units = F.round(F.col("value") * 10000).cast("long")
     aggs = [
         F.count(F.lit(1)).alias("n_events"),
@@ -63,19 +29,7 @@ def session_window_stats(
     ]
     if "event_id" in events.columns:
         aggs.insert(0, F.min("event_id").alias("first_event"))
-    return ev.groupBy(
+    return events.groupBy(
         F.session_window(F.col("ts"), f"{gap_minutes} minutes"),
         F.col("user_id"),
     ).agg(*aggs)
-
-
-def streaming_session_counts(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked session-window aggregation per user over a streaming
-    events frame (ts, user_id, value): the streaming twin of the batch
-    ``events_sessions`` / ``events_session_window`` queries (identical
-    gap->=threshold split semantics; see session_window_stats)."""
-    return session_window_stats(events, gap_minutes, watermark)

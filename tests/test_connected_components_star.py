@@ -55,6 +55,9 @@ def _assignments(df):
 def test_star_path_matches_union_find(spark, seed, monkeypatch):
     edges_py, _ = _random_graph(seed)
     edges = spark.createDataFrame(edges_py, "a long, b long")
+    nodes = spark.createDataFrame(
+        [(d,) for d in sorted({x for e in edges_py for x in e})], "doc_id long"
+    )
 
     rounds = {"n": 0}
     orig = cc_mod._large_star
@@ -65,9 +68,11 @@ def test_star_path_matches_union_find(spark, seed, monkeypatch):
 
     monkeypatch.setattr(cc_mod, "_large_star", spy)
 
-    star = _assignments(connected_components(edges, local_threshold=0))
+    star = _assignments(connected_components(edges, all_nodes=nodes, local_threshold=0))
     assert rounds["n"] >= 3, "graph too easy: star fixpoint needs >=3 rounds"
-    uf = _assignments(connected_components(edges, local_threshold=1 << 40))
+    uf = _assignments(
+        connected_components(edges, all_nodes=nodes, local_threshold=1 << 40)
+    )
     assert star == uf
     # structural invariants: every cluster id is its component minimum and
     # itself assigned to itself (root self-assignment)

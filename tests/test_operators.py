@@ -383,66 +383,6 @@ def test_png_resize_is_real_and_default(spark):
     assert got[4]["thumb"] is None and got[4]["resize_error"]
 
 
-# --- streaming faces ---
-
-
-def test_streaming_signatures_and_sessions(spark, tmp_path):
-    from batch_jaro_winkler_spark.streaming import (
-        incremental_signatures,
-        streaming_session_counts,
-    )
-
-    src = str(tmp_path / "stream_in")
-    spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"), (2, "hello world")],
-        "doc_id long, text string",
-    ).write.parquet(src)
-    sig_stream = incremental_signatures(spark, src)
-    assert sig_stream.isStreaming
-    q = (
-        sig_stream.writeStream.format("memory")
-        .queryName("sig_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = spark.sql("SELECT doc_id, n_tokens FROM sig_out").collect()
-        assert {(r["doc_id"], r["n_tokens"]) for r in out} == {(1, 9), (2, 2)}
-    finally:
-        q.stop()
-
-    ev_src = str(tmp_path / "events_in")
-    spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:00:00", 1.0),
-            (1, "2024-01-01 00:10:00", 2.0),
-            (1, "2024-01-01 03:00:00", 3.0),
-            (2, "2024-01-01 00:00:00", 4.0),
-        ],
-        "user_id long, ts_s string, value double",
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s").write.parquet(ev_src)
-    stream = spark.readStream.schema("user_id long, value double, ts timestamp").parquet(ev_src)
-    agg = streaming_session_counts(stream)
-    q2 = (
-        agg.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-        rows = spark.sql(
-            "SELECT user_id, n_events FROM sess_out ORDER BY user_id, n_events"
-        ).collect()
-        assert [(r["user_id"], r["n_events"]) for r in rows] == [(1, 1), (1, 2), (2, 1)]
-    finally:
-        q2.stop()
-
-
-# --- catalog atomicity + config invalidation ---
-
-
 def test_catalog_atomic_and_lineage(spark, tmp_path):
     from batch_jaro_winkler_spark.sources.catalog import Catalog
 
@@ -587,7 +527,10 @@ def test_hot_bucket_salted_connectivity(spark, build):
     assert len(got) <= _MEGA * window + 2**4 + 3, len(got)
     small = {(1000 + i, 1000 + j) for i in range(_SMALL) for j in range(i + 1, _SMALL)}
     assert small <= got  # the small bucket still gets all its pairs
-    clusters = connected_components(pairs.select("a", "b"))
+    nodes = spark.createDataFrame(
+        [(d,) for d in sorted({m[1] for m in members})], "doc_id long"
+    )
+    clusters = connected_components(pairs.select("a", "b"), all_nodes=nodes)
     roots = {
         r["cluster_id"]
         for r in clusters.where(F.col("doc_id") < 1000).collect()
@@ -753,17 +696,24 @@ def test_ivf_assign_empty_partition(spark):
 
 
 def test_cc_local_union_find_emits_roots(spark):
-    """The local union-find endgame must return a row for EVERY node,
-    component roots included, without relying on all_nodes backfill."""
+    """The local union-find returns a row for EVERY node, component roots
+    included, so the endgame's lookup never falls back to the doc id for
+    a node that has an edge."""
     from batch_jaro_winkler_spark.operators.connected_components import (
+        _local_union_find,
         connected_components,
     )
+
+    nodes, roots = _local_union_find([2, 3, 11], [1, 2, 10])
+    assert dict(zip(nodes.tolist(), roots.tolist())) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "a long, b long"
     )
+    nodes = spark.createDataFrame([(d,) for d in (1, 2, 3, 10, 11)], "doc_id long")
     got = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(edges).collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(edges, all_nodes=nodes).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}, got
 

@@ -1,0 +1,141 @@
+"""Substring-stage verification: the aligned-matrix extension against a
+naive character loop, and recall when two docs share both a short
+boilerplate line and a long passage."""
+
+from __future__ import annotations
+
+import random
+
+import numpy as np
+
+from batch_jaro_winkler_spark.operators.config import DedupConfig
+from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
+    _rolling_hashes,
+    substring_edges,
+)
+
+
+def _rand(rng: random.Random, n: int) -> str:
+    return "".join(rng.choice("abcdefghij") for _ in range(n))
+
+
+def _naive_extension(ta: str, tb: str, pa: int, pb: int, cfg: DedupConfig):
+    """Common-substring length around the aligned seed (pa, pb), one
+    character at a time, inside the context each side ships: chars
+    [max(p - cap, 0), max(p - cap, 0) + 2 * cap + k) of its doc.  None
+    when the seed grams differ."""
+    k = cfg.gram_chars
+    cap = cfg.min_substring_chars + k
+    if len(ta[pa : pa + k]) < k or ta[pa : pa + k] != tb[pb : pb + k]:
+        return None
+    sa, sb = max(pa - cap, 0), max(pb - cap, 0)
+    ea, eb = min(len(ta), sa + 2 * cap + k), min(len(tb), sb + 2 * cap + k)
+    lo = 0
+    while pa - lo - 1 >= sa and pb - lo - 1 >= sb and ta[pa - lo - 1] == tb[pb - lo - 1]:
+        lo += 1
+    hi = 0
+    while pa + hi < ea and pb + hi < eb and ta[pa + hi] == tb[pb + hi]:
+        hi += 1
+    return lo + hi
+
+
+def test_substring_verify_matches_naive_extension(spark):
+    # small widths so every clipping case fits short texts: k=10,
+    # min_len=40, cap=50, each side ships 110 chars of context
+    cfg = DedupConfig(gram_chars=10, min_substring_chars=40)
+    rng = random.Random(7)
+    shared = _rand(rng, 80)
+    long_shared = _rand(rng, 400)
+    texts: dict[int, str] = {}
+    seeds: list[tuple[int, int, int, int]] = []  # (a, pos_a, b, pos_b), a < b
+
+    def case(ta: str, pa: int, tb: str, pb: int) -> None:
+        a = 2 * len(seeds)
+        texts[a], texts[a + 1] = ta, tb
+        seeds.append((a, pa, a + 1, pb))
+
+    # seed clipped by the document start on side a, on side b, on both
+    case(shared + _rand(rng, 100), 5, _rand(rng, 70) + shared + _rand(rng, 60), 75)
+    case(_rand(rng, 90) + shared + _rand(rng, 40), 120, shared + _rand(rng, 100), 30)
+    case(shared + _rand(rng, 50), 12, _rand(rng, 4) + shared + _rand(rng, 30), 16)
+    case(shared + _rand(rng, 60), 8, shared + _rand(rng, 40), 8)
+    # seeds at a document end (the gram ends the doc), clipped and not
+    case(_rand(rng, 100) + shared, 170, _rand(rng, 30) + shared, 100)
+    case(_rand(rng, 10) + shared, 80, _rand(rng, 3) + shared, 73)
+    # a common run longer than the shipped context, mid-doc and near a start
+    case(long_shared, 200, long_shared, 200)
+    case(long_shared, 20, _rand(rng, 7) + long_shared, 27)
+    # too short to pass: 30 shared chars
+    case(_rand(rng, 60) + shared[:30] + _rand(rng, 60), 65, shared[:30] + _rand(rng, 60), 5)
+    # a seed whose gram differs (a fingerprint collision, not a copy)
+    case(_rand(rng, 200), 60, _rand(rng, 200), 60)
+
+    # one hand-built fingerprint per pair: fp = the pair's index
+    fps = spark.createDataFrame(
+        [(a, i, pa) for i, (a, pa, _, _) in enumerate(seeds)]
+        + [(b, i, pb) for i, (_, _, b, pb) in enumerate(seeds)],
+        "doc_id long, fp long, pos int",
+    )
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, norm string")
+    got = {
+        (r["a"], r["b"]): r["match_len"]
+        for r in substring_edges(
+            docs, cfg, "doc_id", "norm", pre_normalized=True, fps=fps
+        ).collect()
+    }
+    lens = {
+        (a, b): _naive_extension(texts[a], texts[b], pa, pb, cfg)
+        for a, pa, b, pb in seeds
+    }
+    want = {p: n for p, n in lens.items() if n is not None and n >= cfg.min_substring_chars}
+    assert got == want, (got, lens)
+    # the cases cover what they claim: passing, too-short and gram-mismatch rows
+    assert len(want) == 8
+    assert sorted(n for n in lens.values() if n is not None)[0] < cfg.min_substring_chars
+    assert list(lens.values()).count(None) == 1
+    # the shipped context bounds the long runs: 2 * cap + k = 110 chars
+    # mid-doc; near a start, the 20 chars before the seed on side a plus
+    # the 83 after it that fit side b's 110-char slice
+    assert (lens[(12, 13)], lens[(14, 15)]) == (110, 103)
+
+
+_NEWSLETTER = "sign up for our newsletter to receive the latest news and offers"
+
+
+def test_substring_recall_when_a_short_shared_line_seeds_first(spark):
+    """Two docs share a boilerplate line early on and a 300-char passage
+    later.  The line's fingerprint is the earliest shared one, but its
+    run is far below min_substring_chars; the passage must still be
+    found."""
+    cfg = DedupConfig()
+    # the line is shorter than min_substring_chars, yet one of its grams is
+    # a fingerprint, so every pair below shares it before the passage
+    codes = np.frombuffer(_NEWSLETTER.encode("utf-32-le"), dtype="<u4")
+    h = _rolling_hashes(codes, cfg.gram_chars)
+    assert ((h & np.uint64(cfg.fp_mod - 1)) == 0).any()
+    assert len(_NEWSLETTER) < cfg.min_substring_chars
+    rng = random.Random(11)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 9)))
+        for _ in range(3000)
+    ]
+
+    def words(n_chars: int) -> str:
+        out = []
+        while len(" ".join(out)) < n_chars:
+            out.append(rng.choice(vocab))
+        return " ".join(out)
+
+    rows = []
+    for p in range(5):
+        passage = words(300)
+        a, b = 2 * p, 2 * p + 1
+        rows.append((a, f"{words(40)} {_NEWSLETTER} {words(150)} {passage} {words(120)}"))
+        rows.append((b, f"{words(90)} {_NEWSLETTER} {words(60)} {passage} {words(200)}"))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r["a"], r["b"]): r["match_len"]
+        for r in substring_edges(docs, cfg, "doc_id", "text").collect()
+    }
+    assert set(got) == {(2 * p, 2 * p + 1) for p in range(5)}, got
+    assert all(n >= 300 for n in got.values()), got
