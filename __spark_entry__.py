@@ -517,16 +517,16 @@ def _sub_docs_sql() -> str:
 def _dedup_substring_exact(spark, sf_dir):
     """Suffix-array exact-substring detection (operators/suffix_array.py)
     against a DuckDB gram-intersection oracle: pairs (a < b) of _sub_docs
-    sharing a verbatim >= 200-normalized-char substring.  chain_only=False
-    makes the operator emit every pair per equality class, so its output
-    IS the shared-gram relation the SQL computes; single partition keeps
-    the (partition-local) operator exact over the whole capped set."""
+    sharing a verbatim >= 200-normalized-char substring.  The operator
+    emits every pair per equality class, so its output IS the shared-gram
+    relation the SQL computes; single partition keeps the
+    (partition-local) operator exact over the whole capped set."""
     from batch_jaro_winkler_spark.operators.config import DedupConfig
     from batch_jaro_winkler_spark.operators.suffix_array import suffix_array_edges
 
     docs = _sub_docs(spark, sf_dir).coalesce(1)
     cfg = DedupConfig(min_substring_chars=_SUB_MINLEN)
-    return suffix_array_edges(docs, cfg, chain_only=False).select("a", "b")
+    return suffix_array_edges(docs, cfg).select("a", "b")
 
 
 def _dedup_substring_parts(spark, sf_dir):
@@ -541,9 +541,7 @@ def _dedup_substring_parts(spark, sf_dir):
 
     docs = _sub_docs(spark, sf_dir).repartition(8, "doc_id")
     cfg = DedupConfig(min_substring_chars=_SUB_MINLEN)
-    return suffix_array_edges(
-        docs, cfg, chain_only=False, co_partition=True, num_partitions=8
-    ).select("a", "b")
+    return suffix_array_edges(docs, cfg, co_partition=True).select("a", "b")
 
 
 def _events_session_window(spark, sf_dir):
@@ -655,7 +653,7 @@ def _mm_decode_features(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
     payloads = docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
-    feats = decode_features(payloads, "payload", "doc_id")
+    feats = decode_features(payloads)
     return feats.select(
         "doc_id",
         "mime",

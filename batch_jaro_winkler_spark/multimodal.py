@@ -27,7 +27,6 @@ __all__ = [
     "sniff_mime",
     "sniff_mime_sql",
     "stub_feat0_sql",
-    "binary_meta",
     "register_decoder",
     "decode_features",
     "resize_images",
@@ -109,21 +108,6 @@ def stub_feat0_sql(text_expr: str) -> str:
     return f"(({k}::DOUBLE / 65535.0)::FLOAT::DOUBLE)"
 
 
-def binary_meta(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """→ (id, n_bytes, mime, content_id): typed metadata for an opaque
-    binary column, entirely JVM-side.  ``content_id`` (sha2 of bytes) is
-    the exact-dedup key for media, mirroring text exact-dedup."""
-    p = F.col(payload_col)
-    return df.select(
-        F.col(id_col),
-        F.length(p).alias("n_bytes"),
-        sniff_mime(p).alias("mime"),
-        F.sha2(p, 256).alias("content_id"),
-    )
-
-
 # decoder registry: mime → fn(list[bytes]) -> np.ndarray[(n, dim) float32].
 # User registrations (_DECODERS, clearable) shadow engine builtins
 # (_DEFAULT_DECODERS, populated at import below); clearing user
@@ -158,13 +142,9 @@ def _stub_decoder(payloads: list) -> np.ndarray:
     return out
 
 
-def decode_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    batch_mime: str | None = None,
-) -> DataFrame:
-    """→ (id, mime, features array<float>, decode_error string).
+def decode_features(df: DataFrame, batch_mime: str | None = None) -> DataFrame:
+    """df[doc_id, payload] → (doc_id, mime, features array<float>,
+    decode_error string).
 
     Batched decode over ``mapInPandas``: rows are grouped by sniffed mime
     inside each Arrow batch and dispatched to the registered decoder (the
@@ -172,9 +152,7 @@ def decode_features(
     ``decode_error`` instead of failing the job — at 10^12 rows some
     payloads are always corrupt."""
     metad = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(payload_col).alias("payload"),
-        sniff_mime(F.col(payload_col)).alias("mime"),
+        "doc_id", "payload", sniff_mime(F.col("payload")).alias("mime")
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -245,23 +223,16 @@ def _stub_resize(payload: bytes, width: int, height: int) -> bytes:
     return (seed * reps)[:out_len]
 
 
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """→ (id, mime, thumb binary, n_bytes_in, n_bytes_out, resize_error).
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """df[doc_id, payload] → (doc_id, mime, thumb binary, n_bytes_in,
+    n_bytes_out, resize_error).
 
     Batched over ``mapInPandas`` (one Python roundtrip per Arrow batch, no
     shuffle, no per-row UDF); failures land in ``resize_error`` instead of
     failing the job.  At 100 TB the partition shape matters more than the
     pixel math: payloads never leave their input partition."""
     metad = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(payload_col).alias("payload"),
-        sniff_mime(F.col(payload_col)).alias("mime"),
+        "doc_id", "payload", sniff_mime(F.col("payload")).alias("mime")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -310,23 +281,16 @@ def _stub_frame_iter(payload: bytes, every_n: int):
         yield i, payload[i * frame_sz : (i + 1) * frame_sz]
 
 
-def sample_frames(
-    df: DataFrame,
-    every_n: int = 10,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """→ (id, frame_no, frame binary): every n-th frame of each video
-    payload, exploded to one row per sampled frame.
+def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
+    """df[doc_id, payload] → (doc_id, frame_no, frame binary): every n-th
+    frame of each video payload, exploded to one row per sampled frame.
 
     The explode happens INSIDE mapInPandas (variable fan-out per input
     row), so downstream per-frame operators (decode_features over frames,
     near-dup hashing of thumbnails) see plain rows; partitioning stays
     inherited — repartition downstream if per-frame work is heavy."""
     metad = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(payload_col).alias("payload"),
-        sniff_mime(F.col(payload_col)).alias("mime"),
+        "doc_id", "payload", sniff_mime(F.col("payload")).alias("mime")
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -366,25 +330,21 @@ def sample_frames(
     )
 
 
-def frame_features(
-    df: DataFrame,
-    every_n: int = 10,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """→ (id, frame_no, mime, features array<float>, decode_error string):
-    demux every ``every_n``-th frame of each container payload
-    (:func:`sample_frames`), then route each SAMPLED FRAME through the
-    per-mime registered decoder — the real-corpus composition ("features
-    of the sampled frames", VERDICT_r5 missing #3): an MP4 whose samples
+def frame_features(df: DataFrame, every_n: int = 10) -> DataFrame:
+    """df[doc_id, payload] → (doc_id, frame_no, mime, features
+    array<float>, decode_error string): demux every ``every_n``-th frame
+    of each container payload (:func:`sample_frames`), then route each
+    SAMPLED FRAME through the per-mime registered decoder — the
+    real-corpus composition ("features of the sampled frames", VERDICT_r5
+    missing #3): an MP4 whose samples
     are JPEGs demuxes container-side, then each frame sniffs image/jpeg
     and hits the real pixel decoder.  Decode failures land in
     ``decode_error`` per frame (the demux already succeeded; one bad
     frame must not drop its siblings).  Two mapInPandas passes, zero
     shuffles — frames stay in their input partition."""
-    frames = sample_frames(
-        df, every_n=every_n, payload_col=payload_col, id_col=id_col
-    ).withColumn("mime", sniff_mime(F.col("frame")))
+    frames = sample_frames(df, every_n=every_n).withColumn(
+        "mime", sniff_mime(F.col("frame"))
+    )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

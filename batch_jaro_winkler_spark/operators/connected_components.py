@@ -180,6 +180,14 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        # rounds ran out before the checksum repeated: the edges are a star
+        # forest only if no lo is also a hi
+        if cur.select(F.col("lo").alias("hi")).join(cur, "hi", "left_semi").take(1):
+            raise RuntimeError(
+                f"connected_components did not converge in cc_max_iters="
+                f"{max_iters} star rounds; raise cc_max_iters"
+            )
 
     # fixpoint of star rounds is a forest of depth-1 stars: hi -> root(lo)
     members = cur.select(F.col("hi").alias("doc_id"), F.col("lo").alias("cluster_id"))

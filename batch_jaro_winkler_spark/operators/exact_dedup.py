@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["exact_dedup", "exact_dup_groups"]
+__all__ = ["exact_dup_groups"]
 
 
 def exact_dup_groups(
@@ -35,13 +35,3 @@ def exact_dup_groups(
         "doc_id", F.min("doc_id").over(w).alias("rep_id"), "text_hash"
     )
 
-
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """→ docs with only the representative row (min id) per distinct text."""
-    groups = exact_dup_groups(docs, id_col, text_col)
-    keep = groups.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
-    return docs.join(
-        keep.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
-    )

@@ -45,7 +45,6 @@ from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
 __all__ = ["fingerprints", "fingerprint_pairs", "substring_edges"]
 
 _BASE = np.uint64(1000003)
-_OFFS = np.uint64(1469598103934665603)
 
 
 def _rolling_hashes(codes: np.ndarray, k: int) -> np.ndarray:

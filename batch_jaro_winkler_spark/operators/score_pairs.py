@@ -29,6 +29,10 @@ from batch_jaro_winkler_spark.operators.config import DedupConfig
 
 __all__ = ["verify_pairs", "score_topk"]
 
+# score_topk collects its probe set to the driver and ships it with the
+# closure; larger probe sets belong on verify_pairs over LSH candidates
+_MAX_PROBES = 100_000
+
 
 def _coalesced(
     batches: Iterator[pd.DataFrame], rows: int = 100_000
@@ -141,7 +145,6 @@ def score_topk(
     weight: float | None = 0.1,
     threshold: float | None = 0.7,
     dtype=np.float32,
-    max_probes: int = 100_000,
     cand_transform=None,
 ) -> DataFrame:
     """probes[probe_id, probe_text] x candidates[cand_id, cand_text] →
@@ -155,7 +158,7 @@ def score_topk(
 
     The probe frame is collected to the driver and broadcast with the
     closure — correct only for genuinely small probe sets, so the size is
-    guarded by ``max_probes`` (error, not silent collect-the-world).  A
+    guarded by ``_MAX_PROBES`` (error, not silent collect-the-world).  A
     probe set too large to broadcast is a pair-scoring problem: route it
     through :func:`verify_pairs` on LSH candidates instead.
 
@@ -176,13 +179,13 @@ def score_topk(
     transform must be byte-identical to the JVM expression it replaces —
     callers are responsible for that equivalence (the normalize twins in
     functions.text are the proven pair)."""
-    # one job: the guard reads at most max_probes+1 rows of the same
+    # one job: the guard reads at most _MAX_PROBES+1 rows of the same
     # collect the happy path needs anyway (no separate count over the
     # probe lineage)
-    rows = probes.select("probe_id", "probe_text").limit(max_probes + 1).collect()
-    if len(rows) > max_probes:
+    rows = probes.select("probe_id", "probe_text").limit(_MAX_PROBES + 1).collect()
+    if len(rows) > _MAX_PROBES:
         raise ValueError(
-            f"score_topk probe set exceeds max_probes={max_probes}; "
+            f"score_topk probe set exceeds {_MAX_PROBES} probes; "
             "collecting it to the driver would not scale — use "
             "verify_pairs over LSH candidate pairs for large probe sets"
         )

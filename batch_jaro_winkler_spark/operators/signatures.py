@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
-__all__ = ["compute_signatures", "minhash_params", "band_fold"]
+__all__ = ["compute_signatures", "minhash_params"]
 
 _FNV_OFFSET = np.uint64(14695981039346656037)
 _FNV_PRIME = np.uint64(1099511628211)
@@ -43,18 +43,6 @@ def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     a = rng.integers(1, 2**63, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
     b = rng.integers(0, 2**63, size=num_perm, dtype=np.uint64)
     return a, b
-
-
-def band_fold(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
-    """FNV-1a fold of each band's rows → (bands,) uint64."""
-    acc = np.full(bands, _FNV_OFFSET, dtype=np.uint64)
-    band_rows = sig.reshape(bands, rows)
-    for r in range(rows):
-        acc = (acc ^ band_rows[:, r]) * _FNV_PRIME
-    # mix in the band index so identical row-chunks in different bands
-    # don't collide into one bucket key
-    acc = (acc ^ np.arange(bands, dtype=np.uint64)) * _FNV_PRIME
-    return acc
 
 
 def _batch_shingle_hashes(

@@ -24,12 +24,10 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["simhash_blocks", "simhash_pairs"]
 
 
-def simhash_blocks(
-    signatures: DataFrame, max_hamming: int, bits: int = 64
-) -> DataFrame:
+def simhash_blocks(signatures: DataFrame, max_hamming: int) -> DataFrame:
     """(doc_id, simhash) → (block_id, block_val, doc_id, simhash)."""
     n_blocks = max_hamming + 1
-    width = bits // n_blocks
+    width = 64 // n_blocks
     blocks = F.array(
         *[
             # full-width block (max_hamming=0): the mask constant would
@@ -47,15 +45,13 @@ def simhash_blocks(
     )
 
 
-def simhash_pairs(
-    signatures: DataFrame, max_hamming: int = 3, bits: int = 64
-) -> DataFrame:
+def simhash_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame:
     """signatures[doc_id, simhash] → (a, b, hamming) with hamming <= max.
 
     Self-equi-join on (block_id, block_val); the a<b predicate halves the
     join output and the bit_count filter runs JVM-side before any shuffle
     back."""
-    blocks = simhash_blocks(signatures, max_hamming, bits)
+    blocks = simhash_blocks(signatures, max_hamming)
     left = blocks.select(
         "block_id", "block_val", F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a")
     )

@@ -22,6 +22,7 @@ LCP evaluation vectorized over the sorted order.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -66,7 +67,7 @@ def _exact_prefix_classes(buf: np.ndarray, idx: np.ndarray, min_len: int) -> np.
 
 
 def partition_substring_pairs(
-    doc_ids: np.ndarray, texts: list, min_len: int, chain_only: bool = True
+    doc_ids: np.ndarray, texts: list, min_len: int
 ) -> set[tuple[int, int]]:
     """Exact >=min_len cross-document substring pairs within one partition.
 
@@ -75,12 +76,10 @@ def partition_substring_pairs(
     suffixes sharing >= min_len chars are adjacent-equal under this key),
     then scans runs of equal keys and pairs distinct documents in each run.
 
-    ``chain_only=True`` (the CC-feeding default) links consecutive distinct
-    owners per exact class — enough for connectivity at a fraction of the
-    pairs.  ``chain_only=False`` emits EVERY cross-document pair per class:
-    the output is then exactly the relation "docs a < b share a verbatim
-    >= min_len substring", which a DuckDB gram-intersection oracle can
-    check (driver query ``dedup_substring_exact``).
+    Every cross-document pair of each exact class is emitted, so the
+    output is exactly the relation "docs a < b share a verbatim >= min_len
+    substring", which a DuckDB gram-intersection oracle can check (driver
+    query ``dedup_substring_exact``).
     """
     if len(texts) < 2:
         return set()
@@ -125,10 +124,10 @@ def partition_substring_pairs(
 
     pairs: set[tuple[int, int]] = set()
     # runs of equal sampled keys → group members by their FULL min_len
-    # prefix (np.unique over the exact prefix rows), then chain the
-    # distinct owners per exact class.  Adjacency-chaining in the sampled
-    # order is NOT enough: a suffix matching only the 16 sampled positions
-    # can interleave between two true matches and split their class.
+    # prefix (np.unique over the exact prefix rows), then pair the
+    # distinct owners per exact class.  Adjacency in the sampled order is
+    # NOT enough: a suffix matching only the 16 sampled positions can
+    # interleave between two true matches and split their class.
     key_mat = np.stack([buf[s + off] for off in key_offsets], axis=1)
     same_as_prev = np.all(key_mat[1:] == key_mat[:-1], axis=1)
     j = 0
@@ -146,14 +145,7 @@ def partition_substring_pairs(
         for cls in range(int(inv.max()) + 1):
             owners = np.unique(owner[idx[inv == cls]])
             if len(owners) > 1:
-                docs = np.sort(doc_ids[owners])
-                if chain_only:
-                    for x, y in zip(docs[:-1], docs[1:]):
-                        pairs.add((int(x), int(y)))
-                else:
-                    for ii in range(len(docs)):
-                        for jj in range(ii + 1, len(docs)):
-                            pairs.add((int(docs[ii]), int(docs[jj])))
+                pairs.update(combinations(np.sort(doc_ids[owners]).tolist(), 2))
         j = end
     return pairs
 
@@ -161,13 +153,9 @@ def partition_substring_pairs(
 def suffix_array_edges(
     docs: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     co_partition: bool = False,
-    num_partitions: int | None = None,
-    chain_only: bool = True,
 ) -> DataFrame:
-    """→ (a, b) exact within-partition substring pairs.
+    """docs[doc_id, text] → (a, b) exact within-partition substring pairs.
 
     ``co_partition=True`` first routes every document to the partition of
     its minimum ``gram_chars``-gram rolling hash (a deterministic content
@@ -180,9 +168,7 @@ def suffix_array_edges(
     ≈ 0.8% per >=200-char overlap) covers that remainder, and the two
     stages feed the same CC edge set."""
     min_len = cfg.min_substring_chars
-    prepped = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("norm")
-    )
+    prepped = docs.select(F.col("doc_id").cast("long"), F.col("text").alias("norm"))
 
     if co_partition:
         from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
@@ -201,7 +187,7 @@ def suffix_array_edges(
                     ckeys[i] = h.min().astype(np.int64) if len(h) else np.int64(0)
                 yield pdf.assign(ckey=ckeys)[["doc_id", "norm", "ckey"]]
 
-        n_parts = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
+        n_parts = docs.sparkSession.sparkContext.defaultParallelism
         prepped = (
             prepped.mapInPandas(keyed, schema="doc_id long, norm string, ckey long")
             .repartition(n_parts, "ckey")
@@ -217,8 +203,7 @@ def suffix_array_edges(
             all_ids.extend(pdf["doc_id"])
             all_texts.extend(pdf["norm"])
         pairs = partition_substring_pairs(
-            np.asarray(all_ids, dtype=np.int64), all_texts, min_len,
-            chain_only=chain_only,
+            np.asarray(all_ids, dtype=np.int64), all_texts, min_len
         )
         if pairs:
             arr = np.array(sorted(pairs), dtype=np.int64)

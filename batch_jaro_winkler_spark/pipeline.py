@@ -254,14 +254,10 @@ class DedupPipeline:
     # incremental mode: new documents against the existing state
     # ------------------------------------------------------------------
 
-    def run_incremental(
-        self,
-        new_docs: DataFrame,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> DataFrame:
-        """Assign cluster ids to ``new_docs`` against an existing run's
-        state WITHOUT recomputing old signatures — the daily-crawl shape:
+    def run_incremental(self, new_docs: DataFrame) -> DataFrame:
+        """Assign cluster ids to ``new_docs[doc_id, text]`` against an
+        existing run's state WITHOUT recomputing old signatures — the
+        daily-crawl shape:
 
         1. signatures for the new docs only (narrow map);
         2. LSH buckets of new docs joined against the existing signature
@@ -295,14 +291,12 @@ class DedupPipeline:
         (documented trade-off).
         """
         try:
-            return self._run_incremental(new_docs, id_col, text_col)
+            return self._run_incremental(new_docs)
         except BaseException:
             self._flush(suppress_errors=True)  # never leak writers
             raise
 
-    def _run_incremental(
-        self, new_docs: DataFrame, id_col: str, text_col: str
-    ) -> DataFrame:
+    def _run_incremental(self, new_docs: DataFrame) -> DataFrame:
         from batch_jaro_winkler_spark.operators.lsh import band_buckets
 
         cfg = self.cfg
@@ -314,9 +308,7 @@ class DedupPipeline:
         old_sigs = self.catalog.read_union("signatures")
         old_clusters = self.catalog.read("clusters")
 
-        new_docs = new_docs.select(
-            F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
-        )
+        new_docs = new_docs.select(F.col("doc_id").cast("long"), "text")
         # widen BEFORE the anti-join: widen_scan's partition-count probe on
         # a plan with an exchange would run that exchange's stages
         from batch_jaro_winkler_spark.operators.partitioning import widen_scan
@@ -370,16 +362,17 @@ class DedupPipeline:
             # drop old-old pairs resurfacing through shared buckets
             return touching_new(pairs)
 
-        pairs = self._stage(f"cand_pairs_{inc}", _pairs)
-
         jw_of = F.substring(F.col("norm"), 1, cfg.max_jw_len).alias("jw_text")
         all_sigs = old_sigs.select("doc_id", jw_of).union(
             new_sigs.select("doc_id", jw_of)
         )
+        # pairs fold into the verify stage behind a lazy localCheckpoint,
+        # as in the full run
         new_edges = self._stage(
             f"jw_edges_{inc}",
             lambda: verify_pairs(
-                pairs.select("a", "b"), all_sigs, cfg, "doc_id", "jw_text"
+                _pairs().select("a", "b").localCheckpoint(eager=False),
+                all_sigs, cfg, "doc_id", "jw_text",
             ),
         )
 

@@ -113,7 +113,6 @@ class Catalog:
             name,
             self.read_union(name),
             m["config_hash"],
-            m.get("stage_version", 1),
             extra_meta={"compacted_parts": len(ps)},
         )
         return True
@@ -123,7 +122,6 @@ class Catalog:
         name: str,
         df: DataFrame,
         config_hash: str,
-        stage_version: int = 1,
         extra_meta: dict | None = None,
     ) -> DataFrame:
         """Materialize df as the checkpoint ``name`` (atomic), return the
@@ -162,7 +160,7 @@ class Catalog:
         manifest = {
             "table": name,
             "config_hash": config_hash,
-            "stage_version": stage_version,
+            "stage_version": 1,
             "rows": n_rows,
             "files": n_files,
             "partition_rows": part_rows,

@@ -10,6 +10,8 @@ invariant: byte-identical extracted text per url.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 __all__ = ["read_webpages", "EXPECTED_COLUMNS"]
@@ -26,7 +28,6 @@ EXPECTED_COLUMNS = {
 def read_webpages(
     spark: SparkSession,
     path_or_table: str,
-    validate: bool = True,
     extract_from_html: bool = False,
     check_invariant: bool = False,
     check_id_collisions: bool = False,
@@ -45,22 +46,27 @@ def read_webpages(
     ``check_invariant`` fails fast if any row's stored text differs from
     the re-extraction (the input_hint per-row invariant).
     """
-    if path_or_table.count(".") >= 2 and "/" not in path_or_table:
+    # a dotted name is an Iceberg table (catalog.db.table) unless such a
+    # path exists: "crawl.2024.parquet" is a file
+    if (
+        path_or_table.count(".") >= 2
+        and "/" not in path_or_table
+        and not os.path.exists(path_or_table)
+    ):
         df = spark.read.format("iceberg").load(path_or_table)
     else:
         df = spark.read.parquet(path_or_table)
 
-    if validate:
-        have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        # hard requirement: text; full input_hint columns type-checked when
-        # present (the driver's testdata table is (doc_id, text, lang, ...))
-        if "text" not in have:
-            raise ValueError(f"webpages source missing text column; schema={have}")
-        for col, expected in EXPECTED_COLUMNS.items():
-            if col in have and not have[col].startswith(expected):
-                raise ValueError(
-                    f"webpages column {col}: expected {expected}, got {have[col]}"
-                )
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    # hard requirement: text; full input_hint columns type-checked when
+    # present (the driver's testdata table is (doc_id, text, lang, ...))
+    if "text" not in have:
+        raise ValueError(f"webpages source missing text column; schema={have}")
+    for col, expected in EXPECTED_COLUMNS.items():
+        if col in have and not have[col].startswith(expected):
+            raise ValueError(
+                f"webpages column {col}: expected {expected}, got {have[col]}"
+            )
 
     if "url" in df.columns:
         df = df.withColumn("doc_id", F.xxhash64("url"))

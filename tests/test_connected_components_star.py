@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_jaro_winkler_spark.operators import connected_components as cc_mod
+from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.connected_components import (
     connected_components,
 )
@@ -103,6 +104,22 @@ def test_star_path_empty_edges(spark):
         connected_components(edges, all_nodes=nodes, local_threshold=-1)
     )
     assert got == {i: i for i in range(5)}
+
+
+def test_star_path_raises_when_rounds_run_out(spark):
+    """A 64-node path is not a star forest after two star rounds: reading
+    it as one duplicated and mislabeled most nodes, so running out of
+    rounds must raise, while the default bound converges."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
+    nodes = spark.range(0, 64).select(F.col("id").alias("doc_id"))
+    with pytest.raises(RuntimeError, match="cc_max_iters"):
+        connected_components(
+            edges, DedupConfig(cc_max_iters=2), all_nodes=nodes, local_threshold=0
+        )
+    rows = connected_components(edges, all_nodes=nodes, local_threshold=0).collect()
+    assert sorted((r["doc_id"], r["cluster_id"]) for r in rows) == [
+        (d, 0) for d in range(64)
+    ]
 
 
 def test_cc_local_endgame_plan_is_one_narrow_map(spark):

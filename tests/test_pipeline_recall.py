@@ -8,6 +8,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -128,6 +130,8 @@ def test_incremental_run(spark, tmp_path_factory):
     }
     # old signature stage was NOT recomputed (no 'signatures' stage rerun)
     assert not any(m.name == "signatures" for m in pipe2.metrics)
+    # candidate pairs fold into the verify stage, as in the full run
+    assert not any(n.startswith("cand_pairs") for n in os.listdir(root))
     # total assignment covers old + new
     assert len(updated) == 315
     # copies joined their source doc's cluster

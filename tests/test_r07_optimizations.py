@@ -148,6 +148,26 @@ def test_score_topk_k_none_equals_huge_k(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_score_topk_probe_guard(spark, monkeypatch):
+    """The probe set is collected to the driver: one probe over the limit
+    raises, exactly the limit scores."""
+    from batch_jaro_winkler_spark.operators import score_pairs
+
+    monkeypatch.setattr(score_pairs, "_MAX_PROBES", 3)
+    cands = spark.createDataFrame(
+        [(10, "martha"), (11, "dwayne")], "cand_id long, cand_text string"
+    )
+    probes = spark.createDataFrame(
+        [(i, "marhta") for i in range(4)], "probe_id long, probe_text string"
+    )
+    with pytest.raises(ValueError, match="exceeds 3 probes"):
+        score_pairs.score_topk(probes, cands, k=1)
+    got = score_pairs.score_topk(probes.where("probe_id < 3"), cands, k=1).collect()
+    assert sorted((r["probe_id"], r["cand_id"]) for r in got) == [
+        (0, 10), (1, 10), (2, 10)
+    ]
+
+
 def test_verify_pairs_memoizes_identical_text_pairs(spark):
     """Exact-duplicate cliques: many (a, b) id pairs share one text pair —
     the memo must fan the single score back out to every clone row."""
