@@ -196,7 +196,7 @@ def _dedup_exact(spark, sf_dir):
     from batch_jaro_winkler_spark.operators.exact_dedup import exact_dup_groups
 
     docs = _t(spark, sf_dir, "documents")
-    return exact_dup_groups(docs, "doc_id", "text").select("doc_id", "rep_id")
+    return exact_dup_groups(docs).select("doc_id", "rep_id")
 
 
 def _dedup_ngram_jaccard(spark, sf_dir):
@@ -256,7 +256,7 @@ def _dedup_simhash32(spark, sf_dir):
     tok = TX.tokens(F.col("text"))
     return docs.select(
         "doc_id",
-        F.when(F.size(tok) > 0, H.simhash_md5(tok, 32)).otherwise(F.lit(0)).alias("simhash32"),
+        F.when(F.size(tok) > 0, H.simhash_md5(tok)).otherwise(F.lit(0)).alias("simhash32"),
     )
 
 
@@ -552,7 +552,7 @@ def _events_session_window(spark, sf_dir):
     from batch_jaro_winkler_spark.streaming.incremental import session_window_stats
 
     ev = _t(spark, sf_dir, "events")
-    return session_window_stats(ev, gap_minutes=30).select(
+    return session_window_stats(ev).select(
         "user_id", "first_event", "n_events", "total_value"
     )
 
@@ -688,8 +688,9 @@ def _mm_frame_samples(spark, sf_dir):
     a corpus doc whose text happens to open with ASCII 'GIF8'/'RIFF' can
     never route to the real demuxers and break the stub oracle (ADVICE r4).
     The decode/resize stub queries don't need this: their only real
-    handlers are image/png-scoped, and the PNG magic (0x89...) is not a
-    valid UTF-8 lead byte, so utf-8 text payloads can never sniff as png."""
+    handlers are image/png and image/jpeg, and neither magic can open a
+    utf-8 text payload (0x89 is never a UTF-8 lead byte, 0xFF never
+    appears in UTF-8), so text payloads never sniff as png or jpeg."""
     from batch_jaro_winkler_spark.multimodal import sample_frames
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
@@ -1168,7 +1169,7 @@ def _mm_jpeg_decode(spark, sf_dir):
 def _mm_resize_jpeg(spark, sf_dir):
     """The full JPEG transform chain driver-graded end-to-end: encode ->
     resize_images (decode -> exact box-average -> baseline re-encode,
-    the registered image/jpeg default) -> decode_features (pixel
+    the builtin image/jpeg resizer) -> decode_features (pixel
     builtin).  Fixtures are per-doc CONSTANT grays: a constant image is
     DC-only at every stage (source decode, box-average, thumb re-encode,
     thumb decode), so the luminance survives two full codec round trips
@@ -1278,7 +1279,7 @@ def _mm_frame_features(spark, sf_dir):
             )
 
     mp4s = docs.select("doc_id").mapInPandas(build, "doc_id long, payload binary")
-    feats = frame_features(mp4s, every_n=2)
+    feats = frame_features(mp4s)
     f = F.col("features")
     return feats.select(
         "doc_id",
@@ -1471,7 +1472,7 @@ def oracle_sql() -> dict[str, str]:
         f"SELECT doc_id, {i} AS band_id, band_{i} AS band_key FROM sigs"
         for i in range(_MINHASH_BANDS)
     )
-    simhash32 = H.simhash_md5_sql("toks", 32)
+    simhash32 = H.simhash_md5_sql("toks")
 
     return {
         "rel_q1": """

@@ -58,11 +58,13 @@ def minhash_md5_sql(shingles_expr: str, k: int) -> str:
     return "[" + ", ".join(mins) + "]"
 
 
-def simhash_md5(tok: Column, bits: int = 32) -> Column:
-    """SimHash over a token array: for each bit b, sign of the sum of
-    (+1 if bit set else -1) across token hashes; packs to a bigint.
+_SIMHASH_BITS = 32  # simhash_md5 / simhash_md5_sql signature width
+
+
+def simhash_md5(tok: Column) -> Column:
+    """32-bit SimHash over a token array: for each bit b, sign of the sum
+    of (+1 if bit set else -1) across token hashes; packs to a bigint.
     Expressed entirely with built-in functions (aggregate over bit tests)."""
-    assert bits <= 60
 
     def _voter(b: int):
         def merge(acc, s):
@@ -72,7 +74,7 @@ def simhash_md5(tok: Column, bits: int = 32) -> Column:
         return merge
 
     bit_cols = []
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         vote = F.aggregate(tok, F.lit(0).cast("long"), _voter(b))
         bit_cols.append(
             F.when(vote > 0, F.lit(2 ** b).cast("long")).otherwise(F.lit(0).cast("long"))
@@ -83,9 +85,9 @@ def simhash_md5(tok: Column, bits: int = 32) -> Column:
     return out
 
 
-def simhash_md5_sql(tokens_expr: str, bits: int = 32) -> str:
+def simhash_md5_sql(tokens_expr: str) -> str:
     terms = []
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         vote = (
             f"list_sum(list_transform({tokens_expr}, "
             f"s -> CASE WHEN ({md5_u60_sql('s')} >> {b}) & 1 = 1 THEN 1 ELSE -1 END))"

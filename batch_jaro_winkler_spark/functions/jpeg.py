@@ -24,7 +24,7 @@ by construction and the short- and long-code decode paths are both
 exercised.  ``jpeg_features`` keeps the STRUCTURAL 16-dim contract
 (dimensions, table/scan counts — works on progressive too);
 ``jpeg_pixel_features`` fills the png_features pixel-stats layout and is
-the image/jpeg registry builtin.
+the image/jpeg decoder of multimodal.decode_features.
 
 Malformed payloads raise ValueError (decode_features soft-fails them
 into ``decode_error``).
@@ -110,7 +110,7 @@ def jpeg_info(data: bytes) -> tuple[int, int, int, int]:
 
 
 def jpeg_features(payloads: list) -> np.ndarray:
-    """Decoder-registry entry for image/jpeg: (n, 16) float32 structural
+    """image/jpeg+meta decoder: (n, 16) float32 structural
     features — [width, height, n_components, precision, progressive,
     n_quant_tables, n_huffman_tables, n_scans, entropy_bytes, has_jfif,
     has_exif, restart_interval, n_segments, 0, 0, 0]."""
@@ -784,7 +784,7 @@ def encode_jpeg_baseline(
 
 
 def jpeg_pixel_features(payloads: list) -> np.ndarray:
-    """Decoder-registry builtin for image/jpeg: REAL pixel decode ->
+    """image/jpeg decoder: REAL pixel decode ->
     the png_features 16-dim layout (width, height, channels, luminance
     mean/std/min/max, crc16, 8-bin histogram).  Progressive or malformed
     streams raise ValueError -> decode_error, per the soft-fail contract."""
@@ -811,8 +811,8 @@ def jpeg_pixel_features(payloads: list) -> np.ndarray:
 
 def resize_jpeg(payload: bytes, *, width: int, height: int) -> bytes:
     """Real JPEG resize: decode -> exact box-average -> baseline
-    re-encode (near-lossless qtable).  Registered as the default
-    'resize' transform for image/jpeg payloads."""
+    re-encode (near-lossless qtable).  The image/jpeg resizer of
+    multimodal.resize_images."""
     from batch_jaro_winkler_spark.functions.png import _axis_weights
 
     if width <= 0 or height <= 0:

@@ -1,5 +1,5 @@
-"""Pure-python/zlib PNG decoder — a REAL decoder for the multimodal
-registry (multimodal.register_decoder), proving the swap-in contract
+"""Pure-python/zlib PNG decoder — the image/png entry of the multimodal
+decode and resize tables (multimodal._DECODE, multimodal._RESIZE),
 without any media library: stdlib ``zlib`` inflates IDAT, numpy undoes
 the five PNG scanline filters, and the pixel matrix feeds a deterministic
 16-float feature vector with the same (n, dim) float32 contract as the
@@ -148,7 +148,7 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 def png_features(payloads: list) -> np.ndarray:
-    """Decoder-registry entry: (n, 16) float32 per-image features —
+    """image/png decoder: (n, 16) float32 per-image features —
     width, height, channels, then luminance stats and an 8-bin histogram.
     Deterministic pure functions of the pixels (testable end-to-end)."""
     out = np.empty((len(payloads), 16), dtype=np.float32)
@@ -248,9 +248,8 @@ def _axis_weights(src: int, dst: int) -> np.ndarray:
 
 def resize_png(payload: bytes, *, width: int, height: int) -> bytes:
     """Real PNG resize: decode -> exact box-average to (height, width) ->
-    re-encode.  Registered as the default 'resize' transform for
-    image/png payloads (multimodal.resize_images); other mimes keep the
-    declared stub until a real decoder is registered."""
+    re-encode.  The image/png resizer of multimodal.resize_images (image/jpeg
+    has resize_jpeg; other mimes fall back to the sha-derived stub)."""
     if width <= 0 or height <= 0:
         raise ValueError("resize_png: target dims must be positive")
     px = decode_png(bytes(payload))

@@ -38,12 +38,13 @@ from batch_jaro_winkler_spark.sources.catalog import Catalog
 __all__ = ["DedupPipeline", "extract_text"]
 
 
-def extract_text(docs: DataFrame, html_col: str = "html", out_col: str = "text") -> DataFrame:
-    """Deterministic html→text extraction (strip tags, decode entities,
-    collapse whitespace) with built-in functions only.  Satisfies the
+def extract_text(docs: DataFrame) -> DataFrame:
+    """docs[html] → docs with ``text`` (re)written by deterministic
+    html→text extraction (strip tags, decode entities, collapse
+    whitespace) with built-in functions only.  Satisfies the
     input_hint per-row invariant: byte-identical extracted text per url for
     identical html bytes — it is a pure column expression."""
-    raw = F.col(html_col).cast("string")
+    raw = F.col("html").cast("string")
     no_tags = F.regexp_replace(raw, "<[^>]*>", " ")
     # decode &amp; LAST: decoding it first would double-unescape nested
     # entities ("&amp;lt;" must yield "&lt;", not "<")
@@ -54,7 +55,7 @@ def extract_text(docs: DataFrame, html_col: str = "html", out_col: str = "text")
         "&amp;",
         "&",
     )
-    return docs.withColumn(out_col, F.trim(F.regexp_replace(decoded, "\\s+", " ")))
+    return docs.withColumn("text", F.trim(F.regexp_replace(decoded, "\\s+", " ")))
 
 
 @dataclass
@@ -442,5 +443,5 @@ class DedupPipeline:
         # increment forever
         for tbl in ("signatures", "fingerprints"):
             if self.catalog.exists(tbl):
-                self.catalog.compact(tbl, max_parts=8)
+                self.catalog.compact(tbl)
         return clusters

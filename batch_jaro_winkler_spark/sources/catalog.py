@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["Catalog"]
 
+_MAX_PARTS = 8  # compact() folds a logical table past this many parts
+
 
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
@@ -96,9 +98,9 @@ class Catalog:
             df = df.unionByName(self.read(p))
         return df
 
-    def compact(self, name: str, max_parts: int = 8) -> bool:
+    def compact(self, name: str) -> bool:
         """Fold part checkpoints into the base when the logical table's
-        scan fan-in exceeds ``max_parts`` (the Iceberg rewrite_data_files
+        scan fan-in exceeds ``_MAX_PARTS`` (the Iceberg rewrite_data_files
         story): rewrites base = read_union(name) and clears the part list
         (``write`` supersedes parts atomically), so unbounded daily
         increments can never degenerate into an unbounded union plan.
@@ -106,7 +108,7 @@ class Catalog:
         checkpoints that incremental runs may still resume from.
         Returns True iff a compaction ran."""
         ps = self.parts(name)
-        if len(ps) <= max_parts:
+        if len(ps) <= _MAX_PARTS:
             return False
         m = self.manifest(name)
         self.write(

@@ -86,8 +86,7 @@ def read_webpages(
     if extract_from_html and "html" in df.columns:
         from batch_jaro_winkler_spark.pipeline import extract_text
 
-        extracted = extract_text(df.drop("text") if "text" in df.columns else df,
-                                 "html", "text")
+        extracted = extract_text(df.drop("text") if "text" in df.columns else df)
         if check_invariant and "text" in df.columns:
             bad = (
                 extracted.select("doc_id", F.col("text").alias("t2"))

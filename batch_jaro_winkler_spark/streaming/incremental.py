@@ -4,7 +4,7 @@
 Structured-Streaming operator) on batch frames, backing the
 ``events_session_window`` query in ``__spark_entry__``.  Boundary
 semantics: Spark's ``session_window`` is end-exclusive, so a gap of
-exactly ``gap_minutes`` starts a NEW session — the ``events_sessions``
+exactly 30 minutes starts a NEW session — the ``events_sessions``
 query uses the same ``gap >= threshold`` rule, so the two are exact twins.
 """
 
@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def session_window_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Per-user session-window aggregation over (ts, user_id, value[,
-    event_id]).
+def session_window_stats(events: DataFrame) -> DataFrame:
+    """Per-user session-window aggregation (30-minute gap) over (ts,
+    user_id, value[, event_id]).
 
     ``value`` is summed in exact integer ten-thousandths so the result is
     partition-order independent (the repo's integer-cents rule).  When an
@@ -30,6 +30,6 @@ def session_window_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     if "event_id" in events.columns:
         aggs.insert(0, F.min("event_id").alias("first_event"))
     return events.groupBy(
-        F.session_window(F.col("ts"), f"{gap_minutes} minutes"),
+        F.session_window(F.col("ts"), "30 minutes"),
         F.col("user_id"),
     ).agg(*aggs)

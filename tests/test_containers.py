@@ -375,6 +375,55 @@ def test_demuxers_raise_only_valueerror():
                 pass  # the one exception type the dispatcher soft-skips
 
 
+
+@pytest.mark.parametrize(
+    "parse, fixtures",
+    [
+        (gif_frames, lambda: [make_gif(3), make_gif(2, with_gct=False, with_ext=False)]),
+        (wav_frames, lambda: [make_wav(12_000), make_wav(700, byte_rate=300)]),
+        (
+            mp4_frames,
+            lambda: [
+                make_mp4([10, 20, 30], chunks=[1, 2]),
+                make_mp4([8, 8, 8, 8], use_co64=True, fixed_size=8),
+            ],
+        ),
+        (mp3_frames, lambda: [make_mp3([64, 96, 128], with_id3v1=True, pad_frames={1})]),
+        (
+            webm_frames,
+            lambda: [
+                make_webm([10, 20, 30], use_blockgroup={1}),
+                make_webm([5, 6], unknown_segment_size=True),
+            ],
+        ),
+    ],
+    ids=["gif", "wav", "mp4", "mp3", "webm"],
+)
+def test_demuxer_fuzz_own_format_raises_only_valueerror(parse, fixtures):
+    """Seeded fuzz of each demuxer on its OWN format: truncations and 1-4
+    random byte flips of valid fixtures, 400 per format.  sample_frames
+    soft-skips ValueError only, so any other exception would fail the
+    whole Spark job."""
+    import random
+
+    rng = random.Random(20261017)
+    valid = fixtures()
+    assert all(list(parse(v, 1)) for v in valid)  # the seeds demux cleanly
+    for k in range(400):
+        v = valid[k % len(valid)]
+        if k % 4 == 0:
+            case = v[: rng.randrange(len(v))]
+        else:
+            mut = bytearray(v)
+            for _ in range(rng.randint(1, 4)):
+                mut[rng.randrange(len(mut))] ^= rng.randrange(1, 256)
+            case = bytes(mut)
+        for every_n in (1, 2):
+            try:
+                list(parse(case, every_n))
+            except ValueError:
+                pass  # the one exception type the dispatcher soft-skips
+
 def test_sample_frames_dispatches_by_mime(spark):
     """GIF/WAV payloads demux for real by default; other payloads keep the
     4KiB stub; corrupt containers soft-skip (no rows, job survives)."""

@@ -46,7 +46,7 @@ def _cluster_pairs(clusters_df):
 
 
 def test_extract_text_invariant(docs_df):
-    ext = extract_text(docs_df.drop("text"), "html", "text2")
+    ext = extract_text(docs_df.drop("text")).withColumnRenamed("text", "text2")
     mismatch = (
         ext.join(docs_df.select("url", "text"), "url")
         .where(F.col("text2") != F.col("text"))

@@ -288,7 +288,7 @@ def test_exact_dup_groups_window_form(spark):
     )
     got = {
         r["doc_id"]: r["rep_id"]
-        for r in exact_dup_groups(docs, "doc_id", "text").collect()
+        for r in exact_dup_groups(docs).collect()
     }
     assert got == {0: 0, 1: 1, 2: 0, 3: 0, 4: 4}
 
