@@ -22,25 +22,15 @@ from batch_jaro_winkler_spark.functions import hashing as H
 from batch_jaro_winkler_spark.functions import text as TX
 from batch_jaro_winkler_spark.functions import vectors as V
 
+# widen_scan only where the output is partitioning-independent: aggregates,
+# joins, full-ranking windows with value+id orderings — never a truncating
+# per-batch top-k
+from batch_jaro_winkler_spark.operators.partitioning import widen_scan
+
 # ---------------------------------------------------------------- helpers
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _wide(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scan-parallelism guard (optimization guide §2.5, input skew): the
-    test tables arrive as one parquet file, often a single row group, so
-    the scan is ONE split and every narrow stage above it (normalize,
-    mapInPandas hashing, per-element cosine) serializes on one core.
-    Round-robin repartition to cluster width when the source is narrower;
-    row-wise results are unchanged, and on a production multi-file source
-    this is a no-op.  Only applied to queries whose output is provably
-    partitioning-independent (aggregates / joins / full-ranking windows
-    with value+id orderings — never a truncating per-batch top-k)."""
-    from batch_jaro_winkler_spark.operators.partitioning import widen_scan
-
-    return widen_scan(df)
 
 
 _JW_PROBE_N = 20       # probes for jw_topk (doc_id < N)
@@ -299,8 +289,8 @@ def _jw_topk(spark, sf_dir):
 
     from batch_jaro_winkler_spark.operators.score_pairs import score_topk
 
-    # _wide on the CANDIDATE branch only: it parallelizes the kernel scan
-    # (one task before), and k=None ("all matches >= min_score") makes
+    # widen_scan on the CANDIDATE branch only: it parallelizes the kernel
+    # scan (one task before), and k=None ("all matches >= min_score") makes
     # the emitted pair set partitioning-independent by construction — no
     # per-batch top-k truncation exists, and the final rank is a
     # deterministic (rounded score, cand_id) window here.  The probe
@@ -320,7 +310,7 @@ def _jw_topk(spark, sf_dir):
         F.col("doc_id").alias("probe_id"),
         _norm_prefix(F.col("text"), _JW_PREFIX).alias("probe_text"),
     )
-    cands = _wide(spark, docs).select(
+    cands = widen_scan(docs).select(
         F.col("doc_id").alias("cand_id"),
         F.col("text").alias("cand_text"),
     )
@@ -340,7 +330,7 @@ def _jw_topk10(spark, sf_dir):
     """Small-k twin of jw_topk (VERDICT_r2 #10): k=10 exercises the
     reference's adaptive n_best min_score LADDER inside the kernel
     (c:788-816 — jw_topk's k=None all-matches mode deliberately bypasses
-    it, and k=10 must NOT be parallelized with _wide: the kernel's
+    it, and k=10 must NOT be parallelized with widen_scan: the kernel's
     per-batch top-k tie-break is batch-position order, so per-partition
     truncation under an arbitrary row distribution could drop a tied
     candidate the global (score, cand_id) rank would keep).  Ranking
@@ -405,9 +395,9 @@ def _jw_pairs(spark, sf_dir):
 
 
 def _ann_cosine_topk(spark, sf_dir):
-    # _wide: the per-element cosine runs on the scan's partitioning (the
-    # window exchange comes after it) — one split serializes all of it
-    emb = _wide(spark, _t(spark, sf_dir, "embeddings"))
+    # widen_scan: the per-element cosine runs on the scan's partitioning
+    # (the window exchange comes after it) — one split serializes all of it
+    emb = widen_scan(_t(spark, sf_dir, "embeddings"))
     probes = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
@@ -713,10 +703,10 @@ def _pipeline_lsh_pairs(spark, sf_dir):
     from batch_jaro_winkler_spark.operators.lsh import band_buckets, candidate_pairs
     from batch_jaro_winkler_spark.operators.signatures import compute_signatures
 
-    # _wide BEFORE compute_signatures: the operator itself stays a shuffle-
-    # free narrow map (plan-gated); the DedupPipeline repartitions the same
-    # way before calling it
-    docs = _wide(spark, _t(spark, sf_dir, "documents"))
+    # widen_scan BEFORE compute_signatures: the operator itself stays a
+    # shuffle-free narrow map (plan-gated); the DedupPipeline repartitions
+    # the same way before calling it
+    docs = widen_scan(_t(spark, sf_dir, "documents"))
     cfg = DedupConfig()
     # lazy localCheckpoint on the NARROW bucket rows: candidate_pairs
     # consumes its buckets input in TWO subtrees (counts aggregate + join
@@ -734,7 +724,7 @@ def _pipeline_simhash_pairs(spark, sf_dir):
     from batch_jaro_winkler_spark.operators.signatures import compute_signatures
     from batch_jaro_winkler_spark.operators.simhash import simhash_pairs
 
-    docs = _wide(spark, _t(spark, sf_dir, "documents"))
+    docs = widen_scan(_t(spark, sf_dir, "documents"))
     # lazy localCheckpoint on the PROJECTED relation: the pigeonhole
     # block join reads the simhash relation on both sides — share one
     # signatures computation, storing only the two columns the join needs

@@ -13,15 +13,15 @@
 Every stage writes an atomic parquet+manifest checkpoint keyed by the
 config hash (sources/catalog.py), so a killed run resumes from the last
 completed stage and a config change invalidates exactly the affected
-suffix of the DAG.  Durable writes happen on background threads behind an
-eager localCheckpoint (the same lineage cut), so the write→read barrier
-never sits on the critical path; the run joins every writer before
-declaring success.
+suffix of the DAG.  Each computed stage is ONE Spark job: the parquet write
+of a lazy localCheckpoint computes the stage, fills the checkpoint blocks
+downstream stages read (the lineage cut) and makes the stage durable
+before the next one starts.  A run never reads back the parquet it just
+wrote.
 """
 
 from __future__ import annotations
 
-import threading
 import time
 from dataclasses import dataclass
 
@@ -72,22 +72,17 @@ class DedupPipeline:
         self.cfg = cfg
         self.catalog = Catalog(spark, checkpoint_root)
         self.metrics: list[StageResult] = []
-        self._pending: list[
-            tuple[str, threading.Thread, dict[str, BaseException]]
-        ] = []
 
     def _stage(self, name: str, compute) -> DataFrame:
         """Run (or resume) one checkpointed stage.
 
-        The stage materializes via an eager localCheckpoint (one job,
-        lineage cut — functionally the same table boundary the parquet
-        read-back gave) and the durable parquet+manifest write happens on
-        a BACKGROUND thread while the next stage computes: the write→read
-        barrier leaves the critical path.  A stage whose manifest matches
-        the config hash is read back instead (resume); the manifest is
-        written last, and :meth:`_flush` joins every writer before the
-        pipeline declares the run complete.  Downstream consumes the
-        in-memory blocks instead of re-decoding parquet."""
+        A stage whose manifest matches the config hash is read back from
+        parquet (resume).  Otherwise the stage's frame is cut with a LAZY
+        localCheckpoint and written by :meth:`Catalog.write`: that one job
+        computes the stage, fills the checkpoint blocks and writes the
+        parquet + manifest (manifest last).  The stage is durable when this
+        returns, and downstream stages read the in-memory blocks instead of
+        re-decoding parquet."""
         t0 = time.time()
         h = self.cfg.config_hash()
         if self.catalog.exists(name, h):
@@ -97,49 +92,12 @@ class DedupPipeline:
                 StageResult(name, rows, True, round(time.time() - t0, 3))
             )
             return df
-        df = compute().localCheckpoint(eager=True)
-        # a bare Thread swallows exceptions: a failed write would only
-        # surface later as manifest(name) == None (a TypeError far from the
-        # cause).  Capture the exception and re-raise it — with its original
-        # traceback — when the writer is joined (VERDICT_r5 #3).
-        box: dict[str, BaseException] = {}
-
-        def _write() -> None:
-            try:
-                self.catalog.write(name, df, h)
-            except BaseException as exc:  # noqa: BLE001 — re-raised at join
-                box["exc"] = exc
-
-        th = threading.Thread(target=_write, daemon=False, name=f"ckpt-{name}")
-        th.start()
-        self._pending.append((name, th, box))
-        # rows backfilled from the manifest at _flush time (-1 = pending)
-        self.metrics.append(StageResult(name, -1, False, round(time.time() - t0, 3)))
+        df = compute().localCheckpoint(eager=False)
+        manifest = self.catalog.write(name, df, h)
+        self.metrics.append(
+            StageResult(name, manifest["rows"], False, round(time.time() - t0, 3))
+        )
         return df
-
-    def _flush(self, suppress_errors: bool = False) -> None:
-        """Join background checkpoint writers and backfill row counts.
-
-        Re-raises the first writer failure (original traceback preserved —
-        the exception object carries ``__traceback__`` from its thread)
-        unless ``suppress_errors`` — the error-path drain, where a stage
-        failure is already propagating and must not be masked."""
-        first_exc: BaseException | None = None
-        try:
-            for name, th, box in self._pending:
-                th.join()
-                exc = box.get("exc")
-                if exc is not None:
-                    first_exc = first_exc or exc
-                    continue
-                m = self.catalog.manifest(name)
-                for sr in self.metrics:
-                    if sr.name == name and sr.rows < 0:
-                        sr.rows = m["rows"]
-        finally:
-            self._pending.clear()
-        if first_exc is not None and not suppress_errors:
-            raise first_exc
 
     def run(
         self,
@@ -149,21 +107,6 @@ class DedupPipeline:
         with_substring_stage: bool = True,
     ) -> DataFrame:
         """docs[id_col, text_col, ...] → (doc_id, cluster_id) total assignment."""
-        try:
-            return self._run(docs, id_col, text_col, with_substring_stage)
-        except BaseException:
-            # a mid-run stage failure must not leak background writers:
-            # drain them (suppressed — the stage error is what propagates)
-            self._flush(suppress_errors=True)
-            raise
-
-    def _run(
-        self,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        with_substring_stage: bool,
-    ) -> DataFrame:
         cfg = self.cfg
         docs = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text"))
         # fan the map stages out to cluster width: small local inputs arrive
@@ -237,7 +180,7 @@ class DedupPipeline:
             edges = jw_edges.select("a", "b")
         # all_nodes from the signatures checkpoint, not the raw input:
         # compute_signatures emits exactly one row per input doc (empty
-        # docs included, n_tokens=0), and reading doc_id off the eager
+        # docs included, n_tokens=0), and reading doc_id off the stage's
         # localCheckpoint avoids re-scanning + re-repartitioning the
         # whole corpus a second time inside the final stage
         clusters = self._stage(
@@ -246,9 +189,6 @@ class DedupPipeline:
                 edges, cfg, all_nodes=signatures.select("doc_id")
             ),
         )
-        # durability before success: every background checkpoint write
-        # (manifest last) completes before the run is declared done
-        self._flush()
         return clusters
 
     # ------------------------------------------------------------------
@@ -291,13 +231,6 @@ class DedupPipeline:
         Without it, substring links to old docs wait for the next full run
         (documented trade-off).
         """
-        try:
-            return self._run_incremental(new_docs)
-        except BaseException:
-            self._flush(suppress_errors=True)  # never leak writers
-            raise
-
-    def _run_incremental(self, new_docs: DataFrame) -> DataFrame:
         from batch_jaro_winkler_spark.operators.lsh import band_buckets
 
         cfg = self.cfg
@@ -428,13 +361,10 @@ class DedupPipeline:
             ),
         )
 
-        # the fold's add_part requires the part checkpoints to be durable:
-        # join every background stage write first
-        self._flush()
         # fold: clusters first (so a crash between the two writes leaves a
         # state where rerunning re-processes the docs rather than returning
         # a stale assignment), then manifest-append the parts
-        clusters = self.catalog.write("clusters", clusters, cfg.config_hash())
+        self.catalog.write("clusters", clusters, cfg.config_hash())
         self.catalog.add_part("signatures", f"signatures_{inc}")
         if has_fp_state:
             self.catalog.add_part("fingerprints", f"fingerprints_{inc}")

@@ -24,6 +24,7 @@ import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["Catalog"]
@@ -125,48 +126,37 @@ class Catalog:
         df: DataFrame,
         config_hash: str,
         extra_meta: dict | None = None,
-    ) -> DataFrame:
-        """Materialize df as the checkpoint ``name`` (atomic), return the
-        re-read DataFrame (so downstream stages scan parquet, cutting
-        lineage exactly like an Iceberg table boundary would)."""
+    ) -> dict:
+        """Write df as the checkpoint ``name`` (atomic) in one Spark job
+        and return its manifest.  Nothing is read back: the schema comes
+        from ``df`` and the per-file row counts from the parquet footers."""
         t0 = time.time()
         table_dir = self._dir(name)
         tmp = os.path.join(self.root, f"_tmp_{name}_{uuid.uuid4().hex[:8]}")
+        data_dir = os.path.join(tmp, "data")
         # small row groups so read-back splits parallelize: one file with a
         # single giant row group serializes every downstream scan task
         (
             df.write.mode("overwrite")
             .option("parquet.block.size", 8 * 1024 * 1024)
-            .parquet(os.path.join(tmp, "data"))
+            .parquet(data_dir)
         )
-        back = self.spark.read.parquet(os.path.join(tmp, "data"))
-        # per-partition lineage: row count per written file, read from the
-        # parquet footers directly (no extra Spark job per stage); on a
-        # remote filesystem fall back to one metadata-only aggregate
-        data_dir = os.path.join(tmp, "data")
+        # per-partition lineage: row count per written file
         files = sorted(
             f for f in os.listdir(data_dir) if f.endswith(".parquet")
         )
-        try:
-            import pyarrow.parquet as pq
-
-            part_rows = [
-                [i, pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows]
-                for i, f in enumerate(files)
-            ]
-            n_rows = sum(n for _, n in part_rows)
-        except Exception:  # pragma: no cover - remote fs fallback
-            n_rows = back.count()
-            part_rows = []
-        n_files = len(files)
+        part_rows = [
+            [i, pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows]
+            for i, f in enumerate(files)
+        ]
         manifest = {
             "table": name,
             "config_hash": config_hash,
             "stage_version": 1,
-            "rows": n_rows,
-            "files": n_files,
+            "rows": sum(n for _, n in part_rows),
+            "files": len(files),
             "partition_rows": part_rows,
-            "schema": back.schema.jsonValue(),
+            "schema": df.schema.jsonValue(),
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             **(extra_meta or {}),
@@ -179,4 +169,4 @@ class Catalog:
         # a full rewrite supersedes any incremental parts
         if os.path.exists(self._parts_path(name)):
             os.remove(self._parts_path(name))
-        return self.read(name)
+        return manifest

@@ -381,10 +381,10 @@ def test_catalog_atomic_and_lineage(spark, tmp_path):
 
     cat = Catalog(spark, str(tmp_path / "cat"))
     df = spark.range(10).withColumnRenamed("id", "v")
-    out = cat.write("t1", df, config_hash="abc", extra_meta={"stage": "test"})
-    assert out.count() == 10
-    m = cat.manifest("t1")
+    m = cat.write("t1", df, config_hash="abc", extra_meta={"stage": "test"})
+    assert m == cat.manifest("t1")
     assert m["rows"] == 10 and m["config_hash"] == "abc" and m["stage"] == "test"
+    assert cat.read("t1").count() == 10
     assert cat.exists("t1", "abc") and not cat.exists("t1", "other")
 
     # a checkpoint without a manifest is invisible (atomicity contract)
@@ -393,6 +393,24 @@ def test_catalog_atomic_and_lineage(spark, tmp_path):
 
     os.makedirs(str(tmp_path / "cat" / "broken" / "data"), exist_ok=True)
     assert not cat.exists("broken")
+
+
+def test_catalog_write_runs_one_job(spark, tmp_path):
+    """The checkpoint write is the only Spark job: no read-back or schema
+    inference over the files just written."""
+    from batch_jaro_winkler_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    df = spark.range(10)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "catalog_write_one_job")
+    try:
+        m = cat.write("t", df, config_hash="abc")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert len(sc.statusTracker().getJobIdsForGroup("catalog_write_one_job")) == 1
+    assert m == cat.manifest("t")
 
 
 # --- hot buckets: salted chaining keeps connectivity in every pair-gen path ---

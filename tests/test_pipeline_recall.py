@@ -297,10 +297,9 @@ def test_incremental_substring_links(spark, tmp_path_factory):
 
 
 def test_background_writer_failure_propagates(spark, tmp_path_factory):
-    """VERDICT_r5 #3: a checkpoint write that fails on its background
-    thread must fail the RUN with that error (original exception, not a
-    downstream manifest TypeError), and a mid-run stage failure must drain
-    pending writers instead of leaking threads."""
+    """VERDICT_r5 #3: a failing checkpoint write must fail the RUN with
+    that error (original exception, not a downstream manifest TypeError),
+    and a mid-run stage failure must propagate as itself."""
     from batch_jaro_winkler_spark.fixtures import make_corpus
 
     base = make_corpus(n_rows=60, seed=21)
@@ -319,10 +318,8 @@ def test_background_writer_failure_propagates(spark, tmp_path_factory):
     pipe.catalog.write = bad_write
     with pytest.raises(Boom, match="disk full"):
         pipe.run(docs, "doc_id", "text")
-    assert not pipe._pending  # writers drained, not leaked
 
-    # error-path drain: a failing stage compute must not mask itself with
-    # a writer join error, and must leave no pending writers behind
+    # a failing stage compute is the error that propagates
     pipe2 = DedupPipeline(spark, cfg, str(tmp_path_factory.mktemp("wfail2")))
     orig_stage = pipe2._stage
 
@@ -334,4 +331,70 @@ def test_background_writer_failure_propagates(spark, tmp_path_factory):
     pipe2._stage = exploding_stage
     with pytest.raises(ValueError, match="stage exploded"):
         pipe2.run(docs, "doc_id", "text")
-    assert not pipe2._pending
+
+
+def test_stage_computes_once(spark, tmp_path):
+    """One job per stage: the checkpoint write computes the stage and fills
+    its lazy localCheckpoint, and downstream actions read those blocks
+    instead of recomputing the stage."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        calls.add(1)
+        yield from batches
+
+    src = spark.range(0, 40, numPartitions=4)
+    pipe = DedupPipeline(spark, DedupConfig(), str(tmp_path))
+    df = pipe._stage("counted", lambda: src.mapInPandas(counted, "id long"))
+    assert pipe.catalog.manifest("counted")["rows"] == 40  # durable on return
+    assert df.count() == 40
+    assert calls.value == src.rdd.getNumPartitions()
+
+
+def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
+    """A writer killed after its parquet landed in the temp dir but before
+    the manifest leaves an invisible orphan: a fresh pipeline on the same
+    root reuses the completed stages, recomputes the killed one, ignores
+    the orphan and produces the clean run's assignment."""
+    base = make_corpus(n_rows=60, seed=21)
+    rows = [(i, r["text"]) for i, r in enumerate(base.rows)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cfg = DedupConfig()
+
+    def assignment(pipe):
+        return {
+            r["doc_id"]: r["cluster_id"]
+            for r in pipe.run(docs, "doc_id", "text").collect()
+        }
+
+    clean = assignment(DedupPipeline(spark, cfg, str(tmp_path_factory.mktemp("clean"))))
+
+    root = str(tmp_path_factory.mktemp("killed"))
+    pipe = DedupPipeline(spark, cfg, root)
+    real_write = pipe.catalog.write
+    orphan = os.path.join(root, "_tmp_sub_edges_killed")
+
+    class Killed(RuntimeError):
+        pass
+
+    def dying_write(name, df, config_hash, *a, **k):
+        if name == "sub_edges":
+            df.write.parquet(os.path.join(orphan, "data"))
+            raise Killed("writer killed before the manifest")
+        return real_write(name, df, config_hash, *a, **k)
+
+    pipe.catalog.write = dying_write
+    with pytest.raises(Killed):
+        pipe.run(docs, "doc_id", "text")
+    assert not pipe.catalog.exists("sub_edges")
+
+    pipe2 = DedupPipeline(spark, cfg, root)
+    resumed = assignment(pipe2)
+    assert {m.name: m.cached for m in pipe2.metrics} == {
+        "signatures": True,
+        "jw_edges": True,
+        "sub_edges": False,
+        "clusters": False,
+    }
+    assert resumed == clean
+    assert os.listdir(orphan) == ["data"]  # untouched, never read

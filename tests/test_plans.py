@@ -148,6 +148,7 @@ def _spy_widen_scan(monkeypatch, spark):
 
     monkeypatch.setattr(partitioning, "widen_scan", spy)
     monkeypatch.setattr(ann, "widen_scan", spy)
+    monkeypatch.setattr(entry_mod, "widen_scan", spy)
     return calls
 
 
@@ -180,7 +181,7 @@ def test_widen_scan_probe_starts_no_job(spark, sf01_dir, tmp_path, monkeypatch):
         "vec_id AS probe_id", "embedding AS probe_vec"
     )
     cosine_topk_ivf(probes, emb, k=3, n_centroids=4, n_probe=2)
-    entry_mod._wide(spark, emb)
+    entry_mod.queries()["ann_cosine_topk"](spark, sf01_dir)  # the entry call site
     assert len(calls) == 5
     assert calls == [0] * 5, calls
 
