@@ -32,11 +32,6 @@ class DedupConfig:
     gram_chars: int = 50             # char n-gram width for rolling hashes
     fp_mod: int = 32                 # fingerprint sampling modulus (pow 2)
     min_substring_chars: int = 200   # verified verbatim-substring threshold
-    # persist the fingerprint table as its own checkpoint so incremental
-    # runs can substring-match NEW docs against the EXISTING corpus
-    # (semi-join on touched fingerprints — base tables never rewritten);
-    # costs one extra checkpoint write per full run
-    persist_fingerprints: bool = False
     # connected components
     cc_max_iters: int = 20
 

@@ -1,4 +1,4 @@
-"""Substring dedup: winnowed rolling-hash fingerprints + verification.
+"""Substring dedup: mod-sampled rolling-hash fingerprints + verification.
 
 Catches verbatim long-substring duplication that shingle-MinHash misses
 (SURVEY.md §7 step 8): a document embedding a >=200-char copy of another
@@ -10,7 +10,10 @@ Schleimer/Wilkerson/Aiken SIGMOD'03 — PAPERS.md):
 
 * per doc, Rabin-Karp rolling hashes of every ``gram_chars``-char window of
   the normalized text — O(n) via a fully vectorized modular-inverse
-  prefix trick inside ``mapInPandas`` (no shuffle);
+  prefix trick (:func:`doc_fingerprints`, no shuffle).  The pipeline
+  runs it inside the signatures pass, which stores each doc's
+  fingerprints as two columns of its signature row, so the text crosses
+  into Python once; :func:`fingerprints` is the standalone pass;
 * mod-sampling keeps positions with ``hash % fp_mod == 0`` → density
   1/fp_mod, position-robust and content-deterministic (both copies of a
   substring select the same grams); a >=200-char verbatim overlap is
@@ -42,7 +45,13 @@ from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
 
-__all__ = ["fingerprints", "fingerprint_pairs", "substring_edges"]
+__all__ = [
+    "doc_fingerprints",
+    "fingerprints",
+    "fingerprint_pairs",
+    "signature_fingerprints",
+    "substring_edges",
+]
 
 _BASE = np.uint64(1000003)
 
@@ -76,6 +85,31 @@ def _rolling_hashes(codes: np.ndarray, k: int) -> np.ndarray:
     return h
 
 
+def doc_fingerprints(norm: str | None, cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
+    """One document's fingerprints: normalized text → (fp int64[], pos
+    int32[]), the mod-sampled rolling hashes and their char offsets, one
+    row per distinct hash at its earliest position.  A text shorter than
+    ``gram_chars`` (or null) has none; a longer one with no sampled
+    position keeps its minimum hash, so whole-doc dups of short texts
+    still collide."""
+    none = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
+    if not isinstance(norm, str):
+        return none
+    codes = np.frombuffer(norm.encode("utf-32-le"), dtype="<u4")
+    h = _rolling_hashes(codes, cfg.gram_chars)
+    if len(h) == 0:
+        return none
+    sel = np.flatnonzero((h & np.uint64(cfg.fp_mod - 1)) == np.uint64(0))
+    if len(sel) == 0:
+        sel = np.array([int(np.argmin(h))])
+    else:
+        # one row per distinct (fp, doc): earliest occurrence — keeps the
+        # downstream shuffle (fp, doc, pos)-unique
+        _, first = np.unique(h[sel], return_index=True)
+        sel = sel[np.sort(first)]
+    return h[sel].view(np.int64), sel.astype(np.int32)
+
+
 def fingerprints(
     docs: DataFrame,
     cfg: DedupConfig,
@@ -83,10 +117,8 @@ def fingerprints(
     text_col: str = "text",
     pre_normalized: bool = False,
 ) -> DataFrame:
-    """→ (doc_id, fp, pos): winnowed fingerprints with char offsets into the
-    normalized text."""
-    k = cfg.gram_chars
-    mask = np.uint64(cfg.fp_mod - 1)
+    """→ (doc_id, fp, pos): mod-sampled fingerprints with char offsets into
+    the normalized text, in one Python pass over the documents."""
     prepped = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("norm"),
@@ -94,39 +126,33 @@ def fingerprints(
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            if not len(pdf):
+                continue
             if not pre_normalized:
                 pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
-            out_id, out_fp, out_pos = [], [], []
-            for doc_id, norm in zip(pdf["doc_id"], pdf["norm"]):
-                if not isinstance(norm, str):  # null text: no fingerprints
-                    continue
-                codes = np.frombuffer(norm.encode("utf-32-le"), dtype="<u4")
-                h = _rolling_hashes(codes, k)
-                if len(h) == 0:
-                    continue
-                sel = np.flatnonzero((h & mask) == np.uint64(0))
-                if len(sel) == 0:
-                    # guarantee >=1 fingerprint per doc (whole-doc dups of
-                    # short texts must still collide)
-                    sel = np.array([int(np.argmin(h))])
-                else:
-                    # one row per distinct (fp, doc): earliest occurrence —
-                    # keeps the downstream shuffle (fp, doc, pos)-unique
-                    _, first = np.unique(h[sel], return_index=True)
-                    sel = sel[np.sort(first)]
-                out_id.append(np.full(len(sel), doc_id, dtype=np.int64))
-                out_fp.append(h[sel].view(np.int64))
-                out_pos.append(sel.astype(np.int32))
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_id),
-                        "fp": np.concatenate(out_fp),
-                        "pos": np.concatenate(out_pos),
-                    }
-                )
+            per_doc = [doc_fingerprints(norm, cfg) for norm in pdf["norm"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": np.repeat(
+                        pdf["doc_id"].to_numpy(np.int64), [len(f) for f, _ in per_doc]
+                    ),
+                    "fp": np.concatenate([f for f, _ in per_doc]),
+                    "pos": np.concatenate([p for _, p in per_doc]),
+                }
+            )
 
     return prepped.mapInPandas(fp, schema="doc_id long, fp long, pos int")
+
+
+def signature_fingerprints(signatures: DataFrame) -> DataFrame:
+    """signatures[doc_id, fps, fp_pos] → (doc_id, fp, pos): the fingerprint
+    columns :func:`~.signatures.compute_signatures` stores with ``norm``,
+    exploded JVM-side (the analog of :func:`~.lsh.band_buckets`) — the
+    same rows as ``fingerprints(norm, cfg, pre_normalized=True)`` without a
+    second Python pass over the text."""
+    return signatures.select(
+        "doc_id", F.inline(F.arrays_zip("fps", "fp_pos")).alias("fp", "pos")
+    )
 
 
 def fingerprint_pairs(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -167,8 +193,9 @@ def substring_edges(
     exists around a shared fingerprint; one row per pair, the longest
     match over its seed diagonals.
 
-    ``fps`` — optionally reuse a precomputed/persisted fingerprint table
-    (columns fp, doc_id, pos) instead of recomputing; ``pair_filter`` —
+    ``fps`` — a precomputed fingerprint table (columns doc_id, fp, pos;
+    the pipeline passes :func:`signature_fingerprints`) instead of a
+    :func:`fingerprints` pass over ``docs``; ``pair_filter`` —
     optional callable(DataFrame[a,b,pos_a,pos_b]) -> DataFrame applied to
     the candidate pairs before verification (incremental mode restricts to
     pairs touching new docs)."""

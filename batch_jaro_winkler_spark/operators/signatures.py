@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
+from batch_jaro_winkler_spark.operators.fingerprint_dedup import doc_fingerprints
 
 __all__ = ["compute_signatures", "minhash_params"]
 
@@ -107,8 +108,8 @@ def compute_signatures(
     include_norm: bool = False,
 ) -> DataFrame:
     """docs[id_col, text_col] → [doc_id, n_tokens, sort_key, band_hashes,
-    simhash] (plus ``norm`` when ``include_norm``) with no shuffle (narrow
-    map only).
+    simhash] (plus ``norm``, ``fps`` and ``fp_pos`` when ``include_norm``)
+    with no shuffle (narrow map only).
 
     ``sort_key`` is minhash[0] — the only signature value downstream stages
     need row-wise (hot-bucket neighbor ordering); the full 128-perm array is
@@ -118,7 +119,11 @@ def compute_signatures(
     ``include_norm`` emits the full normalized text as ``norm``; the
     pipeline derives the Jaro-Winkler prefix from it with one substring.
     This lets the pipeline fuse normalization into this stage instead of
-    paying a separate normalize checkpoint's write→read barrier."""
+    paying a separate normalize checkpoint's write→read barrier.  With
+    ``norm`` come its substring fingerprints (``fps``, ``fp_pos``; see
+    :func:`~.fingerprint_dedup.signature_fingerprints`): only the stages
+    that read ``norm`` use them, and computing them here spares the
+    substring stage a second Python pass over the text."""
     num_perm, bands, rows = cfg.num_perm, cfg.bands, cfg.rows_per_band
     k = cfg.shingle_k
     seed = cfg.seed
@@ -210,9 +215,12 @@ def compute_signatures(
             }
             if include_norm:
                 cols["norm"] = pdf["norm"]
+                per_doc = [doc_fingerprints(norm, cfg) for norm in pdf["norm"]]
+                cols["fps"] = [f for f, _ in per_doc]
+                cols["fp_pos"] = [p for _, p in per_doc]
             yield pd.DataFrame(cols)
 
     schema = "doc_id long, n_tokens int, sort_key long, band_hashes array<long>, simhash long"
     if include_norm:
-        schema += ", norm string"
+        schema += ", norm string, fps array<long>, fp_pos array<int>"
     return prepped.mapInPandas(compute, schema=schema)

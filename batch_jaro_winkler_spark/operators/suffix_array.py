@@ -8,10 +8,12 @@ fixed-width gram keys, refined to full suffix order), walk adjacent
 suffixes, and emit every cross-document LCP >= min_len.
 
 Scale shape: each partition is processed independently (mapInPandas, no
-shuffle); cross-partition duplicates are the fingerprint stage's job —
-the two stages are complementary and both feed the same CC edge set.
-This mirrors the deduplicate-text-datasets design (Lee et al. 2022,
-PAPERS.md): suffix structures bounded per worker, never global.
+shuffle); cross-partition duplicates are out of its reach, which is what
+the optional content-key co-partitioning narrows.  The pipeline's
+substring stage is the fingerprint path; this exact detector backs the
+two ``dedup_substring_*`` queries only.  This mirrors the
+deduplicate-text-datasets design (Lee et al. 2022, PAPERS.md): suffix
+structures bounded per worker, never global.
 
 Kernel: radix-ish suffix ordering via numpy lexsort over k prefix code
 points (k = min_len suffices: suffixes equal in their first min_len chars
@@ -164,9 +166,9 @@ def suffix_array_edges(
     shared region — land in ONE partition regardless of how the input was
     partitioned.  The guarantee is content-proportional, not absolute: two
     docs sharing only a short-relative-to-doc block may min on disjoint
-    grams; the probabilistic fingerprint stage (fingerprint_dedup, p_miss
-    ≈ 0.8% per >=200-char overlap) covers that remainder, and the two
-    stages feed the same CC edge set."""
+    grams and stay unpaired here.  (The pipeline's substring stage is the
+    probabilistic fingerprint path, fingerprint_dedup, p_miss ≈ 0.8% per
+    >=200-char overlap; it does not call this detector.)"""
     min_len = cfg.min_substring_chars
     prepped = docs.select(F.col("doc_id").cast("long"), F.col("text").alias("norm"))
 

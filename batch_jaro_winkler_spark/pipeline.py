@@ -2,12 +2,13 @@
 (BASELINE.json north_rule), as checkpointed stages:
 
   documents
-    → extract        html→text invariant check (byte-identical per url)
-    → signatures     normalize + MinHash + LSH band hashes + SimHash
-                     [no shuffle; carries `norm` for downstream stages]
+    → signatures     normalize + MinHash + LSH band hashes + SimHash +
+                     substring fingerprints, one Arrow pass
+                     [no shuffle; carries `norm`, `fps`, `fp_pos`]
     → jw_edges       LSH banding + capped pair-gen + batched Jaro-Winkler
-                     verification                          [1 agg + 2 joins + grouped map]
-    → sub_edges      winnowed fingerprint substring dedup  [1 shuffle + verify]
+                     verification               [1 agg + joins + narrow map]
+    → sub_edges      mod-sampled fingerprint pairs + slice verification
+                                                [1 shuffle + verify]
     → clusters       large-star/small-star CC over all edges
 
 Every stage writes an atomic parquet+manifest checkpoint keyed by the
@@ -29,7 +30,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.connected_components import connected_components
-from batch_jaro_winkler_spark.operators.fingerprint_dedup import substring_edges
+from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
+    signature_fingerprints,
+    substring_edges,
+)
 from batch_jaro_winkler_spark.operators.lsh import band_buckets, candidate_pairs
 from batch_jaro_winkler_spark.operators.score_pairs import verify_pairs
 from batch_jaro_winkler_spark.operators.signatures import compute_signatures
@@ -104,7 +108,6 @@ class DedupPipeline:
         docs: DataFrame,
         id_col: str = "doc_id",
         text_col: str = "text",
-        with_substring_stage: bool = True,
     ) -> DataFrame:
         """docs[id_col, text_col, ...] → (doc_id, cluster_id) total assignment."""
         cfg = self.cfg
@@ -122,7 +125,8 @@ class DedupPipeline:
         # Python, for a stage that is a pure narrow map.  The signatures
         # checkpoint carries the normalized text once (`norm`; jw_text is
         # its prefix, derived by substring below instead of stored twice)
-        # and every downstream stage selects from it.
+        # and every downstream stage selects from it, and the substring
+        # fingerprints of `norm` ride in the same row (`fps`, `fp_pos`).
         signatures = self._stage(
             "signatures",
             lambda: compute_signatures(
@@ -155,29 +159,14 @@ class DedupPipeline:
                 sig_jw, cfg, "doc_id", "jw_text",
             ),
         )
-        if with_substring_stage:
-            fps = None
-            if cfg.persist_fingerprints:
-                from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-                    fingerprints,
-                )
-
-                fps = self._stage(
-                    "fingerprints",
-                    lambda: fingerprints(
-                        norm_docs, cfg, "doc_id", "norm", pre_normalized=True
-                    ),
-                )
-            sub_edges = self._stage(
-                "sub_edges",
-                lambda: substring_edges(
-                    norm_docs, cfg, "doc_id", "norm", pre_normalized=True,
-                    fps=fps,
-                ).select("a", "b"),
-            )
-            edges = jw_edges.select("a", "b").union(sub_edges.select("a", "b"))
-        else:
-            edges = jw_edges.select("a", "b")
+        sub_edges = self._stage(
+            "sub_edges",
+            lambda: substring_edges(
+                norm_docs, cfg, "doc_id", "norm", pre_normalized=True,
+                fps=signature_fingerprints(signatures),
+            ).select("a", "b"),
+        )
+        edges = jw_edges.select("a", "b").union(sub_edges)
         # all_nodes from the signatures checkpoint, not the raw input:
         # compute_signatures emits exactly one row per input doc (empty
         # docs included, n_tokens=0), and reading doc_id off the stage's
@@ -206,33 +195,28 @@ class DedupPipeline:
            (a semi-join — the old table is scanned once, never reshuffled
            in full);
         3. Jaro-Winkler verification of new-new and new-old pairs;
-        4. connected components over (existing assignments as edges) ∪
+        4. substring links: the new docs' fingerprints (signature columns)
+           semi-join the old signature rows' fingerprints on touched
+           values (a column-pruned scan, never reshuffled in full), and
+           new-new and new-old seeds are slice-verified — so verbatim
+           >=200-char duplication of OLD content links as in a full run;
+        5. connected components over (existing assignments as edges) ∪
            (new edges) → updated total assignment; cluster ids stay
            min(doc_id), so existing ids only change when clusters merge;
-        5. the fold is a manifest-level APPEND: the increment's signature
+        6. the fold is a manifest-level APPEND: the increment's signature
            checkpoint is registered as a part of the logical signatures
            table (catalog.add_part — the Iceberg-snapshot story), so the
            base signature data is never rewritten and increment write cost
            is O(increment), not O(corpus).  Only the (doc_id, cluster_id)
            assignment — two longs per doc — is rewritten, because merges
-           can relabel arbitrary old rows.
+           can relabel arbitrary old rows.  The increment state is one
+           logical table (signatures and its parts) plus ``clusters``.
 
         Idempotency: docs already in the signature table are anti-joined
         out, the increment stage key hashes (doc_id, text) so resubmitting
         changed text never reuses stale checkpoints, and add_part has set
         semantics — a crashed or double-invoked fold cannot duplicate rows.
-
-        Substring links: with ``cfg.persist_fingerprints`` the full run
-        checkpoints its fingerprint table, and each increment computes the
-        new docs' fingerprints, semi-joins the persisted table on touched
-        fingerprints (old table scanned column-pruned, never reshuffled in
-        full), and slice-verifies new-new and new-old pairs — so verbatim
-        >=200-char duplication of OLD content is caught incrementally.
-        Without it, substring links to old docs wait for the next full run
-        (documented trade-off).
         """
-        from batch_jaro_winkler_spark.operators.lsh import band_buckets
-
         cfg = self.cfg
         if not self.catalog.exists("signatures", cfg.config_hash()):
             raise ValueError(
@@ -264,7 +248,8 @@ class DedupPipeline:
         inc = f"inc_{tok_row['n']}_{tok_row['h'] & 0xFFFFFFFF:08x}"
 
         # normalization fused into the increment's signatures stage, same
-        # as the full run: the checkpoint carries `norm`, jw_text derives
+        # as the full run: the checkpoint carries `norm` and its
+        # fingerprints, jw_text derives
         new_sigs = self._stage(
             f"signatures_{inc}",
             lambda: compute_signatures(
@@ -310,43 +295,22 @@ class DedupPipeline:
             ),
         )
 
-        inc_edges = new_edges.select("a", "b")
-
-        # incremental substring stage: new-doc fingerprints vs the
-        # persisted corpus fingerprint table (semi-join on touched fps)
-        has_fp_state = cfg.persist_fingerprints and self.catalog.exists(
-            "fingerprints", cfg.config_hash()
+        # substring stage: new-doc fingerprints vs the old signature rows'
+        # fingerprints, semi-joined on the values the new docs touch
+        new_fps = signature_fingerprints(new_sigs)
+        touched_old = signature_fingerprints(old_sigs).join(
+            new_fps.select("fp").distinct(), "fp", "left_semi"
         )
-        if has_fp_state:
-            from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-                fingerprints,
-                substring_edges,
-            )
-
-            new_fps = self._stage(
-                f"fingerprints_{inc}",
-                lambda: fingerprints(
-                    norm_new, cfg, "doc_id", "norm", pre_normalized=True
-                ),
-            )
-            old_fps = self.catalog.read_union("fingerprints")
-            touched_old = old_fps.join(
-                new_fps.select("fp").distinct(), "fp", "left_semi"
-            )
-            all_norm = (
-                self.catalog.read_union("signatures")
-                .select("doc_id", "norm")
-                .unionByName(norm_new)
-            )
-            sub_new = self._stage(
-                f"sub_edges_{inc}",
-                lambda: substring_edges(
-                    all_norm, cfg, "doc_id", "norm", pre_normalized=True,
-                    fps=touched_old.unionByName(new_fps),
-                    pair_filter=touching_new,
-                ).select("a", "b"),
-            )
-            inc_edges = inc_edges.union(sub_new.select("a", "b"))
+        all_norm = old_sigs.select("doc_id", "norm").unionByName(norm_new)
+        sub_new = self._stage(
+            f"sub_edges_{inc}",
+            lambda: substring_edges(
+                all_norm, cfg, "doc_id", "norm", pre_normalized=True,
+                fps=touched_old.unionByName(new_fps),
+                pair_filter=touching_new,
+            ).select("a", "b"),
+        )
+        inc_edges = new_edges.select("a", "b").union(sub_new)
 
         # existing assignments enter CC as (doc, cluster) edges so merges
         # across old clusters propagate
@@ -363,15 +327,11 @@ class DedupPipeline:
 
         # fold: clusters first (so a crash between the two writes leaves a
         # state where rerunning re-processes the docs rather than returning
-        # a stale assignment), then manifest-append the parts
+        # a stale assignment), then manifest-append the signatures part
         self.catalog.write("clusters", clusters, cfg.config_hash())
         self.catalog.add_part("signatures", f"signatures_{inc}")
-        if has_fp_state:
-            self.catalog.add_part("fingerprints", f"fingerprints_{inc}")
-        # bound the logical tables' scan fan-in: after many daily folds the
+        # bound the logical table's scan fan-in: after many daily folds the
         # base+parts union would otherwise grow one parquet scan per
         # increment forever
-        for tbl in ("signatures", "fingerprints"):
-            if self.catalog.exists(tbl):
-                self.catalog.compact(tbl)
+        self.catalog.compact("signatures")
         return clusters

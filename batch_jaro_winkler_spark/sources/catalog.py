@@ -26,6 +26,7 @@ import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["Catalog"]
 
@@ -58,7 +59,12 @@ class Catalog:
         return config_hash is None or m.get("config_hash") == config_hash
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(name), "data"))
+        """The checkpoint's parquet, read with the manifest's schema — no
+        schema-inference job."""
+        schema = StructType.fromJson(self.manifest(name)["schema"])
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self._dir(name), "data")
+        )
 
     # -------------------------------------------------- multi-part tables
     # Manifest-level append (the Iceberg snapshot story): a logical table

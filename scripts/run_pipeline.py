@@ -43,7 +43,6 @@ def main(argv=None) -> int:
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--cores", type=int, default=None, help="local mode only")
-    ap.add_argument("--no-substring-stage", action="store_true")
     ap.add_argument("--extract-from-html", action="store_true")
     # every DedupConfig field is overridable: --set jw_min_score=0.9
     ap.add_argument("--set", action="append", default=[], metavar="KEY=VALUE")
@@ -81,7 +80,6 @@ def main(argv=None) -> int:
         docs,
         args.id_col if args.id_col in docs.columns else "doc_id",
         args.text_col,
-        with_substring_stage=not args.no_substring_stage,
     )
     clusters.write.mode("overwrite").parquet(args.output)
     print(

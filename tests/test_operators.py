@@ -413,6 +413,31 @@ def test_catalog_write_runs_one_job(spark, tmp_path):
     assert m == cat.manifest("t")
 
 
+def test_catalog_read_runs_no_job(spark, tmp_path):
+    """A checkpoint read takes its schema from the manifest: neither a
+    table read nor a two-part union runs a schema-inference job."""
+    import os
+
+    from batch_jaro_winkler_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    df = spark.range(10).selectExpr("id AS v", "CAST(id AS int) AS w", "array(id) AS arr")
+    cat.write("t", df, config_hash="abc")
+    cat.write("t_part", df.selectExpr("v + 10 AS v", "w", "arr"), config_hash="abc")
+    cat.add_part("t", "t_part")
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "catalog_read_no_job")
+    try:
+        one = cat.read("t")
+        both = cat.read_union("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert len(sc.statusTracker().getJobIdsForGroup("catalog_read_no_job")) == 0
+    assert one.schema == spark.read.parquet(os.path.join(cat.root, "t", "data")).schema
+    assert sorted(r.v for r in both.collect()) == list(range(20))
+
+
 # --- hot buckets: salted chaining keeps connectivity in every pair-gen path ---
 
 _MEGA, _SMALL = 200, 3

@@ -251,9 +251,10 @@ def test_incremental_compaction_bounds_fanin(spark, tmp_path_factory):
 
 
 def test_incremental_substring_links(spark, tmp_path_factory):
-    """With persist_fingerprints, an increment doc embedding a verbatim
+    """On the default config, an increment doc embedding a verbatim
     >=200-char block of an OLD doc joins its cluster even though whole-doc
-    similarity is far below the LSH/JW thresholds."""
+    similarity is far below the LSH/JW thresholds: the old fingerprints
+    come from the signature rows, so no fingerprint table is written."""
     import random
 
     rng = random.Random(9)
@@ -268,10 +269,8 @@ def test_incremental_substring_links(spark, tmp_path_factory):
     block = donor_text[300:560]  # ~260 raw chars of doc 7
 
     root = str(tmp_path_factory.mktemp("incsub"))
-    cfg = DedupConfig(persist_fingerprints=True)
-    pipe = DedupPipeline(
-        spark, cfg, root
-    )
+    cfg = DedupConfig()
+    pipe = DedupPipeline(spark, cfg, root)
     docs = spark.createDataFrame(base_rows, "doc_id long, text string")
     base_clusters = {
         r["doc_id"]: r["cluster_id"] for r in pipe.run(docs, "doc_id", "text").collect()
@@ -290,10 +289,8 @@ def test_incremental_substring_links(spark, tmp_path_factory):
     }
     assert updated[900] == updated[7] == 7, (updated[900], updated[7])
     assert updated[901] == 901
-    # fingerprint state folded as a part, base files untouched
-    assert any(
-        p.startswith("fingerprints_inc_") for p in pipe2.catalog.parts("fingerprints")
-    )
+    # neither run mode writes a fingerprint checkpoint
+    assert not [p for p in os.listdir(root) if "fingerprints" in p]
 
 
 def test_background_writer_failure_propagates(spark, tmp_path_factory):

@@ -197,3 +197,47 @@ def test_widen_scan_is_noop_on_multi_split_source(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(str(tmp_path / "wide"))
     assert partitioning.widen_scan(df) is df
     assert calls == [0]
+
+
+def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
+    """The frame the full run hands to the sub_edges stage, with every
+    frame its compute cuts by a lazy localCheckpoint, holds exactly one
+    MapInPandas node: the slice verify.  The fingerprints come from the
+    signature rows, so the corpus text crosses into Python once per run on
+    its way to signatures and fingerprints."""
+    import re
+
+    from batch_jaro_winkler_spark.fixtures import make_corpus
+    from batch_jaro_winkler_spark.operators.config import DedupConfig
+    from batch_jaro_winkler_spark.pipeline import DedupPipeline
+    from batch_jaro_winkler_spark.plans import explain_formatted
+
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=40, seed=4).rows)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    plans, tracing = [], []
+    real_checkpoint = type(docs).localCheckpoint
+    real_stage = DedupPipeline._stage
+
+    def checkpoint(df, *args, **kwargs):
+        if tracing:
+            plans.append(explain_formatted(df))
+        return real_checkpoint(df, *args, **kwargs)
+
+    def stage(self, name, compute):
+        def traced():
+            tracing.append(name)
+            try:
+                df = compute()
+            finally:
+                tracing.clear()
+            plans.append(explain_formatted(df))
+            return df
+
+        return real_stage(self, name, traced if name == "sub_edges" else compute)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", checkpoint)
+    monkeypatch.setattr(DedupPipeline, "_stage", stage)
+    DedupPipeline(spark, DedupConfig(), str(tmp_path)).run(docs)
+    assert len(plans) >= 3  # the fps and seed cuts, then the stage frame
+    nodes = sum(len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) for p in plans)
+    assert nodes == 1

@@ -139,3 +139,69 @@ def test_substring_recall_when_a_short_shared_line_seeds_first(spark):
     }
     assert set(got) == {(2 * p, 2 * p + 1) for p in range(5)}, got
     assert all(n >= 300 for n in got.values()), got
+
+
+def test_signature_fingerprints_equal_fingerprint_pass(spark):
+    """The fingerprint columns compute_signatures stores with ``norm``,
+    exploded by signature_fingerprints, are the rows of a separate
+    fingerprints() pass over the same normalized text."""
+    from batch_jaro_winkler_spark.fixtures import make_corpus
+    from batch_jaro_winkler_spark.functions.text import normalize_pandas
+    from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
+        fingerprints,
+        signature_fingerprints,
+    )
+    from batch_jaro_winkler_spark.operators.signatures import compute_signatures
+
+    import pandas as pd
+
+    cfg = DedupConfig()
+    k, mask = cfg.gram_chars, np.uint64(cfg.fp_mod - 1)
+
+    def hashes(text: str) -> np.ndarray:
+        norm = normalize_pandas(pd.Series([text]))[0]
+        return _rolling_hashes(np.frombuffer(norm.encode("utf-32-le"), dtype="<u4"), k)
+
+    rng = random.Random(5)
+    # longer than a gram, yet no window hash is sampled: argmin fallback
+    no_sample = next(
+        t
+        for t in (f"fallback probe {i} " * 4 for i in range(1000))
+        if len(hashes(t)) and not ((hashes(t) & mask) == 0).any()
+    )
+    block = " ".join(_rand(rng, 7) for _ in range(60))
+    texts = {
+        0: None,
+        1: "",
+        2: "shorter than a gram",
+        # astral code points normalize away; Latin-extended and CJK stay
+        3: " ".join(f"𝔘𝔫𝔦 ĀāĂ{i} 中文字符{i} 😀 {_rand(rng, 6)}" for i in range(40)),
+        4: no_sample,
+        5: block + " " + block,  # every sampled gram occurs twice
+    }
+    rows = list(texts.items()) + [
+        (100 + i, r["text"]) for i, r in enumerate(make_corpus(n_rows=120, seed=13).rows)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    sigs = compute_signatures(docs, cfg, "doc_id", "text", include_norm=True)
+    sigs = sigs.localCheckpoint()
+    got = sorted(tuple(r) for r in signature_fingerprints(sigs).collect())
+    want = sorted(
+        tuple(r)
+        for r in fingerprints(
+            sigs.select("doc_id", "norm"), cfg, "doc_id", "norm", pre_normalized=True
+        ).collect()
+    )
+    assert got == want
+    per_doc = {}
+    for doc_id, fp, pos in got:
+        per_doc.setdefault(doc_id, []).append((fp, pos))
+    assert not {0, 1, 2} & per_doc.keys()  # null, empty, sub-gram: none
+    assert per_doc[3] and per_doc[4] and per_doc[5]
+    (fp4, pos4), = per_doc[4]
+    h4 = hashes(no_sample)
+    assert pos4 == int(np.argmin(h4)) and fp4 == int(h4.min().view(np.int64))
+    # a repeated gram keeps its earliest position: all in the first copy
+    assert max(pos for _, pos in per_doc[5]) < len(block)
+    assert len(per_doc[5]) == len({fp for fp, _ in per_doc[5]})
