@@ -11,6 +11,10 @@
                                                 [1 shuffle + verify]
     → clusters       large-star/small-star CC over all edges
 
+``run_incremental`` builds the same edge stages (``_edges``) for a batch
+of new documents, limited to pairs that touch a new doc, and folds the
+result into the state.
+
 Every stage writes an atomic parquet+manifest checkpoint keyed by the
 config hash (sources/catalog.py), so a killed run resumes from the last
 completed stage and a config change invalidates exactly the affected
@@ -103,6 +107,77 @@ class DedupPipeline:
         )
         return df
 
+    def _edges(
+        self, sigs: DataFrame, old: DataFrame | None = None, tag: str = ""
+    ) -> DataFrame:
+        """The verified (a, b) edges of the ``jw_edges{tag}`` and
+        ``sub_edges{tag}`` stages over ``sigs``.  Given ``old`` (the existing
+        signature table), ``sigs`` are an increment's new docs: the old
+        buckets and fingerprints a new doc touches join theirs (semi-joins,
+        so the old table is never reshuffled in full), old texts are
+        attached, and ``keep`` drops old-old pairs before either verify.
+        Pair-gen is built inside the stage lambdas: building
+        ``candidate_pairs`` runs Spark jobs, which a resumed stage must not
+        pay."""
+        cfg = self.cfg
+        buckets = band_buckets(sigs)
+        fps = signature_fingerprints(sigs)
+        docs = sigs.select("doc_id", "norm")
+
+        def keep(pairs: DataFrame) -> DataFrame:
+            return pairs
+
+        if old is not None:
+            buckets = buckets.union(
+                band_buckets(old).join(
+                    buckets.select("band_id", "band_hash").distinct(),
+                    ["band_id", "band_hash"],
+                    "left_semi",
+                )
+            )
+            fps = (
+                signature_fingerprints(old)
+                .join(fps.select("fp").distinct(), "fp", "left_semi")
+                .unionByName(fps)
+            )
+            docs = old.select("doc_id", "norm").unionByName(docs)
+
+            def keep(pairs: DataFrame) -> DataFrame:
+                # pairs with a new side, united BY NAME: a USING semi-join
+                # moves the key column to the front
+                on_a, on_b = (
+                    pairs.join(sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
+                    for c in "ab"
+                )
+                return on_a.unionByName(on_b).distinct()
+
+        # the pair list folds into the verify stage (a separate checkpoint
+        # cost ~5 s of write->read barrier at any corpus size) behind a lazy
+        # localCheckpoint, so AQE sizes the verify joins from the
+        # materialized pair count (optimization round 7: 4.3-4.5 s vs
+        # 4.6-7.5 s fused, 50k docs); jw_text is the prefix of `norm`.
+        # Submitting the two stages from parallel threads was tried and
+        # reverted: two mapInPandas-heavy chains churn Python workers and
+        # measured net-slower at both 2 and 8 cores.
+        jw_edges = self._stage(
+            f"jw_edges{tag}",
+            lambda: verify_pairs(
+                keep(candidate_pairs(buckets, cfg))
+                .select("a", "b")
+                .localCheckpoint(eager=False),
+                docs.withColumn("jw_text", F.substring(F.col("norm"), 1, cfg.max_jw_len)),
+                cfg, "doc_id", "jw_text",
+            ),
+        )
+        sub_edges = self._stage(
+            f"sub_edges{tag}",
+            lambda: substring_edges(
+                docs, cfg, "doc_id", "norm", pre_normalized=True,
+                fps=fps, pair_filter=keep,
+            ).select("a", "b"),
+        )
+        return jw_edges.select("a", "b").union(sub_edges)
+
     def run(
         self,
         docs: DataFrame,
@@ -120,53 +195,17 @@ class DedupPipeline:
         docs = widen_scan(docs)
 
         # normalization is FUSED into the signatures stage (include_norm):
-        # a separate normalize checkpoint cost a full write→read barrier
-        # plus a second Arrow round-trip of the whole corpus through
-        # Python, for a stage that is a pure narrow map.  The signatures
-        # checkpoint carries the normalized text once (`norm`; jw_text is
-        # its prefix, derived by substring below instead of stored twice)
-        # and every downstream stage selects from it, and the substring
-        # fingerprints of `norm` ride in the same row (`fps`, `fp_pos`).
+        # a separate normalize checkpoint cost a write→read barrier plus a
+        # second Arrow round-trip of the corpus through Python.  The
+        # checkpoint carries the normalized text (`norm`) and its substring
+        # fingerprints (`fps`, `fp_pos`) for every later stage.
         signatures = self._stage(
             "signatures",
             lambda: compute_signatures(
                 docs, cfg, "doc_id", "text", include_norm=True
             ),
         )
-        norm_docs = signatures.select("doc_id", "norm")
-        sig_jw = signatures.withColumn(
-            "jw_text", F.substring(F.col("norm"), 1, cfg.max_jw_len)
-        )
-        # candidate generation folds into the verification stage: the pair
-        # list is intermediate (nothing else consumes it), so a separate
-        # checkpoint bought resume granularity at the price of one extra
-        # write->read barrier per run — measured ~5 s of size-independent
-        # cost at any corpus size.  (Thread-parallel submission of the two
-        # independent chains was tried and reverted: interleaving two
-        # mapInPandas-heavy chains churns Python workers and measured
-        # net-SLOWER at both 2 and 8 cores.)
-        # lazy localCheckpoint on the pair list (optimization round 7):
-        # cutting the plan here lets AQE size the verify joins from the
-        # MATERIALIZED pair count instead of estimating through the
-        # banding/agg subtree — measured 4.3-4.5 s vs 4.6-7.5 s for the
-        # fused chain on the 50k-doc corpus, and stabler
-        jw_edges = self._stage(
-            "jw_edges",
-            lambda: verify_pairs(
-                candidate_pairs(band_buckets(signatures), cfg)
-                .select("a", "b")
-                .localCheckpoint(eager=False),
-                sig_jw, cfg, "doc_id", "jw_text",
-            ),
-        )
-        sub_edges = self._stage(
-            "sub_edges",
-            lambda: substring_edges(
-                norm_docs, cfg, "doc_id", "norm", pre_normalized=True,
-                fps=signature_fingerprints(signatures),
-            ).select("a", "b"),
-        )
-        edges = jw_edges.select("a", "b").union(sub_edges)
+        edges = self._edges(signatures)
         # all_nodes from the signatures checkpoint, not the raw input:
         # compute_signatures emits exactly one row per input doc (empty
         # docs included, n_tokens=0), and reading doc_id off the stage's
@@ -186,36 +225,28 @@ class DedupPipeline:
 
     def run_incremental(self, new_docs: DataFrame) -> DataFrame:
         """Assign cluster ids to ``new_docs[doc_id, text]`` against an
-        existing run's state WITHOUT recomputing old signatures — the
-        daily-crawl shape:
+        existing run's state without recomputing old signatures (the
+        daily-crawl shape).  An increment runs the full run's stage graph,
+        limited to pairs that touch a new doc:
 
-        1. signatures for the new docs only (narrow map);
-        2. LSH buckets of new docs joined against the existing signature
-           table, restricted to band hashes the new docs actually touch
-           (a semi-join — the old table is scanned once, never reshuffled
-           in full);
-        3. Jaro-Winkler verification of new-new and new-old pairs;
-        4. substring links: the new docs' fingerprints (signature columns)
-           semi-join the old signature rows' fingerprints on touched
-           values (a column-pruned scan, never reshuffled in full), and
-           new-new and new-old seeds are slice-verified — so verbatim
-           >=200-char duplication of OLD content links as in a full run;
-        5. connected components over (existing assignments as edges) ∪
-           (new edges) → updated total assignment; cluster ids stay
-           min(doc_id), so existing ids only change when clusters merge;
-        6. the fold is a manifest-level APPEND: the increment's signature
-           checkpoint is registered as a part of the logical signatures
-           table (catalog.add_part — the Iceberg-snapshot story), so the
-           base signature data is never rewritten and increment write cost
-           is O(increment), not O(corpus).  Only the (doc_id, cluster_id)
-           assignment — two longs per doc — is rewritten, because merges
-           can relabel arbitrary old rows.  The increment state is one
-           logical table (signatures and its parts) plus ``clusters``.
+        1. sign the new docs (``signatures_{inc}``);
+        2. :meth:`_edges` with the existing signature table as ``old``;
+        3. connected components over the existing assignments (as edges)
+           and the new edges; cluster ids stay min(doc_id), so old ids
+           change only when clusters merge;
+        4. fold: rewrite ``clusters`` (two longs per doc: a merge can
+           relabel any old row) and register the increment's signatures as
+           a part of the logical signatures table (``Catalog.add_part``, a
+           manifest-level append: O(increment) writes, base data untouched).
 
         Idempotency: docs already in the signature table are anti-joined
-        out, the increment stage key hashes (doc_id, text) so resubmitting
-        changed text never reuses stale checkpoints, and add_part has set
-        semantics — a crashed or double-invoked fold cannot duplicate rows.
+        out, and a batch that repeats a doc_id is rejected (ValueError), so
+        the increment's stage key — row count and XOR of the rows'
+        (doc_id, text) hashes — names a set of distinct rows, and
+        resubmitting changed text never reuses stale checkpoints.  add_part
+        has set semantics and the part list lives in the table's manifest,
+        so neither a crashed or double-invoked fold nor a killed compaction
+        can duplicate rows.
         """
         cfg = self.cfg
         if not self.catalog.exists("signatures", cfg.config_hash()):
@@ -238,86 +269,38 @@ class DedupPipeline:
         # increment-specific stage names: a second increment must not reuse
         # the previous increment's checkpoints (config hash alone cannot
         # distinguish inputs); the key covers CONTENT, not just ids, so the
-        # same ids with changed text invalidate
+        # same ids with changed text invalidate.  XOR cancels repeated
+        # rows, so the same aggregate counts distinct ids and a repeat is
+        # refused
         tok_row = new_docs.agg(
             F.count(F.lit(1)).alias("n"),
+            F.countDistinct("doc_id").alias("ids"),
             F.coalesce(F.expr("bit_xor(xxhash64(doc_id, text))"), F.lit(0)).alias("h"),
         ).collect()[0]
+        if tok_row["ids"] != tok_row["n"]:
+            raise ValueError(
+                f"run_incremental: the batch repeats a doc_id "
+                f"({tok_row['n']} new rows, {tok_row['ids']} distinct ids)"
+            )
         if tok_row["n"] == 0:
             return old_clusters
         inc = f"inc_{tok_row['n']}_{tok_row['h'] & 0xFFFFFFFF:08x}"
 
-        # normalization fused into the increment's signatures stage, same
-        # as the full run: the checkpoint carries `norm` and its
-        # fingerprints, jw_text derives
         new_sigs = self._stage(
             f"signatures_{inc}",
             lambda: compute_signatures(
                 new_docs, cfg, "doc_id", "text", include_norm=True
             ),
         )
-        norm_new = new_sigs.select("doc_id", "norm")
-
-        def touching_new(pairs: DataFrame) -> DataFrame:
-            """pairs with at least one side among the new docs."""
-            # a USING semi-join moves the key column to the FRONT, so a
-            # positional union of the two branches would swap (a, b) —
-            # union BY NAME, always
-            on_a, on_b = (
-                pairs.join(new_sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
-                for c in "ab"
-            )
-            return on_a.unionByName(on_b).distinct()
-
-        def _pairs():
-            new_buckets = band_buckets(new_sigs)
-            # only old buckets whose (band, hash) a new doc touches matter
-            old_buckets = band_buckets(old_sigs).join(
-                new_buckets.select("band_id", "band_hash").distinct(),
-                ["band_id", "band_hash"],
-                "left_semi",
-            )
-            pairs = candidate_pairs(new_buckets.union(old_buckets), cfg)
-            # drop old-old pairs resurfacing through shared buckets
-            return touching_new(pairs)
-
-        jw_of = F.substring(F.col("norm"), 1, cfg.max_jw_len).alias("jw_text")
-        all_sigs = old_sigs.select("doc_id", jw_of).union(
-            new_sigs.select("doc_id", jw_of)
-        )
-        # pairs fold into the verify stage behind a lazy localCheckpoint,
-        # as in the full run
-        new_edges = self._stage(
-            f"jw_edges_{inc}",
-            lambda: verify_pairs(
-                _pairs().select("a", "b").localCheckpoint(eager=False),
-                all_sigs, cfg, "doc_id", "jw_text",
-            ),
-        )
-
-        # substring stage: new-doc fingerprints vs the old signature rows'
-        # fingerprints, semi-joined on the values the new docs touch
-        new_fps = signature_fingerprints(new_sigs)
-        touched_old = signature_fingerprints(old_sigs).join(
-            new_fps.select("fp").distinct(), "fp", "left_semi"
-        )
-        all_norm = old_sigs.select("doc_id", "norm").unionByName(norm_new)
-        sub_new = self._stage(
-            f"sub_edges_{inc}",
-            lambda: substring_edges(
-                all_norm, cfg, "doc_id", "norm", pre_normalized=True,
-                fps=touched_old.unionByName(new_fps),
-                pair_filter=touching_new,
-            ).select("a", "b"),
-        )
-        inc_edges = new_edges.select("a", "b").union(sub_new)
+        inc_edges = self._edges(new_sigs, old_sigs, f"_{inc}")
 
         # existing assignments enter CC as (doc, cluster) edges so merges
-        # across old clusters propagate
+        # across old clusters propagate; the new nodes come off the
+        # increment's signature checkpoint, as in the full run
         old_edges = old_clusters.select(
             F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")
         ).where(F.col("a") != F.col("b"))
-        all_nodes = old_clusters.select("doc_id").union(new_docs.select("doc_id"))
+        all_nodes = old_clusters.select("doc_id").union(new_sigs.select("doc_id"))
         clusters = self._stage(
             f"clusters_{inc}",
             lambda: connected_components(

@@ -6,10 +6,22 @@ parquet + a JSON manifest:
 
 * a stage checkpoint is ``<root>/<name>/data/*.parquet`` plus
   ``<root>/<name>/manifest.json`` holding schema, row count, config hash,
-  stage version and wall time (per-partition lineage + metrics);
-* writes are atomic-by-rename: data lands in a temp dir, the manifest is
-  written last — a checkpoint without a manifest is invisible, so a killed
-  job never exposes partial state.
+  stage version, wall time (per-partition lineage + metrics) and the
+  logical table's part list (``parts``, see :meth:`Catalog.add_part`);
+* writes are atomic-by-rename: data and manifest land in a temp dir that
+  is renamed into place — a checkpoint without a manifest is invisible,
+  so a killed job never exposes partial state — and ``add_part``
+  replaces the manifest through a temp file.  Because the part list
+  lives in the manifest, a rewrite (``write``, ``compact``) resets it in
+  the same rename that swaps the data: a killed compaction can never
+  leave the old parts listed beside a base that already holds them.
+
+One window remains: ``write`` removes the old table directory before it
+renames the new one into place, so a kill between the two leaves the
+table missing (for ``clusters`` or a compacted ``signatures`` that loses
+the increment state).  Closing it needs a data directory named by the
+manifest instead of the fixed ``<name>/data``, which readers of the
+layout (the benchmark harness reads ``clusters/data``) depend on.
 
 On a real deployment the same functions map 1:1 onto Iceberg
 ``writeTo(...).createOrReplace()`` + snapshot metadata; the pipeline code
@@ -68,35 +80,30 @@ class Catalog:
 
     # -------------------------------------------------- multi-part tables
     # Manifest-level append (the Iceberg snapshot story): a logical table
-    # = its base checkpoint + an ordered list of part checkpoints.  An
-    # incremental fold registers the increment's table as a part instead of
-    # rewriting the base — O(increment) I/O, and the base data files never
-    # churn.  A full rewrite (``write``) resets the part list.
-
-    def _parts_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}__parts.json")
+    # = its base checkpoint + the ordered part checkpoints its manifest
+    # lists.  An incremental fold registers the increment's table as a part
+    # instead of rewriting the base — O(increment) I/O, and the base data
+    # files never churn.  A full rewrite (``write``) resets the part list.
 
     def parts(self, name: str) -> list[str]:
-        try:
-            with open(self._parts_path(name)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return []
+        return (self.manifest(name) or {}).get("parts", [])
 
     def add_part(self, name: str, part_table: str) -> None:
         """Register ``part_table`` (an existing checkpoint) as a part of the
-        logical table ``name``.  Idempotent (set semantics) and atomic
-        (tmp-file + rename), so a crashed/rerun fold never duplicates."""
-        if not self.exists(part_table):
-            raise ValueError(f"part table {part_table} has no checkpoint")
-        ps = self.parts(name)
+        logical table ``name``.  Idempotent (set semantics) and atomic (the
+        manifest is replaced through a temp file), so a crashed/rerun fold
+        never duplicates."""
+        m = self.manifest(name)
+        if m is None or not self.exists(part_table):
+            raise ValueError(f"add_part needs checkpoints of {name} and {part_table}")
+        ps = m.setdefault("parts", [])
         if part_table in ps:
             return
         ps.append(part_table)
-        tmp = self._parts_path(name) + f".tmp{uuid.uuid4().hex[:8]}"
+        tmp = self._manifest_path(name) + f".tmp{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
-            json.dump(ps, fh)
-        os.replace(tmp, self._parts_path(name))
+            json.dump(m, fh, indent=1)
+        os.replace(tmp, self._manifest_path(name))
 
     def read_union(self, name: str) -> DataFrame:
         """The logical table: base checkpoint unioned with all parts."""
@@ -108,9 +115,10 @@ class Catalog:
     def compact(self, name: str) -> bool:
         """Fold part checkpoints into the base when the logical table's
         scan fan-in exceeds ``_MAX_PARTS`` (the Iceberg rewrite_data_files
-        story): rewrites base = read_union(name) and clears the part list
-        (``write`` supersedes parts atomically), so unbounded daily
-        increments can never degenerate into an unbounded union plan.
+        story): rewrites base = read_union(name), whose new manifest's
+        empty part list supersedes the old parts in the same rename, so
+        unbounded daily increments can never degenerate into an unbounded
+        union plan.
         Part checkpoints stay on disk — they are independent stage
         checkpoints that incremental runs may still resume from.
         Returns True iff a compaction ran."""
@@ -165,6 +173,7 @@ class Catalog:
             "schema": df.schema.jsonValue(),
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "parts": [],
             **(extra_meta or {}),
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as fh:
@@ -172,7 +181,4 @@ class Catalog:
         if os.path.exists(table_dir):
             shutil.rmtree(table_dir)
         os.rename(tmp, table_dir)
-        # a full rewrite supersedes any incremental parts
-        if os.path.exists(self._parts_path(name)):
-            os.remove(self._parts_path(name))
         return manifest

@@ -438,6 +438,40 @@ def test_catalog_read_runs_no_job(spark, tmp_path):
     assert sorted(r.v for r in both.collect()) == list(range(20))
 
 
+def test_killed_compaction_leaves_no_duplicates(spark, tmp_path, monkeypatch):
+    """The part list lives in the manifest, so the rename that swaps in the
+    compacted base also clears it: a compaction killed right after that
+    rename leaves read_union duplicate-free, and the next one is a no-op."""
+    import os
+
+    from batch_jaro_winkler_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.write("t", spark.range(10).selectExpr("id AS v"), config_hash="abc")
+    for p in range(9):
+        name = f"t_part{p}"
+        cat.write(name, spark.range(1).selectExpr(f"{10 + p} AS v"), config_hash="abc")
+        cat.add_part("t", name)
+    assert len(cat.parts("t")) == 9
+
+    class Killed(BaseException):
+        pass
+
+    real_rename = os.rename
+
+    def dying_rename(src, dst):
+        real_rename(src, dst)
+        raise Killed("compaction killed after its data write")
+
+    monkeypatch.setattr(os, "rename", dying_rename)
+    with pytest.raises(Killed):
+        cat.compact("t")
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert sorted(r.v for r in cat.read_union("t").collect()) == list(range(19))
+    assert cat.parts("t") == []
+    assert not cat.compact("t")
+
+
 # --- hot buckets: salted chaining keeps connectivity in every pair-gen path ---
 
 _MEGA, _SMALL = 200, 3

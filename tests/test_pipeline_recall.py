@@ -395,3 +395,104 @@ def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
     }
     assert resumed == clean
     assert os.listdir(orphan) == ["data"]  # untouched, never read
+
+
+def _rand_text(rng, n_words):
+    return " ".join(
+        f"w{rng.randrange(10**6)}x{rng.randrange(10**6)}" for _ in range(n_words)
+    )
+
+
+def _near_dup(rng, text, n_subs=2):
+    """text with its last words replaced: same 256-char JW prefix, almost
+    every shingle kept."""
+    words = text.split()
+    for k in range(n_subs):
+        words[-1 - 3 * k] = f"sub{rng.randrange(10**6)}"
+    return " ".join(words)
+
+
+def test_increment_matches_full_run(spark, tmp_path_factory):
+    """run(base) then run_incremental(new) gives the same assignment as
+    run(base ∪ new), for new docs that near-dup old docs, copy a verbatim
+    passage of one, bridge two old clusters, pair up among themselves or
+    stay unique."""
+    import random
+
+    rng = random.Random(17)
+    base = [(i, _rand_text(rng, 160)) for i in range(40)]
+    base[1] = (1, _near_dup(rng, base[0][1]))  # old cluster {0, 1}
+    base[3] = (3, _near_dup(rng, base[2][1]))  # old cluster {2, 3}
+    text = dict(base)
+    fresh = _rand_text(rng, 160)
+    new = [
+        (900, _near_dup(rng, text[5])),
+        (901, _near_dup(rng, text[0], n_subs=3)),
+        (902, _rand_text(rng, 110) + " " + text[7][300:560] + " " + _rand_text(rng, 30)),
+        # verbatim passages of both old clusters: merges them
+        (903, text[0][600:860] + " " + _rand_text(rng, 60) + " " + text[2][600:860]),
+        (904, fresh),
+        (905, _near_dup(rng, fresh)),
+        (906, _rand_text(rng, 150)),
+        (907, _rand_text(rng, 150)),
+    ]
+    schema = "doc_id long, text string"
+    cfg = DedupConfig()
+
+    def assignment(df):
+        return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+    root = str(tmp_path_factory.mktemp("incdiff"))
+    base_assign = assignment(
+        DedupPipeline(spark, cfg, root).run(spark.createDataFrame(base, schema))
+    )
+    assert base_assign[1] == 0 and base_assign[3] == 2
+    inc = assignment(
+        DedupPipeline(spark, cfg, root).run_incremental(spark.createDataFrame(new, schema))
+    )
+    full = assignment(
+        DedupPipeline(spark, cfg, str(tmp_path_factory.mktemp("incdiff_full"))).run(
+            spark.createDataFrame(base + new, schema)
+        )
+    )
+    assert inc == full
+    # the planted links all landed (the equality above is not vacuous)
+    assert inc[900] == inc[5] == 5
+    assert inc[902] == inc[7] == 7
+    assert {inc[d] for d in (0, 1, 2, 3, 901, 903)} == {0}
+    assert inc[905] == inc[904] == 904
+    assert inc[906] == 906 and inc[907] == 907
+
+
+def test_incremental_rejects_repeated_doc_id(spark, tmp_path_factory):
+    """The increment key XORs row hashes, so a batch repeating a row would
+    cancel it and share its key with other increments (resuming their
+    checkpoints): such a batch is refused before anything is written, and
+    the state stays usable."""
+    import random
+
+    rng = random.Random(23)
+    root = str(tmp_path_factory.mktemp("increp"))
+    cfg = DedupConfig()
+    schema = "doc_id long, text string"
+    DedupPipeline(spark, cfg, root).run(
+        spark.createDataFrame([(i, _rand_text(rng, 80)) for i in range(30)], schema)
+    )
+    a, b = _rand_text(rng, 80), _rand_text(rng, 80)
+    for doc_id, text in ((500, a), (501, b)):
+        batch = spark.createDataFrame([(doc_id, text), (doc_id, text)], schema)
+        with pytest.raises(ValueError, match="repeats a doc_id"):
+            DedupPipeline(spark, cfg, root).run_incremental(batch)
+    pipe = DedupPipeline(spark, cfg, root)
+    assert pipe.catalog.parts("signatures") == []
+    assert not [p for p in os.listdir(root) if "_inc_" in p]
+
+    ok = {
+        r["doc_id"]: r["cluster_id"]
+        for r in pipe.run_incremental(
+            spark.createDataFrame([(500, a), (501, b)], schema)
+        ).collect()
+    }
+    assert len(ok) == 32 and ok[500] == 500 and ok[501] == 501
+    sig_ids = pipe.catalog.read_union("signatures").select("doc_id")
+    assert sig_ids.count() == sig_ids.distinct().count() == 32

@@ -241,3 +241,35 @@ def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
     assert len(plans) >= 3  # the fps and seed cuts, then the stage frame
     nodes = sum(len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) for p in plans)
     assert nodes == 1
+
+
+def test_increment_cc_nodes_read_its_signature_checkpoint(spark, tmp_path, monkeypatch):
+    """The frame an increment hands to its clusters stage takes the new
+    nodes off the increment's signature checkpoint, as the full run does:
+    it holds no LeftAnti join, i.e. neither re-scans the input nor re-runs
+    the anti-join against every old signature part."""
+    from batch_jaro_winkler_spark.fixtures import make_corpus
+    from batch_jaro_winkler_spark.operators.config import DedupConfig
+    from batch_jaro_winkler_spark.pipeline import DedupPipeline
+    from batch_jaro_winkler_spark.plans import explain_formatted
+
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=40, seed=4).rows)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    plans = {}
+    real_stage = DedupPipeline._stage
+
+    def stage(self, name, compute):
+        def traced():
+            df = compute()
+            plans[name] = explain_formatted(df)
+            return df
+
+        return real_stage(self, name, traced)
+
+    monkeypatch.setattr(DedupPipeline, "_stage", stage)
+    cfg = DedupConfig()
+    DedupPipeline(spark, cfg, str(tmp_path)).run(docs.where(docs.doc_id < 32))
+    DedupPipeline(spark, cfg, str(tmp_path)).run_incremental(docs.where(docs.doc_id >= 32))
+    [cc] = [p for name, p in plans.items() if name.startswith("clusters_inc_")]
+    assert "MapInPandas" in cc  # the local CC endgame's assignment map
+    assert "LeftAnti" not in cc
