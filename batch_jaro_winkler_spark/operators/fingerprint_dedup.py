@@ -21,7 +21,10 @@ Schleimer/Wilkerson/Aiken SIGMOD'03 — PAPERS.md):
 * shuffle only (fingerprint, doc_id, pos): fingerprint buckets → candidate
   pairs through ``lsh.bucket_pairs`` (same capped two-path policy as LSH,
   hot fingerprints salted and chained), one seed per pair and offset
-  diagonal;
+  diagonal (:func:`first_seeds`).  The pipeline pairs the fingerprints in
+  the same ``bucket_pairs`` pass as the LSH bands (``lsh.pair_keys``) and
+  hands their seeds to :func:`substring_edges`; :func:`fingerprint_pairs`
+  is the standalone path;
 * verify: broadcast-join bounded text slices around the seed offsets,
   first-mismatch extension over seed-aligned code-point matrices in
   pandas, keep the pairs whose longest match reaches
@@ -49,7 +52,7 @@ __all__ = [
     "doc_fingerprints",
     "fingerprints",
     "fingerprint_pairs",
-    "signature_fingerprints",
+    "first_seeds",
     "substring_edges",
 ]
 
@@ -144,14 +147,15 @@ def fingerprints(
     return prepped.mapInPandas(fp, schema="doc_id long, fp long, pos int")
 
 
-def signature_fingerprints(signatures: DataFrame) -> DataFrame:
-    """signatures[doc_id, fps, fp_pos] → (doc_id, fp, pos): the fingerprint
-    columns :func:`~.signatures.compute_signatures` stores with ``norm``,
-    exploded JVM-side (the analog of :func:`~.lsh.band_buckets`) — the
-    same rows as ``fingerprints(norm, cfg, pre_normalized=True)`` without a
-    second Python pass over the text."""
-    return signatures.select(
-        "doc_id", F.inline(F.arrays_zip("fps", "fp_pos")).alias("fp", "pos")
+def first_seeds(pairs: DataFrame) -> DataFrame:
+    """fingerprint pairs (a, b, pos_a, pos_b), one row per shared
+    fingerprint → candidate seeds: one per (a, b, pos_a - pos_b) diagonal,
+    the earliest.  One seed per pair would miss a long shared passage
+    whenever a short shared line (a newsletter footer) comes first on
+    another diagonal."""
+    diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
+    return pairs.groupBy("a", "b", diag).agg(F.min("pos_a").alias("pos_a")).select(
+        "a", "b", "pos_a", (F.col("pos_a") - F.col("diag")).alias("pos_b")
     )
 
 
@@ -159,24 +163,13 @@ def fingerprint_pairs(fps: DataFrame, cfg: DedupConfig) -> DataFrame:
     """fingerprints → candidate seeds (a, b, pos_a, pos_b): docs sharing a
     fingerprint, through :func:`~.lsh.bucket_pairs` (the LSH skew policy:
     hot fingerprints — boilerplate shared by thousands of docs — are
-    salted by a doc-id hash and chained), keeping one seed per (a, b,
-    pos_a - pos_b) diagonal, the earliest.  One seed per pair would miss a
-    long shared passage whenever a short shared line (a newsletter
-    footer) comes first on another diagonal."""
+    salted by a doc-id hash and chained), reduced by :func:`first_seeds`."""
     # lazy checkpoint: bucket_pairs reads its input twice (size aggregate
     # and join), which would otherwise run the fingerprint pass twice
-    pairs = bucket_pairs(
-        fps.localCheckpoint(eager=False),
-        ["fp"],
-        cfg.allpairs_cap,
-        cfg.neighbor_window,
-        F.xxhash64(F.col("doc_id")),
-        payload=("pos",),
-    )
-    diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
-    return pairs.groupBy("a", "b", diag).agg(F.min("pos_a").alias("pos_a")).select(
-        "a", "b", "pos_a", (F.col("pos_a") - F.col("diag")).alias("pos_b")
-    )
+    return first_seeds(bucket_pairs(
+        fps.localCheckpoint(eager=False), ["fp"], cfg.allpairs_cap,
+        cfg.neighbor_window, F.xxhash64(F.col("doc_id")), payload=("pos",),
+    ))
 
 
 def substring_edges(
@@ -185,25 +178,21 @@ def substring_edges(
     id_col: str = "doc_id",
     text_col: str = "text",
     pre_normalized: bool = False,
-    fps: DataFrame | None = None,
-    pair_filter=None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end substring stage → verified edges (a, b, match_len) where a
     verbatim common substring of >= cfg.min_substring_chars normalized chars
     exists around a shared fingerprint; one row per pair, the longest
     match over its seed diagonals.
 
-    ``fps`` — a precomputed fingerprint table (columns doc_id, fp, pos;
-    the pipeline passes :func:`signature_fingerprints`) instead of a
-    :func:`fingerprints` pass over ``docs``; ``pair_filter`` —
-    optional callable(DataFrame[a,b,pos_a,pos_b]) -> DataFrame applied to
-    the candidate pairs before verification (incremental mode restricts to
-    pairs touching new docs)."""
-    if fps is None:
-        fps = fingerprints(docs, cfg, id_col, text_col, pre_normalized)
-    cand = fingerprint_pairs(fps, cfg)
-    if pair_filter is not None:
-        cand = pair_filter(cand)
+    ``seeds`` — precomputed candidate seeds (a, b, pos_a, pos_b), as
+    :func:`fingerprint_pairs` or :func:`first_seeds` emit them (the
+    pipeline passes the fingerprint share of its one pair relation),
+    instead of a :func:`fingerprints` pass over ``docs``."""
+    if seeds is None:
+        seeds = fingerprint_pairs(
+            fingerprints(docs, cfg, id_col, text_col, pre_normalized), cfg
+        )
     k = cfg.gram_chars
     min_len = cfg.min_substring_chars
     # verification decides `common substring >= min_len`, so each side only
@@ -212,23 +201,18 @@ def substring_edges(
     # (at web scale the pair list is millions of rows; the documents are
     # hundreds of TB — never shuffle the big side for a verify)
     cap = min_len + k
-    if pre_normalized:
-        norm = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("norm"),
-        )
-    else:
-        raw = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("norm"),
-        )
+    norm = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(text_col).alias("norm"),
+    )
+    if not pre_normalized:
 
         def _norm(batches):
             for pdf in batches:
                 yield pdf.assign(norm=normalize_pandas(pdf["norm"]))
 
-        norm = raw.mapInPandas(_norm, schema="doc_id long, norm string")
-    cand = cand.localCheckpoint(eager=False)
+        norm = norm.mapInPandas(_norm, schema="doc_id long, norm string")
+    cand = seeds.localCheckpoint(eager=False)
     # slice side a: broadcast the (a, pos_a) keys over the documents scan,
     # keep [pos_a - cap, pos_a + cap + k) plus the local seed offset
     start_a = F.greatest(F.col("pos_a") - cap, F.lit(0))

@@ -5,6 +5,10 @@ Scale design (SURVEY.md §7 step 5, R8):
 
 * ``posexplode`` the per-doc band-hash array → (band_id, band_hash, doc_id):
   bands× row inflation, but only 3 small columns, all JVM-side.
+  :func:`pair_keys` explodes a signature row's band hashes and substring
+  fingerprints into ONE key relation, so the pipeline pairs both detectors'
+  buckets in a single :func:`bucket_pairs` pass and splits the result by
+  kind (band rows carry a null ``pos``).
 * :func:`bucket_pairs` turns bucket memberships into pairs.  It is the one
   bucket→pairs operator of the package: LSH band buckets, substring
   fingerprints (``fingerprint_dedup``) and hyperplane buckets over
@@ -34,7 +38,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
-__all__ = ["band_buckets", "bucket_pairs", "candidate_pairs"]
+__all__ = ["band_buckets", "bucket_pairs", "candidate_pairs", "pair_keys"]
 
 _SALT_BITS = 4
 
@@ -52,6 +56,22 @@ def band_buckets(signatures: DataFrame) -> DataFrame:
         )
         .select("band_id", "band_hash", "doc_id", "sort_key")
     )
+
+
+def pair_keys(signatures: DataFrame) -> DataFrame:
+    """signatures[doc_id, n_tokens, sort_key, band_hashes, fps, fp_pos] →
+    (k1, k2, doc_id, sort_key, pos): the buckets of both detectors as one
+    :func:`bucket_pairs` input.  A band row is (band_id, band_hash) with
+    the signature ``sort_key`` and a null ``pos``; a fingerprint row is
+    (-1, fp) ordered by ``xxhash64(doc_id)`` with its char offset — the
+    rows :func:`~.fingerprint_dedup.fingerprints` emits, exploded JVM-side
+    from the columns ``compute_signatures(include_norm=True)`` stores."""
+    bands = band_buckets(signatures).withColumnsRenamed({"band_id": "k1", "band_hash": "k2"})
+    fps = signatures.select(
+        F.lit(-1).alias("k1"), "doc_id", F.xxhash64("doc_id").alias("sort_key"),
+        F.inline(F.arrays_zip("fps", "fp_pos")).alias("k2", "pos"),
+    )
+    return bands.withColumn("pos", F.lit(None).cast("int")).unionByName(fps)
 
 
 def bucket_pairs(

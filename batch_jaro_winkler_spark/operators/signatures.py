@@ -120,10 +120,10 @@ def compute_signatures(
     pipeline derives the Jaro-Winkler prefix from it with one substring.
     This lets the pipeline fuse normalization into this stage instead of
     paying a separate normalize checkpoint's write→read barrier.  With
-    ``norm`` come its substring fingerprints (``fps``, ``fp_pos``; see
-    :func:`~.fingerprint_dedup.signature_fingerprints`): only the stages
-    that read ``norm`` use them, and computing them here spares the
-    substring stage a second Python pass over the text."""
+    ``norm`` come its substring fingerprints (``fps``, ``fp_pos``;
+    :func:`~.lsh.pair_keys` explodes them beside the band hashes): only
+    the stages that read ``norm`` use them, and computing them here spares
+    the substring stage a second Python pass over the text."""
     num_perm, bands, rows = cfg.num_perm, cfg.bands, cfg.rows_per_band
     k = cfg.shingle_k
     seed = cfg.seed

@@ -5,11 +5,16 @@
     → signatures     normalize + MinHash + LSH band hashes + SimHash +
                      substring fingerprints, one Arrow pass
                      [no shuffle; carries `norm`, `fps`, `fp_pos`]
-    → jw_edges       LSH banding + capped pair-gen + batched Jaro-Winkler
-                     verification               [1 agg + joins + narrow map]
-    → sub_edges      mod-sampled fingerprint pairs + slice verification
-                                                [1 shuffle + verify]
+    → jw_edges       batched Jaro-Winkler verification of the LSH pairs
+                                                [joins + narrow map]
+    → sub_edges      slice verification of the fingerprint seeds
+                                                [1 agg + joins + narrow map]
     → clusters       large-star/small-star CC over all edges
+
+Both edge stages read ONE pair relation: the band buckets and the
+substring fingerprints of each signature row are exploded into one key
+relation (``lsh.pair_keys``), paired by one capped ``lsh.bucket_pairs``
+pass and split by kind.  The edge stage that computes first builds it.
 
 ``run_incremental`` builds the same edge stages (``_edges``) for a batch
 of new documents, limited to pairs that touch a new doc, and folds the
@@ -27,6 +32,7 @@ wrote.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass
 
@@ -35,10 +41,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.connected_components import connected_components
 from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-    signature_fingerprints,
+    first_seeds,
     substring_edges,
 )
-from batch_jaro_winkler_spark.operators.lsh import band_buckets, candidate_pairs
+from batch_jaro_winkler_spark.operators.lsh import bucket_pairs, pair_keys
 from batch_jaro_winkler_spark.operators.score_pairs import verify_pairs
 from batch_jaro_winkler_spark.operators.signatures import compute_signatures
 from batch_jaro_winkler_spark.sources.catalog import Catalog
@@ -111,60 +117,59 @@ class DedupPipeline:
         self, sigs: DataFrame, old: DataFrame | None = None, tag: str = ""
     ) -> DataFrame:
         """The verified (a, b) edges of the ``jw_edges{tag}`` and
-        ``sub_edges{tag}`` stages over ``sigs``.  Given ``old`` (the existing
-        signature table), ``sigs`` are an increment's new docs: the old
-        buckets and fingerprints a new doc touches join theirs (semi-joins,
-        so the old table is never reshuffled in full), old texts are
-        attached, and ``keep`` drops old-old pairs before either verify.
-        Pair-gen is built inside the stage lambdas: building
-        ``candidate_pairs`` runs Spark jobs, which a resumed stage must not
-        pay."""
+        ``sub_edges{tag}`` stages over ``sigs``.  Band buckets and
+        fingerprints pair in ONE :func:`~.lsh.bucket_pairs` pass over
+        :func:`~.lsh.pair_keys`; band pairs (null ``pos``) go to the
+        Jaro-Winkler verify, fingerprint pairs through
+        :func:`~.fingerprint_dedup.first_seeds` to the slice verify.  Given
+        ``old`` (the existing signature table), ``sigs`` are an increment's
+        new docs: the old keys a new doc shares join theirs (a semi-join, so
+        the old table is never reshuffled in full), old texts are attached,
+        and the pairs keep only those with a new side.  The pair relation is
+        built once, by whichever edge stage computes first: building it runs
+        Spark jobs, which a resumed stage must not pay."""
         cfg = self.cfg
-        buckets = band_buckets(sigs)
-        fps = signature_fingerprints(sigs)
+        keys = pair_keys(sigs)
         docs = sigs.select("doc_id", "norm")
-
-        def keep(pairs: DataFrame) -> DataFrame:
-            return pairs
-
         if old is not None:
-            buckets = buckets.union(
-                band_buckets(old).join(
-                    buckets.select("band_id", "band_hash").distinct(),
-                    ["band_id", "band_hash"],
-                    "left_semi",
+            keys = keys.unionByName(
+                pair_keys(old).join(
+                    keys.select("k1", "k2").distinct(), ["k1", "k2"], "left_semi"
                 )
-            )
-            fps = (
-                signature_fingerprints(old)
-                .join(fps.select("fp").distinct(), "fp", "left_semi")
-                .unionByName(fps)
             )
             docs = old.select("doc_id", "norm").unionByName(docs)
 
-            def keep(pairs: DataFrame) -> DataFrame:
+        @functools.cache
+        def pairs() -> DataFrame:
+            out = bucket_pairs(
+                keys, ["k1", "k2"], cfg.allpairs_cap, cfg.neighbor_window,
+                F.col("sort_key"), payload=("pos",),
+            )
+            if old is not None:
                 # pairs with a new side, united BY NAME: a USING semi-join
                 # moves the key column to the front
                 on_a, on_b = (
-                    pairs.join(sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
+                    out.join(sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
                     for c in "ab"
                 )
-                return on_a.unionByName(on_b).distinct()
+                out = on_a.unionByName(on_b).distinct()
+            # the pair list folds into the edge stages (a separate checkpoint
+            # cost ~5 s of write->read barrier at any corpus size) behind a
+            # lazy localCheckpoint: AQE sizes the verify joins from the
+            # materialized pair count (optimization round 7: 4.3-4.5 s vs
+            # 4.6-7.5 s fused, 50k docs), and the second edge stage reads
+            # the blocks the first one filled
+            return out.localCheckpoint(eager=False)
 
-        # the pair list folds into the verify stage (a separate checkpoint
-        # cost ~5 s of write->read barrier at any corpus size) behind a lazy
-        # localCheckpoint, so AQE sizes the verify joins from the
-        # materialized pair count (optimization round 7: 4.3-4.5 s vs
-        # 4.6-7.5 s fused, 50k docs); jw_text is the prefix of `norm`.
-        # Submitting the two stages from parallel threads was tried and
-        # reverted: two mapInPandas-heavy chains churn Python workers and
-        # measured net-slower at both 2 and 8 cores.
+        is_band = F.col("pos_a").isNull()
+        # jw_text is the prefix of `norm`.  Submitting the two stages from
+        # parallel threads was tried and reverted: two mapInPandas-heavy
+        # chains churn Python workers and measured net-slower at both 2 and
+        # 8 cores.
         jw_edges = self._stage(
             f"jw_edges{tag}",
             lambda: verify_pairs(
-                keep(candidate_pairs(buckets, cfg))
-                .select("a", "b")
-                .localCheckpoint(eager=False),
+                pairs().where(is_band).select("a", "b").distinct(),
                 docs.withColumn("jw_text", F.substring(F.col("norm"), 1, cfg.max_jw_len)),
                 cfg, "doc_id", "jw_text",
             ),
@@ -173,7 +178,7 @@ class DedupPipeline:
             f"sub_edges{tag}",
             lambda: substring_edges(
                 docs, cfg, "doc_id", "norm", pre_normalized=True,
-                fps=fps, pair_filter=keep,
+                seeds=first_seeds(pairs().where(~is_band)),
             ).select("a", "b"),
         )
         return jw_edges.select("a", "b").union(sub_edges)

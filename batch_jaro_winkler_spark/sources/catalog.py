@@ -16,12 +16,16 @@ parquet + a JSON manifest:
   the same rename that swaps the data: a killed compaction can never
   leave the old parts listed beside a base that already holds them.
 
-One window remains: ``write`` removes the old table directory before it
-renames the new one into place, so a kill between the two leaves the
-table missing (for ``clusters`` or a compacted ``signatures`` that loses
-the increment state).  Closing it needs a data directory named by the
-manifest instead of the fixed ``<name>/data``, which readers of the
-layout (the benchmark harness reads ``clusters/data``) depend on.
+Replacing a table is three renames-or-deletes: the old table directory
+is renamed aside to ``<root>/_old_<name>``, the new one is renamed in,
+then the aside copy is deleted.  A kill between any two leaves either
+the table (the new version; a leftover aside copy is stale) or only the
+aside copy (the old version).  Constructing a :class:`Catalog` settles
+both states — it restores an aside copy whose table is missing and
+deletes one whose table exists — so a table rewritten by a killed job
+(``clusters``, a compacted ``signatures``) reads as exactly its old or
+its new version, never missing and never duplicated.  The layout stays
+``<name>/data`` + ``<name>/manifest.json``.
 
 On a real deployment the same functions map 1:1 onto Iceberg
 ``writeTo(...).createOrReplace()`` + snapshot metadata; the pipeline code
@@ -43,6 +47,7 @@ from pyspark.sql.types import StructType
 __all__ = ["Catalog"]
 
 _MAX_PARTS = 8  # compact() folds a logical table past this many parts
+_ASIDE = "_old_"  # prefix of a replaced table's directory during a swap
 
 
 class Catalog:
@@ -50,9 +55,24 @@ class Catalog:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        for entry in os.listdir(root):
+            if entry.startswith(_ASIDE):
+                self._settle(entry[len(_ASIDE):])
 
     def _dir(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _settle(self, name: str) -> None:
+        """Finish or undo a killed table swap: the aside copy is the old
+        version, so restore it when the table is missing and delete it
+        when the new table is in place."""
+        aside = self._dir(_ASIDE + name)
+        if not os.path.exists(aside):
+            return
+        if os.path.exists(self._dir(name)):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, self._dir(name))
 
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "manifest.json")
@@ -178,7 +198,10 @@ class Catalog:
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as fh:
             json.dump(manifest, fh, indent=1)
+        # swap: old table aside, new table in, aside copy deleted (settled)
+        self._settle(name)
         if os.path.exists(table_dir):
-            shutil.rmtree(table_dir)
+            os.rename(table_dir, self._dir(_ASIDE + name))
         os.rename(tmp, table_dir)
+        self._settle(name)
         return manifest

@@ -441,7 +441,8 @@ def test_catalog_read_runs_no_job(spark, tmp_path):
 def test_killed_compaction_leaves_no_duplicates(spark, tmp_path, monkeypatch):
     """The part list lives in the manifest, so the rename that swaps in the
     compacted base also clears it: a compaction killed right after that
-    rename leaves read_union duplicate-free, and the next one is a no-op."""
+    rename (before the replaced base's aside copy is deleted) leaves
+    read_union duplicate-free, and the next one is a no-op."""
     import os
 
     from batch_jaro_winkler_spark.sources.catalog import Catalog
@@ -461,7 +462,8 @@ def test_killed_compaction_leaves_no_duplicates(spark, tmp_path, monkeypatch):
 
     def dying_rename(src, dst):
         real_rename(src, dst)
-        raise Killed("compaction killed after its data write")
+        if dst == os.path.join(cat.root, "t"):
+            raise Killed("compaction killed after its data swap")
 
     monkeypatch.setattr(os, "rename", dying_rename)
     with pytest.raises(Killed):
@@ -470,6 +472,89 @@ def test_killed_compaction_leaves_no_duplicates(spark, tmp_path, monkeypatch):
     assert sorted(r.v for r in cat.read_union("t").collect()) == list(range(19))
     assert cat.parts("t") == []
     assert not cat.compact("t")
+
+
+@pytest.mark.parametrize("op", ["write", "compact"])
+def test_killed_table_swap_keeps_one_version(spark, tmp_path, monkeypatch, op):
+    """A job killed before or after any rename or delete of a table swap
+    leaves, once a Catalog is constructed on the root again, exactly the
+    old version or the new one: never a missing table, never both."""
+    import os
+    import shutil
+
+    from batch_jaro_winkler_spark.sources import catalog as catalog_mod
+
+    class Killed(BaseException):
+        pass
+
+    def setup(root):
+        cat = catalog_mod.Catalog(spark, root)
+        cat.write("t", spark.range(10).selectExpr("id AS v"), config_hash="abc")
+        if op == "compact":
+            for p in range(9):
+                name = f"t_part{p}"
+                cat.write(name, spark.range(1).selectExpr(f"{10 + p} AS v"), config_hash="abc")
+                cat.add_part("t", name)
+        return cat
+
+    def replace(cat):
+        if op == "write":
+            cat.write("t", spark.range(20, 25).selectExpr("id AS v"), config_hash="abc")
+        else:
+            assert cat.compact("t")
+
+    old = list(range(10)) if op == "write" else list(range(19))
+    new = list(range(20, 25)) if op == "write" else list(range(19))
+    real = {"rename": os.rename, "rmtree": shutil.rmtree}
+    steps: list[str] = []
+
+    def hooked(kind, kill_at, after):
+        def fs_op(*args, **kwargs):
+            steps.append(kind)
+            if len(steps) - 1 == kill_at and not after:
+                raise Killed(f"killed before {kind}")
+            real[kind](*args, **kwargs)
+            if len(steps) - 1 == kill_at:
+                raise Killed(f"killed after {kind}")
+
+        return fs_op
+
+    def swap(root, kill_at=-1, after=False):
+        cat = setup(root)
+        steps.clear()
+        monkeypatch.setattr(os, "rename", hooked("rename", kill_at, after))
+        monkeypatch.setattr(catalog_mod.shutil, "rmtree", hooked("rmtree", kill_at, after))
+        try:
+            replace(cat)
+        finally:
+            monkeypatch.setattr(os, "rename", real["rename"])
+            monkeypatch.setattr(catalog_mod.shutil, "rmtree", real["rmtree"])
+
+    swap(str(tmp_path / "clean"))
+    assert steps == ["rename", "rename", "rmtree"]  # aside, in, delete aside
+    outcomes = set()
+    for kill_at in range(len(steps)):
+        for after in (False, True):
+            root = str(tmp_path / f"killed_{kill_at}_{after}")
+            with pytest.raises(Killed):
+                swap(root, kill_at, after)
+            cat = catalog_mod.Catalog(spark, root)
+            assert not [e for e in os.listdir(root) if e.startswith("_old_")]
+            got = sorted(r.v for r in cat.read_union("t").collect())
+            if op == "write":
+                is_new = got == new
+            else:
+                # a compaction keeps the rows; its version is the manifest
+                is_new = "compacted_parts" in cat.manifest("t")
+                assert len(cat.parts("t")) == (0 if is_new else 9)
+            assert got == (new if is_new else old), (kill_at, after, got)
+            outcomes.add(is_new)
+            if op == "write" or not is_new:
+                # the settled table takes the next swap as usual
+                replace(cat)
+                assert sorted(r.v for r in cat.read_union("t").collect()) == new
+    # both versions occur: the kills land on each side of the swap
+    assert outcomes == {False, True}
 
 
 # --- hot buckets: salted chaining keeps connectivity in every pair-gen path ---

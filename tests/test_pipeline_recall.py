@@ -496,3 +496,120 @@ def test_incremental_rejects_repeated_doc_id(spark, tmp_path_factory):
     assert len(ok) == 32 and ok[500] == 500 and ok[501] == 501
     sig_ids = pipe.catalog.read_union("signatures").select("doc_id")
     assert sig_ids.count() == sig_ids.distinct().count() == 32
+
+
+# --- the one pair relation both edge stages read ---
+
+
+def _spy_bucket_pairs(monkeypatch) -> list:
+    """Record every pair relation the pipeline builds (its one
+    ``bucket_pairs`` call per ``_edges``)."""
+    from batch_jaro_winkler_spark import pipeline
+
+    real = pipeline.bucket_pairs
+    built: list = []
+
+    def spy(*args, **kwargs):
+        built.append(real(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline, "bucket_pairs", spy)
+    return built
+
+
+def test_pair_relation_splits_into_both_detectors_pairs(spark, tmp_path, monkeypatch):
+    """The relation the pipeline pairs once, split by kind, holds the LSH
+    candidate pairs and the fingerprint seeds the standalone operators
+    produce, on a corpus whose band buckets and fingerprints both exceed
+    allpairs_cap (the salted, chained hot path)."""
+    import random
+
+    from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
+        fingerprint_pairs,
+        fingerprints,
+        first_seeds,
+    )
+    from batch_jaro_winkler_spark.operators.lsh import band_buckets, candidate_pairs
+
+    rng = random.Random(31)
+    boiler = _rand_text(rng, 60)
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=80, seed=8).rows)]
+    rows += [(1000 + i, boiler) for i in range(100)]  # hot band buckets
+    rows += [  # the passage at varied offsets: hot fingerprints, many diagonals
+        (2000 + i, f"{_rand_text(rng, rng.randint(5, 40))} {boiler} {_rand_text(rng, 30)}")
+        for i in range(40)
+    ]
+    cfg = DedupConfig()
+    assert 100 > cfg.allpairs_cap
+    built = _spy_bucket_pairs(monkeypatch)
+    pipe = DedupPipeline(spark, cfg, str(tmp_path))
+    pipe.run(spark.createDataFrame(rows, "doc_id long, text string"))
+    [pairs] = built
+    sigs = pipe.catalog.read("signatures")
+
+    is_band = F.col("pos_a").isNull()
+    lsh = {tuple(r) for r in pairs.where(is_band).select("a", "b").distinct().collect()}
+    want_lsh = {
+        tuple(r) for r in candidate_pairs(band_buckets(sigs), cfg).select("a", "b").collect()
+    }
+    assert lsh == want_lsh
+    seeds = sorted(tuple(r) for r in first_seeds(pairs.where(~is_band)).collect())
+    want_seeds = sorted(
+        tuple(r)
+        for r in fingerprint_pairs(
+            fingerprints(sigs.select("doc_id", "norm"), cfg, "doc_id", "norm", pre_normalized=True),
+            cfg,
+        ).collect()
+    )
+    assert seeds == want_seeds
+    # both hot paths ran: the copies chain instead of pairing fully, and
+    # the passage seeds pairs across the copies and the embedding docs
+    copies = {p for p in lsh if p[0] >= 1000 and p[1] < 1100}
+    assert 99 <= len(copies) < 100 * 99 // 2
+    hot_seeds = {(a, b) for a, b, _, _ in seeds if a >= 1000 and b >= 1000}
+    assert 139 <= len(hot_seeds) < 140 * 139 // 2
+    assert any(a >= 2000 for a, _, _, _ in seeds)
+
+
+def test_pair_relation_is_built_once(spark, tmp_path_factory, monkeypatch):
+    """bucket_pairs runs once per _edges: once for a full run, once for an
+    increment, once for a run resumed with jw_edges cached and sub_edges
+    missing (which gives the same assignment), and never for a fully
+    cached run."""
+    import shutil
+
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=60, seed=21).rows)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cfg = DedupConfig()
+    built = _spy_bucket_pairs(monkeypatch)
+
+    def assignment(df):
+        return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+    root = str(tmp_path_factory.mktemp("once"))
+    full = assignment(DedupPipeline(spark, cfg, root).run(docs))
+    assert len(built) == 1
+
+    for stage in ("sub_edges", "clusters"):
+        shutil.rmtree(os.path.join(root, stage))
+    built.clear()
+    pipe = DedupPipeline(spark, cfg, root)
+    assert assignment(pipe.run(docs)) == full
+    assert {m.name: m.cached for m in pipe.metrics} == {
+        "signatures": True,
+        "jw_edges": True,
+        "sub_edges": False,
+        "clusters": False,
+    }
+    assert len(built) == 1
+
+    built.clear()
+    assert assignment(DedupPipeline(spark, cfg, root).run(docs)) == full
+    assert built == []
+
+    root = str(tmp_path_factory.mktemp("once_inc"))
+    DedupPipeline(spark, cfg, root).run(docs.where(F.col("doc_id") % 8 != 0))
+    built.clear()
+    inc = DedupPipeline(spark, cfg, root).run_incremental(docs.where(F.col("doc_id") % 8 == 0))
+    assert assignment(inc) == full
+    assert len(built) == 1

@@ -201,10 +201,11 @@ def test_widen_scan_is_noop_on_multi_split_source(spark, tmp_path, monkeypatch):
 
 def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
     """The frame the full run hands to the sub_edges stage, with every
-    frame its compute cuts by a lazy localCheckpoint, holds exactly one
-    MapInPandas node: the slice verify.  The fingerprints come from the
-    signature rows, so the corpus text crosses into Python once per run on
-    its way to signatures and fingerprints."""
+    frame the edge stages cut by a lazy localCheckpoint on its way (the
+    shared pair relation is cut by the first edge stage), holds exactly
+    one MapInPandas node: the slice verify.  The fingerprints come from
+    the signature rows, so the corpus text crosses into Python once per
+    run on its way to signatures and fingerprints."""
     import re
 
     from batch_jaro_winkler_spark.fixtures import make_corpus
@@ -230,15 +231,17 @@ def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
                 df = compute()
             finally:
                 tracing.clear()
-            plans.append(explain_formatted(df))
+            if name == "sub_edges":
+                plans.append(explain_formatted(df))
             return df
 
-        return real_stage(self, name, traced if name == "sub_edges" else compute)
+        return real_stage(self, name, traced if name.endswith("_edges") else compute)
 
     monkeypatch.setattr(type(docs), "localCheckpoint", checkpoint)
     monkeypatch.setattr(DedupPipeline, "_stage", stage)
     DedupPipeline(spark, DedupConfig(), str(tmp_path)).run(docs)
-    assert len(plans) >= 3  # the fps and seed cuts, then the stage frame
+    # the bucket-size and pair cuts, the seed cut, then the stage frame
+    assert len(plans) >= 4
     nodes = sum(len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) for p in plans)
     assert nodes == 1
 

@@ -11,6 +11,7 @@ import numpy as np
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
     _rolling_hashes,
+    fingerprint_pairs,
     substring_edges,
 )
 
@@ -80,7 +81,8 @@ def test_substring_verify_matches_naive_extension(spark):
     got = {
         (r["a"], r["b"]): r["match_len"]
         for r in substring_edges(
-            docs, cfg, "doc_id", "norm", pre_normalized=True, fps=fps
+            docs, cfg, "doc_id", "norm", pre_normalized=True,
+            seeds=fingerprint_pairs(fps, cfg),
         ).collect()
     }
     lens = {
@@ -143,14 +145,15 @@ def test_substring_recall_when_a_short_shared_line_seeds_first(spark):
 
 def test_signature_fingerprints_equal_fingerprint_pass(spark):
     """The fingerprint columns compute_signatures stores with ``norm``,
-    exploded by signature_fingerprints, are the rows of a separate
-    fingerprints() pass over the same normalized text."""
+    exploded by pair_keys (its ``k1 = -1`` rows), are the rows of a
+    separate fingerprints() pass over the same normalized text, ordered by
+    a doc-id hash."""
+    from pyspark.sql import functions as F
+
     from batch_jaro_winkler_spark.fixtures import make_corpus
     from batch_jaro_winkler_spark.functions.text import normalize_pandas
-    from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-        fingerprints,
-        signature_fingerprints,
-    )
+    from batch_jaro_winkler_spark.operators.fingerprint_dedup import fingerprints
+    from batch_jaro_winkler_spark.operators.lsh import pair_keys
     from batch_jaro_winkler_spark.operators.signatures import compute_signatures
 
     import pandas as pd
@@ -186,7 +189,9 @@ def test_signature_fingerprints_equal_fingerprint_pass(spark):
 
     sigs = compute_signatures(docs, cfg, "doc_id", "text", include_norm=True)
     sigs = sigs.localCheckpoint()
-    got = sorted(tuple(r) for r in signature_fingerprints(sigs).collect())
+    fp_keys = pair_keys(sigs).where(F.col("k1") == -1)
+    assert fp_keys.where(F.col("sort_key") != F.xxhash64("doc_id")).count() == 0
+    got = sorted(tuple(r) for r in fp_keys.select("doc_id", "k2", "pos").collect())
     want = sorted(
         tuple(r)
         for r in fingerprints(
