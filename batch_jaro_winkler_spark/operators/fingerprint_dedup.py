@@ -23,12 +23,12 @@ Schleimer/Wilkerson/Aiken SIGMOD'03 — PAPERS.md):
   hot fingerprints salted and chained), one seed per pair and offset
   diagonal (:func:`first_seeds`).  The pipeline pairs the fingerprints in
   the same ``bucket_pairs`` pass as the LSH bands (``lsh.pair_keys``) and
-  hands their seeds to :func:`substring_edges`; :func:`fingerprint_pairs`
-  is the standalone path;
-* verify: broadcast-join bounded text slices around the seed offsets,
-  first-mismatch extension over seed-aligned code-point matrices in
-  pandas, keep the pairs whose longest match reaches
-  ``min_substring_chars``.
+  verifies their seeds in the same pass as the LSH pairs;
+  :func:`fingerprint_pairs` is the standalone path;
+* verify (``score_pairs.verify_edges``): plain joins, which AQE sizes,
+  attach bounded text slices around the seed offsets; first-mismatch
+  extension over seed-aligned code-point matrices in pandas keeps the
+  pairs whose longest match reaches ``min_substring_chars``.
 
 This replaces a distributed suffix array: equivalent detection power for
 fixed-length-seed verbatim duplication at a fraction of the shuffle cost
@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.lsh import bucket_pairs
+from batch_jaro_winkler_spark.operators.score_pairs import verify_edges
 
 __all__ = [
     "doc_fingerprints",
@@ -113,6 +114,24 @@ def doc_fingerprints(norm: str | None, cfg: DedupConfig) -> tuple[np.ndarray, np
     return h[sel].view(np.int64), sel.astype(np.int32)
 
 
+def _normalized(
+    docs: DataFrame, id_col: str, text_col: str, pre_normalized: bool
+) -> DataFrame:
+    """docs → (doc_id, norm), normalizing ``text_col`` in one Arrow pass
+    unless it is ``pre_normalized``."""
+    norm = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("norm")
+    )
+    if pre_normalized:
+        return norm
+
+    def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pdf.assign(norm=normalize_pandas(pdf["norm"]))
+
+    return norm.mapInPandas(_norm, schema="doc_id long, norm string")
+
+
 def fingerprints(
     docs: DataFrame,
     cfg: DedupConfig,
@@ -121,18 +140,12 @@ def fingerprints(
     pre_normalized: bool = False,
 ) -> DataFrame:
     """→ (doc_id, fp, pos): mod-sampled fingerprints with char offsets into
-    the normalized text, in one Python pass over the documents."""
-    prepped = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("norm"),
-    )
+    the normalized text."""
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            if not pre_normalized:
-                pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
             per_doc = [doc_fingerprints(norm, cfg) for norm in pdf["norm"]]
             yield pd.DataFrame(
                 {
@@ -144,7 +157,9 @@ def fingerprints(
                 }
             )
 
-    return prepped.mapInPandas(fp, schema="doc_id long, fp long, pos int")
+    return _normalized(docs, id_col, text_col, pre_normalized).mapInPandas(
+        fp, schema="doc_id long, fp long, pos int"
+    )
 
 
 def first_seeds(pairs: DataFrame) -> DataFrame:
@@ -152,7 +167,8 @@ def first_seeds(pairs: DataFrame) -> DataFrame:
     fingerprint → candidate seeds: one per (a, b, pos_a - pos_b) diagonal,
     the earliest.  One seed per pair would miss a long shared passage
     whenever a short shared line (a newsletter footer) comes first on
-    another diagonal."""
+    another diagonal.  Band pairs (null offsets) share the null diagonal,
+    so they reduce to one row per (a, b), offsets still null."""
     diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
     return pairs.groupBy("a", "b", diag).agg(F.min("pos_a").alias("pos_a")).select(
         "a", "b", "pos_a", (F.col("pos_a") - F.col("diag")).alias("pos_b")
@@ -178,125 +194,14 @@ def substring_edges(
     id_col: str = "doc_id",
     text_col: str = "text",
     pre_normalized: bool = False,
-    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end substring stage → verified edges (a, b, match_len) where a
     verbatim common substring of >= cfg.min_substring_chars normalized chars
     exists around a shared fingerprint; one row per pair, the longest
-    match over its seed diagonals.
-
-    ``seeds`` — precomputed candidate seeds (a, b, pos_a, pos_b), as
-    :func:`fingerprint_pairs` or :func:`first_seeds` emit them (the
-    pipeline passes the fingerprint share of its one pair relation),
-    instead of a :func:`fingerprints` pass over ``docs``."""
-    if seeds is None:
-        seeds = fingerprint_pairs(
-            fingerprints(docs, cfg, id_col, text_col, pre_normalized), cfg
-        )
-    k = cfg.gram_chars
-    min_len = cfg.min_substring_chars
-    # verification decides `common substring >= min_len`, so each side only
-    # needs min_len chars of context around its seed offset — ship bounded
-    # slices through BROADCAST joins instead of shuffling full documents
-    # (at web scale the pair list is millions of rows; the documents are
-    # hundreds of TB — never shuffle the big side for a verify)
-    cap = min_len + k
-    norm = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("norm"),
+    match over its seed diagonals: :func:`fingerprint_pairs` seeds verified
+    by :func:`~.score_pairs.verify_edges`."""
+    norm = _normalized(docs, id_col, text_col, pre_normalized)
+    seeds = fingerprint_pairs(
+        fingerprints(norm, cfg, "doc_id", "norm", pre_normalized=True), cfg
     )
-    if not pre_normalized:
-
-        def _norm(batches):
-            for pdf in batches:
-                yield pdf.assign(norm=normalize_pandas(pdf["norm"]))
-
-        norm = norm.mapInPandas(_norm, schema="doc_id long, norm string")
-    cand = seeds.localCheckpoint(eager=False)
-    # slice side a: broadcast the (a, pos_a) keys over the documents scan,
-    # keep [pos_a - cap, pos_a + cap + k) plus the local seed offset
-    start_a = F.greatest(F.col("pos_a") - cap, F.lit(0))
-    with_a = (
-        norm.join(
-            cand.select("a", "pos_a", "b", "pos_b"),
-            norm.doc_id == F.col("a"),
-        )
-        .select(
-            "a",
-            "b",
-            "pos_b",
-            F.substring(
-                F.col("norm"), start_a + 1, F.lit(2 * cap + k)
-            ).alias("slice_a"),
-            (F.col("pos_a") - start_a).alias("loc_a"),
-        )
-    )
-    start_b = F.greatest(F.col("pos_b") - cap, F.lit(0))
-    joined = (
-        norm.join(with_a, norm.doc_id == F.col("b"))
-        .select(
-            "a",
-            "b",
-            "slice_a",
-            "loc_a",
-            F.substring(
-                F.col("norm"), start_b + 1, F.lit(2 * cap + k)
-            ).alias("slice_b"),
-            (F.col("pos_b") - start_b).alias("loc_b"),
-        )
-    )
-
-    def aligned(slices, locs, pad: str, width: int) -> np.ndarray:
-        """(n, width) code-point matrix of the slices, each left-padded so
-        its seed sits at column ``cap`` and right-padded to ``width``."""
-        text = "".join(
-            (pad * (cap - int(loc)) + s).ljust(width, pad)
-            for s, loc in zip(slices, locs)
-        )
-        return np.frombuffer(text.encode("utf-32-le"), dtype="<u4").reshape(
-            len(locs), width
-        )
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            loc_a = pdf["loc_a"].to_numpy(np.int64)
-            loc_b = pdf["loc_b"].to_numpy(np.int64)
-            # every row verifies in two aligned (n, width) matrices: a seed
-            # within `cap` chars of a document start has a shorter left
-            # context, padded out.  Side a pads with \x00 and side b with
-            # \x01 — normalized text holds neither, so a pad always
-            # mismatches and each extension stops where the shorter
-            # context ends.  Width: the longest context right of a seed,
-            # and at least the seed gram, so a hand-built seed past a doc
-            # end never passes on a partial gram
-            width = cap + max(
-                k,
-                int((pdf["slice_a"].str.len().to_numpy() - loc_a).max()),
-                int((pdf["slice_b"].str.len().to_numpy() - loc_b).max()),
-            )
-            eq = aligned(pdf["slice_a"], loc_a, "\x00", width) == aligned(
-                pdf["slice_b"], loc_b, "\x01", width
-            )
-            seed_ok = eq[:, cap : cap + k].all(axis=1)
-            left = eq[:, cap - 1 :: -1]
-            lo = np.where(left.all(axis=1), cap, np.argmin(left, axis=1))
-            right = eq[:, cap:]
-            hi = np.where(right.all(axis=1), width - cap, np.argmin(right, axis=1))
-            total = lo + hi
-            keep = np.flatnonzero((total >= min_len) & seed_ok)
-            if len(keep):
-                yield pd.DataFrame(
-                    {
-                        "a": pdf["a"].to_numpy(np.int64)[keep],
-                        "b": pdf["b"].to_numpy(np.int64)[keep],
-                        "match_len": total[keep].astype(np.int32),
-                    }
-                )
-
-    return (
-        joined.mapInPandas(verify, schema="a long, b long, match_len int")
-        .groupBy("a", "b")
-        .agg(F.max("match_len").alias("match_len"))
-    )
+    return verify_edges(seeds, norm, cfg).select("a", "b", "match_len")

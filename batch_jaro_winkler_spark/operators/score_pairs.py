@@ -1,13 +1,14 @@
 """DataFrame-level batched Jaro-Winkler scoring (the kernel's Spark face).
 
-Two operators:
-
-* :func:`verify_pairs` — score candidate pairs (a, b) from LSH against the
-  reference-semantics kernel and keep edges with ``score >= min_score``.
-  The scale shape: two equi-joins attach the texts (Catalyst picks the
-  join strategy; AQE handles skew), then one ``mapInPandas`` pass with no
-  shuffle of its own scores each distinct text pair of a coalesced batch
-  once, through the lockstep pairwise kernel ``score_pair_batch``.
+* :func:`verify_edges` — the pipeline's one verify pass over both
+  detectors' candidates: LSH pairs (null offsets) are scored by the
+  reference-semantics kernel on their ``max_jw_len`` prefixes, fingerprint
+  seeds are extended over bounded slices around their offsets.  One pair
+  of equi-joins attaches the text to both pair sides (Catalyst picks the
+  join strategy; AQE sizes them), the prefix or slice is cut JVM-side, and
+  one ``mapInPandas`` pass with no shuffle of its own verifies both kinds.
+  :func:`verify_pairs` and ``fingerprint_dedup.substring_edges`` are its
+  single-kind faces.
 * :func:`score_topk` — rank a small probe set against a large candidate
   corpus: candidates are iterated per Arrow batch with ONE compiled model
   per batch scoring all probes (model reuse amortized across the batch,
@@ -27,27 +28,28 @@ from pyspark.sql import DataFrame, Window, functions as F
 from batch_jaro_winkler_spark.kernel import build_model, score, score_pair_batch
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
-__all__ = ["verify_pairs", "score_topk"]
+__all__ = ["verify_edges", "verify_pairs", "score_topk"]
 
 # score_topk collects its probe set to the driver and ships it with the
 # closure; larger probe sets belong on verify_pairs over LSH candidates
 _MAX_PROBES = 100_000
 
+# rows per coalesced frame: per-task memory stays ~tens of MB at 256-char
+# texts
+_COALESCE_ROWS = 100_000
 
-def _coalesced(
-    batches: Iterator[pd.DataFrame], rows: int = 100_000
-) -> Iterator[pd.DataFrame]:
+
+def _coalesced(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Concatenate a partition's Arrow batches into frames of at least
-    ``rows`` rows (the last one may be shorter), so per-frame work — the
-    distinct-pair memo, one compiled candidate model — sees the partition
-    at once.  Bounded so per-task memory stays ~tens of MB at 256-char
-    texts."""
+    ``_COALESCE_ROWS`` rows (the last one may be shorter), so per-frame
+    work — the distinct-pair memo, one compiled candidate model — sees the
+    partition at once."""
     pending: list[pd.DataFrame] = []
     n_pending = 0
     for pdf in batches:
         pending.append(pdf)
         n_pending += len(pdf)
-        if n_pending >= rows:
+        if n_pending >= _COALESCE_ROWS:
             yield pending[0] if len(pending) == 1 else pd.concat(
                 pending, ignore_index=True
             )
@@ -58,6 +60,164 @@ def _coalesced(
         )
 
 
+def _edge_frame(pdf: pd.DataFrame, sel: np.ndarray, score=None, match_len=None) -> pd.DataFrame:
+    """verify_edges' output rows ``sel`` of ``pdf``; the kind that did not
+    produce them leaves its column null."""
+    missing = [None] * len(sel)
+    return pd.DataFrame(
+        {
+            "a": pdf["a"].to_numpy(np.int64)[sel],
+            "b": pdf["b"].to_numpy(np.int64)[sel],
+            "score": pd.array(missing if score is None else score, dtype="Float32"),
+            "match_len": pd.array(missing if match_len is None else match_len, dtype="Int32"),
+        }
+    )
+
+
+def _score_text_pairs(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame | None:
+    """LSH rows (a, b, text_a, text_b) → the rows whose Jaro-Winkler score
+    reaches ``jw_min_score``.  A dedup corpus scores many IDENTICAL text
+    pairs (exact-duplicate groups explode into cliques): the score is a
+    pure function of the texts, so each distinct text pair is scored once
+    and the results fan back out — row-identical output."""
+    if not len(pdf):
+        return None
+    # injective pair key with NO string concatenation (optimization round
+    # 7): factorize each text column once (hashes the original strings in
+    # place), then factorize the combined int code — (code_a, code_b)
+    # identifies the text pair exactly
+    ca, _ = pd.factorize(pdf["text_a"], sort=False)
+    cb, _ = pd.factorize(pdf["text_b"], sort=False)
+    codes, _ = pd.factorize(ca.astype(np.int64) * (int(cb.max()) + 1) + cb, sort=False)
+    first = np.zeros(int(codes.max()) + 1, dtype=np.int64)
+    first[codes[::-1]] = np.arange(len(codes) - 1, -1, -1, dtype=np.int64)
+    distinct = pdf.iloc[first]
+    # every distinct text pair through the lockstep PAIRWISE kernel in ONE
+    # call: no per-group model, no per-pair interpreter loop
+    full = score_pair_batch(
+        distinct["text_a"].tolist(),
+        distinct["text_b"].tolist(),
+        weight=cfg.jw_weight,
+        threshold=cfg.jw_threshold,
+    )[codes]
+    sel = np.flatnonzero(full >= np.float32(cfg.jw_min_score))
+    return _edge_frame(pdf, sel, score=full[sel]) if len(sel) else None
+
+
+def _extend_seeds(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame | None:
+    """Seed rows (a, b, text_a, loc_a, text_b, loc_b): slices of the two
+    docs and each seed's offset inside its slice → the rows whose common
+    substring through the aligned seed reaches ``min_substring_chars``.
+
+    Every row verifies in two aligned (n, width) code-point matrices,
+    each slice left-padded so its seed sits at column ``cap``: a seed
+    within ``cap`` chars of a document start has a shorter left context,
+    padded out.  Side a pads with \x00 and side b with \x01 — normalized
+    text holds neither, so a pad always mismatches and each extension
+    stops where the shorter context ends."""
+    if not len(pdf):
+        return None
+    k = cfg.gram_chars
+    cap = cfg.min_substring_chars + k
+    loc_a = pdf["loc_a"].to_numpy(np.int64)
+    loc_b = pdf["loc_b"].to_numpy(np.int64)
+    # width: the longest context right of a seed, and at least the seed
+    # gram, so a hand-built seed past a doc end never passes on a partial
+    # gram
+    width = cap + max(
+        k,
+        int((pdf["text_a"].str.len().to_numpy() - loc_a).max()),
+        int((pdf["text_b"].str.len().to_numpy() - loc_b).max()),
+    )
+
+    def aligned(slices, locs, pad: str) -> np.ndarray:
+        text = "".join(
+            (pad * (cap - int(loc)) + s).ljust(width, pad) for s, loc in zip(slices, locs)
+        )
+        return np.frombuffer(text.encode("utf-32-le"), dtype="<u4").reshape(len(locs), width)
+
+    eq = aligned(pdf["text_a"], loc_a, "\x00") == aligned(pdf["text_b"], loc_b, "\x01")
+    seed_ok = eq[:, cap : cap + k].all(axis=1)
+    left = eq[:, cap - 1 :: -1]
+    lo = np.where(left.all(axis=1), cap, np.argmin(left, axis=1))
+    right = eq[:, cap:]
+    hi = np.where(right.all(axis=1), width - cap, np.argmin(right, axis=1))
+    total = lo + hi
+    sel = np.flatnonzero((total >= cfg.min_substring_chars) & seed_ok)
+    return _edge_frame(pdf, sel, match_len=total[sel].astype(np.int32)) if len(sel) else None
+
+
+def verify_edges(pairs: DataFrame, norm: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """pairs[a, b, pos_a, pos_b] x norm[doc_id, norm] → edges[a, b, score,
+    match_len], one row per verified (a, b).
+
+    A row with a null ``pos_a`` is an LSH pair: its ``score`` is the
+    Jaro-Winkler score (reference kernel semantics, float32) of the two
+    docs' ``max_jw_len`` prefixes, kept when it reaches ``jw_min_score``.
+    Any other row is a fingerprint seed at char offsets (pos_a, pos_b):
+    its ``match_len`` is the verbatim common substring through the aligned
+    seed grams, kept when it reaches ``min_substring_chars``; a pair keeps
+    its longest match over its seeds.  A kind that did not produce the
+    edge leaves its column null, and a null text matches nothing.
+
+    Verification decides ``common substring >= min_len``, so a seed side
+    needs only ``cap = min_len + gram_chars`` chars of context around its
+    offset: each side ships the slice ``[pos - cap, pos + cap + k)`` (the
+    pair list is millions of rows at web scale; documents are never
+    shuffled whole toward the verify).  The pair list is cut by a lazy
+    localCheckpoint, so AQE sizes the attach joins from its materialized
+    size."""
+    k = cfg.gram_chars
+    cap = cfg.min_substring_chars + k
+
+    def attach(df: DataFrame, s: str) -> DataFrame:
+        """``df`` with side ``s``'s text cut to the LSH prefix or the seed
+        slice (``text_{s}``) and the seed offset inside it (``loc_{s}``)"""
+        pos, text = F.col(f"pos_{s}"), F.col("norm")
+        start = F.greatest(pos - cap, F.lit(0))
+        cut = F.when(pos.isNull(), F.substring(text, 1, cfg.max_jw_len)).otherwise(
+            F.substring(text, start + 1, F.lit(2 * cap + k))
+        )
+        return df.join(norm.withColumnRenamed("doc_id", s), s).select(
+            *[c for c in df.columns if c != f"pos_{s}"],
+            cut.alias(f"text_{s}"),
+            (pos - start).alias(f"loc_{s}"),
+        )
+
+    joined = attach(attach(pairs.localCheckpoint(eager=False), "a"), "b")
+
+    # No shuffle: rows are independent, so any physical distribution is
+    # correct.  LSH rows are coalesced so the distinct-text-pair memo sees
+    # the whole partition; seeds extend one Arrow batch at a time, so the
+    # two (n x width) matrices stay batch-sized
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        extended: list[pd.DataFrame | None] = []
+
+        def lsh_rows() -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                # drop null texts up front: a NaN memo key would factorize
+                # to code -1 and corrupt the last distinct slot
+                pdf = pdf[pdf["text_a"].notna() & pdf["text_b"].notna()]
+                is_seed = pdf["loc_a"].notna()
+                extended.append(_extend_seeds(pdf[is_seed], cfg))
+                yield pdf[~is_seed]
+
+        # every batch yields an LSH frame (maybe empty), so the last
+        # coalesced frame comes after the last seed batch extended
+        for pdf in _coalesced(lsh_rows()):
+            for out in (_score_text_pairs(pdf, cfg), *extended):
+                if out is not None:
+                    yield out
+            extended.clear()
+
+    return (
+        joined.select("a", "b", "text_a", "loc_a", "text_b", "loc_b")
+        .mapInPandas(verify, schema="a long, b long, score float, match_len int")
+        .groupBy("a", "b")
+        .agg(F.max("score").alias("score"), F.max("match_len").alias("match_len"))
+    )
+
+
 def verify_pairs(
     pairs: DataFrame,
     docs_text: DataFrame,
@@ -66,74 +226,14 @@ def verify_pairs(
     text_col: str = "jw_text",
 ) -> DataFrame:
     """pairs[a, b] x docs_text[id_col, text_col] → edges[a, b, score]
-    with score >= cfg.jw_min_score (reference kernel semantics, float32)."""
-    ta = docs_text.select(
-        F.col(id_col).alias("a"), F.col(text_col).alias("text_a")
-    )
-    tb = docs_text.select(
-        F.col(id_col).alias("b"), F.col(text_col).alias("text_b")
-    )
-    joined = pairs.join(ta, "a").join(tb, "b")
-    min_score = cfg.jw_min_score
-    weight = cfg.jw_weight
-    threshold = cfg.jw_threshold
-
-    # No shuffle: pairs are independent, so any physical distribution is
-    # correct.  Batches are coalesced so the distinct-text-pair memo below
-    # sees the whole partition.
-    def _score_pdf(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        # a dedup corpus scores many IDENTICAL (text_a, text_b) pairs
-        # (exact-duplicate groups explode into cliques): the score is a
-        # pure function of the texts, so score each distinct text pair
-        # once and fan results back out — row-identical output
-        # null text matches nothing: drop such pairs up front — a NaN key
-        # would factorize to code -1 and corrupt the last distinct slot
-        valid = pdf["text_a"].notna() & pdf["text_b"].notna()
-        if not valid.all():
-            pdf = pdf[valid].reset_index(drop=True)
-        if not len(pdf):
-            return None
-        # injective pair key with NO string concatenation (optimization
-        # round 7): factorize each text column once (hashes the original
-        # strings in place), then factorize the combined int code —
-        # (code_a, code_b) identifies the text pair exactly
-        ca, _ = pd.factorize(pdf["text_a"], sort=False)
-        cb, _ = pd.factorize(pdf["text_b"], sort=False)
-        codes, _ = pd.factorize(
-            ca.astype(np.int64) * (int(cb.max()) + 1) + cb, sort=False
-        )
-        first = np.zeros(int(codes.max()) + 1, dtype=np.int64)
-        first[codes[::-1]] = np.arange(len(codes) - 1, -1, -1, dtype=np.int64)
-        distinct = pdf.iloc[first]
-        # every distinct text pair through the lockstep PAIRWISE kernel in
-        # ONE call: no per-group model, no per-pair interpreter loop
-        full = score_pair_batch(
-            distinct["text_a"].tolist(),
-            distinct["text_b"].tolist(),
-            weight=weight,
-            threshold=threshold,
-        )[codes]
-        keep = full >= np.float32(min_score)
-        if not keep.any():
-            return None
-        sel = np.flatnonzero(keep)
-        return pd.DataFrame(
-            {
-                "a": pdf["a"].to_numpy(np.int64)[sel],
-                "b": pdf["b"].to_numpy(np.int64)[sel],
-                "score": full[sel],
-            }
-        )
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _coalesced(batches):
-            out = _score_pdf(pdf)
-            if out is not None:
-                yield out
-
-    return joined.select("a", "b", "text_a", "text_b").mapInPandas(
-        score_batches, schema="a long, b long, score float"
-    )
+    with score >= cfg.jw_min_score (reference kernel semantics, float32,
+    on the ``max_jw_len`` prefixes): :func:`verify_edges` over LSH pairs."""
+    no_pos = F.lit(None).cast("int")
+    return verify_edges(
+        pairs.select("a", "b", no_pos.alias("pos_a"), no_pos.alias("pos_b")),
+        docs_text.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("norm")),
+        cfg,
+    ).select("a", "b", "score")
 
 
 def score_topk(

@@ -5,18 +5,20 @@
     → signatures     normalize + MinHash + LSH band hashes + SimHash +
                      substring fingerprints, one Arrow pass
                      [no shuffle; carries `norm`, `fps`, `fp_pos`]
-    → jw_edges       batched Jaro-Winkler verification of the LSH pairs
-                                                [joins + narrow map]
-    → sub_edges      slice verification of the fingerprint seeds
-                                                [1 agg + joins + narrow map]
+    → edges          both detectors' candidates in one pass: the LSH
+                     pairs' Jaro-Winkler scores (``score``) and the
+                     fingerprint seeds' substring extensions (``match_len``)
+                     [pair-gen + 1 agg + 2 joins + narrow map + 1 agg]
     → clusters       large-star/small-star CC over all edges
 
-Both edge stages read ONE pair relation: the band buckets and the
-substring fingerprints of each signature row are exploded into one key
-relation (``lsh.pair_keys``), paired by one capped ``lsh.bucket_pairs``
-pass and split by kind.  The edge stage that computes first builds it.
+The band buckets and the substring fingerprints of each signature row are
+exploded into one key relation (``lsh.pair_keys``), paired by one capped
+``lsh.bucket_pairs`` pass, reduced to one row per band pair and one seed
+per fingerprint diagonal (``fingerprint_dedup.first_seeds``) and verified
+by ``score_pairs.verify_edges``: one attach of the text to both pair
+sides, one ``mapInPandas`` for both kinds.
 
-``run_incremental`` builds the same edge stages (``_edges``) for a batch
+``run_incremental`` builds the same edge stage (``_edges``) for a batch
 of new documents, limited to pairs that touch a new doc, and folds the
 result into the state.
 
@@ -32,7 +34,6 @@ wrote.
 
 from __future__ import annotations
 
-import functools
 import time
 from dataclasses import dataclass
 
@@ -40,12 +41,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.connected_components import connected_components
-from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-    first_seeds,
-    substring_edges,
-)
+from batch_jaro_winkler_spark.operators.fingerprint_dedup import first_seeds
 from batch_jaro_winkler_spark.operators.lsh import bucket_pairs, pair_keys
-from batch_jaro_winkler_spark.operators.score_pairs import verify_pairs
+from batch_jaro_winkler_spark.operators.score_pairs import verify_edges
 from batch_jaro_winkler_spark.operators.signatures import compute_signatures
 from batch_jaro_winkler_spark.sources.catalog import Catalog
 
@@ -96,38 +94,43 @@ class DedupPipeline:
         computes the stage, fills the checkpoint blocks and writes the
         parquet + manifest (manifest last).  The stage is durable when this
         returns, and downstream stages read the in-memory blocks instead of
-        re-decoding parquet."""
-        t0 = time.time()
-        h = self.cfg.config_hash()
-        if self.catalog.exists(name, h):
-            df = self.catalog.read(name)
-            rows = self.catalog.manifest(name)["rows"]
-            self.metrics.append(
-                StageResult(name, rows, True, round(time.time() - t0, 3))
-            )
-            return df
-        df = compute().localCheckpoint(eager=False)
-        manifest = self.catalog.write(name, df, h)
-        self.metrics.append(
-            StageResult(name, manifest["rows"], False, round(time.time() - t0, 3))
-        )
+        re-decoding parquet.  The stage's Spark jobs carry its name as
+        their job description; the caller's description is restored on
+        return."""
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        try:
+            t0 = time.time()
+            h = self.cfg.config_hash()
+            if self.catalog.exists(name, h):
+                df = self.catalog.read(name)
+                rows = self.catalog.manifest(name)["rows"]
+                cached = True
+            else:
+                df = compute().localCheckpoint(eager=False)
+                rows = self.catalog.write(name, df, h)["rows"]
+                cached = False
+        finally:
+            sc.setJobDescription(caller)
+        self.metrics.append(StageResult(name, rows, cached, round(time.time() - t0, 3)))
         return df
 
     def _edges(
         self, sigs: DataFrame, old: DataFrame | None = None, tag: str = ""
     ) -> DataFrame:
-        """The verified (a, b) edges of the ``jw_edges{tag}`` and
-        ``sub_edges{tag}`` stages over ``sigs``.  Band buckets and
-        fingerprints pair in ONE :func:`~.lsh.bucket_pairs` pass over
-        :func:`~.lsh.pair_keys`; band pairs (null ``pos``) go to the
-        Jaro-Winkler verify, fingerprint pairs through
-        :func:`~.fingerprint_dedup.first_seeds` to the slice verify.  Given
-        ``old`` (the existing signature table), ``sigs`` are an increment's
-        new docs: the old keys a new doc shares join theirs (a semi-join, so
-        the old table is never reshuffled in full), old texts are attached,
-        and the pairs keep only those with a new side.  The pair relation is
-        built once, by whichever edge stage computes first: building it runs
-        Spark jobs, which a resumed stage must not pay."""
+        """The verified (a, b) edges of the ``edges{tag}`` stage over
+        ``sigs``.  Band buckets and fingerprints pair in ONE
+        :func:`~.lsh.bucket_pairs` pass over :func:`~.lsh.pair_keys`;
+        :func:`~.fingerprint_dedup.first_seeds` reduces the relation to one
+        row per band pair (null ``pos``) and one seed per fingerprint
+        diagonal, and :func:`~.score_pairs.verify_edges` verifies both
+        kinds in one pass.  Given ``old`` (the existing signature table),
+        ``sigs`` are an increment's new docs: the old keys a new doc shares
+        join theirs (a semi-join, so the old table is never reshuffled in
+        full), old texts are attached, and the pairs keep only those with a
+        new side.  The pair relation is built inside the stage's compute:
+        building it runs Spark jobs, which a resumed stage must not pay."""
         cfg = self.cfg
         keys = pair_keys(sigs)
         docs = sigs.select("doc_id", "norm")
@@ -139,49 +142,23 @@ class DedupPipeline:
             )
             docs = old.select("doc_id", "norm").unionByName(docs)
 
-        @functools.cache
-        def pairs() -> DataFrame:
-            out = bucket_pairs(
+        def verified() -> DataFrame:
+            pairs = bucket_pairs(
                 keys, ["k1", "k2"], cfg.allpairs_cap, cfg.neighbor_window,
                 F.col("sort_key"), payload=("pos",),
             )
             if old is not None:
-                # pairs with a new side, united BY NAME: a USING semi-join
-                # moves the key column to the front
+                # pairs with a new side, united BY NAME (a USING semi-join
+                # moves the key column to the front); first_seeds folds the
+                # pairs whose two sides are both new
                 on_a, on_b = (
-                    out.join(sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
+                    pairs.join(sigs.select(F.col("doc_id").alias(c)), c, "left_semi")
                     for c in "ab"
                 )
-                out = on_a.unionByName(on_b).distinct()
-            # the pair list folds into the edge stages (a separate checkpoint
-            # cost ~5 s of write->read barrier at any corpus size) behind a
-            # lazy localCheckpoint: AQE sizes the verify joins from the
-            # materialized pair count (optimization round 7: 4.3-4.5 s vs
-            # 4.6-7.5 s fused, 50k docs), and the second edge stage reads
-            # the blocks the first one filled
-            return out.localCheckpoint(eager=False)
+                pairs = on_a.unionByName(on_b)
+            return verify_edges(first_seeds(pairs), docs, cfg)
 
-        is_band = F.col("pos_a").isNull()
-        # jw_text is the prefix of `norm`.  Submitting the two stages from
-        # parallel threads was tried and reverted: two mapInPandas-heavy
-        # chains churn Python workers and measured net-slower at both 2 and
-        # 8 cores.
-        jw_edges = self._stage(
-            f"jw_edges{tag}",
-            lambda: verify_pairs(
-                pairs().where(is_band).select("a", "b").distinct(),
-                docs.withColumn("jw_text", F.substring(F.col("norm"), 1, cfg.max_jw_len)),
-                cfg, "doc_id", "jw_text",
-            ),
-        )
-        sub_edges = self._stage(
-            f"sub_edges{tag}",
-            lambda: substring_edges(
-                docs, cfg, "doc_id", "norm", pre_normalized=True,
-                seeds=first_seeds(pairs().where(~is_band)),
-            ).select("a", "b"),
-        )
-        return jw_edges.select("a", "b").union(sub_edges)
+        return self._stage(f"edges{tag}", verified).select("a", "b")
 
     def run(
         self,

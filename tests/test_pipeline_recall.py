@@ -321,7 +321,7 @@ def test_background_writer_failure_propagates(spark, tmp_path_factory):
     orig_stage = pipe2._stage
 
     def exploding_stage(name, compute):
-        if name == "jw_edges":
+        if name == "edges":
             raise ValueError("stage exploded")
         return orig_stage(name, compute)
 
@@ -348,6 +348,38 @@ def test_stage_computes_once(spark, tmp_path):
     assert calls.value == src.rdd.getNumPartitions()
 
 
+def test_stage_tags_its_jobs_with_its_name(spark, tmp_path):
+    """While a stage computes and writes, the job description is the
+    stage's name; when _stage returns, resumes a cached stage or raises,
+    the caller's description is back."""
+    sc = spark.sparkContext
+    seen = []
+
+    def compute():
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return spark.range(4)
+
+    def failing():
+        raise ValueError("compute failed")
+
+    pipe = DedupPipeline(spark, DedupConfig(), str(tmp_path))
+    sc.setJobDescription("caller")
+    try:
+        pipe._stage("tagged", compute)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        pipe._stage("tagged", compute)  # cached: no compute
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        with pytest.raises(ValueError, match="compute failed"):
+            pipe._stage("failing", failing)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    pipe._stage("untagged_caller", compute)
+    assert sc.getLocalProperty("spark.job.description") is None
+    assert seen == ["tagged", "untagged_caller"]
+    assert [m.cached for m in pipe.metrics] == [False, True, False]
+
+
 def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
     """A writer killed after its parquet landed in the temp dir but before
     the manifest leaves an invisible orphan: a fresh pipeline on the same
@@ -369,13 +401,13 @@ def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("killed"))
     pipe = DedupPipeline(spark, cfg, root)
     real_write = pipe.catalog.write
-    orphan = os.path.join(root, "_tmp_sub_edges_killed")
+    orphan = os.path.join(root, "_tmp_edges_killed")
 
     class Killed(RuntimeError):
         pass
 
     def dying_write(name, df, config_hash, *a, **k):
-        if name == "sub_edges":
+        if name == "edges":
             df.write.parquet(os.path.join(orphan, "data"))
             raise Killed("writer killed before the manifest")
         return real_write(name, df, config_hash, *a, **k)
@@ -383,14 +415,13 @@ def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
     pipe.catalog.write = dying_write
     with pytest.raises(Killed):
         pipe.run(docs, "doc_id", "text")
-    assert not pipe.catalog.exists("sub_edges")
+    assert not pipe.catalog.exists("edges")
 
     pipe2 = DedupPipeline(spark, cfg, root)
     resumed = assignment(pipe2)
     assert {m.name: m.cached for m in pipe2.metrics} == {
         "signatures": True,
-        "jw_edges": True,
-        "sub_edges": False,
+        "edges": False,
         "clusters": False,
     }
     assert resumed == clean
@@ -498,12 +529,12 @@ def test_incremental_rejects_repeated_doc_id(spark, tmp_path_factory):
     assert sig_ids.count() == sig_ids.distinct().count() == 32
 
 
-# --- the one pair relation both edge stages read ---
+# --- the one pair relation the edges stage verifies ---
 
 
 def _spy_bucket_pairs(monkeypatch) -> list:
     """Record every pair relation the pipeline builds (its one
-    ``bucket_pairs`` call per ``_edges``)."""
+    ``bucket_pairs`` call per computed ``edges`` stage)."""
     from batch_jaro_winkler_spark import pipeline
 
     real = pipeline.bucket_pairs
@@ -572,10 +603,10 @@ def test_pair_relation_splits_into_both_detectors_pairs(spark, tmp_path, monkeyp
 
 
 def test_pair_relation_is_built_once(spark, tmp_path_factory, monkeypatch):
-    """bucket_pairs runs once per _edges: once for a full run, once for an
-    increment, once for a run resumed with jw_edges cached and sub_edges
-    missing (which gives the same assignment), and never for a fully
-    cached run."""
+    """bucket_pairs runs once per computed edges stage: once for a full
+    run, once for an increment, once for a run resumed with edges missing
+    (which gives the same assignment), and never for a run whose edges
+    stage is cached, whether clusters is missing or not."""
     import shutil
 
     rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=60, seed=21).rows)]
@@ -590,18 +621,18 @@ def test_pair_relation_is_built_once(spark, tmp_path_factory, monkeypatch):
     full = assignment(DedupPipeline(spark, cfg, root).run(docs))
     assert len(built) == 1
 
-    for stage in ("sub_edges", "clusters"):
-        shutil.rmtree(os.path.join(root, stage))
-    built.clear()
-    pipe = DedupPipeline(spark, cfg, root)
-    assert assignment(pipe.run(docs)) == full
-    assert {m.name: m.cached for m in pipe.metrics} == {
-        "signatures": True,
-        "jw_edges": True,
-        "sub_edges": False,
-        "clusters": False,
-    }
-    assert len(built) == 1
+    for stages, n_built in ((("edges", "clusters"), 1), (("clusters",), 0)):
+        for stage in stages:
+            shutil.rmtree(os.path.join(root, stage))
+        built.clear()
+        pipe = DedupPipeline(spark, cfg, root)
+        assert assignment(pipe.run(docs)) == full
+        assert {m.name: m.cached for m in pipe.metrics} == {
+            "signatures": True,
+            "edges": "edges" not in stages,
+            "clusters": False,
+        }
+        assert len(built) == n_built
 
     built.clear()
     assert assignment(DedupPipeline(spark, cfg, root).run(docs)) == full

@@ -200,12 +200,12 @@ def test_widen_scan_is_noop_on_multi_split_source(spark, tmp_path, monkeypatch):
 
 
 def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
-    """The frame the full run hands to the sub_edges stage, with every
-    frame the edge stages cut by a lazy localCheckpoint on its way (the
-    shared pair relation is cut by the first edge stage), holds exactly
-    one MapInPandas node: the slice verify.  The fingerprints come from
-    the signature rows, so the corpus text crosses into Python once per
-    run on its way to signatures and fingerprints."""
+    """The frame the full run hands to the edges stage, with every frame
+    the stage cuts by a lazy localCheckpoint on its way (the bucket sizes
+    and the candidates), holds exactly one MapInPandas node: the one
+    verify pass for LSH pairs and fingerprint seeds alike.  The
+    fingerprints come from the signature rows, so the corpus text crosses
+    into Python once per run on its way to signatures and fingerprints."""
     import re
 
     from batch_jaro_winkler_spark.fixtures import make_corpus
@@ -231,17 +231,16 @@ def test_full_run_sends_text_through_python_once(spark, tmp_path, monkeypatch):
                 df = compute()
             finally:
                 tracing.clear()
-            if name == "sub_edges":
-                plans.append(explain_formatted(df))
+            plans.append(explain_formatted(df))
             return df
 
-        return real_stage(self, name, traced if name.endswith("_edges") else compute)
+        return real_stage(self, name, traced if name == "edges" else compute)
 
     monkeypatch.setattr(type(docs), "localCheckpoint", checkpoint)
     monkeypatch.setattr(DedupPipeline, "_stage", stage)
     DedupPipeline(spark, DedupConfig(), str(tmp_path)).run(docs)
-    # the bucket-size and pair cuts, the seed cut, then the stage frame
-    assert len(plans) >= 4
+    # the bucket-size and candidate cuts, then the stage frame
+    assert len(plans) >= 3
     nodes = sum(len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) for p in plans)
     assert nodes == 1
 

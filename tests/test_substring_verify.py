@@ -1,6 +1,7 @@
-"""Substring-stage verification: the aligned-matrix extension against a
-naive character loop, and recall when two docs share both a short
-boilerplate line and a long passage."""
+"""Edge verification: the aligned-matrix extension and the Jaro-Winkler
+share of the one verify pass against a naive character loop and the
+scalar kernel, and recall when two docs share both a short boilerplate
+line and a long passage."""
 
 from __future__ import annotations
 
@@ -8,12 +9,14 @@ import random
 
 import numpy as np
 
+from batch_jaro_winkler_spark.kernel.bjw import score_pair
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
     _rolling_hashes,
     fingerprint_pairs,
     substring_edges,
 )
+from batch_jaro_winkler_spark.operators.score_pairs import verify_edges
 
 
 def _rand(rng: random.Random, n: int) -> str:
@@ -41,13 +44,23 @@ def _naive_extension(ta: str, tb: str, pa: int, pb: int, cfg: DedupConfig):
 
 
 def test_substring_verify_matches_naive_extension(spark):
+    """verify_edges over hand-built fingerprint seeds and LSH pairs (null
+    offsets) on the same docs: the seed share equals a naive character
+    extension, the LSH share the scalar ``score_pair`` of the
+    ``max_jw_len`` prefixes at float32, a pair of both kinds carries both,
+    a null text matches on neither, and no kind fills the other's
+    column."""
+    from pyspark.sql import functions as F
+
     # small widths so every clipping case fits short texts: k=10,
-    # min_len=40, cap=50, each side ships 110 chars of context
-    cfg = DedupConfig(gram_chars=10, min_substring_chars=40)
+    # min_len=40, cap=50, each side ships 110 chars of context; JW scores
+    # 40-char prefixes, so texts that differ only past them score 1.0
+    cfg = DedupConfig(gram_chars=10, min_substring_chars=40, max_jw_len=40)
     rng = random.Random(7)
     shared = _rand(rng, 80)
     long_shared = _rand(rng, 400)
-    texts: dict[int, str] = {}
+    astral = "".join(rng.choice("ab𝔘𝔫𝔦😀中") for _ in range(60))
+    texts: dict[int, str | None] = {}
     seeds: list[tuple[int, int, int, int]] = []  # (a, pos_a, b, pos_b), a < b
 
     def case(ta: str, pa: int, tb: str, pb: int) -> None:
@@ -70,35 +83,71 @@ def test_substring_verify_matches_naive_extension(spark):
     case(_rand(rng, 60) + shared[:30] + _rand(rng, 60), 65, shared[:30] + _rand(rng, 60), 5)
     # a seed whose gram differs (a fingerprint collision, not a copy)
     case(_rand(rng, 200), 60, _rand(rng, 200), 60)
+    # astral-plane code points: offsets count code points, not UTF-16 or
+    # UTF-8 units
+    case(_rand(rng, 30) + astral + _rand(rng, 20), 35, astral[3:] + _rand(rng, 10), 2)
+    # a null-text doc on a seed
+    texts[90] = None
+    seeds.append((0, 5, 90, 5))
 
-    # one hand-built fingerprint per pair: fp = the pair's index
+    # LSH pairs over the same docs: (6, 7) and the astral pair (20, 21)
+    # are seeds too; (92, 93) differ only past the JW prefix, (94, 95)
+    # share an astral prefix; the null doc pairs with 0
+    texts[92] = shared + _rand(rng, 30)
+    texts[93] = shared + _rand(rng, 30)
+    texts[94] = astral + _rand(rng, 20)
+    texts[95] = astral[:30] + _rand(rng, 20)
+    lsh = [(0, 2), (6, 7), (12, 14), (20, 21), (0, 90), (92, 93), (4, 93), (94, 95)]
+
+    # one hand-built fingerprint per seed: fp = the seed's index
     fps = spark.createDataFrame(
         [(a, i, pa) for i, (a, pa, _, _) in enumerate(seeds)]
         + [(b, i, pb) for i, (_, _, b, pb) in enumerate(seeds)],
         "doc_id long, fp long, pos int",
     )
+    no_pos = F.lit(None).cast("int")
+    lsh_df = spark.createDataFrame(lsh, "a long, b long").select(
+        "a", "b", no_pos.alias("pos_a"), no_pos.alias("pos_b")
+    )
     docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, norm string")
-    got = {
-        (r["a"], r["b"]): r["match_len"]
-        for r in substring_edges(
-            docs, cfg, "doc_id", "norm", pre_normalized=True,
-            seeds=fingerprint_pairs(fps, cfg),
-        ).collect()
-    }
+    rows = verify_edges(fingerprint_pairs(fps, cfg).unionByName(lsh_df), docs, cfg).collect()
+    assert len(rows) == len({(r["a"], r["b"]) for r in rows})  # one row per pair
+    got_len = {(r["a"], r["b"]): r["match_len"] for r in rows if r["match_len"] is not None}
+    got_score = {(r["a"], r["b"]): r["score"] for r in rows if r["score"] is not None}
+    assert all(r["match_len"] is not None or r["score"] is not None for r in rows)
+
     lens = {
         (a, b): _naive_extension(texts[a], texts[b], pa, pb, cfg)
         for a, pa, b, pb in seeds
+        if texts[b] is not None
     }
     want = {p: n for p, n in lens.items() if n is not None and n >= cfg.min_substring_chars}
-    assert got == want, (got, lens)
+    assert got_len == want, (got_len, lens)
     # the cases cover what they claim: passing, too-short and gram-mismatch rows
-    assert len(want) == 8
+    assert len(want) == 9 and (20, 21) in want
     assert sorted(n for n in lens.values() if n is not None)[0] < cfg.min_substring_chars
     assert list(lens.values()).count(None) == 1
     # the shipped context bounds the long runs: 2 * cap + k = 110 chars
     # mid-doc; near a start, the 20 chars before the seed on side a plus
     # the 83 after it that fit side b's 110-char slice
     assert (lens[(12, 13)], lens[(14, 15)]) == (110, 103)
+
+    n = cfg.max_jw_len
+    scores = {
+        (a, b): score_pair(texts[a][:n], texts[b][:n], weight=cfg.jw_weight, threshold=cfg.jw_threshold)
+        for a, b in lsh
+        if texts[b] is not None
+    }
+    want_score = {p: s for p, s in scores.items() if s >= np.float32(cfg.jw_min_score)}
+    assert set(got_score) == set(want_score), (got_score, scores)
+    for p, s in got_score.items():
+        assert np.float32(s) == np.float32(want_score[p]), (p, s, want_score[p])
+    # both sides of the threshold occur; a pair of both kinds carries both
+    # columns; the prefix cut decides (92, 93)
+    assert 0 < len(want_score) < len(scores)
+    assert got_score.keys() & got_len.keys() == {(6, 7)}
+    assert got_score[(92, 93)] == 1.0 and texts[92] != texts[93]
+    assert (94, 95) in got_score
 
 
 _NEWSLETTER = "sign up for our newsletter to receive the latest news and offers"
