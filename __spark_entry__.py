@@ -289,13 +289,11 @@ def _jw_topk(spark, sf_dir):
 
     from batch_jaro_winkler_spark.operators.score_pairs import score_topk
 
-    # widen_scan on the CANDIDATE branch only: it parallelizes the kernel
-    # scan (one task before), and k=None ("all matches >= min_score") makes
-    # the emitted pair set partitioning-independent by construction — no
-    # per-batch top-k truncation exists, and the final rank is a
-    # deterministic (rounded score, cand_id) window here.  The probe
-    # branch stays on the raw scan so the doc_id < N predicate pushes
-    # down to parquet instead of riding through a full-corpus shuffle.
+    # No widen_scan: score_topk spreads the candidates over its own
+    # (chunk, probe shard) cells whatever the scan's split count.  k=None
+    # ("all matches >= min_score") emits a partitioning-independent pair
+    # set, and the final rank is a deterministic (rounded score, cand_id)
+    # window here.
     #
     # cand_transform fuses the candidate normalization into the kernel's
     # Arrow pass (optimization round 7): the java.util.regex projection
@@ -310,7 +308,7 @@ def _jw_topk(spark, sf_dir):
         F.col("doc_id").alias("probe_id"),
         _norm_prefix(F.col("text"), _JW_PREFIX).alias("probe_text"),
     )
-    cands = widen_scan(docs).select(
+    cands = docs.select(
         F.col("doc_id").alias("cand_id"),
         F.col("text").alias("cand_text"),
     )
@@ -330,10 +328,10 @@ def _jw_topk10(spark, sf_dir):
     """Small-k twin of jw_topk (VERDICT_r2 #10): k=10 exercises the
     reference's adaptive n_best min_score LADDER inside the kernel
     (c:788-816 — jw_topk's k=None all-matches mode deliberately bypasses
-    it, and k=10 must NOT be parallelized with widen_scan: the kernel's
-    per-batch top-k tie-break is batch-position order, so per-partition
-    truncation under an arbitrary row distribution could drop a tied
-    candidate the global (score, cand_id) rank would keep).  Ranking
+    it).  Its candidates need no widen_scan: score_topk places them in its
+    own cells, and each cell sorts its chunk by cand_id, so the kernel's
+    position tie-break is the global (score, cand_id) rank and no tied
+    candidate is dropped under any input partitioning.  Ranking
     by RAW float64 score is hash-safe: the kernel is bit-identical to
     DuckDB's jaro_winkler_similarity (0 diffs over 10k sf0.01 pairs),
     and ties break on cand_id identically on both engines."""

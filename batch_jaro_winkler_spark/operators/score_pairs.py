@@ -9,12 +9,12 @@
   one ``mapInPandas`` pass with no shuffle of its own verifies both kinds.
   :func:`verify_pairs` and ``fingerprint_dedup.substring_edges`` are its
   single-kind faces.
-* :func:`score_topk` — rank a small probe set against a large candidate
-  corpus: candidates are iterated per Arrow batch with ONE compiled model
-  per batch scoring all probes (model reuse amortized across the batch,
-  mirroring the reference's compile-once-query-many design), partial top-k
-  per batch, final top-k via a window — Spark's TakeOrderedAndProject
-  replaces the reference's top-k retry ladder (SURVEY.md O15/R4).
+* :func:`score_topk` — rank a small probe set, shipped with the closure,
+  against a large candidate corpus, compile once and query many: the
+  candidates are cut into model-sized chunks and the probes into shards,
+  and each (chunk, shard) cell — one task — compiles ONE model of its
+  chunk and scores its shard; a window merges the cells' exact partial
+  top-k (SURVEY.md O15/R4).
 """
 
 from __future__ import annotations
@@ -34,16 +34,16 @@ __all__ = ["verify_edges", "verify_pairs", "score_topk"]
 # closure; larger probe sets belong on verify_pairs over LSH candidates
 _MAX_PROBES = 100_000
 
-# rows per coalesced frame: per-task memory stays ~tens of MB at 256-char
-# texts
+# rows per coalesced verify frame and per score_topk candidate chunk:
+# per-task memory stays ~tens of MB at 256-char texts
 _COALESCE_ROWS = 100_000
 
 
 def _coalesced(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Concatenate a partition's Arrow batches into frames of at least
-    ``_COALESCE_ROWS`` rows (the last one may be shorter), so per-frame
-    work — the distinct-pair memo, one compiled candidate model — sees the
-    partition at once."""
+    ``_COALESCE_ROWS`` rows (the last one may be shorter), so
+    :func:`verify_edges`' distinct-text-pair memo sees the partition at
+    once."""
     pending: list[pd.DataFrame] = []
     n_pending = 0
     for pdf in batches:
@@ -236,6 +236,56 @@ def verify_pairs(
     ).select("a", "b", "score")
 
 
+def _spark_hash_int(v: int) -> int:
+    """Spark's ``hash()`` of an int value (Murmur3_x86_32, seed 42), the
+    hash that ``repartition(n, col)`` places rows by: partition
+    ``pmod(hash, n)``."""
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
+
+    k = rotl(v * 0xCC9E2D51 & 0xFFFFFFFF, 15) * 0x1B873593 & 0xFFFFFFFF
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
+    h ^= 4  # fmix over the 4-byte input
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & 0xFFFFFFFF
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & 0xFFFFFFFF
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _placement_keys(n: int) -> list[int]:
+    """``keys[c]`` is an int that ``repartition(n, key)`` places in
+    partition ``c``, so a column mapped through ``keys`` gives each of n
+    cells a partition of its own.  Hashing the cell numbers themselves
+    collides, and ``repartitionByRange`` draws its bounds from a random
+    sample re-seeded per call, so equal-sized cells shared a partition in
+    5 of 8 calls at 30k candidates."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < n:
+        keys.setdefault(_spark_hash_int(v) % n, v)
+        v += 1
+    return [keys[c] for c in range(n)]
+
+
+def _placed_cells(cands: DataFrame, n_chunks: int, n_shards: int) -> DataFrame:
+    """cands[cand_id, cand_text] → one row per (candidate, shard) with its
+    ``cell = pmod(xxhash64(cand_id), n_chunks) * n_shards + shard``, each
+    of the ``n_chunks * n_shards`` cells in a partition of its own."""
+    n_cells = n_chunks * n_shards
+    cells = cands.select(
+        "cand_id",
+        "cand_text",
+        F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))).alias("shard"),
+    ).select(
+        "cand_id",
+        "cand_text",
+        (F.pmod(F.xxhash64("cand_id"), F.lit(n_chunks)) * n_shards + F.col("shard")).alias("cell"),
+    )
+    keys = F.array(*map(F.lit, _placement_keys(n_cells)))
+    return cells.repartition(n_cells, F.element_at(keys, F.col("cell").cast("int") + 1))
+
+
 def score_topk(
     probes: DataFrame,
     candidates: DataFrame,
@@ -248,34 +298,37 @@ def score_topk(
     cand_transform=None,
 ) -> DataFrame:
     """probes[probe_id, probe_text] x candidates[cand_id, cand_text] →
-    per-probe top-k (probe_id, cand_id, score).
+    per-probe top-k (probe_id, cand_id, score), ties broken on cand_id
+    ascending (SURVEY.md O15).  A null text matches nothing.
 
-    The probe set (small) is broadcast-joined onto every candidate
-    partition; each Arrow batch compiles ONE candidate model and scores all
-    probes against it (per-batch partial top-k), then a window takes the
-    global top-k per probe.  Deterministic tie-break (score desc, cand_id
-    asc) per SURVEY.md O15.
+    Compile once, query many: the candidates are split into
+    ``ceil(count / _COALESCE_ROWS)`` chunks by ``xxhash64(cand_id)``, the
+    probes into ``S = defaultParallelism // chunks`` shards (at least 1,
+    at most one per probe), and every (chunk, shard) cell — one task of
+    its own — compiles ONE model of its chunk and scores its shard of the
+    probes.  A small candidate set is one chunk scored by every core; a
+    web-scale one is many chunks of one shard each.  Each cell sorts its
+    chunk by cand_id before compiling, so the kernel's n_best tie-break
+    (candidate position ascending) is cand_id ascending and the cell's
+    top-k is exact; a window then takes the global top-k per probe, and
+    the result does not depend on the chunk count or the input
+    partitioning.
 
-    The probe frame is collected to the driver and broadcast with the
+    The probe frame is collected to the driver and shipped with the
     closure — correct only for genuinely small probe sets, so the size is
     guarded by ``_MAX_PROBES`` (error, not silent collect-the-world).  A
-    probe set too large to broadcast is a pair-scoring problem: route it
+    probe set too large to ship is a pair-scoring problem: route it
     through :func:`verify_pairs` on LSH candidates instead.
 
-    ``k=None`` — "all matches" mode (optimization round 7): emit every
-    candidate passing ``min_score`` with NO ranking.  Callers that only
-    want the thresholded pair relation (jw_topk's k=500000, jw_pairs)
-    previously paid a full window sort of every scored row for a rank
-    filter that could never drop anything; with ``k=None`` the kernel
-    skips the n_best ladder (plain scan at min_score — same scores) and
-    the window exchange+sort disappears from the plan.
+    ``k=None`` — "all matches" mode: emit every candidate passing
+    ``min_score`` with no ranking; the kernel skips the n_best ladder and
+    the plan has no window.
 
     ``cand_transform`` — optional pandas ``Series -> Series`` applied to
-    the candidate text inside the scoring pass (optimization round 7):
-    callers whose candidate text is a *derived* expression (e.g. a
-    normalized prefix) can ship the raw column and fuse the derivation
-    into the Arrow batch, where CPython regex is ~40x faster than the
-    java.util.regex projection the JVM would run (guide §4).  The
+    the candidate text inside each cell: callers whose candidate text is a
+    *derived* expression (e.g. a normalized prefix) can ship the raw
+    column and derive it in Python, where CPython regex is ~40x faster
+    than the java.util.regex projection the JVM would run (guide §4).  The
     transform must be byte-identical to the JVM expression it replaces —
     callers are responsible for that equivalence (the normalize twins in
     functions.text are the proven pair)."""
@@ -289,18 +342,29 @@ def score_topk(
             "collecting it to the driver would not scale — use "
             "verify_pairs over LSH candidate pairs for large probe sets"
         )
-    probe_rows = [(r[0], r[1]) for r in rows]
-    # compile-once-query-many wants LARGE candidate batches: coalesce the
-    # partition's Arrow batches before building the shared model, so each
-    # partition compiles ~one model regardless of arrow batch sizing
-    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _coalesced(batches):
-            ctext = pdf["cand_text"]
+    probe_rows = [(r[0], r[1]) for r in rows if r[1] is not None]
+    cands = candidates.select("cand_id", "cand_text")
+    # an exact count: plan statistics are unknown (Long.MaxValue) for
+    # many sources.  Nulls are dropped inside the cells, so the count job
+    # evaluates no text expression
+    n_chunks = max(1, -(-cands.count() // _COALESCE_ROWS))
+    parallelism = candidates.sparkSession.sparkContext.defaultParallelism
+    n_shards = max(1, min(len(probe_rows), parallelism // n_chunks))
+
+    def score_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        pdf = pdf[pdf["cand_text"].notna()].sort_values(["cell", "cand_id"])
+        for cell, chunk in pdf.groupby("cell", sort=False):
+            ctext = chunk["cand_text"]
             if cand_transform is not None:
                 ctext = cand_transform(ctext)
             model = build_model(ctext.tolist())
+            ids = chunk["cand_id"].to_numpy(np.int64)
             out_p, out_c, out_s = [], [], []
-            for pid, ptext in probe_rows:
+            for pid, ptext in probe_rows[cell % n_shards :: n_shards]:
                 idx, sc = score(
                     model,
                     ptext,
@@ -311,14 +375,12 @@ def score_topk(
                     dtype=dtype,
                 )
                 out_p.extend([pid] * len(idx))
-                out_c.extend(pdf["cand_id"].iloc[np.asarray(idx, dtype=np.int64)])
+                out_c.extend(ids[idx])
                 out_s.extend(sc.astype(np.float64))
-            yield pd.DataFrame(
-                {"probe_id": out_p, "cand_id": out_c, "score": out_s}
-            )
+            yield pd.DataFrame({"probe_id": out_p, "cand_id": out_c, "score": out_s})
 
-    partial = candidates.select("cand_id", "cand_text").mapInPandas(
-        per_batch, schema="probe_id long, cand_id long, score double"
+    partial = _placed_cells(cands, n_chunks, n_shards).mapInPandas(
+        score_cells, schema="probe_id long, cand_id long, score double"
     )
     if k is None:
         return partial
