@@ -1,27 +1,34 @@
 """Connected components over the verified-edge graph → cluster ids.
 
 Large-star / small-star alternation (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SoCC'14 — see PAPERS.md), expressed as pure
-DataFrame self-joins + aggregations so Catalyst/AQE own the physical plan:
+in MapReduce and Beyond", SoCC'14 — see PAPERS.md), expressed as DataFrame
+window passes so Catalyst/AQE own the physical plan.  Each star step is ONE
+window over the canonical ``(hi, lo)`` edge list — the neighborhood minimum
+rides on every edge row, so no step builds a ``min`` aggregate and joins it
+back:
 
-* large-star: for every node u, link every *strictly larger* neighbor to
-  the minimum of u's closed neighborhood;
-* small-star: for every node u, link every *smaller-or-equal* neighbor
-  (and u itself) to that minimum.
+* large-star: over the symmetric list ``(u, v)``, ``m = least(min(v) over
+  u, u)``; every *strictly larger* neighbor ``v > u`` links to ``m``;
+* small-star: ``m = min(lo) over hi``; every row links both ``lo`` and
+  ``hi`` to ``m`` (one explode of a two-element array).
+
+A window's partition buffer spills to disk past
+``spark.sql.windowExec.buffer.spill.threshold`` rows, so a hub node's whole
+neighborhood never has to fit one row (a ``collect_set`` per node would).
 
 Converges in O(log n) rounds; near-dup web clusters are shallow so it
-typically stops in 3-5.  Each round ends with ``localCheckpoint`` — an
-iterative self-join otherwise compounds the lineage until driver planning
-time dominates (SURVEY.md §7 hard parts).  Convergence is detected by an
-edge-checksum fixpoint (count + xxhash sum), one cheap aggregate per round.
+typically stops in 3-5.  Each round ends in a lazy ``localCheckpoint`` that
+the round's edge-checksum job (count + xxhash xor) fills — an iterative
+plan otherwise compounds its lineage until driver planning time dominates
+(SURVEY.md §7 hard parts) — and the rounds stop at the checksum fixpoint.
 
 Output: (doc_id, cluster_id) where cluster_id = min(doc_id) of the
-component, for every doc of ``all_nodes`` (singletons included).
+component, exactly one row per row of ``all_nodes`` (singletons included).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
@@ -48,27 +55,22 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
-    sym = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
-        edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-    )
-    mins = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("m")
-    )
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        sym.join(mins, "u")
+        edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+        .union(edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
+        .select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("a"), F.col("m").alias("b"))
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    # edges are (hi, lo), hi > lo: group by hi, attach all lo's (and hi) to
-    # the neighborhood minimum
-    mins = edges.groupBy("hi").agg(F.min("lo").alias("m"))
-    linked = edges.join(mins, "hi")
-    lo_links = linked.select(F.col("lo").alias("a"), F.col("m").alias("b"))
-    hi_links = mins.select(F.col("hi").alias("a"), F.col("m").alias("b"))
-    return lo_links.union(hi_links)
+    # a union of two projections would run the window twice
+    m = F.min("lo").over(Window.partitionBy("hi"))
+    return edges.select("hi", "lo", m.alias("b")).select(
+        F.explode(F.array("lo", "hi")).alias("a"), "b"
+    )
 
 
 def _local_union_find(hi, lo):
@@ -77,10 +79,10 @@ def _local_union_find(hi, lo):
     min-label linking over the edge list until fixpoint — O(log n)
     vectorized rounds, no per-edge Python loop (a dict-based UF costs
     ~10 s of single-threaded driver time at 2M edges; this is ~0.3 s).
-    Returns (nodes, roots) in the original id space, one row for EVERY
-    node seen, roots included — consistent with the distributed star
-    path, which also emits root self-assignments.  Roots are component
-    minima, same as the star rounds."""
+    The two id arrays may hold either orientation, duplicate edges and
+    self-loops.  Returns (nodes, roots) in the original id space, one row
+    for EVERY node seen, roots included.  Roots are component minima, same
+    as the star rounds."""
     import numpy as np
 
     hi = np.asarray(hi, dtype=np.int64)
@@ -116,46 +118,42 @@ def connected_components(
     all_nodes: DataFrame,
     local_threshold: int = 8_000_000,
 ) -> DataFrame:
-    """edges[a, b] → (doc_id, cluster_id) for every doc of ``all_nodes``.
+    """edges[a, b] → (doc_id, cluster_id), one row per row of ``all_nodes``.
 
     Hybrid execution: the distributed star rounds exist for edge sets that
-    cannot fit one machine; when the (deduplicated) edge list is below
-    ``local_threshold`` it is collected and finished with driver-side
-    union-find in one job — the standard endgame for iterative graph
+    cannot fit one machine.  When the edge list has at most
+    ``local_threshold`` ROWS (raw rows: duplicates, self-loops and either
+    orientation count and are tolerated) it is collected and finished with
+    driver-side union-find — the standard endgame for iterative graph
     algorithms, avoiding 10+ scheduling rounds on a tiny remainder.
 
-    ``all_nodes`` (one ``doc_id`` column) must cover every edge endpoint
-    (the pipeline's docs table always does); docs without an edge get
-    cluster_id = doc_id, so the output is a total cluster assignment.  The
-    local endgame emits it as ONE narrow map over ``all_nodes`` with the
-    union-find result as a broadcast variable, instead of shipping a
-    driver DataFrame out and hash-building it back for an anti-join.
+    ``all_nodes`` (one ``doc_id`` column) is the set of docs to assign:
+    a doc without an edge gets cluster_id = doc_id, an edge endpoint it
+    does not list gets no row, and a repeated row is repeated.  The local
+    endgame emits the assignment as ONE narrow map over ``all_nodes`` with
+    the union-find result as a broadcast variable; the star path ends in
+    one left join of ``all_nodes`` to its star forest ``hi → lo``.
     """
     max_iters = (cfg or DedupConfig()).cc_max_iters
-    # lazy checkpoint + count: the count action materializes the
-    # checkpoint blocks, so the threshold gate costs ONE job, not two
-    cur = _canon(edges).localCheckpoint(eager=False)
-    n_edges = cur.count()
-    if n_edges <= local_threshold:
-        # Arrow fetch, both directions: toPandas() lands the edge list as
-        # two int64 numpy columns (~128 MB at the 8M-edge threshold —
-        # nothing next to the 48g driver heap; a row-wise collect() builds
-        # millions of py4j Row objects and costs tens of driver seconds)
+    nodes = all_nodes.select(F.col(all_nodes.columns[0]).cast("long").alias("doc_id"))
+    edges = edges.select("a", "b")
+    # gate on a count, not limit(n + 1): CollectLimit funnels up to n rows
+    # per partition through one task
+    if edges.count() <= local_threshold:
+        # Arrow fetch: toPandas() lands the edge list as two int64 numpy
+        # columns (~128 MB at the 8M-edge threshold — nothing next to the
+        # 48g driver heap; a row-wise collect() builds millions of py4j Row
+        # objects and costs tens of driver seconds)
         import numpy as np
         import pandas as pd
 
-        epdf = cur.toPandas()
-        if len(epdf):
-            nodes, roots = _local_union_find(
-                epdf["hi"].to_numpy(), epdf["lo"].to_numpy()
-            )
-        else:
-            nodes = roots = np.empty(0, dtype=np.int64)
-        # nodes is sorted (np.unique): membership + root lookup are
+        epdf = edges.toPandas()
+        nd, rt = _local_union_find(epdf["a"].to_numpy(), epdf["b"].to_numpy())
+        # nd is sorted (np.unique): membership + root lookup are
         # vectorized binary searches inside a narrow map — the write
         # stays as wide as all_nodes' partitioning, no driver
         # round-trip, no broadcast-hash build of a million-key table
-        b = cur.sparkSession.sparkContext.broadcast((nodes, roots))
+        b = edges.sparkSession.sparkContext.broadcast((nd, rt))
 
         def assign_map(batches):
             nd, rt = b.value
@@ -170,12 +168,12 @@ def connected_components(
                     cl = ids
                 yield pd.DataFrame({"doc_id": ids, "cluster_id": cl})
 
-        return all_nodes.select(
-            F.col(all_nodes.columns[0]).cast("long").alias("doc_id")
-        ).mapInPandas(assign_map, "doc_id long, cluster_id long")
+        return nodes.mapInPandas(assign_map, "doc_id long, cluster_id long")
+
+    cur = _canon(edges).localCheckpoint(eager=False)
     prev_sig = _checksum(cur)
     for _ in range(max_iters):
-        cur = _canon(_small_star(_canon(_large_star(cur)))).localCheckpoint(eager=True)
+        cur = _canon(_small_star(_canon(_large_star(cur)))).localCheckpoint(eager=False)
         sig = _checksum(cur)
         if sig == prev_sig:
             break
@@ -189,15 +187,9 @@ def connected_components(
                 f"{max_iters} star rounds; raise cc_max_iters"
             )
 
-    # fixpoint of star rounds is a forest of depth-1 stars: hi -> root(lo)
-    members = cur.select(F.col("hi").alias("doc_id"), F.col("lo").alias("cluster_id"))
-    roots = cur.select(F.col("lo").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
+    # fixpoint of star rounds is a forest of depth-1 stars: hi -> root(lo);
+    # roots and edgeless docs are not a hi, so they keep their own id
+    forest = cur.select(F.col("hi").alias("doc_id"), F.col("lo").alias("cluster_id"))
+    return nodes.join(forest, "doc_id", "left").select(
+        "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
     )
-    assign = members.union(roots)
-    singletons = (
-        all_nodes.select(F.col(all_nodes.columns[0]).alias("doc_id"))
-        .join(assign.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    return assign.union(singletons)

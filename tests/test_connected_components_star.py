@@ -2,12 +2,16 @@
 local-endgame threshold rose to 8M edges, `_large_star`/`_small_star`/the
 checksum fixpoint ran in no test or bench — but they ARE the 100 TB code
 path.  These tests force `local_threshold=0` so every star round executes,
-and assert exact equality with the driver union-find output on seeded
-graphs plus full pipeline recall through the distributed path.
+and assert exact equality with the driver union-find output on graph
+families (seeded mixed graphs, a long path, a spilling hub, cliques, a
+forest with singletons, duplicated/self-loop/reversed edges), at most 8
+Spark jobs per star round, plus full pipeline recall through the
+distributed path.
 """
 
 from __future__ import annotations
 
+import functools
 import random
 
 import pytest
@@ -16,6 +20,7 @@ from pyspark.sql import functions as F
 from batch_jaro_winkler_spark.operators import connected_components as cc_mod
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 from batch_jaro_winkler_spark.operators.connected_components import (
+    _local_union_find,
     connected_components,
 )
 
@@ -48,32 +53,121 @@ def _random_graph(seed):
     return edges, ids
 
 
+def _path():
+    """1,024 nodes in one chain: about ten star rounds."""
+    return [(i, i + 1) for i in range(1023)], list(range(1024))
+
+
+def _hub():
+    """One hub with 5,000 leaves: its window group holds 5,000 rows."""
+    leaves = [i for i in range(5001) if i != 2500]
+    return [(2500, v) for v in leaves], list(range(5001))
+
+
+def _cliques():
+    rng = random.Random(5)
+    ids = rng.sample(range(1, 100_000), 400)
+    edges, pos = [], 0
+    for k in range(2, 26):
+        grp = ids[pos : pos + k]
+        pos += k
+        edges += [(a, b) for i, a in enumerate(grp) for b in grp[i + 1 :]]
+    return edges, ids[:pos]
+
+
+def _forest_and_singletons():
+    """40 random trees of 25 nodes, then 300 nodes without an edge."""
+    rng = random.Random(9)
+    ids = rng.sample(range(1, 1_000_000), 1300)
+    edges = []
+    for t in range(40):
+        grp = ids[t * 25 : (t + 1) * 25]
+        edges += [(grp[i], grp[rng.randrange(i)]) for i in range(1, 25)]
+    return edges, ids
+
+
+def _messy():
+    """Two chains and a clique, every edge also reversed and a third of
+    them repeated, plus self-loops, one on a node with no other edge."""
+    base = [(i, i + 1) for i in range(100, 130)] + [(i, i + 1) for i in range(200, 240)]
+    base += [(a, b) for a in range(300, 310) for b in range(a + 1, 310)]
+    edges = base + [(b, a) for a, b in base] + base[::3]
+    edges += [(100, 100), (235, 235), (999, 999)]
+    random.Random(3).shuffle(edges)
+    return edges, sorted({x for e in edges for x in e})
+
+
 def _assignments(df):
     return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_star_path_matches_union_find(spark, seed, monkeypatch):
-    edges_py, _ = _random_graph(seed)
+@pytest.mark.parametrize(
+    "graph, min_rounds, conf",
+    [
+        pytest.param(functools.partial(_random_graph, s), 3, {}, id=str(s))
+        for s in (1, 2, 3)
+    ]
+    + [
+        pytest.param(_path, 8, {}, id="path1024"),
+        # the hub's window group spills: it outgrows the in-memory buffer
+        # (4,096 rows) and the lowered sorter threshold
+        pytest.param(
+            _hub,
+            1,
+            {"spark.sql.windowExec.buffer.spill.threshold": "64"},
+            id="hub5000_spilled",
+        ),
+        pytest.param(_cliques, 1, {}, id="cliques"),
+        pytest.param(_forest_and_singletons, 3, {}, id="forest_singletons"),
+        pytest.param(_messy, 3, {}, id="dup_selfloop_reversed"),
+    ],
+)
+def test_star_path_matches_union_find(spark, request, graph, min_rounds, conf, monkeypatch):
+    """The star path against the driver union-find, and at most 8 Spark
+    jobs per star round (counted between successive large-star calls)."""
+    edges_py, nodes_py = graph()
     edges = spark.createDataFrame(edges_py, "a long, b long")
-    nodes = spark.createDataFrame(
-        [(d,) for d in sorted({x for e in edges_py for x in e})], "doc_id long"
-    )
+    nodes = spark.createDataFrame([(d,) for d in nodes_py], "doc_id long")
+    sc = spark.sparkContext
+    group = request.node.name
 
-    rounds = {"n": 0}
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    marks = []
     orig = cc_mod._large_star
 
     def spy(df):
-        rounds["n"] += 1
+        marks.append(jobs())
         return orig(df)
 
     monkeypatch.setattr(cc_mod, "_large_star", spy)
 
-    star = _assignments(connected_components(edges, all_nodes=nodes, local_threshold=0))
-    assert rounds["n"] >= 3, "graph too easy: star fixpoint needs >=3 rounds"
-    uf = _assignments(
-        connected_components(edges, all_nodes=nodes, local_threshold=1 << 40)
-    )
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = connected_components(edges, all_nodes=nodes, local_threshold=0)
+        marks.append(jobs())
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    rounds = len(marks) - 1
+    assert rounds >= min_rounds, f"graph too easy: {rounds} star rounds"
+    per_round = [b - a for a, b in zip(marks, marks[1:])]
+    assert max(per_round) <= 8, per_round
+
+    star = {r["doc_id"]: r["cluster_id"] for r in rows}
+    assert len(rows) == len(star) == len(nodes_py)
+    nd, rt = _local_union_find([a for a, _ in edges_py], [b for _, b in edges_py])
+    uf = {d: d for d in nodes_py}
+    uf.update(zip(nd.tolist(), rt.tolist()))
     assert star == uf
     # structural invariants: every cluster id is its component minimum and
     # itself assigned to itself (root self-assignment)
@@ -83,18 +177,23 @@ def test_star_path_matches_union_find(spark, seed, monkeypatch):
 
 
 def test_star_path_singletons_via_all_nodes(spark):
-    """all_nodes backfill on the distributed branch (the anti-join at the
-    end of the star path, not the broadcast one in the endgame)."""
+    """Both paths emit exactly one row per all_nodes row: an edge endpoint
+    that all_nodes does not list (99) gets no row, a repeated row of a
+    clustered node (25) is repeated, and a node without an edge is its own
+    cluster."""
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(10, 40)], "a long, b long"
+        [(i, i + 1) for i in range(10, 40)] + [(40, 99)], "a long, b long"
     )
-    nodes = spark.range(0, 60).select(F.col("id").alias("doc_id"))
-    got = _assignments(
-        connected_components(edges, all_nodes=nodes, local_threshold=0)
+    nodes = (
+        spark.range(0, 60)
+        .union(spark.range(25, 26))
+        .select(F.col("id").alias("doc_id"))
     )
-    assert len(got) == 60
-    for d in range(60):
-        assert got[d] == (10 if 10 <= d <= 40 else d), (d, got[d])
+    want = sorted([(d, 10 if 10 <= d <= 40 else d) for d in range(60)] + [(25, 10)])
+    star = connected_components(edges, all_nodes=nodes, local_threshold=0).collect()
+    local = connected_components(edges, all_nodes=nodes).collect()
+    assert sorted((r["doc_id"], r["cluster_id"]) for r in star) == want
+    assert sorted((r["doc_id"], r["cluster_id"]) for r in local) == want
 
 
 def test_star_path_empty_edges(spark):

@@ -380,6 +380,30 @@ def test_stage_tags_its_jobs_with_its_name(spark, tmp_path):
     assert [m.cached for m in pipe.metrics] == [False, True, False]
 
 
+def test_clusters_stage_runs_at_most_four_jobs(spark, tmp_path):
+    """The clusters stage counts the edge rows, fetches them and writes the
+    assignment: no shuffle runs before the local gate, so the stage stays
+    within 4 Spark jobs."""
+    sc = spark.sparkContext
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=60, seed=21).rows)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pipe = DedupPipeline(spark, DedupConfig(), str(tmp_path))
+    stage = pipe._stage
+
+    def grouped(name, compute):
+        if name != "clusters":
+            return stage(name, compute)
+        sc.setLocalProperty("spark.jobGroup.id", "clusters_stage_jobs")
+        try:
+            return stage(name, compute)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    pipe._stage = grouped
+    pipe.run(docs, "doc_id", "text")
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup("clusters_stage_jobs")) <= 4
+
+
 def test_run_killed_mid_checkpoint_resumes(spark, tmp_path_factory):
     """A writer killed after its parquet landed in the temp dir but before
     the manifest leaves an invisible orphan: a fresh pipeline on the same
