@@ -6,10 +6,18 @@ row sort) — the same comparison the driver hashes.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import cloudpickle
 
 import __spark_entry__ as entry_mod
 
@@ -72,3 +80,67 @@ def test_entry_smoke(spark):
     pdf = df.toPandas()
     assert len(pdf) == 500  # total assignment over sf0.001 documents
     assert set(pdf.columns) == {"doc_id", "cluster_id", "cluster_size"}
+
+
+# sha256 of ``json.dumps(oracle_sql(), sort_keys=True)``: the oracle text is
+# part of the driver contract and must not change
+ORACLE_SQL_SHA256 = "c68ad49b2a31d1d4506bcc77777ed552b89188fc2275efbbe8f20166986dc9d3"
+
+
+def test_driver_surface_is_pinned():
+    queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    assert len(queries) == 47
+    assert len(oracles) == 43
+    assert set(oracles) <= set(queries)
+    assert set(queries) - set(oracles) == {
+        "ann_cosine_topk_ivf",
+        "dedup_embedding_lsh",
+        "pipeline_lsh_pairs",
+        "pipeline_simhash_pairs",
+    }
+    digest = hashlib.sha256(json.dumps(oracles, sort_keys=True).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256
+
+
+_UNPICKLE = """
+import pickle, sys
+for path in sys.argv[1:]:
+    with open(path, "rb") as f:
+        pickle.load(f)
+"""
+
+
+def test_workers_never_import_entry_module(spark, sf001_dir, tmp_path, monkeypatch):
+    """Every function a query hands to ``mapInPandas`` unpickles where only
+    the package is importable: a helper defined at module level in
+    ``__spark_entry__`` is pickled by reference, and every Python worker
+    would then have to import the driver-contract file."""
+    recorded = []
+    frame_cls = type(spark.range(0))  # the classic or Connect implementation
+    original = frame_cls.mapInPandas
+
+    def record(self, func, *args, **kwargs):
+        recorded.append(func)
+        return original(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", record)
+    for build in entry_mod.queries().values():
+        build(spark, sf001_dir)
+    monkeypatch.undo()
+    assert len(recorded) >= 10
+
+    pkg = Path(entry_mod.__file__).resolve().parent / "batch_jaro_winkler_spark"
+    site = tmp_path / "site"
+    site.mkdir()
+    (site / "batch_jaro_winkler_spark").symlink_to(pkg)
+    paths = []
+    for i, func in enumerate(recorded):
+        paths.append(tmp_path / f"func{i}.pkl")
+        paths[-1].write_bytes(cloudpickle.dumps(func))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = str(site)
+    proc = subprocess.run(
+        [sys.executable, "-c", _UNPICKLE, *map(str, paths)],
+        cwd=tmp_path, env=env, capture_output=True, text=True,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
