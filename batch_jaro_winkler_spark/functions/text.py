@@ -52,7 +52,7 @@ def normalize_pandas(s):
 
     global _PY_NORM
     if _PY_NORM is None:
-        _PY_NORM = re.compile("[^a-z0-9À-ɏ一-鿿]+")
+        _PY_NORM = re.compile(_NORM_PATTERN)
     return s.str.lower().str.replace(_PY_NORM, " ", regex=True).str.strip()
 
 

@@ -172,16 +172,12 @@ def compute_signatures(
                     rows_c = nonempty[chunk_bounds[ci] : chunk_bounds[ci + 1]]
                     if not len(rows_c):
                         continue
-                    seg_starts = row_off[rows_c]
-                    seg_ends = row_off[rows_c + 1]
-                    # gather this chunk's shingles contiguously
-                    counts = seg_ends - seg_starts
-                    gidx = np.repeat(seg_starts - np.cumsum(
-                        np.concatenate(([0], counts[:-1]))
-                    ), counts) + np.arange(int(counts.sum()))
-                    h = sh[gidx]
-                    bounds = np.zeros(len(rows_c), dtype=np.int64)
-                    np.cumsum(counts[:-1], out=bounds[1:])
+                    # a chunk is a run of consecutive non-empty rows (the
+                    # empty rows between them own no shingles), so its
+                    # shingles are one contiguous slice
+                    start = row_off[rows_c[0]]
+                    h = sh[start : row_off[rows_c[-1] + 1]]
+                    bounds = row_off[rows_c] - start
                     # MinHash: multiply-shift table + segmented min
                     table = h[:, None] * a_params[None, :] + b_params[None, :]
                     sig = np.minimum.reduceat(table, bounds, axis=0)

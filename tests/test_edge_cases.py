@@ -80,6 +80,44 @@ def test_null_empty_and_astral_texts(spark, tmp_path_factory):
     assert clusters[2] == clusters[6] == 2  # shared verbatim substring
 
 
+def test_normalize_faces_agree(spark, sf01_dir):
+    """``normalize_pandas`` (the pipeline's face) and ``normalize_text``
+    (the JVM face the oracle-checked queries use) give the same string,
+    row by row, on the sf0.01 documents and on edge strings: null, empty,
+    astral, a dotted capital I (lowercases to two code points) and the
+    code points either side of each kept range's edges."""
+    import pandas as pd
+
+    from batch_jaro_winkler_spark.functions.text import normalize_pandas, normalize_text
+
+    edges = [
+        None,
+        "",
+        "𝒜𝓈𝓉𝓇𝒶𝓁 𝕥𝕖𝕩𝕥 😀🎉 𠀀 end",
+        "İstanbul İ DOTTED",
+        "a\u00bfb\u00c0c\u024fd\u0250e \u024e\u00d0",
+        "a\u4dffb\u4e00c\u9fffd\ua000e",
+        "  --Mixed__CASE  and\ttabs\n  ",
+    ]
+    docs = spark.read.parquet(f"{sf01_dir}/documents.parquet").select("doc_id", "text")
+    extra = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(edges)], "doc_id long, text string"
+    )
+    rows = (
+        docs.unionByName(extra)
+        .select("doc_id", "text", normalize_text(F.col("text")).alias("jvm"))
+        .toPandas()
+    )
+    assert len(rows) == docs.count() + len(edges)
+    py = normalize_pandas(rows["text"])
+    diffs = [
+        (d, j, p)
+        for d, j, p in zip(rows["doc_id"], rows["jvm"], py)
+        if not (pd.isna(j) and pd.isna(p)) and j != p
+    ]
+    assert not diffs, diffs[:5]
+
+
 @pytest.mark.slow
 def test_recall_at_20k(spark, tmp_path_factory):
     corpus = make_corpus(n_rows=20_000, seed=99)

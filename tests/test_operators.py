@@ -5,6 +5,7 @@ atomicity/resume semantics."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,6 +108,56 @@ def test_exact_dedup(spark):
     )
     groups = {r["doc_id"]: r["rep_id"] for r in exact_dup_groups(docs).collect()}
     assert groups == {1: 1, 3: 1, 6: 1, 2: 2, 5: 2, 4: 4}
+
+
+def test_signatures_match_per_row_reference(spark):
+    """compute_signatures hashes each batch in chunks of consecutive
+    non-empty rows (~1,024 shingles each); every row's sort_key, band
+    hashes and SimHash must equal the same math on that row alone, with
+    empty rows between, before and inside chunks and rows larger than a
+    whole chunk."""
+    from batch_jaro_winkler_spark.functions.text import normalize_pandas
+    from batch_jaro_winkler_spark.operators.signatures import (
+        _FNV_OFFSET,
+        _FNV_PRIME,
+        _batch_shingle_hashes,
+        compute_signatures,
+        minhash_params,
+    )
+
+    cfg = DedupConfig()
+    rng = np.random.default_rng(7)
+    words = [f"w{i}" for i in range(300)]
+    lengths = [0, 3, 0, 0, 40, 1500, 0, 7, 900, 200, 0, 4, 2600, 60, 0] * 4
+    texts = [" ".join(rng.choice(words, size=n)) for n in lengths]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = compute_signatures(docs, cfg, "doc_id", "text").toPandas().set_index("doc_id")
+
+    a, b = minhash_params(cfg.num_perm, cfg.seed)
+    bit = np.arange(64, dtype=np.uint64)
+    checked = 0
+    for doc_id, text in enumerate(texts):
+        norm = normalize_pandas(pd.Series([text]))[0]
+        h, _ = _batch_shingle_hashes([norm.split(" ") if norm else []], cfg.shingle_k)
+        row = got.loc[doc_id]
+        if not len(h):
+            assert row["sort_key"] == -1
+            continue
+        with np.errstate(over="ignore"):
+            sig = (h[:, None] * a[None, :] + b[None, :]).min(axis=0)
+            acc = np.full(cfg.bands, _FNV_OFFSET, dtype=np.uint64)
+            sig2 = sig.reshape(cfg.bands, cfg.rows_per_band)
+            for t in range(cfg.rows_per_band):
+                acc = (acc ^ sig2[:, t]) * _FNV_PRIME
+            acc = (acc ^ np.arange(cfg.bands, dtype=np.uint64)) * _FNV_PRIME
+        bits = ((h[:, None] >> bit[None, :]) & np.uint64(1)).astype(np.int64)
+        votes = (2 * bits - 1).sum(axis=0)
+        simhash = int(sum(1 << i for i in range(64) if votes[i] > 0))
+        assert row["sort_key"] == sig[:1].view(np.int64)[0]
+        assert list(row["band_hashes"]) == acc.view(np.int64).tolist()
+        assert row["simhash"] == np.array([simhash], dtype=np.uint64).view(np.int64)[0]
+        checked += 1
+    assert checked == sum(1 for n in lengths if n > 0)  # short rows: one shingle
 
 
 # --- simhash hamming pairs (pigeonhole) ---
