@@ -44,7 +44,7 @@ Deliberate divergences (documented, observable-behavior preserving):
   so the order is not part of the contract).
 
 Everything here is pure numpy on one Arrow/pandas batch: this module is
-what runs inside ``applyInPandas`` / ``mapInArrow`` on executors.  It never
+what runs inside ``mapInPandas`` on executors.  It never
 touches Spark.
 """
 
@@ -172,7 +172,7 @@ class CandidateModel:
     # (char, pos, cand) int64 keys, ascending, with the candidate id per
     # record.  Built lazily on first large scan (_ensure_buckets); b_maxp
     # is the pos stride (-1 = keys would overflow int64, never retry).
-    # Query-local and cheap to rebuild — dropped on pickle so broadcast
+    # Query-local and cheap to rebuild — dropped on pickle so pickled
     # models stay small.
     b_key: np.ndarray | None = None
     b_cand: np.ndarray | None = None
@@ -190,28 +190,20 @@ class CandidateModel:
     bp_goff: np.ndarray | None = None
     bp_key: np.ndarray | None = None
     bp_cand: np.ndarray | None = None
-    # per-OCCURRENCE view of the multi-occurrence groups (_ensure_m2occ),
-    # sorted by (char, cand, pos): with a single input occurrence there is
-    # no cursor interaction, so the greedy match is the group's first
-    # occurrence inside the window — occurrence o matches iff
-    # pos_o in [i0-r, i0+r] and prev_o < i0-r (prev = sentinel for each
-    # group's first occurrence).  One branchless pass over the chars'
-    # occurrence ranges replaces the per-input-char resume-cursor walk.
-    m2o_char: np.ndarray | None = None
-    m2o_cand: np.ndarray | None = None
+    # per-OCCURRENCE positions of the multi-occurrence groups
+    # (_ensure_m2occ), sorted by (char, cand, pos), read by the
+    # resume-cursor walk through the group offsets
     m2o_pos: np.ndarray | None = None
-    m2o_prev: np.ndarray | None = None
-    m2o_rhalf: np.ndarray | None = None
-    m2o_grp: np.ndarray | None = None   # group index per occurrence
     m2o_goff: np.ndarray | None = None  # group -> occurrence offset (+1 tail)
     # first-in-window bucket index over the multi-occurrence occurrences
     # (_ensure_m3): ((char, rhalf-class, pos) bucket, prev)-packed keys,
     # ascending.  For a once-occurring input char at i0 the greedy match
     # "pos in [i0-r, i0+r] and prev < i0-r" becomes, per class h (so r =
     # max(h, r_in) is bucket-constant), a PREFIX of each in-window bucket
-    # found by binary search — replacing the 7-pass full-char-range
-    # closed-form scan (measured ~36% of min00 collect).  m3_maxp: 0 =
-    # unbuilt, -1 = refused (overflow / class explosion), else pos stride.
+    # found by binary search — replacing the resume-cursor walk for those
+    # chars (interleaved on a 4-core host, the English min00 word-list leg
+    # ran 1.12x slower without it).  m3_maxp: 0 = unbuilt, -1 = refused (overflow / class
+    # explosion), else pos stride.
     m3_key: np.ndarray | None = None
     m3_cand: np.ndarray | None = None
     m3_hvals: np.ndarray | None = None
@@ -225,8 +217,7 @@ class CandidateModel:
         d = dict(self.__dict__)
         for f in ("b_key", "b_cand", "b2_key", "b2_cand",
                   "bp_gvals", "bp_goff", "bp_key", "bp_cand",
-                  "m2o_char", "m2o_cand", "m2o_pos", "m2o_prev", "m2o_rhalf",
-                  "m2o_grp", "m2o_goff", "m3_key", "m3_cand", "m3_hvals"):
+                  "m2o_pos", "m2o_goff", "m3_key", "m3_cand", "m3_hvals"):
             d[f] = None
         d["b_maxp"] = 0
         d["b2_maxp"] = 0
@@ -356,50 +347,21 @@ def _ensure_aux(model: CandidateModel) -> None:
     model.m2_len = glen[multi]
 
 
-# sentinel "previous occurrence" for each group's first occurrence: below
-# any possible window floor (positions are >= 0, floors are >= -len/2)
-_M2O_PREV_SENTINEL = np.int32(-(1 << 30))
-
-
 def _ensure_m2occ(model: CandidateModel) -> None:
-    """Per-occurrence expansion of the multi-occurrence groups (lazy):
-    (char, cand, pos, prev-pos-in-group, cand length) per occurrence,
-    (char, cand, pos)-sorted by construction — the closed-form emission
-    for once-occurring input chars scans these as contiguous slices."""
-    if model.m2o_char is not None:
+    """Per-occurrence positions of the multi-occurrence groups (lazy),
+    (char, cand, pos)-sorted by construction, and each group's offset into
+    them — the resume-cursor walk reads these as contiguous slices."""
+    if model.m2o_pos is not None:
         return
     _ensure_aux(model)
     counts = (model.m2_end.astype(np.int64) - model.m2_start)
-    total = int(counts.sum())
-    model.m2o_char = np.repeat(model.m2_char, counts)
-    model.m2o_cand = np.repeat(model.m2_cand, counts)
-    # half-window radius from the candidate length alone: the query-time
-    # radius is max(this, r_in) — both sides are the same monotone
-    # max((L>>1)-1, 0) form, so the max picks the longer of cand/input
-    lens = np.repeat(model.m2_len, counts)
-    model.m2o_rhalf = np.maximum((lens >> 1) - np.int32(1), np.int32(0))
-    model.m2o_grp = np.repeat(
-        np.arange(len(counts), dtype=np.int64), counts
-    )
     goff = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=goff[1:])
     model.m2o_goff = goff
-    if total:
-        excl = np.zeros(len(counts), dtype=np.int64)
-        np.cumsum(counts[:-1], out=excl[1:])
-        ridx = np.arange(total, dtype=np.int64) + np.repeat(
-            model.m2_start.astype(np.int64) - excl, counts
-        )
-        pos = model.pos_flat[ridx].astype(np.int32, copy=False)
-        prev = np.empty(total, dtype=np.int32)
-        prev[1:] = pos[:-1]
-        prev[0] = _M2O_PREV_SENTINEL
-        prev[excl] = _M2O_PREV_SENTINEL  # each group's first occurrence
-        model.m2o_pos = pos
-        model.m2o_prev = prev
-    else:
-        model.m2o_pos = np.empty(0, dtype=np.int32)
-        model.m2o_prev = np.empty(0, dtype=np.int32)
+    ridx = np.arange(int(goff[-1]), dtype=np.int64) + np.repeat(
+        model.m2_start.astype(np.int64) - goff[:-1], counts
+    )
+    model.m2o_pos = model.pos_flat[ridx].astype(np.int32, copy=False)
 
 
 def _ensure_m3(model: CandidateModel) -> None:
@@ -407,37 +369,44 @@ def _ensure_m3(model: CandidateModel) -> None:
     multi-occurrence occurrences (see the m3_* field comment).
 
     Keys pack ((char * NH + class) * P + pos) * (P + 2) + pv where pv = 0
-    for each group's first occurrence (prev = -inf sentinel: it always
+    for each group's first occurrence (no previous occurrence: it always
     satisfies prev < i0 - r) and prev + 1 otherwise.  Within a bucket the
     greedy "first occurrence in window" hits are exactly the keys with
     pv < max(i0 - r, 0) + 1 — a prefix.  Classes are distinct rhalf
     values, so r = max(class, r_in) is constant per bucket; long-text
-    models with many classes refuse the build (m3_maxp = -1) and keep the
-    closed-form range scan."""
+    models with many classes refuse the build (m3_maxp = -1) and take the
+    resume-cursor walk."""
     if model.m3_maxp != 0:
         return
     _ensure_m2occ(model)
-    if not len(model.m2o_char):
+    pos, goff = model.m2o_pos, model.m2o_goff
+    if not len(pos):
         model.m3_maxp = -1
         return
-    hvals = np.unique(model.m2o_rhalf)
+    counts = np.diff(goff)
+    # half-window radius from the candidate length alone: the query-time
+    # radius is max(this, r_in) — both sides are the same monotone
+    # max((L>>1)-1, 0) form, so the max picks the longer of cand/input
+    lens = np.repeat(model.m2_len, counts)
+    rhalf = np.maximum((lens >> 1) - np.int32(1), np.int32(0))
+    hvals = np.unique(rhalf)
     NH = len(hvals)
     P = int(model.pos_flat.max()) + 1
     PP = P + 2
-    maxc = int(model.m2o_char.max())
+    maxc = int(model.m2_char.max())
     if NH > 64 or (maxc + 1) * NH * P * PP >= (1 << 62):
         model.m3_maxp = -1
         return
-    hi = np.searchsorted(hvals, model.m2o_rhalf).astype(np.int64)
-    pv = np.where(
-        model.m2o_prev < 0, np.int64(0), model.m2o_prev.astype(np.int64) + 1
-    )
-    key = (
-        (model.m2o_char.astype(np.int64) * NH + hi) * P + model.m2o_pos
-    ) * PP + pv
+    hi = np.searchsorted(hvals, rhalf).astype(np.int64)
+    pv = np.empty(len(pos), dtype=np.int64)
+    pv[1:] = pos[:-1]
+    pv += 1
+    pv[goff[:-1]] = 0  # each group's first occurrence
+    char = np.repeat(model.m2_char, counts).astype(np.int64)
+    key = ((char * NH + hi) * P + pos) * PP + pv
     order = np.argsort(key)
     model.m3_key = key[order]
-    model.m3_cand = model.m2o_cand[order]
+    model.m3_cand = np.repeat(model.m2_cand, counts)[order]
     model.m3_hvals = hvals.astype(np.int64)
     model.m3_maxp = P
 
@@ -592,8 +561,7 @@ def _length_band(model: CandidateModel, input_len: int, s_floor: float, w: float
     reach ``s_floor``: jaro <= (m/li + m/lc + 1)/3 with m = min(li, lc), so
     lc must lie in [li*(3s-2), li/(3s-2)] when s > 2/3 (with the max
     possible winkler bonus backed out first).  Internal ids are length
-    ranks, so the band is a slice — the DataFrame-level corollary is the
-    length prefilter in verify_pairs (SURVEY.md R1)."""
+    ranks, so the band is a slice."""
     n = model.nb_candidates
     s = float(s_floor)
     if w >= 0.0:
@@ -633,17 +601,22 @@ def _scan(
     arrays; ``detail=False`` → only the matched-candidate id arrays (for
     match COUNTS — selective passes recover transpositions per survivor).
 
-    One pass per DISTINCT input char over that char's contiguous group
-    range: single-occurrence groups (the overwhelming majority in web text)
-    resolve in closed form — the single candidate position p is matched by
-    the first input occurrence i with p ∈ [i-r, i+r], i.e. the first i >=
-    p-r (earlier occurrences can never have consumed p: consumption needs
-    p < i'-r, impossible for i' < i) — so two compares (or one vectorized
-    searchsorted when the char repeats in the input) replace the
-    per-input-char cursor loop.  Multi-occurrence groups keep the exact
-    resume-cursor walk, vectorized over just those groups.  All per-group
-    reads (size, candidate length, first position) are sequential slices
-    of compile-time arrays.
+    One index and one fallback per occurrence table:
+
+    * single-occurrence groups (the overwhelming majority in web text):
+      the candidate position p is matched by the first input occurrence
+      i >= p-r inside the window (earlier occurrences can never have
+      consumed p: consumption needs p < i'-r, impossible for i' < i).
+      Models with ``_BUCKET_MIN_RECORDS`` such groups scan the (char, pos,
+      cand) bucket index (``b_*``); smaller ones compare each distinct
+      input char's band slice directly.
+    * multi-occurrence groups: once-occurring input chars read the m3
+      first-in-window index when it is built; every other char takes the
+      exact resume-cursor walk, vectorized over the band's groups.
+
+    Counts mode with the bucket index counts once-occurring input chars
+    against every group at once through the ``b2_*`` occurrence and
+    ``bp_*`` adjacent-pair indexes (``mneg`` carries the subtractions).
     """
     mc_l: list[np.ndarray] = []
     mi_l: list[np.ndarray] = []
@@ -653,15 +626,13 @@ def _scan(
     if not input_len or not len(model.group_char):
         return mc_l, mi_l, mp_l, mch_l, mneg_l
     _ensure_aux(model)
+    _ensure_m2occ(model)
     s_char, s_cand, s_pos, s_len = model.s_char, model.s_cand, model.s_pos, model.s_len
-    m2_char, m2_cand = model.m2_char, model.m2_cand
-    m2_start, m2_end, m2_len = model.m2_start, model.m2_end, model.m2_len
-    pos_flat = model.pos_flat
-    pf_last = len(pos_flat) - 1
+    m2_char, m2_cand, m2_len = model.m2_char, model.m2_cand, model.m2_len
+    m2o_goff, m2o_pos = model.m2o_goff, model.m2o_pos
     Li = int(input_len)
     r_in = Li // 2
     r_in = 0 if r_in <= 1 else r_in - 1  # scalar window when cand_len <= Li
-    have_multi = len(m2_char) > 0
 
     # distinct input chars with their ascending position lists
     order = np.argsort(in_codes_all, kind="stable").astype(np.int32)
@@ -692,43 +663,7 @@ def _scan(
     # uint8/uint16 instead of uint32 (4x less scatter/gather traffic)
     ord_dtype = np.uint16 if input_len <= 0xFFFF else np.uint32
 
-    def emit_single(g0: int, g1: int, r, ch_ord, I, nI: int, i0: int):
-        p = s_pos[g0:g1]
-        if nI == 1:
-            # the only input occurrence either fits or not: |p - i0| <= r
-            ok = np.abs(p - np.int32(i0)) <= r
-            jj = None
-        else:
-            j = np.searchsorted(I, p - r, side="left")
-            ok = j < nI
-            jj = np.minimum(j, nI - 1)
-            ok &= I[jj] <= p + r
-        hits = s_cand[g0:g1][ok]
-        if len(hits):
-            mc_l.append(hits)
-            if detail:
-                mi_l.append(
-                    np.full(len(hits), i0, dtype=np.int32)
-                    if jj is None
-                    else I[jj[ok]]
-                )
-                mp_l.append(p[ok])
-                mch_l.append(np.full(len(hits), ch_ord, dtype=ord_dtype))
-
-    # --- batched single-occurrence emission over ALL distinct chars ---
-    # when the scan covers the full id range (min_score ~0: the length
-    # band prunes nothing), the per-char band searchsorted is a no-op and
-    # every single-occurrence group of every input char can be evaluated
-    # in ONE vectorized pass over the concatenated group ranges, instead
-    # of 2 emit calls per char.  Chars repeated in the input (nI > 1)
-    # still take the per-char path below.
     n_ids = len(model.lengths)
-    full_band = (
-        len(id_slices) == 1
-        and id_slices[0][0] <= 0
-        and id_slices[0][1] >= n_ids
-    )
-    batched = np.zeros(len(starts), dtype=bool)
     m2_done = np.zeros(len(starts), dtype=bool)
     use_b = use_b2 = False
     if len(s_char) >= _BUCKET_MIN_RECORDS:
@@ -856,7 +791,6 @@ def _scan(
                             model.bp_key[k0:k1], model.bp_cand[k0:k1],
                             (np.repeat(ch1, wsz2) * P2 + p2) * S, thr2, mneg_l,
                         )
-                batched[e1] = True
                 m2_done[e1] = True
 
         # ---- single-occurrence-table path: detail mode (once-occurring
@@ -894,16 +828,15 @@ def _scan(
                         mi_l.append(np.repeat(i0_all, sizes).astype(np.int32))
                         mp_l.append(np.repeat(p_all, sizes).astype(np.int32))
                         mch_l.append(np.repeat(ords, sizes).astype(ord_dtype))
-        batched[e_idx] = True
         # ---- REPEATED input chars, detail mode (round 6): the greedy
         # match of a single-occurrence group at position p goes to the
         # FIRST input occurrence I_j inside its window, i.e. to I_j iff
         # r ∈ [max(|p - I_j|, 0), p - I_{j-1})  — and r(id) is
         # nondecreasing in id (length ranks), so per (p, j) the matching
         # ids are ONE contiguous thr_of_d range of each (char, p) bucket.
-        # A few dozen binary-searched slices replace emit_single's full
-        # char-segment passes (the prior detail cost for common repeated
-        # chars like 'e': several passes over ~10^5 records each).
+        # A few dozen binary-searched slices replace full passes over the
+        # char segment (for common repeated chars like 'e': several
+        # passes over ~10^5 records each).
         if detail and max_len:
             rep = np.flatnonzero(~n1)
             if len(rep):
@@ -953,238 +886,140 @@ def _scan(
                                 np.repeat(p_arr, sizes).astype(np.int32)
                             )
                             mch_l.append(np.full(tot, ci, dtype=ord_dtype))
-                batched[rep] = True
-    elif full_band and len(starts) > 3:
-        nIs = ends - starts
-        batched = nIs == 1
-        u = sorted_chars[starts[batched]]
-        c0s = np.searchsorted(s_char, u, side="left")
-        c1s = np.searchsorted(s_char, u, side="right")
-        sizes = c1s - c0s
-        total = int(sizes.sum())
-        if total:
-            excl = np.zeros(len(sizes), dtype=np.int64)
-            np.cumsum(sizes[:-1], out=excl[1:])
-            # int32 record indices: the occurrence table is < 2^31 rows,
-            # and 32-bit gather indices halve the take() traffic
-            ridx = np.arange(total, dtype=np.int32) + np.repeat(
-                (c0s - excl).astype(np.int32), sizes
-            )
-            p = s_pos.take(ridx)
-            cands = s_cand.take(ridx)
-            lens = s_len.take(ridx)
-            # each batched char occurs once: its position is order[start]
-            i0_rec = np.repeat(order[starts[batched]], sizes)
-            rr = np.where(
-                lens <= Li,
-                np.int32(r_in),
-                np.maximum((lens >> 1) - np.int32(1), np.int32(0)),
-            )
-            ok = np.abs(p - i0_rec) <= rr
-            if ok.any():
-                mc_l.append(cands[ok])
-                if detail:
-                    mi_l.append(i0_rec[ok])
-                    mp_l.append(p[ok])
-                    ords = np.repeat(
-                        np.flatnonzero(batched).astype(ord_dtype), sizes
-                    )
-                    mch_l.append(ords[ok])
 
-    # --- batched multi-occurrence closed form for ONCE-occurring input
-    # chars: a single input occurrence has no cursor interaction, so the
+    # --- multi-occurrence groups of ONCE-occurring input chars, big
+    # tables: a single input occurrence has no cursor interaction, so the
     # greedy match of a group is its first occurrence inside the window —
     # occurrence o matches iff pos_o in [i0-r, i0+r] and prev_o < i0-r
-    # (prev = sentinel on each group's first occurrence).  One branchless
-    # pass over the chars' occurrence ranges replaces the resume-cursor
-    # walk, which costs several full-range passes per input char.
-    if have_multi:
-        m2b = np.flatnonzero((ends - starts == 1) & ~m2_done)
-        if len(m2b):
-            _ensure_m2occ(model)
-            # big tables: the (char, class, pos, prev)-bucketed index
-            # turns each char's emission into ~NH*(2r+1) binary-searched
-            # prefix slices (gathering only actual hits) instead of ~7
-            # full passes over the char's whole occurrence range —
-            # measured ~36% of min00 collect time on the word corpus
-            if len(model.m2o_char) >= _BUCKET_MIN_RECORDS and model.m3_maxp == 0:
-                _ensure_m3(model)
-            if model.m3_maxp > 0:
-                m3k, m3c = model.m3_key, model.m3_cand
-                hv = model.m3_hvals
-                NH = len(hv)
-                P3 = model.m3_maxp
-                PP = P3 + 2
-                Rh = np.maximum(hv, r_in)
-                # sentinel-inclusive prefix bound: pv < max(i0-R, 0) + 1
-                for ci in m2b:
-                    ch3 = int(sorted_chars[starts[ci]])
-                    i0c3 = int(order[starts[ci]])
-                    w0 = np.maximum(i0c3 - Rh, 0)
-                    w1 = np.minimum(i0c3 + Rh, P3 - 1)
-                    wsz3 = np.maximum(w1 - w0 + 1, 0)
-                    tot3 = int(wsz3.sum())
-                    if not tot3:
-                        continue
-                    exw3 = np.zeros(NH, dtype=np.int64)
-                    np.cumsum(wsz3[:-1], out=exw3[1:])
-                    p3 = np.arange(tot3, dtype=np.int64) + np.repeat(
-                        w0 - exw3, wsz3
-                    )
-                    h3 = np.repeat(np.arange(NH, dtype=np.int64), wsz3)
-                    ub3 = np.repeat(np.maximum(i0c3 - Rh, 0) + 1, wsz3)
-                    base3 = ((np.int64(ch3) * NH + h3) * P3 + p3) * PP
-                    A3 = np.searchsorted(m3k, base3)
-                    B3 = np.searchsorted(m3k, base3 + ub3)
-                    sizes3 = B3 - A3
-                    stot = int(sizes3.sum())
-                    if not stot:
-                        continue
-                    exc3 = np.zeros(len(sizes3), dtype=np.int64)
-                    np.cumsum(sizes3[:-1], out=exc3[1:])
-                    ridx3 = np.arange(stot, dtype=np.int64) + np.repeat(
-                        A3 - exc3, sizes3
-                    )
-                    hits_all = m3c.take(ridx3)
-                    pos_all = np.repeat(p3, sizes3).astype(np.int32)
-                    for lo, hi_b in id_slices:
-                        if lo >= hi_b:
-                            continue
-                        if lo <= 0 and hi_b >= n_ids:
-                            hits3, hpos3 = hits_all, pos_all
-                        else:
-                            sel3 = (hits_all >= lo) & (hits_all < hi_b)
-                            hits3 = hits_all[sel3]
-                            hpos3 = pos_all[sel3]
-                        if not len(hits3):
-                            continue
-                        mc_l.append(hits3)
-                        if detail:
-                            mi_l.append(
-                                np.full(len(hits3), i0c3, dtype=np.int32)
-                            )
-                            mp_l.append(hpos3)
-                            mch_l.append(
-                                np.full(len(hits3), ci, dtype=ord_dtype)
-                            )
-                m2_done[m2b] = True
-        m2b = np.flatnonzero((ends - starts == 1) & ~m2_done)
-        if len(m2b):
-            mo_char, mo_cand = model.m2o_char, model.m2o_cand
-            mo_pos, mo_prev = model.m2o_pos, model.m2o_prev
-            mo_rhalf = model.m2o_rhalf
-            r_in32 = np.int32(r_in)
-            for ci in m2b:
-                ch = sorted_chars[starts[ci]]
-                chpair = np.asarray([ch, ch + 1], dtype=mo_char.dtype)
-                C0, C1 = np.searchsorted(mo_char, chpair, side="left")
-                if C0 == C1:
+    # (prev = sentinel on each group's first occurrence), a prefix of
+    # each (char, class, pos) bucket of the m3 index.  Chars it does not
+    # cover take the resume-cursor walk below.
+    m2b = np.flatnonzero((ends - starts == 1) & ~m2_done)
+    if len(m2b) and len(m2o_pos) >= _BUCKET_MIN_RECORDS and model.m3_maxp == 0:
+        _ensure_m3(model)
+    if len(m2b) and model.m3_maxp > 0:
+        m3k, m3c = model.m3_key, model.m3_cand
+        hv = model.m3_hvals
+        NH = len(hv)
+        P3 = model.m3_maxp
+        PP = P3 + 2
+        Rh = np.maximum(hv, r_in)
+        # sentinel-inclusive prefix bound: pv < max(i0-R, 0) + 1
+        for ci in m2b:
+            ch3 = int(sorted_chars[starts[ci]])
+            i0c3 = int(order[starts[ci]])
+            w0 = np.maximum(i0c3 - Rh, 0)
+            w1 = np.minimum(i0c3 + Rh, P3 - 1)
+            wsz3 = np.maximum(w1 - w0 + 1, 0)
+            tot3 = int(wsz3.sum())
+            if not tot3:
+                continue
+            exw3 = np.zeros(NH, dtype=np.int64)
+            np.cumsum(wsz3[:-1], out=exw3[1:])
+            p3 = np.arange(tot3, dtype=np.int64) + np.repeat(
+                w0 - exw3, wsz3
+            )
+            h3 = np.repeat(np.arange(NH, dtype=np.int64), wsz3)
+            ub3 = np.repeat(np.maximum(i0c3 - Rh, 0) + 1, wsz3)
+            base3 = ((np.int64(ch3) * NH + h3) * P3 + p3) * PP
+            A3 = np.searchsorted(m3k, base3)
+            B3 = np.searchsorted(m3k, base3 + ub3)
+            sizes3 = B3 - A3
+            stot = int(sizes3.sum())
+            if not stot:
+                continue
+            exc3 = np.zeros(len(sizes3), dtype=np.int64)
+            np.cumsum(sizes3[:-1], out=exc3[1:])
+            ridx3 = np.arange(stot, dtype=np.int64) + np.repeat(
+                A3 - exc3, sizes3
+            )
+            hits_all = m3c.take(ridx3)
+            pos_all = np.repeat(p3, sizes3).astype(np.int32)
+            for lo, hi_b in id_slices:
+                if lo >= hi_b:
                     continue
-                i0c = np.int32(order[starts[ci]])
-                for lo, hi in id_slices:
-                    if lo >= hi:
-                        continue
-                    g0, g1 = C0 + np.searchsorted(
-                        mo_cand[C0:C1],
-                        np.asarray([lo, hi], dtype=mo_cand.dtype),
-                        side="left",
+                if lo <= 0 and hi_b >= n_ids:
+                    hits3, hpos3 = hits_all, pos_all
+                else:
+                    sel3 = (hits_all >= lo) & (hits_all < hi_b)
+                    hits3 = hits_all[sel3]
+                    hpos3 = pos_all[sel3]
+                if not len(hits3):
+                    continue
+                mc_l.append(hits3)
+                if detail:
+                    mi_l.append(
+                        np.full(len(hits3), i0c3, dtype=np.int32)
                     )
-                    if g0 >= g1:
-                        continue
-                    # contiguous slice views: no gathers, ~7 int32 passes
-                    rr = np.maximum(mo_rhalf[g0:g1], r_in32)
-                    lo_w = i0c - rr
-                    pos = mo_pos[g0:g1]
-                    ok = pos >= lo_w
-                    ok &= pos <= i0c + rr
-                    ok &= mo_prev[g0:g1] < lo_w
-                    hits = mo_cand[g0:g1][ok]
-                    if len(hits):
-                        mc_l.append(hits)
-                        if detail:
-                            mi_l.append(
-                                np.full(len(hits), i0c, dtype=np.int32)
-                            )
-                            mp_l.append(pos[ok])
-                            mch_l.append(
-                                np.full(len(hits), ci, dtype=ord_dtype)
-                            )
-            m2_done[m2b] = True
+                    mp_l.append(hpos3)
+                    mch_l.append(
+                        np.full(len(hits3), ci, dtype=ord_dtype)
+                    )
+        m2_done[m2b] = True
 
-    for ch_ord, (s0, s1) in enumerate(zip(starts, ends)):
-        ch = sorted_chars[s0]
+    # each distinct char's segment of the two (char, cand)-sorted tables,
+    # and the id slices as search needles (value dtypes MUST match the
+    # table dtypes: a mismatch makes searchsorted cast the whole haystack)
+    u = sorted_chars[starts].astype(s_char.dtype, copy=False)
+    segs = zip(
+        np.searchsorted(s_char, u, side="left").tolist(),
+        np.searchsorted(s_char, u, side="right").tolist(),
+        np.searchsorted(m2_char, u, side="left").tolist(),
+        np.searchsorted(m2_char, u, side="right").tolist(),
+    )
+    bands = [
+        np.asarray([lo, hi], dtype=s_cand.dtype) for lo, hi in id_slices if lo < hi
+    ]
+    for ch_ord, (s0, s1, (c0, c1, G0, G1)) in enumerate(zip(starts, ends, segs)):
         I = order[s0:s1]  # stable argsort → ascending input positions
         nI = int(s1 - s0)
         i0 = int(I[0])
-        # value dtypes MUST match the array dtypes: a mismatch makes
-        # searchsorted cast the whole haystack per call
-        chpair = np.asarray([ch, ch + 1], dtype=s_char.dtype)
-        # --- single-occurrence groups (skip chars already emitted by the
-        # batched full-band pass above) ---
-        c0, c1 = np.searchsorted(s_char, chpair, side="left")
-        if batched[ch_ord]:
-            c0 = c1
-        if c0 < c1:
-            seg = s_cand[c0:c1]
-            for lo, hi in id_slices:
-                if lo >= hi:
-                    continue
-                # s_cand ascending within the char segment: band slice
-                g0, g1 = (
-                    c0
-                    + np.searchsorted(
-                        seg, np.asarray([lo, hi], dtype=seg.dtype), side="left"
-                    )
-                )
-                if g0 == g1:
-                    continue
-                # ids are length ranks → s_len ascending: split at cand_len
-                # <= Li (scalar window r_in) vs > Li (vector window)
-                mid = g0 + int(np.searchsorted(s_len[g0:g1], Li, side="right"))
-                if g0 < mid:
-                    emit_single(g0, mid, np.int32(r_in), ch_ord, I, nI, i0)
-                if mid < g1:
-                    # "0 if r <= 1 else r - 1" == max(r - 1, 0): one pass
-                    r = np.maximum((s_len[mid:g1] >> 1) - np.int32(1), np.int32(0))
-                    emit_single(mid, g1, r, ch_ord, I, nI, i0)
-        # --- multi-occurrence groups (repeated input chars): exact greedy
-        # cursor semantics, vectorized per input occurrence — the cursor
-        # advance "skip occurrences below the window floor" is
-        # cur = max(cur, first-occurrence-with-pos >= lo_w), and that
-        # boundary occurrence is found branchlessly over the contiguous
-        # occurrence slice ((pos >= lo_w) & (prev < lo_w) is unique per
-        # group), replacing the repeated random pos_flat gathers of the
-        # old while-loop walk.
-        if not have_multi or m2_done[ch_ord]:
-            continue
-        _ensure_m2occ(model)
-        mo_cand2 = model.m2o_cand
-        G0, G1 = np.searchsorted(m2_char, chpair, side="left")
-        if G0 == G1:
-            continue
-        goff = model.m2o_goff
-        for lo, hi in id_slices:
-            if lo >= hi:
-                continue
-            g0, g1 = (
-                G0
-                + np.searchsorted(
-                    m2_cand[G0:G1],
-                    np.asarray([lo, hi], dtype=m2_cand.dtype),
-                    side="left",
-                )
-            )
+        # --- single-occurrence groups of models without the bucket index
+        for band in () if use_b or c0 == c1 else bands:
+            # s_cand ascending within the char segment: band slice
+            g0, g1 = c0 + np.searchsorted(s_cand[c0:c1], band, side="left")
             if g0 == g1:
                 continue
-            C0, C1 = int(goff[g0]), int(goff[g1])
-            st = goff[g0:g1] - C0
-            en = goff[g0 + 1 : g1 + 1] - C0
-            posw = model.m2o_pos[C0:C1]
-            rr_g = np.maximum(
-                np.maximum((m2_len[g0:g1] >> 1) - np.int32(1), np.int32(0)),
-                np.int32(r_in),
-            )
-            cur = st.copy()
+            # window max((max(len, Li) >> 1) - 1, 0): both sides are
+            # monotone, so it is max(len's own half-window, r_in)
+            r = np.maximum((s_len[g0:g1] >> 1) - np.int32(1), np.int32(r_in))
+            p = s_pos[g0:g1]
+            if nI == 1:
+                # the only input occurrence either fits or not
+                ok = np.abs(p - np.int32(i0)) <= r
+            else:
+                # the first input occurrence at or above p - r
+                j = np.searchsorted(I, p - r, side="left")
+                ok = j < nI
+                jj = np.minimum(j, nI - 1)
+                ok &= I[jj] <= p + r
+            hits = s_cand[g0:g1][ok]
+            if len(hits):
+                mc_l.append(hits)
+                if detail:
+                    mi_l.append(
+                        np.full(len(hits), i0, dtype=np.int32)
+                        if nI == 1
+                        else I[jj[ok]]
+                    )
+                    mp_l.append(p[ok])
+                    mch_l.append(np.full(len(hits), ch_ord, dtype=ord_dtype))
+        # --- multi-occurrence groups not covered above: exact greedy
+        # resume-cursor semantics, vectorized over the band's groups per
+        # input occurrence — each cursor skips the occurrences below the
+        # window floor, then matches if it sits inside the window.  Reads
+        # are contiguous slices of the per-occurrence positions.
+        if m2_done[ch_ord] or G0 == G1:
+            continue
+        for band in bands:
+            g0, g1 = G0 + np.searchsorted(m2_cand[G0:G1], band, side="left")
+            if g0 == g1:
+                continue
+            C0, C1 = int(m2o_goff[g0]), int(m2o_goff[g1])
+            cur = m2o_goff[g0:g1] - C0
+            en = m2o_goff[g0 + 1 : g1 + 1] - C0
+            posw = m2o_pos[C0:C1]
+            rr_g = np.maximum((m2_len[g0:g1] >> 1) - np.int32(1), np.int32(r_in))
             cm = m2_cand[g0:g1]
             last = C1 - C0 - 1
             for i_pos in I:
@@ -1664,9 +1499,9 @@ def _emit_zero_matches(idx, sc, m, required, eff_min, dtype):
 # per-survivor scalar transpositions; below it, detail mode is cheaper
 _COUNTS_MODE_FLOOR = 0.7
 # ... but only for short inputs: scalar transposition walks cost
-# ~(|input| + |cand|) char-ops per survivor, so long-text workloads
-# (pipeline verify_pairs: ~200-char near-dups where most candidates
-# survive) are 2-3x faster on the vectorized detail path
+# ~(|input| + |cand|) char-ops per survivor, so long inputs whose
+# candidates mostly survive (measured on ~200-char near-duplicate texts)
+# ran 2-3x faster on the vectorized detail path
 _COUNTS_MODE_MAX_LEN = 64
 # survivor budget for the per-survivor transposition walk, in char-ops
 # (survivors × (input_len + cand_len)): above it, fall back to a

@@ -9,8 +9,9 @@ from shared storage execute arbitrary code* (VERDICT_r5 #3), so this
 module mirrors the reference's design instead: a fixed little-endian
 header + length-prefixed raw numpy buffers in a canonical field order,
 and a parser that validates every structural invariant before
-constructing a :class:`CandidateModel`.  Pickle remains purely an
-internal Spark-broadcast optimization (never fed attacker-shaped bytes).
+constructing a :class:`CandidateModel`.  No Spark path ships a model
+(``score_topk`` compiles one inside each cell); pickling stays an
+in-process convenience that is never fed attacker-shaped bytes.
 
 Layout v1 (all little-endian):
 

@@ -100,8 +100,6 @@ def partition_substring_pairs(
     # run-length to next separator
     is_sep = buf >= _SEP
     # distance to next separator (inclusive scan from the right)
-    dist = np.zeros(n, dtype=np.int64)
-    next_sep = n
     sep_pos = np.flatnonzero(is_sep)
     next_sep_of = np.full(n, n, dtype=np.int64)
     if len(sep_pos):

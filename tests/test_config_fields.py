@@ -1,8 +1,10 @@
 """Every DedupConfig field must be read by package code: an unread field
 still changes ``config_hash()`` (invalidating checkpoints for nothing) and
 is offered by ``scripts/run_pipeline.py --set`` as if it did something.
-Likewise every defaulted parameter of a public package function must be
-passed by some caller outside the tests."""
+Every CandidateModel field must be read too: an unread index array is
+memory and build time spent for nothing.  Likewise every defaulted
+parameter of a public package function must be passed by some caller
+outside the tests."""
 
 from __future__ import annotations
 
@@ -11,20 +13,35 @@ import dataclasses
 from pathlib import Path
 
 import batch_jaro_winkler_spark
+from batch_jaro_winkler_spark.kernel import CandidateModel
 from batch_jaro_winkler_spark.operators.config import DedupConfig
 
 
-def test_every_config_field_is_read():
+def _attribute_loads(skip=()) -> set[str]:
+    """Names loaded as attributes (``x.name``) anywhere in the package;
+    stores and string mentions (``__getstate__``'s name tuple) do not
+    count."""
     root = Path(batch_jaro_winkler_spark.__file__).parent
     reads: set[str] = set()
     for path in root.rglob("*.py"):
-        if path == root / "operators" / "config.py":
+        if path.relative_to(root).as_posix() in skip:
             continue
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
                 reads.add(node.attr)
+    return reads
+
+
+def test_every_config_field_is_read():
+    reads = _attribute_loads(skip=("operators/config.py",))
     unread = [f.name for f in dataclasses.fields(DedupConfig) if f.name not in reads]
     assert not unread, f"DedupConfig fields no package code reads: {unread}"
+
+
+def test_every_model_field_is_read():
+    reads = _attribute_loads()
+    unread = [f.name for f in dataclasses.fields(CandidateModel) if f.name not in reads]
+    assert not unread, f"CandidateModel fields no package code reads: {unread}"
 
 
 # Defaulted parameters that no non-test caller passes, kept on purpose.

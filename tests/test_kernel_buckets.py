@@ -17,7 +17,7 @@ import random
 import numpy as np
 import pytest
 
-from batch_jaro_winkler_spark.kernel import build_model, score
+from batch_jaro_winkler_spark.kernel import build_model, score, score_pair
 from batch_jaro_winkler_spark.kernel import bjw
 from batch_jaro_winkler_spark.kernel.oracle import jaro
 
@@ -120,5 +120,51 @@ def test_bucketed_scan_matches_unbucketed(mode, monkeypatch):
         assert bucketed.b2_maxp == bucketed.b_maxp
     if mode == "detail":
         # the detail full-emission pass must have engaged the m3
-        # first-in-window index (round 6), not the closed-form range scan
+        # first-in-window index (round 6), not the resume-cursor walk
         assert bucketed.m3_maxp > 0
+
+
+def test_refused_m3_falls_back_to_cursor_walk(monkeypatch):
+    """Models whose multi-occurrence groups span more than 64 half-window
+    classes refuse the m3 first-in-window index (m3_maxp = -1); their
+    once-occurring input chars then take the resume-cursor walk.  Detail,
+    counts and n_best results must still equal the float32 single-pair
+    reference exactly, and the textbook oracle within tolerance."""
+    rng = random.Random(11)
+    alphabet = "abcdefghЁЂ"  # narrow: every long candidate repeats chars
+    cands = sorted(
+        {
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(2, 300)))
+            for _ in range(400)
+        }
+    )
+    short = [c for c in cands if len(c) <= 40]
+    probes = [rng.choice(short) for _ in range(3)] + [
+        "abcdЁ",  # every char once
+        "aabbcЂdd",  # repeated and once-occurring chars
+        "".join(rng.choice(alphabet) for _ in range(30)),
+        "hgfedcbaa" * 4,
+    ]
+    monkeypatch.setattr(bjw, "_BUCKET_MIN_RECORDS", 64)
+    monkeypatch.setattr(bjw, "_COUNTS_MODE_MIN_CANDS", 1)
+    model = build_model(list(cands))
+    kw = dict(weight=None, threshold=None)
+    for probe in probes:
+        exp = np.array([score_pair(probe, c, **kw) for c in cands], dtype=np.float32)
+        for c, e in zip(cands, exp):
+            assert abs(float(e) - jaro(probe, c)) < TOL, (probe, c)
+
+        idx, sc = score(model, probe, min_score=0.0, **kw)  # detail
+        np.testing.assert_array_equal(idx, np.arange(len(cands)))
+        np.testing.assert_array_equal(sc, exp, err_msg=probe)
+
+        idx, sc = score(model, probe, min_score=0.72, **kw)  # counts
+        want = np.flatnonzero(exp >= np.float32(0.72))
+        np.testing.assert_array_equal(np.sort(idx), want, err_msg=probe)
+        np.testing.assert_array_equal(sc[np.argsort(idx)], exp[want], err_msg=probe)
+
+        idx, sc = score(model, probe, n_best=10, **kw)
+        top = np.lexsort((np.arange(len(cands)), -exp))[:10]
+        np.testing.assert_array_equal(idx, top, err_msg=probe)
+        np.testing.assert_array_equal(sc, exp[top], err_msg=probe)
+    assert model.m3_maxp == -1  # the index was attempted and refused
