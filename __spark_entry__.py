@@ -507,9 +507,11 @@ def _dedup_substring_exact(spark, sf_dir):
     """Suffix-array exact-substring detection (operators/suffix_array.py)
     against a DuckDB gram-intersection oracle: pairs (a < b) of _sub_docs
     sharing a verbatim >= 200-normalized-char substring.  The operator
-    emits every pair per equality class, so its output IS the shared-gram
-    relation the SQL computes; single partition keeps the
-    (partition-local) operator exact over the whole capped set."""
+    sorts every 200-char window by its rolling hash, refines the shared
+    keys to exact window classes and emits every pair per class, so its
+    output IS the shared-gram relation the SQL computes; single partition
+    keeps the (partition-local) operator exact over the whole capped
+    set."""
     from batch_jaro_winkler_spark.operators.config import DedupConfig
     from batch_jaro_winkler_spark.operators.suffix_array import suffix_array_edges
 
@@ -522,7 +524,7 @@ def _dedup_substring_parts(spark, sf_dir):
     """The CROSS-PARTITION variant (VERDICT_r2 #6): same oracle relation,
     but the input arrives in 8 doc_id-hashed partitions and
     ``co_partition=True`` must reunite duplicates via the min-gram content
-    key before the partition-local suffix arrays run.  Exact here because
+    key before the partition-local window sorts run.  Exact here because
     every planted pair is a verbatim copy (identical content key); the
     raw docs share nothing, so stray partial overlaps cannot split."""
     from batch_jaro_winkler_spark.operators.config import DedupConfig

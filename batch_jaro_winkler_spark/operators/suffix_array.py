@@ -2,10 +2,10 @@
 
 The exact-substring companion to operators/fingerprint_dedup.py: where
 mod-sampling is probabilistic (misses a >=200-char overlap with p~0.8%),
-the suffix-array path is exact *within a partition*: build one suffix
-array over the partition's concatenated normalized text (numpy argsort on
-fixed-width gram keys, refined to full suffix order), walk adjacent
-suffixes, and emit every cross-document LCP >= min_len.
+the suffix-array path is exact *within a partition*: two documents share
+a verbatim substring of at least ``min_len`` chars exactly when they share
+a ``min_len``-char window, so it sorts every document's windows once by
+their rolling hash and pairs the documents of each exact window class.
 
 Scale shape: each partition is processed independently (mapInPandas, no
 shuffle); cross-partition duplicates are out of its reach, which is what
@@ -15,10 +15,11 @@ two ``dedup_substring_*`` queries only.  This mirrors the
 deduplicate-text-datasets design (Lee et al. 2022, PAPERS.md): suffix
 structures bounded per worker, never global.
 
-Kernel: radix-ish suffix ordering via numpy lexsort over k prefix code
-points (k = min_len suffices: suffixes equal in their first min_len chars
-are interchangeable for >=min_len overlap detection), then adjacent-pair
-LCP evaluation vectorized over the sorted order.
+Kernel: the windows are keyed with the fingerprint stage's Rabin-Karp
+rolling hash (a window never crosses a document, so no separator is
+needed) and argsorted once.  A key shared by fewer than two documents
+cannot pair; the other windows are compared with the first window of
+their key, code point by code point, so a hash collision never pairs.
 """
 
 from __future__ import annotations
@@ -32,25 +33,20 @@ from pyspark.sql import DataFrame, functions as F
 
 from batch_jaro_winkler_spark.functions.text import normalize_pandas
 from batch_jaro_winkler_spark.operators.config import DedupConfig
+from batch_jaro_winkler_spark.operators.fingerprint_dedup import _rolling_hashes
 
 __all__ = ["suffix_array_edges", "partition_substring_pairs"]
 
-# separator sentinel between documents: strictly ABOVE the Unicode range
-# (buffer is uint32), so no real code point — including U+FFFD and astral
-# plane chars common in un-normalized web text — is ever mistaken for one
-_SEP = 0x110000
-
-# elements cap for the run_len x min_len exact-prefix matrix; above it,
-# class ids are refined over bounded column blocks instead (degenerate
-# normalized text — long repeated boilerplate — can make one sampled-key
-# run cover most of a partition's suffixes)
+# elements cap for the m x min_len exact-prefix matrix; above it, class
+# ids are refined over bounded column blocks instead (only windows whose
+# key collides with a different window reach it)
 _PREFIX_MAT_CAP = 4_000_000
 
 
 def _exact_prefix_classes(buf: np.ndarray, idx: np.ndarray, min_len: int) -> np.ndarray:
-    """Class ids (0..k-1) grouping the suffixes at ``idx`` by their exact
-    first ``min_len`` code points.  Small runs materialize the full
-    run_len x min_len matrix; large runs refine incrementally over column
+    """Class ids (0..k-1) grouping the windows at ``idx`` by their exact
+    first ``min_len`` code points.  Small sets materialize the full
+    m x min_len matrix; large ones refine incrementally over column
     blocks so peak extra memory stays ~_PREFIX_MAT_CAP elements."""
     m = len(idx)
     if m * min_len <= _PREFIX_MAT_CAP:
@@ -73,80 +69,43 @@ def partition_substring_pairs(
 ) -> set[tuple[int, int]]:
     """Exact >=min_len cross-document substring pairs within one partition.
 
-    Builds the concatenated code-point buffer with separators, sorts all
-    suffixes by their first min_len code points (sufficient: any two
-    suffixes sharing >= min_len chars are adjacent-equal under this key),
-    then scans runs of equal keys and pairs distinct documents in each run.
-
-    Every cross-document pair of each exact class is emitted, so the
-    output is exactly the relation "docs a < b share a verbatim >= min_len
-    substring", which a DuckDB gram-intersection oracle can check (driver
-    query ``dedup_substring_exact``).
+    Keys every ``min_len``-char window of every document with
+    ``_rolling_hashes`` over the concatenated code points (a null text has
+    no windows), argsorts the keys once and keeps the keys that two or
+    more documents share.  Each kept window is compared with the first
+    window of its key; the rare window that differs (a hash collision) is
+    classed by :func:`_exact_prefix_classes`.  Every pair of distinct
+    documents in an exact class is emitted, once per distinct owner set,
+    so the output is exactly the relation "docs a < b share a verbatim
+    >= min_len substring", which a DuckDB gram-intersection oracle can
+    check (driver query ``dedup_substring_exact``).
     """
-    if len(texts) < 2:
+    texts = [t if isinstance(t, str) else "" for t in texts]
+    lens = np.array([len(t) for t in texts], dtype=np.int64)
+    buf = np.frombuffer("".join(texts).encode("utf-32-le"), dtype="<u4")
+    owner = np.repeat(np.arange(len(texts)), lens)
+    start = np.flatnonzero(np.arange(len(buf)) + min_len <= np.cumsum(lens)[owner])
+    key, owner = _rolling_hashes(buf, min_len)[start], owner[start]
+    if len(key) < 2:
         return set()
-    bufs = []
-    owner_spans = []
-    for i, t in enumerate(texts):
-        codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4")
-        bufs.append(codes)
-        bufs.append(np.array([_SEP + (i % 7)], dtype="<u4"))  # vary separators
-        owner_spans.append(len(codes) + 1)
-    buf = np.concatenate(bufs)
-    n = len(buf)
-    owner = np.repeat(np.arange(len(texts), dtype=np.int64), owner_spans)
-
-    # positions with at least min_len real chars before the next separator:
-    # run-length to next separator
-    is_sep = buf >= _SEP
-    # distance to next separator (inclusive scan from the right)
-    sep_pos = np.flatnonzero(is_sep)
-    next_sep_of = np.full(n, n, dtype=np.int64)
-    if len(sep_pos):
-        idx = np.searchsorted(sep_pos, np.arange(n), side="left")
-        idx = np.minimum(idx, len(sep_pos) - 1)
-        next_sep_of = sep_pos[idx]
-        next_sep_of[np.arange(n) > sep_pos[-1]] = n
-    dist = next_sep_of - np.arange(n)
-    starts = np.flatnonzero(dist >= min_len)
-    if len(starts) < 2:
-        return set()
-
-    # sort suffixes by their first min_len code points: lexsort over
-    # min(min_len, 64) stride-sampled key columns + tie-break by full
-    # comparison within runs.  Full min_len keys would be min_len arrays;
-    # instead sort by 16 sampled columns then verify runs exactly.
-    n_keys = 16
-    key_offsets = np.linspace(0, min_len - 1, n_keys).astype(np.int64)
-    keys = [buf[starts + off] for off in key_offsets[::-1]]
-    order = np.lexsort(keys)
-    s = starts[order]
-
+    # stable: within a key, windows stay in buffer order, so owners ascend
+    order = np.argsort(key, kind="stable")
+    key, owner, start = key[order], owner[order], start[order]
+    new = np.r_[True, key[1:] != key[:-1]]
+    head, gid = np.flatnonzero(new), np.cumsum(new) - 1
+    keep = (owner[head] != owner[np.r_[head[1:], len(key)] - 1])[gid]
+    gid, owner, start = gid[keep], owner[keep], start[keep]
+    lead = start[np.searchsorted(gid, gid)]  # first kept window of the key
+    same = np.ones(len(start), dtype=bool)
+    for j in range(min_len):
+        same &= buf[start + j] == buf[lead + j]
+    gid[~same] = len(head) + _exact_prefix_classes(buf, start[~same], min_len)
+    c, o = np.divmod(np.unique(gid * len(texts) + owner), len(texts))
+    size = np.bincount(c)
     pairs: set[tuple[int, int]] = set()
-    # runs of equal sampled keys → group members by their FULL min_len
-    # prefix (np.unique over the exact prefix rows), then pair the
-    # distinct owners per exact class.  Adjacency in the sampled order is
-    # NOT enough: a suffix matching only the 16 sampled positions can
-    # interleave between two true matches and split their class.
-    key_mat = np.stack([buf[s + off] for off in key_offsets], axis=1)
-    same_as_prev = np.all(key_mat[1:] == key_mat[:-1], axis=1)
-    j = 0
-    m = len(s)
-    while j < m - 1:
-        if not same_as_prev[j]:
-            j += 1
-            continue
-        # run [j, end) of equal sampled keys
-        end = j + 1
-        while end < m and same_as_prev[end - 1]:
-            end += 1
-        idx = s[j:end]
-        inv = _exact_prefix_classes(buf, idx, min_len)
-        for cls in range(int(inv.max()) + 1):
-            owners = np.unique(owner[idx[inv == cls]])
-            if len(owners) > 1:
-                pairs.update(combinations(np.sort(doc_ids[owners]).tolist(), 2))
-        j = end
+    for s in np.unique(size[size > 1]):
+        for row in np.unique(o[size[c] == s].reshape(-1, s), axis=0):
+            pairs.update(combinations(np.sort(doc_ids[row]).tolist(), 2))
     return pairs
 
 
@@ -171,10 +130,6 @@ def suffix_array_edges(
     prepped = docs.select(F.col("doc_id").cast("long"), F.col("text").alias("norm"))
 
     if co_partition:
-        from batch_jaro_winkler_spark.operators.fingerprint_dedup import (
-            _rolling_hashes,
-        )
-
         k = cfg.gram_chars
 
         def keyed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -182,6 +137,7 @@ def suffix_array_edges(
                 pdf = pdf.assign(norm=normalize_pandas(pdf["norm"]))
                 ckeys = np.empty(len(pdf), dtype=np.int64)
                 for i, t in enumerate(pdf["norm"]):
+                    t = t if isinstance(t, str) else ""  # null: no windows
                     codes = np.frombuffer(t.encode("utf-32-le"), dtype="<u4")
                     h = _rolling_hashes(codes, k)
                     ckeys[i] = h.min().astype(np.int64) if len(h) else np.int64(0)

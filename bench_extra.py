@@ -10,10 +10,21 @@ plans/r07/.
 Usage:
     python bench_extra.py [--sf-dir DIR] [--reps N] [--plans-dir DIR]
                           [--tag TAG] [--queries q1,q2,...] [--pipeline]
+    python bench_extra.py --substring [--against TREE] [--reps N]
 
 Host noise is ±30-40% (CLAUDE.md) — never A/B across separate runs of
 this script; for change attribution use --queries with an interleaved
 worktree protocol or in-process A/B instead.
+
+``--substring`` needs no Spark: it times
+``suffix_array.partition_substring_pairs`` in this process on four seeded
+partitions (500 and 2,000 docs of ~730 chars with planted passages, 600
+docs sharing one 500-char block, 200k chars of periodic text in two
+docs).  With ``--against TREE`` it loads that checkout's
+``suffix_array.py`` as a second variant and interleaves the two, the
+first side alternating per round (default 7 rounds).  Per case and
+variant it prints the min and median seconds, the tracemalloc peak of
+one extra call, and whether the pair sets agree.
 """
 
 from __future__ import annotations
@@ -55,17 +66,124 @@ BENCH_QUERIES = [
 ]
 
 
+def _substring_cases() -> dict[str, tuple]:
+    """Seeded (doc_ids, normalized texts, min_len) partitions for
+    ``--substring``.  Doc ids are a shuffled range, so pairs are ordered
+    by id, not by position."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    from batch_jaro_winkler_spark.functions.text import normalize_pandas
+
+    rng = random.Random(0)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = ["".join(rng.choices(letters, k=rng.randint(2, 9))) for _ in range(5000)]
+
+    def words(n_chars: int) -> str:
+        out, n = [], 0
+        while n < n_chars:
+            out.append(rng.choice(vocab))
+            n += len(out[-1]) + 1
+        return " ".join(out)
+
+    def planted(n_docs: int) -> list[str]:
+        texts = [words(rng.randint(280, 1100)) for _ in range(n_docs)]
+        for _ in range(n_docs // 10):  # a verbatim passage of another doc
+            src, dst = rng.sample(range(n_docs), 2)
+            at = rng.randrange(max(1, len(texts[src]) - 220))
+            passage = texts[src][at : at + rng.randint(220, 600)]
+            cut = rng.randrange(len(texts[dst]) + 1)
+            texts[dst] = f"{texts[dst][:cut]} {passage} {texts[dst][cut:]}"
+        return texts
+
+    block = words(500)[:500]
+    cases = {
+        "planted_500": planted(500),
+        "planted_2000": planted(2000),
+        "shared_block_600": [
+            f"{words(rng.randint(50, 300))} {block} {words(rng.randint(50, 300))}"
+            for _ in range(600)
+        ],
+        "periodic_200k": ["the same words again " * 4762] * 2,
+    }
+    out = {}
+    for name, texts in cases.items():
+        ids = np.array(rng.sample(range(10 * len(texts)), len(texts)), dtype=np.int64)
+        out[name] = (ids, normalize_pandas(pd.Series(texts)).tolist(), 200)
+    return out
+
+
+def _substring_bench(against: str | None, rounds: int) -> dict:
+    """Interleaved in-process A/B of ``partition_substring_pairs``: this
+    tree vs the ``suffix_array.py`` of ``against``."""
+    import importlib.util
+    import statistics
+    import tracemalloc
+
+    from batch_jaro_winkler_spark.operators.suffix_array import (
+        partition_substring_pairs,
+    )
+
+    variants = {"this": partition_substring_pairs}
+    if against:
+        path = os.path.join(
+            against, "batch_jaro_winkler_spark", "operators", "suffix_array.py"
+        )
+        spec = importlib.util.spec_from_file_location("_against_suffix_array", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        variants["against"] = mod.partition_substring_pairs
+    results: dict = {}
+    for case, (ids, texts, min_len) in _substring_cases().items():
+        times: dict[str, list[float]] = {v: [] for v in variants}
+        names = list(variants)
+        for r in range(rounds):
+            for v in names if r % 2 == 0 else names[::-1]:
+                t0 = time.perf_counter()
+                variants[v](ids, texts, min_len)
+                times[v].append(time.perf_counter() - t0)
+        row: dict = {"case": case, "docs": len(texts), "chars": sum(map(len, texts))}
+        pair_sets = {}
+        for v, fn in variants.items():
+            tracemalloc.start()
+            pair_sets[v] = fn(ids, texts, min_len)
+            peak = tracemalloc.get_traced_memory()[1]
+            tracemalloc.stop()
+            row[v] = {
+                "min_s": round(min(times[v]), 4),
+                "median_s": round(statistics.median(times[v]), 4),
+                "peak_mb": round(peak / 2**20, 1),
+                "pairs": len(pair_sets[v]),
+            }
+        row["same_pairs"] = all(p == pair_sets["this"] for p in pair_sets.values())
+        results[case] = row
+        print(json.dumps(row), flush=True)
+    return results
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--reps", type=int, default=None, help="default 2; 7 with --substring")
     ap.add_argument("--plans-dir", default=None, help="dump explain('formatted') per query")
     ap.add_argument("--plans-suffix", default="before")
     ap.add_argument("--tag", default="r07")
     ap.add_argument("--queries", default=None, help="comma list; default = bench.py's list")
     ap.add_argument("--pipeline", action="store_true", help="also time the end-to-end pipeline")
     ap.add_argument("--out", default=None, help="write JSON results here")
+    ap.add_argument("--substring", action="store_true", help="time partition_substring_pairs only (no Spark)")
+    ap.add_argument("--against", default=None, help="with --substring: a checkout to interleave against")
     args = ap.parse_args()
+
+    if args.substring:
+        res = _substring_bench(args.against, args.reps or 7)
+        if args.out:
+            with open(args.out, "w") as fh:
+                json.dump(res, fh, indent=1)
+        return
+    args.reps = args.reps or 2
 
     import tempfile
 

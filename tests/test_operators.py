@@ -788,9 +788,10 @@ def test_suffix_array_edges_spark(spark):
 
 
 def test_suffix_array_sampled_key_interloper():
-    """ADVICE repro: a suffix equal to two true matches at ONLY the 16
-    sampled key offsets interleaves between them in the sorted run; the
-    exact-prefix class grouping must still pair the true matches."""
+    """ADVICE repro: a decoy window agrees with two true matches at 16
+    evenly spaced offsets (once the whole sort key) and is "x" elsewhere.
+    Its window hash key now differs from theirs, so it sorts apart; the
+    true matches must still pair and the decoy must not."""
     from batch_jaro_winkler_spark.operators.suffix_array import (
         partition_substring_pairs,
     )
@@ -852,19 +853,116 @@ def test_suffix_array_co_partition(spark):
 
 
 def test_suffix_array_degenerate_run_chunked(monkeypatch):
-    """ADVICE: long repeated boilerplate makes one sampled-key run cover
-    most suffixes; above _PREFIX_MAT_CAP the class grouping must refine
-    over bounded column blocks and still produce the same pairs."""
+    """ADVICE: long repeated boilerplate gives a few window keys that
+    cover most windows.  Each such window equals its key's first window,
+    so a tiny _PREFIX_MAT_CAP must not change the pairs (colliding
+    windows on the block path: test_suffix_array_collisions_never_pair)."""
     from batch_jaro_winkler_spark.operators import suffix_array as sa
 
-    boiler = "na" * 150  # 300 chars of period-2 text → giant equal-key runs
+    boiler = "na" * 150  # 300 chars of period-2 text → two window keys
     texts = [boiler + " tail one", "head " + boiler, "unrelated stuff " * 30]
     ids = np.arange(3, dtype=np.int64)
     direct = sa.partition_substring_pairs(ids, texts, min_len=200)
-    monkeypatch.setattr(sa, "_PREFIX_MAT_CAP", 64)  # force the block path
+    monkeypatch.setattr(sa, "_PREFIX_MAT_CAP", 64)
     chunked = sa.partition_substring_pairs(ids, texts, min_len=200)
     assert direct == chunked
     assert (0, 1) in chunked, chunked
+
+
+def test_suffix_array_null_and_empty_rows(spark):
+    """A null or empty text has no windows and pairs with nothing; it must
+    not fail the partition it shares with a duplicate pair, with or
+    without the content-key co-partitioning pass."""
+    from batch_jaro_winkler_spark.operators.suffix_array import (
+        partition_substring_pairs,
+        suffix_array_edges,
+    )
+
+    dup = "a shared passage of words that repeats verbatim " * 6
+    assert partition_substring_pairs(
+        np.arange(3, dtype=np.int64), [dup, None, dup], 200
+    ) == {(0, 2)}
+    docs = spark.createDataFrame(
+        [(0, dup), (1, None), (2, ""), (3, "unrelated words " * 20), (4, dup)],
+        "doc_id long, text string",
+    ).coalesce(1)
+    cfg = DedupConfig(min_substring_chars=200)
+    for co_partition in (False, True):
+        got = {
+            (r["a"], r["b"])
+            for r in suffix_array_edges(docs, cfg, co_partition=co_partition).collect()
+        }
+        assert got == {(0, 4)}, (co_partition, got)
+
+
+def _gram_pairs(ids, texts, min_len):
+    """Brute force: pairs (a < b by doc id) whose min_len-gram sets meet."""
+    grams = [
+        {t[i : i + min_len] for i in range(len(t) - min_len + 1)} if t else set()
+        for t in texts
+    ]
+    return {
+        tuple(sorted((int(ids[i]), int(ids[j]))))
+        for i in range(len(texts))
+        for j in range(i + 1, len(texts))
+        if grams[i] & grams[j]
+    }
+
+
+def _substring_corpus(seed):
+    """25 docs over a 3-letter alphabet (seed parity adds astral and
+    U+FFFD chars), half of them carrying one of four planted blocks, a
+    few null or empty; doc ids are a shuffled sample."""
+    import random
+
+    rng = random.Random(seed)
+    alpha = "abc" + ("\U0001F389\ufffd" if seed % 2 else "")
+    blocks = ["".join(rng.choices(alpha, k=rng.randint(50, 300))) for _ in range(4)]
+    texts = []
+    for _ in range(25):
+        if rng.random() < 0.1:
+            texts.append(rng.choice([None, ""]))
+            continue
+        t = "".join(rng.choices(alpha, k=rng.randint(0, 400)))
+        if rng.random() < 0.5:
+            at = rng.randint(0, len(t))
+            t = t[:at] + rng.choice(blocks) + t[at:]
+        texts.append(t)
+    ids = np.array(rng.sample(range(1000), len(texts)), dtype=np.int64)
+    return ids, texts
+
+
+@pytest.mark.parametrize("min_len", [50, 200])
+@pytest.mark.parametrize("seed", range(6))
+def test_suffix_array_matches_gram_brute_force(seed, min_len):
+    """The exact detector IS the shared-gram relation."""
+    from batch_jaro_winkler_spark.operators.suffix_array import (
+        partition_substring_pairs,
+    )
+
+    ids, texts = _substring_corpus(seed)
+    want = _gram_pairs(ids, texts, min_len)
+    assert partition_substring_pairs(ids, texts, min_len) == want
+
+
+@pytest.mark.parametrize("cap", [4_000_000, 64])
+def test_suffix_array_collisions_never_pair(monkeypatch, cap):
+    """With a window key that collides all the time (window sum mod 5),
+    the exact refinement alone decides the classes, on the full matrix
+    and on the column-block path."""
+    from batch_jaro_winkler_spark.operators import suffix_array as sa
+
+    def weak(codes, k):
+        c = np.r_[0, np.cumsum(codes.astype(np.uint64))]
+        return (c[k:] - c[:-k]) % np.uint64(5) if len(codes) >= k else c[:0]
+
+    monkeypatch.setattr(sa, "_rolling_hashes", weak)
+    monkeypatch.setattr(sa, "_PREFIX_MAT_CAP", cap)
+    for seed in range(4):
+        ids, texts = _substring_corpus(seed)
+        for min_len in (50, 200):
+            want = _gram_pairs(ids, texts, min_len)
+            assert sa.partition_substring_pairs(ids, texts, min_len) == want
 
 
 def test_ivf_assign_empty_partition(spark, monkeypatch):
