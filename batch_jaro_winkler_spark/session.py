@@ -35,12 +35,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local-scale file splitting: checkpoint tables here are a few MB,
-        # and the default 128 MB maxPartitionBytes packs them into 1-2
-        # splits, serializing every post-checkpoint stage.  On a real
-        # cluster with TB-scale tables leave these at their defaults.
+        # 16 MB caps a scan split, so one large file (the 1M-doc corpus)
+        # still reads as ~91 splits.  Small files pack at Spark's default
+        # 4 MB open cost toward one split per task slot: each split is a
+        # Python task (~0.2 s fixed), so a stage runs in one wave.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(16 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

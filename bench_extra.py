@@ -9,12 +9,26 @@ plans/r07/.
 
 Usage:
     python bench_extra.py [--sf-dir DIR] [--reps N] [--plans-dir DIR]
-                          [--tag TAG] [--queries q1,q2,...] [--pipeline]
+                          [--tag TAG] [--queries q1,q2,...]
+                          [--pipeline [--input PARQUET]] [--conf KEY=V1,V2]
     python bench_extra.py --substring [--against TREE] [--reps N]
 
 Host noise is ±30-40% (CLAUDE.md) — never A/B across separate runs of
 this script; for change attribution use --queries with an interleaved
 worktree protocol or in-process A/B instead.
+
+``--pipeline`` times ``DedupPipeline.run`` on ``--input`` (default the
+sf dir's ``documents.parquet``; a multi-file directory such as
+perfbench's ``crawl_dedup`` docs works); the queries then run only when
+``--queries`` names them.  ``--conf KEY=V1,V2`` is the in-process A/B of
+one runtime SQL conf: every round runs each value once, the first value
+alternating round to round (``--reps`` rounds; with two or more, the
+first round warms up and is left out of the summaries).  Per query and
+value it prints the min and median wall (query build included) and the
+Python tasks per run, counted from the session's event log.  The
+pipeline adds its median stage walls and Python tasks per stage, and the
+script fails if the sorted-row digests of the ``edges`` or ``clusters``
+checkpoints differ between values.
 
 ``--substring`` needs no Spark: it times
 ``suffix_array.partition_substring_pairs`` in this process on four seeded
@@ -32,9 +46,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+# local property naming the run ("<variant>:<round>") a job belongs to
+_RUN_PROPERTY = "bench_extra.run"
 
 BENCH_QUERIES = [
     "rel_q1",
@@ -163,6 +180,41 @@ def _substring_bench(against: str | None, rounds: int) -> dict:
     return results
 
 
+def _table_digest(data_dir: str) -> str:
+    """sha256 of a parquet table's rows, sorted, so that partitioning and
+    file order do not count."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    df = pq.read_table(data_dir).to_pandas()
+    df = df.sort_values(list(df.columns), kind="stable")
+    return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()[:16]
+
+
+def _python_tasks(log_dir: str, app_id: str) -> dict[tuple[str, str], int]:
+    """Python tasks per (run, job description) in the finished event log.
+    A task counts when it updates a "... Python workers" SQL metric, which
+    only a Python operator (``mapInPandas``, a pandas UDF) does."""
+    stage_key: dict[int, tuple[str, str]] = {}
+    counts: dict[tuple[str, str], int] = {}
+    with open(os.path.join(log_dir, app_id)) as fh:
+        for line in fh:
+            ev = json.loads(line)
+            kind = ev.get("Event")
+            if kind == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                if _RUN_PROPERTY in props:
+                    key = (props[_RUN_PROPERTY], props.get("spark.job.description"))
+                    stage_key.update(dict.fromkeys(ev.get("Stage IDs", []), key))
+            elif kind == "SparkListenerTaskEnd" and ev.get("Stage ID") in stage_key:
+                acc = (ev.get("Task Info") or {}).get("Accumulables", [])
+                if any("Python workers" in (a.get("Name") or "") for a in acc):
+                    key = stage_key[ev["Stage ID"]]
+                    counts[key] = counts.get(key, 0) + 1
+    return counts
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -171,7 +223,9 @@ def main() -> None:
     ap.add_argument("--plans-suffix", default="before")
     ap.add_argument("--tag", default="r07")
     ap.add_argument("--queries", default=None, help="comma list; default = bench.py's list")
-    ap.add_argument("--pipeline", action="store_true", help="also time the end-to-end pipeline")
+    ap.add_argument("--pipeline", action="store_true", help="time the end-to-end pipeline")
+    ap.add_argument("--input", default=None, help="pipeline input parquet (file or directory)")
+    ap.add_argument("--conf", default=None, metavar="KEY=V1,V2", help="interleave values of one SQL conf")
     ap.add_argument("--out", default=None, help="write JSON results here")
     ap.add_argument("--substring", action="store_true", help="time partition_substring_pairs only (no Spark)")
     ap.add_argument("--against", default=None, help="with --substring: a checkout to interleave against")
@@ -185,70 +239,157 @@ def main() -> None:
         return
     args.reps = args.reps or 2
 
+    import shutil
+    import statistics
     import tempfile
 
     import __spark_entry__ as entry_mod
     from batch_jaro_winkler_spark.session import get_spark
 
+    conf_key, values = None, [None]
+    if args.conf:
+        conf_key, _, listed = args.conf.partition("=")
+        values = listed.split(",")
+    log_dir = tempfile.mkdtemp(prefix="bjws_extra_events_")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(f"bjws-extra-{args.tag}", cores=cpus, shuffle_partitions=max(cpus, 8))
+    spark = get_spark(
+        f"bjws-extra-{args.tag}",
+        cores=cpus,
+        shuffle_partitions=max(cpus, 8),
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + log_dir,
+            # one plain JSON-lines file
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
     sc = spark.sparkContext
+    app_id = sc.applicationId
 
-    names = args.queries.split(",") if args.queries else list(BENCH_QUERIES)
-    q = entry_mod.queries()
-    results: dict[str, list[float]] = {}
+    def runs():
+        """Yield (round, variant) with the variant's conf set and its jobs
+        tagged; the first variant alternates round to round."""
+        order = list(range(len(values)))
+        for r in range(args.reps):
+            for v in order if r % 2 == 0 else order[::-1]:
+                if conf_key:
+                    spark.conf.set(conf_key, values[v])
+                sc.setLocalProperty(_RUN_PROPERTY, f"{v}:{r}")
+                yield r, v
+        sc.setLocalProperty(_RUN_PROPERTY, None)
+        sc.setJobDescription(None)
+        if conf_key:
+            spark.conf.unset(conf_key)
+
+    walls: dict[str, list[list[float]]] = {}  # name → per variant, run walls
+    stage_walls: list[dict[str, list[float]]] = [{} for _ in values]
+    digests: dict[str, list[set]] = {"edges": [set() for _ in values], "clusters": [set() for _ in values]}
+
+    # with two or more rounds the first one warms the JVM and the Python
+    # workers, and the summaries leave it out
+    counted = range(1 if args.reps > 1 else 0, args.reps)
+
+    def timed(name: str, r: int, v: int, wall: float) -> None:
+        if r in counted:
+            walls.setdefault(name, [[] for _ in values])[v].append(wall)
+        print(json.dumps({"query": name, "value": values[v], "round": r, "s": round(wall, 3)}), flush=True)
 
     if args.pipeline:
         from batch_jaro_winkler_spark.operators.config import DedupConfig
         from batch_jaro_winkler_spark.pipeline import DedupPipeline
 
-        docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")
-        times = []
-        for rep in range(args.reps):
-            sc.setJobDescription(f"pipeline rep{rep}")
+        path = args.input or f"{args.sf_dir}/documents.parquet"
+        for r, v in runs():
+            root = tempfile.mkdtemp(prefix="bjws_extra_")
+            docs = spark.read.parquet(path)
+            sc.setJobDescription("dedup_pipeline")
             t0 = time.time()
-            pipe = DedupPipeline(spark, DedupConfig(), tempfile.mkdtemp(prefix="bjws_extra_"))
+            pipe = DedupPipeline(spark, DedupConfig(), root)
             pipe.run(docs, "doc_id", "text").count()
-            times.append(round(time.time() - t0, 3))
-        results["dedup_pipeline"] = times
-        print(json.dumps({"query": "dedup_pipeline", "times": times}), flush=True)
+            timed("dedup_pipeline", r, v, time.time() - t0)
+            if r in counted:
+                for m in pipe.metrics:
+                    stage_walls[v].setdefault(m.name, []).append(m.wall_sec)
+            for table, seen in digests.items():
+                seen[v].add(_table_digest(os.path.join(root, table, "data")))
+            shutil.rmtree(root)
 
+    # --pipeline alone times the pipeline only
+    names = [] if args.pipeline and args.queries is None else (
+        args.queries.split(",") if args.queries else list(BENCH_QUERIES)
+    )
+    q = entry_mod.queries()
     if args.plans_dir:
+        import contextlib
+        import io
+
         os.makedirs(args.plans_dir, exist_ok=True)
-
-    for name in names:
-        df = q[name](spark, args.sf_dir)
-        if args.plans_dir:
-            import contextlib
-            import io
-
+        for name in names:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+                q[name](spark, args.sf_dir).explain("formatted")
             with open(
                 os.path.join(args.plans_dir, f"{name}_{args.plans_suffix}.txt"), "w"
             ) as fh:
                 fh.write(buf.getvalue())
-        times = []
-        for rep in range(args.reps):
-            if rep:
-                # rebuild per rep: a lazy localCheckpoint inside a query
-                # would otherwise carry materialized blocks into the next
-                # rep and fake the timing
-                df = q[name](spark, args.sf_dir)
-            sc.setJobDescription(f"{name} rep{rep}")
+
+    for name in names:
+        for r, v in runs():
+            sc.setJobDescription(name)
             t0 = time.time()
+            # built per run, under the variant's conf and inside the timed
+            # region (some builders run jobs, as bench.py counts them): a
+            # lazy localCheckpoint inside a query would otherwise carry
+            # materialized blocks into the next run and fake the timing
+            df = q[name](spark, args.sf_dir)
             # noop sink: computes every column of every row, discards
             df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-        sc.setJobDescription(None)
-        results[name] = times
-        print(json.dumps({"query": name, "times": times}), flush=True)
+            timed(name, r, v, time.time() - t0)
+
+    spark.stop()
+    py_tasks = _python_tasks(log_dir, app_id)
+    shutil.rmtree(log_dir)
+
+    def py_per_run(v: int, desc: str) -> int:
+        return statistics.median(py_tasks.get((f"{v}:{r}", desc), 0) for r in counted)
+
+    rows = []
+    for name, per_variant in walls.items():
+        for v, ts in enumerate(per_variant):
+            row = {
+                "query": name,
+                "conf": conf_key,
+                "value": values[v],
+                "runs": len(ts),
+                "min_s": round(min(ts), 3),
+                "median_s": round(statistics.median(ts), 3),
+            }
+            if name == "dedup_pipeline":
+                row["stage_median_s"] = {
+                    s: round(statistics.median(w), 3) for s, w in stage_walls[v].items()
+                }
+                row["py_tasks"] = {s: py_per_run(v, s) for s in stage_walls[v]}
+            else:
+                row["py_tasks"] = py_per_run(v, name)
+            rows.append(row)
+            print(json.dumps(row), flush=True)
+    same = {
+        table: len(set().union(*seen)) <= 1 for table, seen in digests.items()
+    }
+    if args.pipeline:
+        print(json.dumps({"same_digests": same}), flush=True)
 
     if args.out:
         with open(args.out, "w") as fh:
-            json.dump({"sf_dir": args.sf_dir, "reps": args.reps, "queries": results}, fh, indent=1)
-    print(json.dumps({"tag": args.tag, "done": True, "n": len(results)}))
+            json.dump(
+                {"sf_dir": args.sf_dir, "input": args.input, "reps": args.reps, "results": rows},
+                fh,
+                indent=1,
+            )
+    print(json.dumps({"tag": args.tag, "done": True, "n": len(walls)}))
+    if not all(same.values()):
+        sys.exit(f"sorted-row digests differ between variants: {digests}")
 
 
 if __name__ == "__main__":

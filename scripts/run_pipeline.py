@@ -59,7 +59,10 @@ def main(argv=None) -> int:
         if k not in fields:
             ap.error(f"unknown config key {k}; known: {sorted(fields)}")
         current = getattr(DedupConfig(), k)
-        overrides[k] = type(current)(v) if current is not None else float(v)
+        if v.lower() == "none" and "None" in str(fields[k]):
+            overrides[k] = None  # an ``X | None`` field (jw_weight=none: pure Jaro)
+        else:
+            overrides[k] = type(current)(v) if current is not None else float(v)
     cfg = DedupConfig(**overrides)
 
     if args.cores is not None:

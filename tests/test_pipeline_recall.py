@@ -668,3 +668,29 @@ def test_pair_relation_is_built_once(spark, tmp_path_factory, monkeypatch):
     inc = DedupPipeline(spark, cfg, root).run_incremental(docs.where(F.col("doc_id") % 8 == 0))
     assert assignment(inc) == full
     assert len(built) == 1
+
+
+def test_run_pipeline_cli_sets_none(spark, tmp_path, monkeypatch, capsys):
+    """``scripts/run_pipeline.py --set jw_weight=none`` runs the pipeline
+    with pure Jaro (``jw_weight=None``); ``none`` is case-insensitive."""
+    import importlib.util
+    import json
+    import sys
+
+    rows = [(i, r["text"]) for i, r in enumerate(make_corpus(n_rows=40, seed=4).rows)]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
+    script = os.path.join(os.path.dirname(__file__), os.pardir, "scripts", "run_pipeline.py")
+    # the script puts the repo on sys.path and PYTHONPATH at import
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    spec = importlib.util.spec_from_file_location("run_pipeline_cli", script)
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    out = str(tmp_path / "out")
+    argv = ["--input", src, "--checkpoint", str(tmp_path / "ck"), "--output", out]
+    assert cli.main([*argv, "--set", "jw_weight=None", "--set", "jw_min_score=0.8"]) == 0
+    record = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    want = DedupConfig(jw_weight=None, jw_min_score=0.8)
+    assert record["config_hash"] == want.config_hash()
+    assert spark.read.parquet(out).count() == len(rows)
