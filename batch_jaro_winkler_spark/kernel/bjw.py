@@ -119,9 +119,10 @@ def _encode_units(items, char_width: int) -> tuple[np.ndarray, np.ndarray]:
 
 @dataclass
 class CandidateModel:
-    """The 'exportable model' analog: an immutable, pickle-able columnar
-    inverted character-position index over a candidate batch
-    (reference: ``bjw_build_exportable_model``, ``lib/batch_jaro_winkler.c:513-627``).
+    """The 'exportable model' analog: a columnar inverted
+    character-position index over a candidate batch
+    (reference: ``bjw_build_exportable_model``, ``lib/batch_jaro_winkler.c:513-627``),
+    exported as plain data by ``kernel.serialize``.
 
     Layout (all numpy arrays):
       codes/offsets      — concatenated candidate code points + prefix offsets
@@ -154,11 +155,12 @@ class CandidateModel:
     # range, so every per-char index step slices instead of masking.
     orig_ids: np.ndarray | None = None
     # hot-loop auxiliaries (sequential per-group reads replace random
-    # per-candidate gathers), rebuilt lazily for models pickled before
-    # they existed (_ensure_aux).  Groups are split by occurrence count:
-    # single-occurrence groups (s_*: char, cand, the one position, cand
-    # length) resolve without cursors; multi-occurrence groups (m2_*) keep
-    # the resume-cursor walk.  Both splits stay sorted by (char, cand).
+    # per-candidate gathers), built by _ensure_aux, also for models that
+    # model_from_bytes parses without them.  Groups are split by
+    # occurrence count: single-occurrence groups (s_*: char, cand, the one
+    # position, cand length) resolve without cursors; multi-occurrence
+    # groups (m2_*) keep the resume-cursor walk.  Both splits stay sorted
+    # by (char, cand).
     s_char: np.ndarray | None = None
     s_cand: np.ndarray | None = None
     s_pos: np.ndarray | None = None
@@ -172,8 +174,7 @@ class CandidateModel:
     # (char, pos, cand) int64 keys, ascending, with the candidate id per
     # record.  Built lazily on first large scan (_ensure_buckets); b_maxp
     # is the pos stride (-1 = keys would overflow int64, never retry).
-    # Query-local and cheap to rebuild — dropped on pickle so pickled
-    # models stay small.
+    # Query-local and cheap to rebuild — never serialized.
     b_key: np.ndarray | None = None
     b_cand: np.ndarray | None = None
     b_maxp: int = 0
@@ -212,21 +213,6 @@ class CandidateModel:
     @property
     def nb_candidates(self) -> int:
         return len(self.lengths)
-
-    def __getstate__(self):
-        d = dict(self.__dict__)
-        for f in ("b_key", "b_cand", "b2_key", "b2_cand",
-                  "bp_gvals", "bp_goff", "bp_key", "bp_cand",
-                  "m2o_pos", "m2o_goff", "m3_key", "m3_cand", "m3_hvals"):
-            d[f] = None
-        d["b_maxp"] = 0
-        d["b2_maxp"] = 0
-        d["m3_maxp"] = 0
-        # query-time caches, not dataclass fields
-        d.pop("_len_f32", None)
-        d.pop("_len_safe", None)
-        d.pop("_scratch", None)
-        return d
 
 
 def build_model(candidates, min_scores=None, char_width: int | None = None) -> CandidateModel:
@@ -324,8 +310,8 @@ def build_model(candidates, min_scores=None, char_width: int | None = None) -> C
 
 
 def _ensure_aux(model: CandidateModel) -> None:
-    """Populate the hot-loop auxiliary arrays (idempotent; also upgrades
-    models pickled before these fields existed)."""
+    """Populate the hot-loop auxiliary arrays (idempotent; also completes
+    models that ``model_from_bytes`` parses without them)."""
     if model.s_char is not None:
         return
     size = (model.group_end.astype(np.int64) - model.group_start).astype(np.int32)
@@ -675,8 +661,7 @@ def _scan(
                 _ensure_buckets2(model)
             # both index families are probed with the same packed stride
             # P = b_maxp below; refuse b2 if the invariant ever breaks
-            # (e.g. a model built by an older pickle) rather than emit
-            # silently misaligned counts
+            # rather than emit silently misaligned counts
             use_b2 = (
                 model.b2_key is not None and model.b2_maxp == model.b_maxp
             )

@@ -10,8 +10,8 @@ module mirrors the reference's design instead: a fixed little-endian
 header + length-prefixed raw numpy buffers in a canonical field order,
 and a parser that validates every structural invariant before
 constructing a :class:`CandidateModel`.  No Spark path ships a model
-(``score_topk`` compiles one inside each cell); pickling stays an
-in-process convenience that is never fed attacker-shaped bytes.
+(``score_topk`` compiles one inside each cell), and nothing pickles one:
+this layout is the one export path.
 
 Layout v1 (all little-endian):
 
@@ -24,8 +24,7 @@ Layout v1 (all little-endian):
     (min_scores / orig_ids present iff their flag bit is set)
 
 Lazy query-time indexes (position buckets, m2o views, scratch pools) are
-derived data — never serialized, rebuilt on first use exactly as the
-pickle path's ``__getstate__`` already guarantees.
+derived data — never serialized, rebuilt on first use.
 """
 
 from __future__ import annotations

@@ -162,11 +162,12 @@ def verify_edges(pairs: DataFrame, norm: DataFrame, cfg: DedupConfig) -> DataFra
 
     Verification decides ``common substring >= min_len``, so a seed side
     needs only ``cap = min_len + gram_chars`` chars of context around its
-    offset: each side ships the slice ``[pos - cap, pos + cap + k)`` (the
-    pair list is millions of rows at web scale; documents are never
-    shuffled whole toward the verify).  The pair list is cut by a lazy
-    localCheckpoint, so AQE sizes the attach joins from its materialized
-    size."""
+    offset: each side hands the Python worker the slice
+    ``[pos - cap, pos + cap + k)``.  The cut runs after the join, so a
+    sort-merge attach join still shuffles every document's whole ``norm``
+    once per side; only the Python side gets the cut text.  The pair list
+    is cut by a lazy localCheckpoint, so AQE sizes the attach joins from
+    its materialized size."""
     k = cfg.gram_chars
     cap = cfg.min_substring_chars + k
 
@@ -236,42 +237,14 @@ def verify_pairs(
     ).select("a", "b", "score")
 
 
-def _spark_hash_int(v: int) -> int:
-    """Spark's ``hash()`` of an int value (Murmur3_x86_32, seed 42), the
-    hash that ``repartition(n, col)`` places rows by: partition
-    ``pmod(hash, n)``."""
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
-
-    k = rotl(v * 0xCC9E2D51 & 0xFFFFFFFF, 15) * 0x1B873593 & 0xFFFFFFFF
-    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h ^= 4  # fmix over the 4-byte input
-    h = (h ^ (h >> 16)) * 0x85EBCA6B & 0xFFFFFFFF
-    h = (h ^ (h >> 13)) * 0xC2B2AE35 & 0xFFFFFFFF
-    h ^= h >> 16
-    return h - (1 << 32) if h >> 31 else h
-
-
-def _placement_keys(n: int) -> list[int]:
-    """``keys[c]`` is an int that ``repartition(n, key)`` places in
-    partition ``c``, so a column mapped through ``keys`` gives each of n
-    cells a partition of its own.  Hashing the cell numbers themselves
-    collides, and ``repartitionByRange`` draws its bounds from a random
-    sample re-seeded per call, so equal-sized cells shared a partition in
-    5 of 8 calls at 30k candidates."""
-    keys: dict[int, int] = {}
-    v = 0
-    while len(keys) < n:
-        keys.setdefault(_spark_hash_int(v) % n, v)
-        v += 1
-    return [keys[c] for c in range(n)]
-
-
 def _placed_cells(cands: DataFrame, n_chunks: int, n_shards: int) -> DataFrame:
     """cands[cand_id, cand_text] → one row per (candidate, shard) with its
     ``cell = pmod(xxhash64(cand_id), n_chunks) * n_shards + shard``, each
-    of the ``n_chunks * n_shards`` cells in a partition of its own."""
+    of the ``n_chunks * n_shards`` cells in a partition of its own: the
+    partition id IS the cell.  Hashing the cell numbers collides, and
+    ``repartitionByRange`` draws its bounds from a sample re-seeded per
+    call, so equal-sized cells shared a partition in 5 of 8 calls at 30k
+    candidates."""
     n_cells = n_chunks * n_shards
     cells = cands.select(
         "cand_id",
@@ -282,8 +255,7 @@ def _placed_cells(cands: DataFrame, n_chunks: int, n_shards: int) -> DataFrame:
         "cand_text",
         (F.pmod(F.xxhash64("cand_id"), F.lit(n_chunks)) * n_shards + F.col("shard")).alias("cell"),
     )
-    keys = F.array(*map(F.lit, _placement_keys(n_cells)))
-    return cells.repartition(n_cells, F.element_at(keys, F.col("cell").cast("int") + 1))
+    return cells.repartitionById(n_cells, F.col("cell").cast("int"))
 
 
 def score_topk(

@@ -26,9 +26,11 @@ alternating round to round (``--reps`` rounds; with two or more, the
 first round warms up and is left out of the summaries).  Per query and
 value it prints the min and median wall (query build included) and the
 Python tasks per run, counted from the session's event log.  The
-pipeline adds its median stage walls and Python tasks per stage, and the
-script fails if the sorted-row digests of the ``edges`` or ``clusters``
-checkpoints differ between values.
+pipeline adds, per stage, its median wall, Python tasks, Spark jobs
+(``jobs``) and the seconds of its wall during which none of its jobs ran
+(``no_job_s``: plan building, driver-side work, job submission gaps),
+all from the same event log.  The script fails if the sorted-row digests
+of the ``edges`` or ``clusters`` checkpoints differ between values.
 
 ``--substring`` needs no Spark: it times
 ``suffix_array.partition_substring_pairs`` in this process on four seeded
@@ -192,12 +194,17 @@ def _table_digest(data_dir: str) -> str:
     return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()[:16]
 
 
-def _python_tasks(log_dir: str, app_id: str) -> dict[tuple[str, str], int]:
-    """Python tasks per (run, job description) in the finished event log.
-    A task counts when it updates a "... Python workers" SQL metric, which
-    only a Python operator (``mapInPandas``, a pandas UDF) does."""
+def _run_stats(log_dir: str, app_id: str) -> dict[tuple[str, str], dict]:
+    """Per (run, job description) in the finished event log: ``py_tasks``,
+    the Python tasks (a task counts when it updates a "... Python workers"
+    SQL metric, which only a Python operator such as ``mapInPandas`` or a
+    pandas UDF does); ``jobs``, the Spark jobs; and ``busy_s``, the
+    seconds during which at least one of those jobs ran (the union of
+    their submission-to-completion spans)."""
     stage_key: dict[int, tuple[str, str]] = {}
-    counts: dict[tuple[str, str], int] = {}
+    started: dict[int, tuple[tuple[str, str], int]] = {}  # job → (key, submitted ms)
+    spans: dict[tuple[str, str], list[tuple[int, int]]] = {}
+    stats: dict[tuple[str, str], dict] = {}
     with open(os.path.join(log_dir, app_id)) as fh:
         for line in fh:
             ev = json.loads(line)
@@ -207,12 +214,22 @@ def _python_tasks(log_dir: str, app_id: str) -> dict[tuple[str, str], int]:
                 if _RUN_PROPERTY in props:
                     key = (props[_RUN_PROPERTY], props.get("spark.job.description"))
                     stage_key.update(dict.fromkeys(ev.get("Stage IDs", []), key))
+                    started[ev["Job ID"]] = (key, ev["Submission Time"])
+                    stats.setdefault(key, {"py_tasks": 0, "jobs": 0, "busy_s": 0.0})["jobs"] += 1
+            elif kind == "SparkListenerJobEnd" and ev.get("Job ID") in started:
+                key, t0 = started.pop(ev["Job ID"])
+                spans.setdefault(key, []).append((t0, ev["Completion Time"]))
             elif kind == "SparkListenerTaskEnd" and ev.get("Stage ID") in stage_key:
                 acc = (ev.get("Task Info") or {}).get("Accumulables", [])
                 if any("Python workers" in (a.get("Name") or "") for a in acc):
-                    key = stage_key[ev["Stage ID"]]
-                    counts[key] = counts.get(key, 0) + 1
-    return counts
+                    stats[stage_key[ev["Stage ID"]]]["py_tasks"] += 1
+    for key, key_spans in spans.items():
+        busy_ms = covered = 0
+        for t0, t1 in sorted(key_spans):
+            busy_ms += max(0, t1 - max(t0, covered))
+            covered = max(covered, t1)
+        stats[key]["busy_s"] = busy_ms / 1000
+    return stats
 
 
 def main() -> None:
@@ -283,7 +300,7 @@ def main() -> None:
             spark.conf.unset(conf_key)
 
     walls: dict[str, list[list[float]]] = {}  # name → per variant, run walls
-    stage_walls: list[dict[str, list[float]]] = [{} for _ in values]
+    stage_walls: list[dict[str, dict[int, float]]] = [{} for _ in values]  # stage → round → wall
     digests: dict[str, list[set]] = {"edges": [set() for _ in values], "clusters": [set() for _ in values]}
 
     # with two or more rounds the first one warms the JVM and the Python
@@ -310,7 +327,7 @@ def main() -> None:
             timed("dedup_pipeline", r, v, time.time() - t0)
             if r in counted:
                 for m in pipe.metrics:
-                    stage_walls[v].setdefault(m.name, []).append(m.wall_sec)
+                    stage_walls[v].setdefault(m.name, {})[r] = m.wall_sec
             for table, seen in digests.items():
                 seen[v].add(_table_digest(os.path.join(root, table, "data")))
             shutil.rmtree(root)
@@ -348,11 +365,22 @@ def main() -> None:
             timed(name, r, v, time.time() - t0)
 
     spark.stop()
-    py_tasks = _python_tasks(log_dir, app_id)
+    stats = _run_stats(log_dir, app_id)
     shutil.rmtree(log_dir)
 
-    def py_per_run(v: int, desc: str) -> int:
-        return statistics.median(py_tasks.get((f"{v}:{r}", desc), 0) for r in counted)
+    def per_run(v: int, desc: str, field: str) -> float:
+        """The median over counted runs of one ``_run_stats`` field."""
+        return statistics.median(
+            stats.get((f"{v}:{r}", desc), {}).get(field, 0) for r in counted
+        )
+
+    def no_job_s(v: int, stage: str) -> float:
+        """The median over counted runs of the stage wall seconds during
+        which none of the stage's jobs ran."""
+        return statistics.median(
+            max(0.0, wall - stats.get((f"{v}:{r}", stage), {}).get("busy_s", 0.0))
+            for r, wall in stage_walls[v][stage].items()
+        )
 
     rows = []
     for name, per_variant in walls.items():
@@ -367,11 +395,13 @@ def main() -> None:
             }
             if name == "dedup_pipeline":
                 row["stage_median_s"] = {
-                    s: round(statistics.median(w), 3) for s, w in stage_walls[v].items()
+                    s: round(statistics.median(w.values()), 3) for s, w in stage_walls[v].items()
                 }
-                row["py_tasks"] = {s: py_per_run(v, s) for s in stage_walls[v]}
+                row["py_tasks"] = {s: per_run(v, s, "py_tasks") for s in stage_walls[v]}
+                row["jobs"] = {s: per_run(v, s, "jobs") for s in stage_walls[v]}
+                row["no_job_s"] = {s: round(no_job_s(v, s), 3) for s in stage_walls[v]}
             else:
-                row["py_tasks"] = py_per_run(v, name)
+                row["py_tasks"] = per_run(v, name, "py_tasks")
             rows.append(row)
             print(json.dumps(row), flush=True)
     same = {

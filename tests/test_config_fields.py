@@ -19,8 +19,7 @@ from batch_jaro_winkler_spark.operators.config import DedupConfig
 
 def _attribute_loads(skip=()) -> set[str]:
     """Names loaded as attributes (``x.name``) anywhere in the package;
-    stores and string mentions (``__getstate__``'s name tuple) do not
-    count."""
+    stores and string mentions do not count."""
     root = Path(batch_jaro_winkler_spark.__file__).parent
     reads: set[str] = set()
     for path in root.rglob("*.py"):

@@ -96,29 +96,27 @@ def test_score_topk_null_text_matches_nothing(spark, transform):
     assert got == want
 
 
-def test_spark_hash_int_matches_spark(spark):
-    vals = list(range(0, 2000, 7)) + [2**31 - 1]
-    got = spark.createDataFrame([(v,) for v in vals], "v int").select(
-        "v", F.hash("v").alias("h")
-    ).collect()
-    assert {r["v"]: r["h"] for r in got} == {v: score_pairs._spark_hash_int(v) for v in vals}
-
-
-@pytest.mark.parametrize("n_chunks,n_shards", [(1, 4), (3, 2)])
+@pytest.mark.parametrize("n_chunks,n_shards", [(1, 4), (3, 2), (5, 4)])
 def test_placed_cells_one_cell_per_partition(spark, n_chunks, n_shards):
-    """Every cell has a partition of its own.  Hash placement on the cell
-    numbers puts two cells in one partition; so does range placement in
-    about half the calls once its bounds come from a sample, not from
-    every row (4000 candidates)."""
+    """Every cell has a partition of its own, and its partition id is the
+    cell, also with more cells (20) than the session's 8 shuffle
+    partitions.  Hash placement on the cell numbers puts two cells in one
+    partition; so does range placement in about half the calls once its
+    bounds come from a sample, not from every row (4000 candidates)."""
     n = 4000
     cands = spark.createDataFrame([(i, f"w{i}") for i in range(n)], _SCHEMA_C)
     for _ in range(4):
         per_part = (
             score_pairs._placed_cells(cands, n_chunks, n_shards)
             .groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.countDistinct("cell").alias("cells"), F.count("*").alias("rows"))
+            .agg(
+                F.countDistinct("cell").alias("cells"),
+                F.min("cell").alias("cell"),
+                F.count("*").alias("rows"),
+            )
             .collect()
         )
         assert len(per_part) == n_chunks * n_shards
         assert max(r["cells"] for r in per_part) == 1
+        assert all(r["p"] == r["cell"] for r in per_part)
         assert sum(r["rows"] for r in per_part) == n * n_shards
